@@ -36,7 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from parquet_processor_spark.registry import all_queries  # noqa: E402
-from parquet_processor_spark.session import get_spark  # noqa: E402
+from parquet_processor_spark.session import clear_session_memos, get_spark, session_memo_counts  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -334,11 +334,22 @@ def main() -> None:
     # totals incomparable. Extended operators warm and run AFTER the
     # headline timing.
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    for name in HEADLINE:
+
+    def memo_lookups() -> int:
+        return sum(c["hits"] + c["misses"] for c in session_memo_counts().values())
+
+    # untimed build + run; True when it looked up a session memo, i.e.
+    # the timed runs that follow measure the query's SERVE path
+    def warm(name: str, path: str) -> bool:
+        before = memo_lookups()
         try:
-            queries[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
+            queries[name](spark, path).write.format("noop").mode("overwrite").save()
         except Exception:
             pass  # warm-up is best-effort; the timed run surfaces real failures
+        return memo_lookups() > before
+
+    for name in HEADLINE:
+        warm(name, warm_dir)
 
     def run_once(name: str) -> float:
         t0 = time.perf_counter()
@@ -392,11 +403,8 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
         return sorted(runs)[1]
 
-    for name in HEADLINE:
-        try:
-            run_once(name)  # untimed target-SF warm pass
-        except Exception:
-            pass
+    # untimed target-SF warm pass; its memo lookups mark the serve path
+    serve_path = [name for name in HEADLINE if warm(name, sf_dir)]
 
     calibration_probe()  # untimed: pays the probe's own codegen
     calibration_probe_io()  # untimed: pays codegen + first page-cache fill
@@ -439,39 +447,21 @@ def main() -> None:
     # whole benchmark after the headline passes already completed.
     extended: dict[str, float | None] = {}
     for name in EXTENDED:
-        try:
-            queries[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+        if warm(name, warm_dir):
+            serve_path.append(name)
         try:
             extended[name] = round(run_once(name), 3)
         except Exception as exc:  # noqa: BLE001
             print(f"EXTENDED FAILED {name}: {exc}", file=sys.stderr)
             extended[name] = None
 
-    # Serve-path disclosure (r15, additions-only): these queries read a
-    # session-scoped memo (_SIG_MEMO minhash signatures, _IVFPQ_MEMO
-    # trained index parts) that the warm pass populates, so their timed
-    # rows above measure the SERVE path (post-training cost) — the
-    # documented serving-shape contract, but not an end-to-end number.
-    # For each, also record ONE memo-cleared end-to-end sample so the
-    # artifact carries both costs explicitly. Existing rows unchanged.
-    SERVE_PATH_HEADLINE = ["dedup_near", "dedup_simhash"]
-    SERVE_PATH_EXTENDED = [
-        "dedup_incremental",
-        "dedup_incremental_minhash",
-        "join_set_similarity_verify",
-        "sim_topk_ivfpq",
-        "sink_ann_index_roundtrip",
-        "sink_ann_index_upsert",
-    ]
-    from parquet_processor_spark.ops.dedup import _SIG_MEMO
-    from parquet_processor_spark.ops.vector import _IVFPQ_MEMO
-
+    # Serve-path disclosure: the serve_path rows' warm builds filled a
+    # session memo, so their timed rows above measure the SERVE path
+    # (post-training cost), not an end-to-end number. Each also gets
+    # ONE memo-cleared end-to-end sample, so the artifact carries both.
     queries_e2e: dict[str, float | None] = {}
-    for name in SERVE_PATH_HEADLINE + SERVE_PATH_EXTENDED:
-        _SIG_MEMO.clear()
-        _IVFPQ_MEMO.clear()
+    for name in serve_path:
+        clear_session_memos()
         try:
             queries_e2e[name] = round(run_once(name), 3)
         except Exception:  # noqa: BLE001
@@ -547,7 +537,7 @@ def main() -> None:
         "extended": extended,
         # memo-backed rows (serve-path) and their one-shot end-to-end
         # samples — see the serve-path disclosure note above
-        "serve_path": SERVE_PATH_HEADLINE + SERVE_PATH_EXTENDED,
+        "serve_path": serve_path,
         "queries_e2e": queries_e2e,
     }
     headline_line = {
@@ -586,7 +576,7 @@ def main() -> None:
         # pass populated (serve-path cost); memo-cleared end-to-end
         # samples are on the extended line (queries_e2e) and in
         # BENCH_LOCAL.json
-        "serve_path": SERVE_PATH_HEADLINE,
+        "serve_path": [name for name in serve_path if name in HEADLINE],
     }
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"), "w") as f:
         json.dump(
@@ -595,7 +585,7 @@ def main() -> None:
                 "queries_min": times_min,
                 "extended": extended,
                 "spread": spread,
-                "serve_path": SERVE_PATH_HEADLINE + SERVE_PATH_EXTENDED,
+                "serve_path": serve_path,
                 "queries_e2e": queries_e2e,
             },
             f,

@@ -51,13 +51,15 @@ def materializing_count(df: DataFrame) -> int:
     materialization before the final aggregate), and ``isEmpty()`` on
     an eagerly local-checkpointed frame pays a probe job ON TOP of the
     checkpoint's own count job. Counting the executed plan's internal
-    RDD instead runs one job, and when ``df`` sits on a LAZILY
-    local-checkpointed frame this same job is what materializes the
-    checkpoint cache (computing any plan above the marked RDD computes
-    — and caches — every partition of it). This is the fixpoint-loop
-    probe primitive (guide §5 — fewer driver-synchronized jobs):
-    checkpoint materialization + convergence statistic in one job.
-    No Python-side row movement — the count happens in the JVM.
+    RDD (private ``_jdf`` API) instead runs one job. When ``df`` sits
+    on a LAZILY local-checkpointed frame, that same job materializes
+    the checkpoint ONLY if the plan above it is narrow — filters and
+    projections — which computes (and caches) every partition, so later
+    actions never recompute below the checkpoint. A limit, sample or
+    shuffle above it can leave partitions unmaterialized (extra jobs).
+    This is the fixpoint-loop probe primitive (guide §5 — fewer
+    driver-synchronized jobs): checkpoint materialization + convergence
+    statistic in one job, counted in the JVM.
     """
     return df._jdf.queryExecution().toRdd().count()
 

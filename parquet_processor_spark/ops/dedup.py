@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from parquet_processor_spark.io import materializing_count
 from parquet_processor_spark.registry import query
+from parquet_processor_spark.session import session_memo
 from parquet_processor_spark.tables import t
 
 
@@ -389,33 +390,12 @@ def minhash_signature(hashes_col: F.Column, k: int = _K) -> F.Column:
 # passes, recall gates, repeated driver checks), re-materializing the
 # expensive signature stage each time AND accumulating dead cached
 # partitions in the shared local-mode heap (the SCALE.md operational
-# note — measured as the dedup tail's 1.5-2x session drift). Keyed by
-# (applicationId, context startTime, sf_dir) — stable identifiers
-# that, unlike id(sparkContext), cannot be recycled by the allocator
-# after a stopped context is GC'd. Entries are validated on every hit
-# (context alive, plan still registered in the cache manager) so a
-# spark.catalog.clearCache() or a restarted session rebuilds rather
-# than serving a stale/dead DataFrame. Testdata dirs are immutable.
-_SIG_MEMO: dict = {}
-
-
+# note — measured as the dedup tail's 1.5-2x session drift). A hit also
+# needs the frame still in the cache manager, so clearCache() rebuilds:
+# storageLevel asks the JVM (DataFrame.is_cached is a Python-side flag
+# that clearCache() never resets).
 def _minhash_sig_cached(spark: SparkSession, sf: str) -> DataFrame:
-    sc = spark.sparkContext
-    key = (sc.applicationId, sc.startTime, sf)
-    sig = _SIG_MEMO.get(key)
-    if sig is not None:
-        try:
-            valid = (not sc._jsc.sc().isStopped()) and sig.is_cached
-        except Exception:  # noqa: BLE001 — any py4j breakage means "rebuild"
-            valid = False
-        if not valid:
-            _SIG_MEMO.pop(key, None)
-            sig = None
-    if sig is None:
-        # prune entries bound to other (dead) contexts so the memo
-        # stays one-entry-per-(live session, sf)
-        for k in [k for k in _SIG_MEMO if k[:2] != key[:2]]:
-            _SIG_MEMO.pop(k, None)
+    def build() -> DataFrame:
         # The BUILD runs at defaultParallelism (split_words repartition:
         # the shingle+md5 pass is CPU-bound and must not inherit a
         # single-file layout), but the CACHE is compacted to a
@@ -492,8 +472,9 @@ def _minhash_sig_cached(spark: SparkSession, sf: str) -> DataFrame:
             .cache()
         )
         sig.count()  # eager-by-design: materialize the reused-signature cache
-        _SIG_MEMO[key] = sig
-    return sig
+        return sig
+
+    return session_memo(spark, "minhash_sig", sf, build, valid=lambda sig: sig.storageLevel.useMemory)
 
 
 def _band_rows(sig_df: DataFrame) -> DataFrame:

@@ -660,9 +660,9 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     graph: (node, layer, in_core) where layer is the peel round that
     removed the node (1-based) and in_core marks the survivors (layer
     NULL). The Spark side runs the real data-dependent loop to
-    FIXPOINT; the oracle unrolls {_KCORE_MAX_ROUNDS} rounds, and a
-    fixture-guard test asserts convergence with margin so growth fails
-    loudly instead of as a parity mystery.
+    FIXPOINT, raising at {_KCORE_MAX_ROUNDS} rounds (the oracle's
+    unroll); a fixture-guard test asserts convergence with margin so
+    growth fails loudly instead of as a parity mystery.
 
     100 TB shape: one degree aggregate + one anti join per round over
     an edge list that only SHRINKS; edges are repartitioned on src once
@@ -711,6 +711,8 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
             .join(removed.select(F.col("node").alias("dst")), "dst", "left_anti")
             .localCheckpoint(eager=True)
         )
+    else:
+        raise RuntimeError(f"graph_kcore: peel loop did not converge in {_KCORE_MAX_ROUNDS} rounds")
     core = alive.select("node", F.lit(None).cast("int").alias("layer"))
     out = core if layers is None else layers.unionAll(core)
     return out.withColumn("in_core", F.col("layer").isNull())
@@ -775,8 +777,8 @@ def graph_bfs_distances(spark: SparkSession, sf: str) -> DataFrame:
     """Minimum hop distance from the seed set (node % 50 == 0) to every
     co-purchase node: (node, dist, reached); unreached components keep
     a NULL dist. The Spark side runs the data-dependent frontier loop
-    to fixpoint; the oracle unrolls {_BFS_MAX_ROUNDS} rounds with a
-    convergence-margin test guarding the gap.
+    to fixpoint, raising at the oracle's {_BFS_MAX_ROUNDS}-round unroll,
+    with a convergence-margin test guarding the gap.
 
     100 TB shape: each round is ONE equi-join of the current frontier
     against the src-partitioned edge list plus one anti join against
@@ -815,6 +817,8 @@ def graph_bfs_distances(spark: SparkSession, sf: str) -> DataFrame:
             break
         dists = dists.unionAll(frontier.select("node", F.lit(r).cast("int").alias("dist")))
         visited = visited.unionAll(frontier).localCheckpoint(eager=True)
+    else:
+        raise RuntimeError(f"graph_bfs_distances: frontier loop did not converge in {_BFS_MAX_ROUNDS} rounds")
     return (
         nodes.join(dists, "node", "left")
         .select("node", "dist", F.col("dist").isNotNull().alias("reached"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from parquet_processor_spark.io import scratch_dir
 from parquet_processor_spark.registry import query
+from parquet_processor_spark.session import session_memo
 from parquet_processor_spark.tables import t
 
 # Identical dot-product spelling for both engines: a sequential left
@@ -954,7 +955,7 @@ def _ivf_assign_q(qv_df: DataFrame, cb: DataFrame) -> DataFrame:
         if rows
         else np.zeros((0, 0), dtype=np.float64)
     )
-    bc = SparkSession.getActiveSession().sparkContext.broadcast((cids, cmat))
+    bc = cb.sparkSession.sparkContext.broadcast((cids, cmat))
 
     @F.pandas_udf("bigint")
     def _cell(qv: pd.Series) -> pd.Series:
@@ -1513,7 +1514,7 @@ def _ivfpq_assign_det(subsq: DataFrame, cb: DataFrame) -> DataFrame:
         )
     cids_m = {m: np.array([c for c, _ in v], dtype=np.int64) for m, v in by_m.items()}
     cmat_m = {m: np.array([e for _, e in v], dtype=np.float64) for m, v in by_m.items()}
-    bc = SparkSession.getActiveSession().sparkContext.broadcast((cids_m, cmat_m))
+    bc = cb.sparkSession.sparkContext.broadcast((cids_m, cmat_m))
 
     @F.pandas_udf("bigint")
     def _code(
@@ -1575,39 +1576,17 @@ def _ivfpq_train_det(subsq: DataFrame, k: int, iters: int) -> tuple[DataFrame, D
     return cb, _ivfpq_assign_det(subsq, cb)
 
 
-# Session-scoped index memo — the _SIG_MEMO discipline (ops/dedup.py):
-# the trained IVF-PQ parts are deterministic per (session, sf), and
-# BOTH consumers (the serve query and the persist/reload round-trip)
-# plus repeated bench/driver passes otherwise re-run the 2-round Lloyd
-# training each call. Production keeps the index AT REST
-# (sink_ann_index_roundtrip is that path); the memo is the in-session
-# analog. Keyed by (applicationId, startTime, sf); entries validated
-# against a live context on every hit.
-_IVFPQ_MEMO: dict = {}
-
-
+# Session-scoped index memo (session_memo): the trained IVF-PQ parts
+# are deterministic per (session, sf), and BOTH consumers (the serve
+# query and the persist/reload round-trip) plus repeated bench/driver
+# passes otherwise re-run the 2-round Lloyd training each call.
+# Production keeps the index AT REST (sink_ann_index_roundtrip is that
+# path); the memo is the in-session analog.
 def _ivfpq_build(spark: SparkSession, sf: str) -> dict[str, DataFrame]:
     """Build (or reuse) the IVF-PQ index parts: cell assignment, PQ
     codes, the trained codebook, plus the query-side frames (probe
     list, query subvectors, query embedding)."""
-    sc = spark.sparkContext
-    key = (sc.applicationId, sc.startTime, sf)
-    ix = _IVFPQ_MEMO.get(key)
-    if ix is not None:
-        try:
-            if sc._jsc.sc().isStopped():
-                ix = None
-        except Exception:  # noqa: BLE001 — any py4j breakage means "rebuild"
-            ix = None
-        if ix is None:
-            _IVFPQ_MEMO.pop(key, None)
-    if ix is not None:
-        return ix
-    for k in [k for k in _IVFPQ_MEMO if k[:2] != key[:2]]:
-        _IVFPQ_MEMO.pop(k, None)
-    ix = _ivfpq_build_uncached(spark, sf)
-    _IVFPQ_MEMO[key] = ix
-    return ix
+    return session_memo(spark, "ivfpq_index", sf, lambda: _ivfpq_build_uncached(spark, sf))
 
 
 def _ivfpq_build_uncached(spark: SparkSession, sf: str) -> dict[str, DataFrame]:
@@ -3094,27 +3073,19 @@ def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
             "n_cells_delta_hit bigint, top1_id bigint, serve_parity_ok boolean",
         )
     c = int(bounds["c"])
-    # corpus-trained parts share the _IVFPQ_MEMO (variant-tagged key):
-    # the 2-round Lloyd training dominates the wall and is identical
-    # across driver re-checks / bench passes in one session
-    sc = spark.sparkContext
-    memo_key = (sc.applicationId, sc.startTime, sf, "corpus")
-    cached = _IVFPQ_MEMO.get(memo_key)
-    try:
-        if cached is not None and sc._jsc.sc().isStopped():
-            cached = None
-    except Exception:  # noqa: BLE001 — any py4j breakage means "rebuild"
-        cached = None
-    if cached is not None:
-        subsq, cb, codes_all = cached
-    else:
+    # corpus-trained parts are session-memoized: the 2-round Lloyd
+    # training dominates the wall and is identical across driver
+    # re-checks / bench passes in one session
+    def _train_corpus():
         subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
         cb, _ = _ivfpq_train_det(subsq.where(F.col("vec_id") < c), _IVFPQ_K, _IVFPQ_ITERS)
         enc_all = _ivfpq_assign_det(subsq, cb)  # FROZEN codebook for corpus AND delta
         codes_all = enc_all.select(
             "vec_id", F.col("m").alias("cm"), F.col("cell").alias("code")
         ).localCheckpoint(eager=True)  # eager-by-design: feeds both writes + the in-memory serve
-        _IVFPQ_MEMO[memo_key] = (subsq, cb, codes_all)
+        return subsq, cb, codes_all
+
+    subsq, cb, codes_all = session_memo(spark, "ivfpq_upsert_corpus", sf, _train_corpus)
     # geometry FROZEN at corpus build time: n_cells/nprobe derive from
     # the pre-cutoff corpus count, never the delta (the upsert contract
     # — an append must not re-shape the index)

@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # C3: multi-tenant fair scheduling. The reference throttles concurrency
 # by hand (max 3 running, 30 s polls, batched launches —
@@ -118,6 +118,51 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Session-scoped memos: derived state that is deterministic per (live
+# session, sf) and too costly to rebuild per query call. Keyed by (name,
+# applicationId, context startTime, sf) — unlike id(sparkContext), these
+# cannot be recycled after a stopped context is GC'd.
+_MEMOS: dict = {}
+_MEMO_COUNTS: dict[str, dict[str, int]] = {}
+
+
+def session_memo(spark: SparkSession, name: str, sf: str, build, valid=lambda v: True):
+    """``build()``'s value, reused while its context lives and
+    ``valid(value)`` holds. A miss prunes the entries of other contexts.
+    Hits and misses are counted per ``name`` (:func:`session_memo_counts`)."""
+    sc = spark.sparkContext
+    key = (name, sc.applicationId, sc.startTime, sf)
+    counts = _MEMO_COUNTS.setdefault(name, {"hits": 0, "misses": 0})
+    if key in _MEMOS:
+        try:
+            live = (not sc._jsc.sc().isStopped()) and valid(_MEMOS[key])
+        except Exception:  # noqa: BLE001 — any py4j breakage means "rebuild"
+            live = False
+        if live:
+            counts["hits"] += 1
+            return _MEMOS[key]
+    for k in [k for k in _MEMOS if k[1:3] != key[1:3]]:
+        del _MEMOS[k]
+    counts["misses"] += 1
+    _MEMOS[key] = value = build()
+    return value
+
+
+def clear_session_memos() -> None:
+    """Drop every entry and unpersist cached frames, so the next lookup
+    rebuilds in full (calling .cache() again on the same plan would
+    otherwise reuse the cache manager's data)."""
+    for value in _MEMOS.values():
+        if isinstance(value, DataFrame) and value.is_cached:
+            value.unpersist()
+    _MEMOS.clear()
+
+
+def session_memo_counts() -> dict[str, dict[str, int]]:
+    """{name: {"hits": n, "misses": n}} since process start."""
+    return {name: dict(c) for name, c in _MEMO_COUNTS.items()}
 
 
 def run_in_pool(spark: SparkSession, pool: str, fn):

@@ -4,6 +4,7 @@ already enforces."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from parquet_processor_spark.ops.curation import _CAP_PER_SOURCE, _MIN_SHARED
@@ -932,6 +933,43 @@ def test_bfs_distances_match_python_bfs_with_unroll_margin(spark, sf_dir):
         assert r["reached"] == (n in dist)
     if dist:
         assert max(dist.values()) <= _BFS_MAX_ROUNDS - 2, "fixture needs a deeper unroll"
+
+
+def _fake_copurchase(monkeypatch, spark, edges):
+    # graph_kcore / graph_bfs_distances import agg_copurchase_pairs at
+    # call time, so patching the aggregates module swaps their input
+    from parquet_processor_spark.ops import aggregates
+
+    df = spark.createDataFrame(edges, "p1 long, p2 long")
+    monkeypatch.setattr(aggregates, "agg_copurchase_pairs", lambda spark, sf: df)
+
+
+def test_kcore_raises_at_round_cap(spark, sf_dir, monkeypatch):
+    # bandwidth-2 band graph on 12 nodes: each peel round removes one
+    # node from each end, so the decomposition needs 6 peel rounds
+    from parquet_processor_spark.ops import graph
+
+    n = 12
+    _fake_copurchase(
+        monkeypatch, spark, [(i, j) for i in range(n) for j in (i + 1, i + 2) if j < n]
+    )
+    layers = {r["node"]: r["layer"] for r in graph.graph_kcore(spark, sf_dir).collect()}
+    assert layers == {i: min(i, n - 1 - i) + 1 for i in range(n)}
+    monkeypatch.setattr(graph, "_KCORE_MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.graph_kcore(spark, sf_dir)
+
+
+def test_bfs_raises_at_round_cap(spark, sf_dir, monkeypatch):
+    # a 10-node chain seeded at node 0: distances reach 9
+    from parquet_processor_spark.ops import graph
+
+    _fake_copurchase(monkeypatch, spark, [(i, i + 1) for i in range(9)])
+    dist = {r["node"]: r["dist"] for r in graph.graph_bfs_distances(spark, sf_dir).collect()}
+    assert dist == {i: i for i in range(10)}
+    monkeypatch.setattr(graph, "_BFS_MAX_ROUNDS", 5)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.graph_bfs_distances(spark, sf_dir)
 
 
 def test_decile_lift_matches_python_ranker(spark, sf_dir):

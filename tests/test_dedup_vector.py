@@ -838,6 +838,41 @@ def test_ivf_assign_q_arrow_bit_exact_with_jvm_struct_min(spark, sf_dir):
     assert new == old and len(new) >= 500
 
 
+def test_centroid_kernels_build_from_a_worker_thread(spark):
+    # The ANN sinks build and write from ThreadPoolExecutor workers,
+    # where the thread-local SparkSession.getActiveSession() is None;
+    # both broadcast kernels must take the context from their own
+    # codebook frame instead.
+    from concurrent.futures import ThreadPoolExecutor
+
+    from parquet_processor_spark.ops.vector import _ivf_assign_q, _ivfpq_assign_det
+
+    qv = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [9.0, 9.0])], "vec_id long, qv array<double>"
+    )
+    ivf_cb = spark.createDataFrame(
+        [(10, [1.0, 1.0]), (20, [8.0, 8.0])], "cid long, cv array<double>"
+    )
+    subsq = spark.createDataFrame(
+        [(1, 0, 0, 0, 0, 0), (2, 0, 9, 9, 9, 9)],
+        "vec_id long, m int, q1 long, q2 long, q3 long, q4 long",
+    )
+    pq_cb = spark.createDataFrame(
+        [(0, 5, 1.0, 1.0, 1.0, 1.0), (0, 7, 8.0, 8.0, 8.0, 8.0)],
+        "m int, cid long, c1 double, c2 double, c3 double, c4 double",
+    )
+
+    def build_and_collect():
+        ivf = {r["vec_id"]: r["cell"] for r in _ivf_assign_q(qv, ivf_cb).collect()}
+        pq = {r["vec_id"]: r["cell"] for r in _ivfpq_assign_det(subsq, pq_cb).collect()}
+        return ivf, pq
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        ivf, pq = pool.submit(build_and_collect).result()
+    assert ivf == {1: 10, 2: 20}
+    assert pq == {1: 5, 2: 7}
+
+
 def test_bucket_pair_cos_bit_exact_with_pair_kernel(spark, sf_dir):
     # r15: the banded pair family moved from pair-spine + embedding
     # re-joins + pair_cos_arrow to bucket-LOCAL scoring

@@ -1486,3 +1486,35 @@ def test_right_outer_broadcasts_the_filtered_side(spark):
     plan = plan_of(spark, "join_right_outer")
     assert "BroadcastHashJoin" in plan and "RightOuter" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_materializing_count_is_one_job_and_materializes_the_checkpoint(spark):
+    # io.materializing_count's contract: over a narrow plan (filter +
+    # projection) on a LAZY localCheckpoint, the probe is ONE job, and
+    # that job materializes the checkpoint — a later action on the same
+    # frame never recomputes below it (the UDF runs once per row)
+    from pyspark.sql.types import LongType
+
+    from parquet_processor_spark.io import materializing_count
+
+    sc = spark.sparkContext
+    n = 200
+    calls = sc.accumulator(0)
+
+    @F.udf(LongType())
+    def tick(x):
+        calls.add(1)
+        return x
+
+    base = spark.range(0, n, 1, 4).select(tick("id").alias("v")).localCheckpoint(eager=False)
+    group = "materializing_count_contract"
+    sc.setJobGroup(group, group)
+    try:
+        assert materializing_count(base.where(F.col("v") % 2 == 0).select("v")) == n // 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert calls.value == n
+    assert sorted(r["v"] for r in base.collect()) == list(range(n))
+    assert calls.value == n

@@ -5,6 +5,19 @@ fusion), independent of host weather.
 
 Usage: python tools/count_jobs.py <query> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
+
+Assumptions (a local diagnostic, not a profiler):
+- Job ids are globally monotone, and the count is the id range between
+  the last job before the run and the last job after it, read from
+  ``getJobIdsForGroup(None)`` (jobs with no job group).
+- No code path sets a job group. A job launched under a group is
+  missed, and the range is taken from ungrouped jobs only.
+- Nothing else launches jobs during the run. Concurrent jobs (another
+  session, a streaming query, background threads) are counted as the
+  query's own.
+- Queries run in the order given in one session, so session memos
+  (``session.session_memo``) filled by an earlier query are hits for a
+  later one and their build jobs are not counted again.
 """
 
 from __future__ import annotations
