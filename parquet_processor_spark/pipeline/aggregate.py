@@ -10,8 +10,12 @@ available as operator agg_max_by.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from parquet_processor_spark.pipeline.schemas import STATS_SCHEMA
 
 
 def read_combined(spark: SparkSession, records_dir: str) -> DataFrame:
@@ -33,31 +37,35 @@ def write_combined(df: DataFrame, out_dir: str) -> None:
 
 def compute_statistics(df: DataFrame) -> Row:
     """The statistics record (test_parquet_aggregator.yml:169-181):
-    scalar aggregates + media-type map + per-file stats, in two passes
-    (one over rows, one tiny over files)."""
-    scalars = df.agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.avg("processing_time").alias("avg_processing_time"),
-        F.sum("processing_time").alias("total_processing_time"),
-    ).collect()[0]
-    media_counts = {
-        r["media_type"]: r["n"]
-        for r in df.groupBy("media_type").agg(F.count(F.lit(1)).alias("n")).collect()
-        if r["media_type"] is not None
-    }
-    per_file = (
+    scalar aggregates + media-type map + per-file stats, from ONE scan —
+    grouping sets over (), (media_type) and (file); ``grouping_id`` tells
+    the three row kinds apart."""
+    rows = (
         df.withColumn("file", F.input_file_name())
-        .groupBy("file")
-        .agg(F.count(F.lit(1)).alias("records"))
+        .groupingSets([[], ["media_type"], ["file"]], "media_type", "file")
+        .agg(
+            F.grouping_id().alias("gid"),
+            F.count(F.lit(1)).alias("n"),
+            F.avg("processing_time").alias("avg_time"),
+            F.sum("processing_time").alias("sum_time"),
+        )
         .collect()
     )
+    # grouping_id bits are (media_type, file): 3 = (), 1 = (media_type), 2 = (file).
+    # An empty frame yields no rows at all, not even the () set's.
+    scalars = next(
+        (r for r in rows if r["gid"] == 3), {"n": 0, "avg_time": None, "sum_time": None}
+    )
+    per_file = [r for r in rows if r["gid"] == 2]
     return Row(
-        total_records=scalars["total_records"],
+        total_records=scalars["n"],
         files_combined=len(per_file),
-        avg_processing_time=scalars["avg_processing_time"],
-        total_processing_time=scalars["total_processing_time"],
-        media_types=media_counts,
-        source_files=[{"file": r["file"], "records": r["records"], "size": None} for r in per_file],
+        avg_processing_time=scalars["avg_time"],
+        total_processing_time=scalars["sum_time"],
+        media_types={
+            r["media_type"]: r["n"] for r in rows if r["gid"] == 1 and r["media_type"] is not None
+        },
+        source_files=[{"file": r["file"], "records": r["n"], "size": None} for r in per_file],
     )
 
 
@@ -82,7 +90,8 @@ def run_aggregation(spark: SparkSession, records_dir: str, out_dir: str) -> Row:
     df = read_combined(spark, records_dir)
     write_combined(df, out_dir)
     stats = compute_statistics(df)
-    spark.createDataFrame([stats]).coalesce(1).write.mode("overwrite").json(
+    record = pa.Table.from_pylist([stats.asDict()], schema=to_arrow_schema(STATS_SCHEMA))
+    spark.createDataFrame(record, STATS_SCHEMA).write.mode("overwrite").json(
         f"{out_dir}/statistics"
     )
     with open(f"{out_dir}/summary.md", "w") as fh:

@@ -3,13 +3,14 @@ dead-letter, canary gate, aggregation job (SURVEY.md §3.1/§3.3)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_processor_spark.pipeline.aggregate import run_aggregation
+from parquet_processor_spark.pipeline.aggregate import compute_statistics, run_aggregation
 from parquet_processor_spark.pipeline.fetch import (
     fake_transport,
     fetch_stage,
@@ -17,7 +18,7 @@ from parquet_processor_spark.pipeline.fetch import (
     no_network_transport,
 )
 from parquet_processor_spark.pipeline.run import canary_gate, global_index, run_pipeline
-from parquet_processor_spark.pipeline.schemas import REQUIRED_COLUMNS, scrape_schema
+from parquet_processor_spark.pipeline.schemas import REQUIRED_COLUMNS, STATS_SCHEMA, scrape_schema
 
 
 @pytest.fixture(scope="module")
@@ -127,6 +128,103 @@ def test_aggregation_job(spark, manifest, tmp_path):
     assert os.path.exists(str(tmp_path / "agg" / "summary.md"))
     combined = spark.read.option("header", True).csv(str(tmp_path / "agg" / "combined_csv"))
     assert combined.count() == stats.total_records
+
+
+def test_statistics_of_an_empty_frame(spark):
+    # grouping sets give no row at all for zero input rows; the record
+    # must still come back with zero counts, as a plain agg would give
+    empty = spark.createDataFrame([], "media_type string, processing_time double")
+    stats = compute_statistics(empty)
+    assert stats.total_records == 0 and stats.files_combined == 0
+    assert stats.avg_processing_time is None and stats.total_processing_time is None
+    assert stats.media_types == {} and stats.source_files == []
+
+
+def test_statistics_record_uses_declared_schema(spark, manifest, tmp_path):
+    # The record on disk must carry STATS_SCHEMA's types: per-file
+    # `records` as integers (an inferred map<string,string> wrote "400").
+    out = str(tmp_path / "out")
+    run_pipeline(
+        spark, manifest, out, fake_transport, segment_size=20, num_tasks=4, canary=False
+    )
+    stats = run_aggregation(spark, f"{out}/records", f"{out}/agg")
+    row = spark.read.schema(STATS_SCHEMA).json(f"{out}/agg/statistics").collect()
+    assert len(row) == 1
+    files = row[0]["source_files"]
+    assert len(files) == stats.files_combined
+    assert all(isinstance(f["records"], int) for f in files)
+    assert sum(f["records"] for f in files) == row[0]["total_records"] == stats.total_records
+    assert row[0]["media_types"] == stats.media_types
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_job_counts_and_file_layout(spark, manifest, tmp_path):
+    # One pass does each piece of work once: one count of the urls, no
+    # join-back, one control aggregate, one statistics scan. The fetch
+    # is range-partitioned on batch_index, so each task writes one file
+    # per segment it spans: at most num_tasks + n_segments - 1 files, and
+    # the same number every run.
+    num_tasks, segment_size = 4, 20
+    n_segments = 3  # 60 positions
+    layouts = []
+    for run in range(2):
+        out = str(tmp_path / f"out{run}")
+        res, pipe_jobs = _jobs_in_group(
+            spark,
+            f"ingest_pipeline_{run}",
+            lambda: run_pipeline(
+                spark, manifest, out, fake_transport, segment_size=segment_size, num_tasks=num_tasks
+            ),
+        )
+        stats, agg_jobs = _jobs_in_group(
+            spark,
+            f"ingest_aggregate_{run}",
+            lambda: run_aggregation(spark, f"{out}/records", f"{out}/agg"),
+        )
+        assert res.total_processed + res.error_count == 60
+        assert pipe_jobs <= 17, pipe_jobs
+        assert agg_jobs <= 6, agg_jobs
+        files = sorted(
+            os.path.relpath(os.path.dirname(p), out)
+            for p in glob.glob(f"{out}/records/**/*.parquet", recursive=True)
+        )
+        assert len(files) <= num_tasks + n_segments - 1, files
+        assert stats.files_combined == len(files)
+        layouts.append(files)
+    assert layouts[0] == layouts[1]
+
+
+def test_canary_fetches_the_first_ten_positions_of_the_slice(spark, manifest, tmp_path):
+    # The canary must dry-run positions [start_index, start_index + 10):
+    # a transport that fails everywhere else still passes the gate, and
+    # the rows outside the window land in the dead-letter output.
+    window = {f"https://example.org/concern/media/{700000 + i}?locale=en" for i in range(20, 30)}
+
+    def window_only(url: str):
+        if url not in window:
+            raise ConnectionError(f"outside the canary window: {url}")
+        return fake_transport(url)
+
+    out = str(tmp_path / "out")
+    res = run_pipeline(
+        spark, manifest, out, window_only, start_index=20, segment_size=20, num_tasks=4
+    )
+    fake_dead = {i for i in range(20, 30) if (700000 + i) % 17 == 0}
+    assert res.total_processed == 10 - len(fake_dead)
+    assert res.next_index == 60 and not res.has_more
+    dead = {r["index"] for r in spark.read.json(f"{out}/skipped").collect()}
+    assert dead == set(range(30, 60)) | fake_dead
+    assert res.error_count == len(dead)
 
 
 def test_scrape_schema_contract():

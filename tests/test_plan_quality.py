@@ -578,7 +578,7 @@ def test_abc_and_gini_window_collapsed_keys_only(spark):
 
 def test_global_index_offsets_join_not_casewhen(spark, tmp_path):
     # The per-partition offset table must re-enter the index plan as a
-    # BROADCAST JOIN on (_pid, _offset) — the old shape (one
+    # BROADCAST JOIN on a (_pid, _offset) LocalTableScan — the old shape (one
     # coalesce(when(_pid==k, off), ...) branch per partition) is a
     # pathological Catalyst expression tree at 10^4-10^5 tasks.
     import json
@@ -595,6 +595,10 @@ def test_global_index_offsets_join_not_casewhen(spark, tmp_path):
         idx._jdf.queryExecution(), "formatted"
     )
     assert "BroadcastHashJoin" in plan, plan
+    # built from Arrow, the offset table is a LocalTableScan: no Python
+    # RDD for every action over the index to re-run
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
     n_when = plan.count("CASE WHEN")
     assert n_when <= 2, f"offset chain leaked back as CaseWhen branches:\n{plan}"
     # and the index itself must still be a dense 0..N-1 sequence
