@@ -130,9 +130,9 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     node-keyed join that AQE plans as broadcast once the node table
     is small relative to edges. The fixed unroll keeps lineage
     shallow (3 rounds); an open-ended variant would localCheckpoint
-    per round exactly as kmeans_ivf_train and connected_components
-    do. Integer mass makes retries/stragglers safe: any partial
-    recomputation reproduces identical bytes.
+    per round exactly as connected_components does. Integer mass
+    makes retries/stragglers safe: any partial recomputation
+    reproduces identical bytes.
     """
     e0 = (
         t(spark, sf, "orders")
@@ -148,7 +148,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # eager-by-design: every round's inflow join references `edges`;
     # without materialization Spark re-derives the orders⋈lineitem
     # distinct per round (3 extra fact joins). Same localCheckpoint
-    # pattern as connected_components / kmeans_ivf_train. The edge
+    # pattern as connected_components. The edge
     # list is hash-partitioned on src BEFORE the checkpoint:
     # localCheckpoint preserves the physical partitioning, so every
     # round's edges⋈shares join reuses it and only the k-node shares

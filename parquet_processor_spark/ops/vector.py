@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,6 +60,120 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+# Nearest-centroid arithmetic shared by the Arrow kernels and the Lloyd
+# rounds. Every fold is np.cumsum's left-to-right sum, so it is bitwise
+# the sequential F.aggregate fold of the JVM expressions it replaced.
+def _codebook(rows, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, float64 matrix) of a collected centroid table, sorted by id
+    so an argmax/argmin first hit is the lowest id."""
+    rows = sorted(rows, key=lambda r: r[id_col])
+    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    if not rows:
+        return ids, np.zeros((0, 0), dtype=np.float64)
+    return ids, np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+
+
+def _cos_best(emat: np.ndarray, cmat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per row: (index, cosine) of the most similar centroid. The cosine
+    is one IEEE division of dot/(na*nc); ties and NaNs go to the first
+    (lowest-id) centroid, as the old (s, -cid) struct max did."""
+    na = np.sqrt(np.cumsum(emat * emat, axis=1)[:, -1])
+    ncs = np.sqrt(np.cumsum(cmat * cmat, axis=1)[:, -1])
+    scores = np.empty((emat.shape[0], len(cmat)), dtype=np.float64)
+    for j in range(len(cmat)):
+        scores[:, j] = np.cumsum(emat * cmat[j], axis=1)[:, -1] / (na * ncs[j])
+    idx = np.argmax(scores, axis=1)
+    return idx, scores[np.arange(len(idx)), idx]
+
+
+def _l2_best(q: np.ndarray, cmat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per row: (index, L2²) of the nearest centroid. All-NaN rows and
+    ties go to the first (lowest-id) centroid, as the old (d, cid)
+    struct min did."""
+    d = np.empty((q.shape[0], len(cmat)), dtype=np.float64)
+    for j in range(len(cmat)):
+        diff = q - cmat[j]
+        d[:, j] = np.cumsum(diff * diff, axis=1)[:, -1]
+    idx = np.argmin(d, axis=1)
+    return idx, d[np.arange(len(idx)), idx]
+
+
+def lloyd_round(
+    df: DataFrame, col: str, cids: np.ndarray, cmat: np.ndarray, metric: str
+) -> tuple[np.ndarray, np.ndarray, int, float | None]:
+    """One Lloyd round in MLlib's k-means shape: a single map-only Arrow
+    pass assigns each row of ``df[col]`` to its nearest centroid
+    (``metric`` "cos": :func:`_cos_best`, loss 1 - cos; "l2":
+    :func:`_l2_best`, loss L2²) and emits per-cell (count, vector sum,
+    loss) partials; one collect, then a NumPy reduce on the driver.
+    No shuffle, one job.
+
+    Returns (cids, centroids, n_rows, inertia): the cells that got a
+    member, each centroid its sum / count (one IEEE division per
+    coordinate, cells with no member dropped), every row counted, and
+    the summed loss (None when no row was assigned).
+
+    An array<bigint> column sums in int64, exactly and order-free, so
+    the centroids do not depend on partitioning; other columns sum in
+    float64. A null row counts in n_rows and joins no cell. Rows must be
+    fixed-width; a null element reads as NaN on the float path and
+    raises on the integer path.
+    """
+    best = {"cos": _cos_best, "l2": _l2_best}[metric]
+    exact = df.schema[col].dataType.elementType.typeName() == "long"
+    schema = f"cell bigint, n bigint, vsum array<{'bigint' if exact else 'double'}>, loss double"
+
+    def partials(batches):
+        for pdf in batches:
+            vals = pdf[col]
+            mask = vals.notna().to_numpy()
+            out = []
+            if len(cids) and mask.any():
+                x = np.stack(list(vals[mask]))
+                if exact and x.dtype.kind != "i":
+                    raise ValueError(f"lloyd_round: null element in {col}")
+                idx, score = best(x.astype(np.float64), cmat)
+                loss = 1.0 - score if metric == "cos" else score
+                sums = np.zeros((len(cids), x.shape[1]), dtype=np.int64 if exact else np.float64)
+                np.add.at(sums, idx, x)
+                counts = np.bincount(idx, minlength=len(cids))
+                losses = np.bincount(idx, weights=loss, minlength=len(cids))
+                out = [
+                    (int(cids[j]), int(counts[j]), sums[j].tolist(), float(losses[j]))
+                    for j in np.flatnonzero(counts)
+                ]
+            n_free = len(vals) - (int(mask.sum()) if len(cids) else 0)
+            if n_free:
+                out.append((None, n_free, None, None))
+            cell, n, vsum, loss = zip(*out) if out else ((), (), (), ())
+            yield pd.DataFrame(
+                {
+                    "cell": pd.Series(cell, dtype="object"),  # keeps ids int beside a null
+                    "n": pd.Series(n, dtype="int64"),
+                    "vsum": pd.Series(vsum, dtype="object"),
+                    "loss": pd.Series(loss, dtype="float64"),
+                }
+            )
+
+    rows = df.select(col).mapInPandas(partials, schema).collect()  # eager-by-design: k partial rows per task, the round's only job
+    pos = {int(c): j for j, c in enumerate(cids)}
+    counts = np.zeros(len(cids), dtype=np.int64)
+    sums = np.zeros(cmat.shape, dtype=np.int64 if exact else np.float64)
+    n_rows, inertia = 0, None
+    for r in rows:
+        n_rows += r["n"]
+        if r["cell"] is None:
+            continue
+        j = pos[r["cell"]]
+        counts[j] += r["n"]
+        sums[j] += np.asarray(r["vsum"], dtype=sums.dtype)
+        loss = np.nan if r["loss"] is None else r["loss"]  # pandas -> Arrow turns NaN into null
+        inertia = loss if inertia is None else inertia + loss
+    kept = np.flatnonzero(counts)
+    cents = sums[kept].astype(np.float64) / counts[kept, None].astype(np.float64)
+    return cids[kept], cents, n_rows, inertia
+
+
 def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
     """Map-side IVF cell assignment: collect the (cid, c_emb) centroid
     table once (bounded control state — sqrt(N) rows by the derived
@@ -88,22 +203,9 @@ def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
     Returns e's columns plus ``cell`` (winning centroid id) and
     ``best_cos`` (its cosine score).
     """
-    rows = cent.select("cid", "c_emb").collect()  # eager-by-design:
+    cids, cmat = _codebook(cent.select("cid", "c_emb").collect(), "cid", "c_emb")  # eager-by-design:
     # n_cells = sqrt(N) control rows — the same mass the previous
     # shape collapsed into a single broadcast array row
-    rows.sort(key=lambda r: r["cid"])  # argmax-first-hit == lowest cid
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = (
-        np.stack([np.asarray(r["c_emb"], dtype=np.float64) for r in rows])
-        if rows
-        else np.zeros((0, 0), dtype=np.float64)
-    )
-    # centroid norms once per centroid: sqrt of the same left fold
-    ncs = (
-        np.sqrt(np.cumsum(cmat * cmat, axis=1)[:, -1])
-        if len(rows)
-        else np.zeros(0, dtype=np.float64)
-    )
 
     @F.pandas_udf("cell bigint, best_cos double")
     def _best(emb: pd.Series) -> pd.DataFrame:
@@ -113,15 +215,9 @@ def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
             none = pd.Series([None] * n, dtype="object")
             return pd.DataFrame({"cell": none, "best_cos": none})
         emat = np.stack([np.asarray(v, dtype=np.float64) for v in emb[mask]])
-        na = np.sqrt(np.cumsum(emat * emat, axis=1)[:, -1])
-        scores = np.empty((emat.shape[0], len(cids)), dtype=np.float64)
-        for j in range(len(cids)):
-            scores[:, j] = np.cumsum(emat * cmat[j], axis=1)[:, -1] / (na * ncs[j])
-        idx = np.argmax(scores, axis=1)  # ties and NaNs -> first hit == lowest cid
+        idx, best = _cos_best(emat, cmat)
         if mask.all():
-            return pd.DataFrame(
-                {"cell": cids[idx], "best_cos": scores[np.arange(len(idx)), idx]}
-            )
+            return pd.DataFrame({"cell": cids[idx], "best_cos": best})
         # null embeddings emit (null, null). Precondition: every
         # fixture embedding is non-null (generation fills all rows;
         # the empty-input suite covers the 0-row case), so this branch
@@ -130,10 +226,10 @@ def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
         # embeddings, which cannot occur in fixtures; non-null rows
         # keep their argmax
         cell = pd.Series([None] * n, dtype="object")
-        best = pd.Series([None] * n, dtype="object")
+        best_cos = pd.Series([None] * n, dtype="object")
         cell[mask] = list(cids[idx])
-        best[mask] = list(scores[np.arange(len(idx)), idx])
-        return pd.DataFrame({"cell": cell, "best_cos": best})
+        best_cos[mask] = list(best)
+        return pd.DataFrame({"cell": cell, "best_cos": best_cos})
 
     return e.withColumn("_best", _best(F.col("embedding"))).select(
         *e.columns,
@@ -806,9 +902,9 @@ def sim_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# IVF centroid TRAINING: k-means (Lloyd) as an iterative DataFrame
-# algorithm — the missing half of sim_topk_ivf, whose centroids are a
-# fixed seed set. Deterministic throughout: init = the embeddings of
+# IVF centroid TRAINING: k-means (Lloyd), one map-only pass per round
+# (lloyd_round) — the missing half of sim_topk_ivf, whose centroids
+# are a fixed seed set. Deterministic throughout: init = the embeddings of
 # vec_id 1..k (no RNG), ties in assignment break to the lowest cid,
 # fixed iteration count (no float-convergence test).
 _KM_K = 8
@@ -827,58 +923,43 @@ def kmeans_ivf_train(spark: SparkSession, sf: str) -> DataFrame:
     """Train IVF cells with Lloyd iterations and emit the oracle-checkable
     facts: k, corpus size, and inertia(final) <= inertia(init).
 
-    Per iteration (all DataFrame ops): broadcast the k centroids against
-    the corpus, argmax-cosine assign (max_by with lowest-cid tiebreak),
-    then recompute each centroid as the element-wise mean via
-    posexplode → avg per (cell, dim) → array_sort(collect_list) re-pack.
-    The k-row centroid table is localCheckpointed per round, so round N
-    never replays rounds 1..N-1; the corpus is scanned once per round —
-    the canonical 100 TB k-means shape (centroids broadcast, data never
-    shuffles except the tiny per-cell partial means).
+    Each round is one :func:`lloyd_round` pass (cosine argmax
+    assignment, per-cell count/sum/loss partials map-side, one collect,
+    the mean update on the driver): the corpus never shuffles and the
+    k centroids ride the kernel's closure. Round 1's pass also gives
+    inertia(init); a fifth pass against the round-4 centroids gives the
+    final count and inertia. At most eight jobs a call: the table read,
+    the seed collect, five passes, and the final action over the
+    one-row result (a LocalTableScan). Empty input gives n_assigned 0
+    and a null inertia_improved, as the aggregate over no rows did.
 
     Exact centroid float values depend on partial-sum order, which is
     why the driver gate is the inertia MONOTONICITY boolean plus exact
     counts, not centroid coordinates (same policy as ops/recall.py).
     """
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
-
-    def assign(cent: DataFrame) -> DataFrame:
-        # map-side argmax over the broadcast centroid array: the corpus
-        # never shuffles for assignment (see assign_cells)
-        return assign_cells(e, cent)
-
-    def inertia(assigned: DataFrame) -> DataFrame:
-        return assigned.agg(F.sum(1 - F.col("best_cos")).alias("inertia"))
-
-    cent = e.where(F.col("vec_id").between(1, _KM_K)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
-    )
-    first_assign = assign(cent)
-    inertia0 = inertia(first_assign).select(F.col("inertia").alias("inertia_init"))
-    assigned = first_assign
-    for _ in range(_KM_ITERS):
-        cent = (
-            assigned.select("cell", F.posexplode("embedding").alias("i", "x"))
-            .groupBy("cell", "i")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
-                ).alias("c_emb")
-            )
-            .select(F.col("cell").alias("cid"), "c_emb")
-            .localCheckpoint()  # eager-by-design: k-row centroid table; cuts per-round lineage
-        )
-        assigned = assign(cent)
-    final = assigned.agg(
-        F.count(F.lit(1)).alias("n_assigned"), F.sum(1 - F.col("best_cos")).alias("inertia_final")
-    )
-    return final.crossJoin(inertia0).select(
-        F.lit(_KM_K).cast("int").alias("k"),
-        "n_assigned",
+    seeds = e.where(F.col("vec_id").between(1, _KM_K)).collect()  # eager-by-design: k seed rows
+    cids, cmat = _codebook(seeds, "vec_id", "embedding")
+    inertia_init = None
+    for r in range(_KM_ITERS):
+        cids, cmat, _, inertia = lloyd_round(e, "embedding", cids, cmat, "cos")
+        if r == 0:
+            inertia_init = inertia
+    _, _, n_assigned, inertia_final = lloyd_round(e, "embedding", cids, cmat, "cos")
+    improved = (
+        None
+        if inertia_init is None or inertia_final is None
         # 1e-9 slack: inertia is a float sum; Lloyd never increases it
-        (F.col("inertia_final") <= F.col("inertia_init") + 1e-9).alias("inertia_improved"),
+        else inertia_final <= inertia_init + 1e-9
+    )
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "k": pa.array([_KM_K], pa.int32()),
+                "n_assigned": pa.array([n_assigned], pa.int64()),
+                "inertia_improved": pa.array([improved], pa.bool_()),
+            }
+        )
     )
 
 
@@ -947,14 +1028,7 @@ def _ivf_assign_q(qv_df: DataFrame, cb: DataFrame) -> DataFrame:
     (lowest-cid) index. Pinned bitwise by tests/test_dedup_vector.py::
     test_ivf_assign_q_arrow_bit_exact_with_jvm_struct_min.
     """
-    rows = cb.select("cid", "cv").collect()  # eager-by-design: k-row trained-centroid control table rides the Arrow kernel closure
-    rows.sort(key=lambda r: r["cid"])  # argmin-first-hit == lowest cid
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = (
-        np.stack([np.asarray(r["cv"], dtype=np.float64) for r in rows])
-        if rows
-        else np.zeros((0, 0), dtype=np.float64)
-    )
+    cids, cmat = _codebook(cb.select("cid", "cv").collect(), "cid", "cv")  # eager-by-design: k-row trained-centroid control table
     bc = cb.sparkSession.sparkContext.broadcast((cids, cmat))
 
     @F.pandas_udf("bigint")
@@ -971,11 +1045,7 @@ def _ivf_assign_q(qv_df: DataFrame, cb: DataFrame) -> DataFrame:
             Q = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in qv[mask]]
             )
-            d = np.empty((Q.shape[0], len(cids_b)), dtype=np.float64)
-            for j in range(len(cids_b)):
-                t = Q - cmat_b[j]
-                d[:, j] = np.cumsum(t * t, axis=1)[:, -1]
-            out[mask] = list(cids_b[np.argmin(d, axis=1)])
+            out[mask] = list(cids_b[_l2_best(Q, cmat_b)[0]])
         else:
             # whole-row nulls: every distance was null, struct-min tie
             # broke to the lowest cid
@@ -989,41 +1059,26 @@ def _ivf_assign_q(qv_df: DataFrame, cb: DataFrame) -> DataFrame:
 def _ivf_train_cells(e: DataFrame, params: DataFrame, iters: int = _IVF_TRAIN_ITERS) -> tuple[DataFrame, DataFrame]:
     """(qv, cb): the quantized corpus and the Lloyd-trained centroid
     table (cid, cv array<double>) under the derived n_cells geometry.
-    Per round: map-side argmin assignment (broadcast centroids), then
-    the per-(cell, dim) integer-mean update — posexplode to (cell,
-    dim, sum, count) partials map-side combined, re-packed by
-    array_sort; the k-row centroid table is localCheckpointed per
-    round so round N never replays rounds 1..N-1 (kmeans_ivf_train's
-    loop discipline with hash-exact arithmetic)."""
+    Seeds are the qv of vec_id 1..n_cells; each round is one
+    :func:`lloyd_round` pass (L2 argmin by _ivf_assign_q's arithmetic,
+    int64 per-cell sums, one IEEE division per coordinate), so every
+    codebook is bitwise the oracle's unrolled integer Lloyd. cb is built
+    from Arrow (a LocalTableScan), so collecting or broadcasting it runs
+    no job."""
     qv = _ivf_qvec(e).localCheckpoint(eager=True)  # eager-by-design: read by every Lloyd round + the serve
-    cb = (
-        qv.crossJoin(F.broadcast(params.select("n_cells")))
-        .where(F.col("vec_id").between(F.lit(1), F.col("n_cells")))
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.transform("qv", lambda x: x.cast("double")).alias("cv"),
+    n_cells = params.select("n_cells").first()[0]  # eager-by-design: 1-row geometry
+    seeds = qv.where(F.col("vec_id").between(1, n_cells)).collect()  # eager-by-design: n_cells seed rows
+    cids, cmat = _codebook(seeds, "vec_id", "qv")
+    for _ in range(iters):
+        cids, cmat, _, _ = lloyd_round(qv, "qv", cids, cmat, "l2")
+    cb = qv.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "cid": pa.array(cids.tolist(), pa.int64()),
+                "cv": pa.array(cmat.tolist(), pa.list_(pa.float64())),
+            }
         )
     )
-    for _ in range(iters):
-        assigned = _ivf_assign_q(qv, cb)
-        cb = (
-            assigned.select("cell", F.posexplode("qv").alias("i", "x"))
-            .groupBy("cell", "i")
-            .agg(F.sum("x").cast("long").alias("s"), F.count(F.lit(1)).alias("n"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("i", (F.col("s").cast("double") / F.col("n")).alias("m"))
-                        )
-                    ),
-                    lambda s: s["m"],
-                ).alias("cv")
-            )
-            .select(F.col("cell").alias("cid"), "cv")
-            .localCheckpoint(eager=True)  # eager-by-design: k-row centroid table per round
-        )
     return qv, cb
 
 
@@ -1124,9 +1179,9 @@ def sim_topk_ivf_trained(spark: SparkSession, sf: str) -> DataFrame:
     top-10 hash-matches bitwise despite two rounds of float centroid
     updates.
 
-    100 TB shape: training is kmeans_ivf_train's canonical loop
-    (broadcast centroids, map-side argmin, per-(cell, dim) integer
-    partials map-side combined — the corpus never shuffles); serving
+    100 TB shape: training is kmeans_ivf_train's loop (lloyd_round:
+    centroids in the kernel closure, map-side argmin, per-cell integer
+    partials collected — the corpus never shuffles); serving
     is sim_topk_ivf_nprobe's plan against the trained table. Rounds
     are a scheduled offline cost; the serve touches nprobe/n_cells of
     the corpus per query. `recall_sim_topk_ivf_trained` is the

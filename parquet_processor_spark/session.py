@@ -21,6 +21,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # C3: multi-tenant fair scheduling. The reference throttles concurrency
 # by hand (max 3 running, 30 s polls, batched launches —
 # test_parquet_coordinator.yml:290-356); Spark's fair scheduler is the
@@ -114,6 +116,11 @@ def get_spark(
         # (one pool, one job); concurrent tenants share by weight.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.scheduler.allocation.file", _fair_pools_file())
+        # Python workers: the daemon skips PySpark's per-task re-read of
+        # pyspark.zip (see pyworker.py), and the checkout root is on the
+        # workers' path, so they import this package from any cwd.
+        .config("spark.python.daemon.module", "parquet_processor_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

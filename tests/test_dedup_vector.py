@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from parquet_processor_spark.ops.dedup import minhash_signature, shingle_hashes
 from parquet_processor_spark.ops.vector import cosine, dot, lsh_bucket, norm
 
+from .conftest import jobs_in_group
+
 
 @pytest.fixture(scope="module")
 def docs(spark, tmp_path_factory):
@@ -287,6 +289,115 @@ def test_kmeans_ivf_train_improves_and_covers_cells(spark, sf_dir):
     assert row["k"] == 8
     assert row["n_assigned"] > 0
     assert row["inertia_improved"] is True
+
+
+def test_kmeans_ivf_train_runs_at_most_eight_jobs(spark, sf_dir):
+    # Each Lloyd round is one map-only pass and one collect: the table
+    # read, the seed collect, 4 rounds plus the final assignment, and
+    # the final action. The per-round shuffle + localCheckpoint shape
+    # ran 22 jobs.
+    from parquet_processor_spark.registry import all_queries
+    from parquet_processor_spark.tables import t
+
+    rows, jobs = jobs_in_group(
+        spark,
+        "kmeans_ivf_train_jobs",
+        lambda: all_queries()["kmeans_ivf_train"](spark, sf_dir).collect(),
+    )
+    assert rows[0]["n_assigned"] == t(spark, sf_dir, "embeddings").count()
+    assert jobs <= 8, jobs
+
+
+def test_ivf_train_cells_runs_one_job_per_round(spark, sf_dir):
+    from parquet_processor_spark.ops.vector import _ivf_params, _ivf_train_cells
+    from parquet_processor_spark.tables import t
+
+    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    params = _ivf_params(e)
+    jobs = {
+        iters: jobs_in_group(
+            spark, f"ivf_train_cells_{iters}", lambda: _ivf_train_cells(e, params, iters)
+        )[1]
+        for iters in (1, 3)
+    }
+    assert jobs[3] - jobs[1] == 2, jobs
+
+
+def test_ivf_train_cells_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
+    # _ivf_train_cells moved from a per-round posexplode + (cell, dim)
+    # integer-sum aggregate to lloyd_round's collected partials. This
+    # keeps the DataFrame rounds as the reference: every trained
+    # coordinate must be bitwise equal.
+    from parquet_processor_spark.ops.vector import (
+        _IVF_TRAIN_ITERS,
+        _ivf_assign_q,
+        _ivf_params,
+        _ivf_train_cells,
+    )
+    from parquet_processor_spark.tables import t
+
+    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    params = _ivf_params(e)
+    qv, cb = _ivf_train_cells(e, params)
+    ref = (
+        qv.crossJoin(F.broadcast(params.select("n_cells")))
+        .where(F.col("vec_id").between(F.lit(1), F.col("n_cells")))
+        .select(
+            F.col("vec_id").alias("cid"),
+            F.transform("qv", lambda x: x.cast("double")).alias("cv"),
+        )
+    )
+    for _ in range(_IVF_TRAIN_ITERS):
+        ref = (
+            _ivf_assign_q(qv, ref)
+            .select("cell", F.posexplode("qv").alias("i", "x"))
+            .groupBy("cell", "i")
+            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
+            .groupBy("cell")
+            .agg(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct("i", (F.col("s").cast("double") / F.col("n")).alias("m"))
+                        )
+                    ),
+                    lambda s: s["m"],
+                ).alias("cv")
+            )
+            .select(F.col("cell").alias("cid"), "cv")
+            .localCheckpoint(eager=True)
+        )
+    got = sorted((r["cid"], r["cv"]) for r in cb.collect())
+    want = sorted((r["cid"], r["cv"]) for r in ref.collect())
+    assert got == want and len(got) >= 8
+
+
+def test_lloyd_round_update_and_null_policy(spark):
+    # cells 1 and 3 seed at (0,0) and (10,10); cell 2 wins no row and
+    # drops out; the null row counts but joins no cell
+    import numpy as np
+
+    from parquet_processor_spark.ops.vector import lloyd_round
+
+    df = spark.createDataFrame(
+        [(1, [0, 0]), (2, [2, 2]), (3, [10, 10]), (4, None)], "vec_id long, qv array<bigint>"
+    )
+    cids = np.array([1, 2, 3])
+    cmat = np.array([[0.0, 0.0], [-50.0, 50.0], [10.0, 10.0]])
+    got_cids, cents, n_rows, inertia = lloyd_round(df, "qv", cids, cmat, "l2")
+    assert got_cids.tolist() == [1, 3]
+    assert cents.tolist() == [[1.0, 1.0], [10.0, 10.0]]
+    assert (n_rows, inertia) == (4, 8.0)
+
+    emb = df.selectExpr("transform(qv, x -> cast(x as float)) as embedding")
+    got_cids, cents, n_rows, inertia = lloyd_round(
+        emb, "embedding", np.array([1, 3]), np.array([[1.0, 0.0], [0.0, 1.0]]), "cos"
+    )
+    # (0,0) scores NaN and goes to the first cell, like assign_cells
+    assert got_cids.tolist() == [1]
+    assert n_rows == 4 and math.isnan(inertia)
+    _, _, n_rows, inertia = lloyd_round(emb.limit(0), "embedding", got_cids, cents, "cos")
+    assert (n_rows, inertia) == (0, None)
 
 
 def test_ivf_nprobe_recall_curve(spark, sf_dir):

@@ -20,6 +20,8 @@ from parquet_processor_spark.pipeline.fetch import (
 from parquet_processor_spark.pipeline.run import canary_gate, global_index, run_pipeline
 from parquet_processor_spark.pipeline.schemas import REQUIRED_COLUMNS, STATS_SCHEMA, scrape_schema
 
+from .conftest import jobs_in_group
+
 
 @pytest.fixture(scope="module")
 def manifest(tmp_path_factory):
@@ -157,17 +159,6 @@ def test_statistics_record_uses_declared_schema(spark, manifest, tmp_path):
     assert row[0]["media_types"] == stats.media_types
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_ingest_job_counts_and_file_layout(spark, manifest, tmp_path):
     # One pass does each piece of work once: one count of the urls, no
     # join-back, one control aggregate, one statistics scan. The fetch
@@ -179,14 +170,14 @@ def test_ingest_job_counts_and_file_layout(spark, manifest, tmp_path):
     layouts = []
     for run in range(2):
         out = str(tmp_path / f"out{run}")
-        res, pipe_jobs = _jobs_in_group(
+        res, pipe_jobs = jobs_in_group(
             spark,
             f"ingest_pipeline_{run}",
             lambda: run_pipeline(
                 spark, manifest, out, fake_transport, segment_size=segment_size, num_tasks=num_tasks
             ),
         )
-        stats, agg_jobs = _jobs_in_group(
+        stats, agg_jobs = jobs_in_group(
             spark,
             f"ingest_aggregate_{run}",
             lambda: run_aggregation(spark, f"{out}/records", f"{out}/agg"),
