@@ -21,7 +21,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_processor_spark.io import scratch_dir
+from parquet_processor_spark.io import materializing_count, scratch_dir
 from parquet_processor_spark.registry import query
 from parquet_processor_spark.session import session_memo
 from parquet_processor_spark.tables import t
@@ -63,11 +63,17 @@ def cosine(a: Column, b: Column) -> Column:
 # Nearest-centroid arithmetic shared by the Arrow kernels and the Lloyd
 # rounds. Every fold is np.cumsum's left-to-right sum, so it is bitwise
 # the sequential F.aggregate fold of the JVM expressions it replaced.
-def _codebook(rows, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, float64 matrix) of a collected centroid table, sorted by id
-    so an argmax/argmin first hit is the lowest id."""
-    rows = sorted(rows, key=lambda r: r[id_col])
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+def _codebook(
+    rows, id_col: str, vec_col: str, group_col: str | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """(keys, float64 matrix) of a collected centroid table, sorted by key
+    so an argmax/argmin first hit is the lowest id. The keys are the ids,
+    or with ``group_col`` one (group, id) row per centroid."""
+    key = (lambda r: (r[group_col], r[id_col])) if group_col else (lambda r: r[id_col])
+    rows = sorted(rows, key=key)
+    ids = np.array([key(r) for r in rows], dtype=np.int64)
+    if group_col:
+        ids = ids.reshape(len(rows), 2)
     if not rows:
         return ids, np.zeros((0, 0), dtype=np.float64)
     return ids, np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
@@ -98,8 +104,34 @@ def _l2_best(q: np.ndarray, cmat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return idx, d[np.arange(len(idx)), idx]
 
 
+def _group_best(
+    best, x: np.ndarray, g: np.ndarray, cg: np.ndarray, cmat: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per row of ``x``: (codebook row, score) of ``best`` (:func:`_cos_best`
+    or :func:`_l2_best`) over only the codebook rows of the row's own
+    group. ``g`` holds each row's group, ``cg`` each codebook row's, in
+    ascending order (a :func:`_codebook` sort), so a group's rows are one
+    slice and its first hit is still its lowest id. A group with no
+    codebook row raises."""
+    idx = np.empty(len(x), dtype=np.int64)
+    score = np.empty(len(x), dtype=np.float64)
+    for grp in np.unique(g):
+        lo, hi = np.searchsorted(cg, grp, "left"), np.searchsorted(cg, grp, "right")
+        if lo == hi:
+            raise ValueError(f"group {grp} missing from the codebook")
+        sel = g == grp
+        i, sc = best(x[sel], cmat[lo:hi])
+        idx[sel], score[sel] = lo + i, sc
+    return idx, score
+
+
 def lloyd_round(
-    df: DataFrame, col: str, cids: np.ndarray, cmat: np.ndarray, metric: str
+    df: DataFrame,
+    col: str,
+    cids: np.ndarray,
+    cmat: np.ndarray,
+    metric: str,
+    group: str | None = None,
 ) -> tuple[np.ndarray, np.ndarray, int, float | None]:
     """One Lloyd round in MLlib's k-means shape: a single map-only Arrow
     pass assigns each row of ``df[col]`` to its nearest centroid
@@ -107,6 +139,12 @@ def lloyd_round(
     :func:`_l2_best`, loss L2²) and emits per-cell (count, vector sum,
     loss) partials; one collect, then a NumPy reduce on the driver.
     No shuffle, one job.
+
+    With ``group``, ``cids`` are :func:`_codebook`'s (group, id) rows and
+    each row of ``df`` is scored only against the centroids of its own
+    ``df[group]`` (product quantization's per-subspace codebooks train
+    in one pass); a row whose group has no centroid raises. Without it
+    every row and centroid is in one group.
 
     Returns (cids, centroids, n_rows, inertia): the cells that got a
     member, each centroid its sum / count (one IEEE division per
@@ -122,6 +160,7 @@ def lloyd_round(
     best = {"cos": _cos_best, "l2": _l2_best}[metric]
     exact = df.schema[col].dataType.elementType.typeName() == "long"
     schema = f"cell bigint, n bigint, vsum array<{'bigint' if exact else 'double'}>, loss double"
+    cg = cids[:, 0] if group else np.zeros(len(cids), dtype=np.int64)
 
     def partials(batches):
         for pdf in batches:
@@ -132,14 +171,15 @@ def lloyd_round(
                 x = np.stack(list(vals[mask]))
                 if exact and x.dtype.kind != "i":
                     raise ValueError(f"lloyd_round: null element in {col}")
-                idx, score = best(x.astype(np.float64), cmat)
+                g = pdf[group].to_numpy()[mask] if group else np.zeros(len(x), dtype=np.int64)
+                idx, score = _group_best(best, x.astype(np.float64), g, cg, cmat)
                 loss = 1.0 - score if metric == "cos" else score
                 sums = np.zeros((len(cids), x.shape[1]), dtype=np.int64 if exact else np.float64)
                 np.add.at(sums, idx, x)
                 counts = np.bincount(idx, minlength=len(cids))
                 losses = np.bincount(idx, weights=loss, minlength=len(cids))
                 out = [
-                    (int(cids[j]), int(counts[j]), sums[j].tolist(), float(losses[j]))
+                    (int(j), int(counts[j]), sums[j].tolist(), float(losses[j]))
                     for j in np.flatnonzero(counts)
                 ]
             n_free = len(vals) - (int(mask.sum()) if len(cids) else 0)
@@ -148,15 +188,15 @@ def lloyd_round(
             cell, n, vsum, loss = zip(*out) if out else ((), (), (), ())
             yield pd.DataFrame(
                 {
-                    "cell": pd.Series(cell, dtype="object"),  # keeps ids int beside a null
+                    "cell": pd.Series(cell, dtype="object"),  # keeps codebook rows int beside a null
                     "n": pd.Series(n, dtype="int64"),
                     "vsum": pd.Series(vsum, dtype="object"),
                     "loss": pd.Series(loss, dtype="float64"),
                 }
             )
 
-    rows = df.select(col).mapInPandas(partials, schema).collect()  # eager-by-design: k partial rows per task, the round's only job
-    pos = {int(c): j for j, c in enumerate(cids)}
+    cols = [col, group] if group else [col]
+    rows = df.select(*cols).mapInPandas(partials, schema).collect()  # eager-by-design: k partial rows per task, the round's only job
     counts = np.zeros(len(cids), dtype=np.int64)
     sums = np.zeros(cmat.shape, dtype=np.int64 if exact else np.float64)
     n_rows, inertia = 0, None
@@ -164,9 +204,8 @@ def lloyd_round(
         n_rows += r["n"]
         if r["cell"] is None:
             continue
-        j = pos[r["cell"]]
-        counts[j] += r["n"]
-        sums[j] += np.asarray(r["vsum"], dtype=sums.dtype)
+        counts[r["cell"]] += r["n"]
+        sums[r["cell"]] += np.asarray(r["vsum"], dtype=sums.dtype)
         loss = np.nan if r["loss"] is None else r["loss"]  # pandas -> Arrow turns NaN into null
         inertia = loss if inertia is None else inertia + loss
     kept = np.flatnonzero(counts)
@@ -1346,16 +1385,6 @@ _PQ_K = 8
 _PQ_ITERS = 2
 
 
-def _l2sq(a, b) -> F.Column:
-    """Sequential-fold squared L2 distance between two float arrays
-    (fixed fold order — the _DOT_SQL determinism policy)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _pq_subvectors(e: DataFrame, m_sub: int = _PQ_M) -> DataFrame:
     """(vec_id, m, sub): each vector split into M equal subvectors."""
     subdim = (F.size("embedding") / m_sub).cast("int")
@@ -1372,52 +1401,6 @@ def _pq_subvectors(e: DataFrame, m_sub: int = _PQ_M) -> DataFrame:
     ).select("vec_id", F.col("s.m").alias("m"), F.col("s.sub").alias("sub"))
 
 
-def _pq_assign(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """Per (vec_id, m): nearest codebook entry (argmin L2, ties to the
-    lowest code id) — the PQ ENCODE step; broadcast codebook, no
-    shuffle of the subvectors beyond the groupBy's map-side combine."""
-    d = _l2sq(F.col("sub"), F.col("c_sub"))
-    return (
-        subs.join(F.broadcast(cb), "m")
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min(F.struct(d.alias("d"), F.col("cid").alias("cid"))).alias("best"),
-            F.first("sub").alias("sub"),
-        )
-        .select("vec_id", "m", F.col("best.cid").alias("cell"),
-                F.col("best.d").alias("d"), "sub")
-    )
-
-
-def _pq_train(subs: DataFrame, k: int = _PQ_K, iters: int = _PQ_ITERS) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Lloyd-train the M codebooks; returns (codebook, first
-    assignment, final assignment). Deterministic init = subvectors of
-    vec_id 1.._PQ_K; each round's M*K-row codebook localCheckpoints to
-    cut the per-round lineage."""
-    cb = subs.where(F.col("vec_id").between(1, k)).select(
-        "m", F.col("vec_id").alias("cid"), F.col("sub").alias("c_sub")
-    )
-    assigned0 = _pq_assign(subs, cb)
-    assigned = assigned0
-    for _ in range(iters):
-        cb = (
-            assigned.select("m", "cell", F.posexplode("sub").alias("i", "x"))
-            .groupBy("m", "cell", "i")
-            .agg(F.avg("x").alias("c"))
-            .groupBy("m", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "c"))),
-                    lambda s: s["c"].cast("float"),
-                ).alias("c_sub")
-            )
-            .select("m", F.col("cell").alias("cid"), "c_sub")
-            .localCheckpoint()  # eager-by-design: M*K-row codebook; cuts per-round lineage
-        )
-        assigned = _pq_assign(subs, cb)
-    return cb, assigned0, assigned
-
-
 @query(
     "embedding_pq_train",
     oracle=f"""
@@ -1431,39 +1414,54 @@ def _pq_train(subs: DataFrame, k: int = _PQ_K, iters: int = _PQ_ITERS) -> tuple[
     tags=("vector", "pq", "iterative", "evidence"),
 )
 def embedding_pq_train(spark: SparkSession, sf: str) -> DataFrame:
-    """Train PQ codebooks (M={m} subspaces × K={k} codes, Lloyd
+    """Train PQ codebooks (M=_PQ_M subspaces × K=_PQ_K codes, Lloyd
     iterations on squared L2 per subspace) and emit the checkable
     facts: corpus size, code count (every vector got all M codes),
     and SSE(final) <= SSE(init) — Lloyd's monotonicity, the same gate
     policy as kmeans_ivf_train (exact centroid floats are partial-sum-
     order dependent; the BOOLEAN is not).
 
-    100 TB shape: ALL M subspaces train in ONE plan per round — the
-    corpus explodes to (vec_id, m, subvector) map-side, the M*K-row
-    codebook broadcasts, assignment is a per-row argmin (no shuffle),
-    and the centroid update aggregates per (m, cell, dim) — tiny,
-    map-side combined. One corpus scan per Lloyd round, localCheckpoint
-    cuts the per-round lineage exactly like k-means/PageRank/CC. Codes
-    for the full corpus would then be written 4 bytes/vector — the
-    compression that lets an IVF-PQ probe scan codes instead of floats.
-    Deterministic: init codebook = subvectors of vec_id 1..K, argmin
-    ties break to the lowest code id, fixed iteration count.
+    kmeans_ivf_train's shape with one codebook per subspace: each round
+    is one grouped :func:`lloyd_round` pass over the (vec_id, m,
+    subvector) rows (``group="m"``), so all M codebooks train in the
+    same map-only pass and the corpus never shuffles. Round 1's pass
+    gives SSE(init); a last pass against the trained codebooks gives
+    SSE(final) and the code count. Six jobs a call: the table read, the
+    seed collect, three passes and the corpus count; the one-row result
+    is a LocalTableScan. Codes for the full corpus would then be
+    written 4 bytes/vector — the compression that lets an IVF-PQ probe
+    scan codes instead of floats. Deterministic: init codebook =
+    subvectors of vec_id 1..K, argmin ties break to the lowest code id,
+    fixed iteration count. Empty input gives 0 vectors, 0 codes and a
+    null sse_improved.
     """
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
     subs = _pq_subvectors(e)
-    cb, assigned0, assigned = _pq_train(subs)
-    sse0 = assigned0.agg(F.sum("d").alias("sse_init"))
-    final = assigned.agg(
-        F.count_distinct(F.col("vec_id")).alias("n_vectors"),
-        F.count(F.lit(1)).alias("n_codes"),
-        F.sum("d").alias("sse_final"),
+    seeds = subs.where(F.col("vec_id").between(1, _PQ_K)).collect()  # eager-by-design: M*K seed rows
+    cids, cmat = _codebook(seeds, "vec_id", "sub", group_col="m")
+    sse_init = None
+    for r in range(_PQ_ITERS):
+        cids, cmat, _, sse = lloyd_round(subs, "sub", cids, cmat, "l2", group="m")
+        if r == 0:
+            sse_init = sse
+    _, _, n_codes, sse_final = lloyd_round(subs, "sub", cids, cmat, "l2", group="m")
+    improved = (
+        None
+        if sse_init is None or sse_final is None
+        # 1e-9 slack: SSE is a float sum; Lloyd never increases it
+        else sse_final <= sse_init + 1e-9
     )
-    return final.crossJoin(F.broadcast(sse0)).select(
-        F.lit(_PQ_M).cast("int").alias("m"),
-        F.lit(_PQ_K).cast("int").alias("k"),
-        "n_vectors",
-        "n_codes",
-        (F.col("sse_final") <= F.col("sse_init") + 1e-9).alias("sse_improved"),
+    n_vectors = materializing_count(e)  # eager-by-design: the corpus size the code count is checked against
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "m": pa.array([_PQ_M], pa.int32()),
+                "k": pa.array([_PQ_K], pa.int32()),
+                "n_vectors": pa.array([n_vectors], pa.int64()),
+                "n_codes": pa.array([n_codes], pa.int64()),
+                "sse_improved": pa.array([improved], pa.bool_()),
+            }
+        )
     )
 
 
@@ -1531,68 +1529,46 @@ def _det_l2sq(qp: str, cp: str) -> F.Column:
 
 
 def _ivfpq_assign_det(subsq: DataFrame, cb: DataFrame) -> DataFrame:
-    """subsq's columns plus ``cell``: per (vec_id, m) argmin-L2 code,
-    ties to the lowest cid.
+    """subsq's columns plus ``cell``: per (vec_id, m) the argmin-L2 code
+    among subspace m's codebook rows, ties to the lowest cid — the
+    final encode of the trained index.
 
-    r14 (guide §4.2, the assign_cells pattern): the codebook is
-    BOUNDED control state (M*K rows — a constant of the index format),
-    so it collects once and ships to the executors via sc.broadcast
-    (one fetch per executor, not a per-task closure payload); each
-    batch computes the K distances per row in NumPy and argmins. The
-    previous shape was a broadcast join + (vec_id, m)-keyed min-struct
-    aggregate — a 32x row blowup through an exchange per Lloyd call.
-    r15: subsq's q columns pass THROUGH the projection, so the Lloyd
-    centroid update consumes the kernel output directly instead of
-    re-joining the assignment back to subsq on (vec_id, m) — one fewer
-    corpus-sized exchange per training round (guide §2.4).
-    Bit-exact: the distance is the same left-associated
-    ((t1²+t2²)+t3²)+t4² float64 tree (_det_l2sq; the quantized q's are
-    |q| <= 2^24 so the int->double cast is exact), and np.argmin's
-    first-hit tie rule over cid-ascending columns equals the
-    min(struct(d, cid)) ordering. Pinned bitwise by
-    tests/test_dedup_vector.py::test_ivfpq_assign_arrow_bit_exact.
-    Preconditions (documented hard edges vs the old join+min-struct):
-    every m value in subsq must exist in cb (the old inner join
-    silently dropped unknown m's; the kernel raises instead — both are
-    unreachable, since subsq and cb derive from the same _IVFPQ_SUBS
-    split), and codebook coordinates must be non-NaN (np.argmin picks
-    a NaN as the minimum where min(struct) ranked it last; cb entries
-    are exact-integer means, so NaN cannot occur).
+    The codebook is bounded control state (M*K rows, a constant of the
+    index format): it collects once into :func:`_codebook`'s (m, cid)
+    sort, ships to the executors via sc.broadcast (one fetch per
+    executor), and each batch scores its rows with :func:`_group_best`
+    over :func:`_l2_best` — the per-subspace argmin the Lloyd rounds
+    use. One ArrowEvalPython pass beside the scan, no shuffle.
+    Bit-exact with a JVM broadcast join + min(struct(d, cid)) over
+    _det_l2sq: np.cumsum over the 4 dims is the same left-associated
+    ((t1²+t2²)+t3²)+t4² float64 tree (|q| <= 2^24, so the int -> double
+    cast is exact), and np.argmin's first hit over cid-ascending rows
+    is the struct-min tie order. Pinned bitwise by
+    tests/test_dedup_vector.py::test_ivfpq_assign_arrow_bit_exact_with_jvm_min_struct.
+    Preconditions: every m in subsq has codebook rows (the kernel
+    raises otherwise), and codebook coordinates are non-NaN (np.argmin
+    picks a NaN where min(struct) ranks it last; cb entries are
+    exact-integer means).
     """
-    dims = list(range(1, _IVFPQ_SUBDIM + 1))
-    rows = cb.select("m", "cid", *[f"c{d}" for d in dims]).collect()  # eager-by-design: M*K-row codebook rides the Arrow kernel closure
-    # per-subspace codebook slices, cid-ascending so argmin-first == lowest cid
-    by_m: dict = {}
-    for r in sorted(rows, key=lambda r: (r["m"], r["cid"])):
-        by_m.setdefault(r["m"], []).append(
-            (r["cid"], [r[f"c{d}"] for d in dims])
-        )
-    cids_m = {m: np.array([c for c, _ in v], dtype=np.int64) for m, v in by_m.items()}
-    cmat_m = {m: np.array([e for _, e in v], dtype=np.float64) for m, v in by_m.items()}
-    bc = cb.sparkSession.sparkContext.broadcast((cids_m, cmat_m))
+    dims = range(1, _IVFPQ_SUBDIM + 1)
+    keys, cmat = _codebook(
+        cb.select("m", "cid", F.array(*[f"c{d}" for d in dims]).alias("c")).collect(),  # eager-by-design: M*K-row codebook
+        "cid",
+        "c",
+        group_col="m",
+    )
+    bc = cb.sparkSession.sparkContext.broadcast((keys, cmat))
 
     @F.pandas_udf("bigint")
     def _code(
         m: pd.Series, q1: pd.Series, q2: pd.Series, q3: pd.Series, q4: pd.Series
     ) -> pd.Series:
-        cids_b, cmat_b = bc.value
-        n = len(m)
-        if n == 0 or not cids_b:
-            return pd.Series([None] * n, dtype="object")
+        keys_b, cmat_b = bc.value
+        if len(keys_b) == 0:
+            return pd.Series([None] * len(m), dtype="object")
         q = np.stack([s.to_numpy(dtype=np.float64) for s in (q1, q2, q3, q4)], axis=1)
-        mv = m.to_numpy()
-        out = np.empty(n, dtype=np.int64)
-        for mm in np.unique(mv):
-            if int(mm) not in cmat_b:
-                raise ValueError(f"_ivfpq_assign_det: subspace m={mm} missing from codebook")
-            sel = mv == mm
-            c = cmat_b[int(mm)]  # (K, SUBDIM)
-            t = q[sel][:, None, :] - c[None, :, :]  # (n_m, K, SUBDIM)
-            d = t[..., 0] * t[..., 0]
-            for j in range(1, t.shape[-1]):
-                d = d + t[..., j] * t[..., j]  # left-associated, matches _det_l2sq
-            out[sel] = cids_b[int(mm)][np.argmin(d, axis=1)]
-        return pd.Series(out)
+        idx, _ = _group_best(_l2_best, q, m.to_numpy(), keys_b[:, 0], cmat_b)
+        return pd.Series(keys_b[idx, 1])
 
     return subsq.select(
         *subsq.columns, _code(F.col("m"), *[F.col(f"q{d}") for d in dims]).alias("cell")
@@ -1600,34 +1576,32 @@ def _ivfpq_assign_det(subsq: DataFrame, cb: DataFrame) -> DataFrame:
 
 
 def _ivfpq_train_det(subsq: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
-    """Deterministic Lloyd on quantized subvectors: centroid update =
-    exact bigint per-dim sums (commutative — no float-order hazard)
-    followed by ONE IEEE division, so every round's codebook is
-    bit-identical across engines and partitionings. Returns
-    (codebook(m, cid, c1..c4 double), final assignment)."""
+    """Deterministic Lloyd on quantized subvectors: seeds are the rows
+    of vec_id 1..k, and each round is one grouped :func:`lloyd_round`
+    pass (``group="m"``, L2 argmin within each subspace) over the exact
+    int64 subvectors — per-cell sums are order-free bigints followed by
+    ONE IEEE division per coordinate, so every round's codebook is
+    bit-identical across engines and partitionings (the oracle replays
+    it). Returns (cb, enc): the codebook (m int, cid bigint, c1..c4
+    double), built from Arrow (a LocalTableScan, so collecting or
+    broadcasting it runs no job), and the final encode by
+    :func:`_ivfpq_assign_det`."""
     dims = range(1, _IVFPQ_SUBDIM + 1)
-    cb = subsq.where(F.col("vec_id").between(1, k)).select(
-        "m",
-        F.col("vec_id").alias("cid"),
-        *[F.col(f"q{d}").cast("double").alias(f"c{d}") for d in dims],
-    )
+    rows = subsq.select("vec_id", "m", F.array(*[f"q{d}" for d in dims]).alias("q"))
+    seeds = rows.where(F.col("vec_id").between(1, k)).collect()  # eager-by-design: M*k seed rows
+    keys, cmat = _codebook(seeds, "vec_id", "q", group_col="m")
     for _ in range(iters):
-        # r15 (guide §2.4): the assignment kernel passes the q columns
-        # through, so the centroid update aggregates the kernel output
-        # directly — the old shape re-joined the (vec_id, m)-keyed
-        # assignment back to subsq, a corpus-sized exchange per round
-        cb = (
-            _ivfpq_assign_det(subsq, cb)
-            .groupBy("m", "cell")
-            .agg(
-                *[
-                    (F.sum(f"q{d}").cast("double") / F.count(F.lit(1))).alias(f"c{d}")
-                    for d in dims
-                ]
-            )
-            .select("m", F.col("cell").alias("cid"), *[f"c{d}" for d in dims])
-            .localCheckpoint()  # eager-by-design: M*K-row codebook; cuts per-round lineage
+        keys, cmat, _, _ = lloyd_round(rows, "q", keys, cmat, "l2", group="m")
+    cmat = cmat.reshape(len(keys), _IVFPQ_SUBDIM)  # an empty codebook comes back (0, 0)
+    cb = subsq.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "m": pa.array(keys[:, 0].tolist(), pa.int32()),
+                "cid": pa.array(keys[:, 1].tolist(), pa.int64()),
+                **{f"c{d}": pa.array(cmat[:, d - 1].tolist(), pa.float64()) for d in dims},
+            }
         )
+    )
     return cb, _ivfpq_assign_det(subsq, cb)
 
 
@@ -1651,9 +1625,9 @@ def _ivfpq_build_uncached(spark: SparkSession, sf: str) -> dict[str, DataFrame]:
     assign = assign_cells(e, cent).select("vec_id", "cell")
     probe = _ivf_probe_list(e, cent, params)
     # eager-by-design: the quantized subvector table feeds every Lloyd
-    # round's assignment AND both centroid updates AND the query-side
-    # distance table — without the cut each of those re-runs the
-    # unit-normalize + quantize lineage (measured ~2x on the serve)
+    # round, the final encode AND the query-side distance table —
+    # without the cut each of those re-runs the unit-normalize +
+    # quantize lineage (measured ~2x on the serve)
     subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
     cb, enc = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
     # eager-by-design: the memoized index parts (the per-vector codes
@@ -1906,10 +1880,12 @@ def sink_ann_index_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     reload them, serve the query from the reloaded index, and gate on
     BIT-EXACT parity with serving from the in-memory build: all 10
     result rows must match on (vec_id, cell, cos_sim) including the
-    float score. Parity is exact by construction — the codebook is
-    localCheckpointed (one materialization feeds both serves), parquet
+    float score. Parity is exact by construction — the codebook is an
+    in-memory Arrow table (one set of values feeds both serves), parquet
     roundtrips doubles/floats losslessly, and everything downstream of
-    the codebook is per-row deterministic arithmetic.
+    the codebook is per-row deterministic arithmetic. The 1-row ledger
+    is checkpointed eagerly once the writes complete, so it never
+    re-reads the scratch parts when consumed.
 
     100 TB shape: this is the production ANN serving story — train
     once, persist codes (10 bytes/vector) + M*K codebook, serve
@@ -1949,7 +1925,9 @@ def sink_ann_index_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.when(F.col("s.vec_id").isNotNull(), 1).otherwise(0)), F.lit(0)
     )
     n = F.count(F.lit(1))
-    return j.agg(n.alias("n_results"), (hits == n).alias("parity_ok"))
+    return j.agg(n.alias("n_results"), (hits == n).alias("parity_ok")).localCheckpoint(
+        eager=True
+    )  # eager-by-design: freezes the ledger while its scratch parts exist
 
 
 # SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -3201,18 +3179,18 @@ def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
             F.coalesce("n_f", F.lit(0)) != F.coalesce("n_s", F.lit(0)), 1
         ).otherwise(0)
     )
-    # r15 (guide §5 — the driver should do almost no data work): the
-    # audit ledger is ONE lazy 1-row frame instead of five sequential
+    # The audit ledger is ONE 1-row frame instead of five sequential
     # driver-synchronized actions (parity collect, counts collect,
     # merged-codes count, delta-cell count, top1 collect). Every audit
-    # fact becomes a 1-row aggregate cross-joined into the result row;
-    # the independent subtrees schedule concurrently inside the single
-    # consuming job. Values are identical: counts come from the
-    # checkpointed assignment (one row per corpus vector, same rows as
-    # e); n_codes_total still scans the MERGED at-rest files (the
-    # physical proof the append landed); top1 is the serve order's
-    # first row spelled as max(struct(cos_sim, -vec_id)) — same
-    # (cos desc, vec_id asc) winner, null on an empty serve.
+    # fact is a 1-row aggregate cross-joined into the result row; the
+    # independent subtrees schedule concurrently inside the single job
+    # of the eager checkpoint below, which freezes the row while the
+    # scratch parts exist (consuming it later reads no scratch file).
+    # Counts come from the checkpointed assignment (one row per corpus
+    # vector, same rows as e); n_codes_total scans the MERGED at-rest
+    # files (the physical proof the append landed); top1 is the serve
+    # order's first row spelled as max(struct(cos_sim, -vec_id)) —
+    # same (cos desc, vec_id asc) winner, null on an empty serve.
     parity_row = fa.join(sa, ["vec_id", "cell", "cos_sim"], "full_outer").agg(
         (F.coalesce(bad, F.lit(0)) == 0).alias("serve_parity_ok")
     )
@@ -3246,6 +3224,7 @@ def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
             "top1_id",
             "serve_parity_ok",
         )
+        .localCheckpoint(eager=True)  # eager-by-design: freezes the ledger while its scratch parts exist
     )
 
 

@@ -400,6 +400,130 @@ def test_lloyd_round_update_and_null_policy(spark):
     assert (n_rows, inertia) == (0, None)
 
 
+def test_lloyd_round_scores_each_row_within_its_group(spark):
+    # group 0's rows sit on group 1's centroids; scored within group 0
+    # they still go to group 0's nearer centroid (50, 50), and group
+    # 0's cid 1 wins nothing and drops out. The null row counts only.
+    import numpy as np
+    from pyspark.errors import PythonException
+    from pyspark.sql import Row
+
+    from parquet_processor_spark.ops.vector import _codebook, lloyd_round
+
+    df = spark.createDataFrame(
+        [(0, [0, 0]), (0, [2, 2]), (1, [0, 0]), (1, [9, 9]), (1, None)],
+        "m int, q array<bigint>",
+    )
+    keys, cmat = _codebook(
+        [
+            Row(m=1, cid=2, c=[9.0, 9.0]),
+            Row(m=0, cid=2, c=[50.0, 50.0]),
+            Row(m=1, cid=1, c=[0.0, 0.0]),
+            Row(m=0, cid=1, c=[100.0, 100.0]),
+        ],
+        "cid",
+        "c",
+        group_col="m",
+    )
+    assert keys.tolist() == [[0, 1], [0, 2], [1, 1], [1, 2]]
+    got, cents, n_rows, inertia = lloyd_round(df, "q", keys, cmat, "l2", group="m")
+    assert got.tolist() == [[0, 2], [1, 1], [1, 2]]
+    assert cents.tolist() == [[1.0, 1.0], [0.0, 0.0], [9.0, 9.0]]
+    assert (n_rows, inertia) == (5, 2 * 50.0**2 + 2 * 48.0**2)
+    with pytest.raises(PythonException, match="group 1 missing from the codebook"):
+        lloyd_round(df, "q", keys[:2], cmat[:2], "l2", group="m")
+    got, cents, n_rows, inertia = lloyd_round(
+        df, "q", np.zeros((0, 2), dtype=np.int64), np.zeros((0, 0)), "l2", group="m"
+    )
+    assert (len(got), len(cents), n_rows, inertia) == (0, 0, 5, None)
+
+
+def test_ivfpq_train_det_runs_one_job_per_round(spark, sf_dir):
+    from parquet_processor_spark.ops.vector import (
+        _IVFPQ_K,
+        _ivfpq_qsubs,
+        _ivfpq_train_det,
+        _unit,
+    )
+    from parquet_processor_spark.tables import t
+
+    e = _unit(t(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
+    subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
+    jobs = {
+        iters: jobs_in_group(
+            spark, f"ivfpq_train_det_{iters}", lambda: _ivfpq_train_det(subsq, _IVFPQ_K, iters)
+        )[1]
+        for iters in (1, 3)
+    }
+    assert jobs[3] - jobs[1] == 2, jobs
+
+
+def test_ivfpq_train_det_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
+    # _ivfpq_train_det moved from per-round assign + (m, cell) integer-
+    # sum groupBy + localCheckpoint to grouped lloyd_round passes. This
+    # keeps the DataFrame rounds as the reference: every trained
+    # coordinate must be bitwise equal.
+    import numpy as np
+
+    from parquet_processor_spark.ops.vector import (
+        _IVFPQ_ITERS,
+        _IVFPQ_K,
+        _ivfpq_assign_det,
+        _ivfpq_qsubs,
+        _ivfpq_train_det,
+        _unit,
+    )
+    from parquet_processor_spark.tables import t
+
+    dims = range(1, 5)
+    e = _unit(t(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
+    subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
+    cb, _ = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
+    ref = subsq.where(F.col("vec_id").between(1, _IVFPQ_K)).select(
+        "m",
+        F.col("vec_id").alias("cid"),
+        *[F.col(f"q{d}").cast("double").alias(f"c{d}") for d in dims],
+    )
+    for _ in range(_IVFPQ_ITERS):
+        ref = (
+            _ivfpq_assign_det(subsq, ref)
+            .groupBy("m", "cell")
+            .agg(
+                *[
+                    (F.sum(f"q{d}").cast("double") / F.count(F.lit(1))).alias(f"c{d}")
+                    for d in dims
+                ]
+            )
+            .select("m", F.col("cell").alias("cid"), *[f"c{d}" for d in dims])
+            .localCheckpoint(eager=True)
+        )
+
+    def bits(df):
+        rows = sorted((r["m"], r["cid"], *[r[f"c{d}"] for d in dims]) for r in df.collect())
+        return np.array(rows, dtype=np.float64)[:, 2:].view(np.int64), [r[:2] for r in rows]
+
+    (got, got_keys), (want, want_keys) = bits(cb), bits(ref)
+    assert got_keys == want_keys and len(got_keys) >= 16 * 8
+    assert (got == want).all()
+    assert cb.schema.simpleString() == (
+        "struct<m:int,cid:bigint,c1:double,c2:double,c3:double,c4:double>"
+    )
+
+
+def test_embedding_pq_train_runs_at_most_eight_jobs(spark, sf_dir):
+    # The table read, the seed collect, 2 rounds plus the final pass
+    # and the corpus count: 6 jobs, and the one-row result is a
+    # LocalTableScan. The per-round join + min(struct) assign and
+    # groupBy update ran 20 jobs.
+    from parquet_processor_spark.ops.vector import _PQ_M, embedding_pq_train
+
+    rows, jobs = jobs_in_group(
+        spark, "embedding_pq_train_jobs", lambda: embedding_pq_train(spark, sf_dir).collect()
+    )
+    assert rows[0]["n_codes"] == _PQ_M * rows[0]["n_vectors"] > 0
+    assert jobs <= 8, jobs
+
+
 def test_ivf_nprobe_recall_curve(spark, sf_dir):
     # Monotonicity is a theorem (a superset candidate set cannot lose
     # top-10 overlap: a global-top-10 member can be displaced only by
@@ -523,6 +647,30 @@ def test_ann_index_at_rest_parity(spark, sf_dir):
 
     row = vector.sink_ann_index_roundtrip(spark, sf_dir).collect()[0]
     assert row["n_results"] == 10 and row["parity_ok"] is True
+
+
+@pytest.mark.parametrize(
+    "name, prefix",
+    [("sink_ann_index_upsert", "ppspark_annupsert_"), ("sink_ann_index_roundtrip", "ppspark_annindex_")],
+)
+def test_ann_sink_ledger_does_not_read_scratch_when_consumed(spark, sf_dir, name, prefix):
+    # The 1-row ledger is frozen when its writes complete: removing the
+    # sink's scratch parts between building and consuming it must not
+    # change (or fail) the row.
+    import glob
+    import os
+    import shutil
+
+    from parquet_processor_spark import io
+    from parquet_processor_spark.registry import all_queries
+
+    want = all_queries()[name](spark, sf_dir).collect()
+    df = all_queries()[name](spark, sf_dir)
+    dirs = glob.glob(os.path.join(io._SCRATCH_ROOT[0], prefix + "*"))
+    assert dirs
+    for d in dirs:
+        shutil.rmtree(d)
+    assert df.collect() == want
 
 
 def test_rp_coeff_literals_parse_bit_exact_in_duckdb():

@@ -248,6 +248,11 @@ def test_kmeans_summary_row_on_empty_input(spark, empty_sf):
     assert len(rows) == 1 and rows[0]["n_assigned"] == 0
 
 
+def test_pq_train_summary_row_on_empty_input(spark, empty_sf):
+    rows = all_queries()["embedding_pq_train"](spark, empty_sf).collect()
+    assert [tuple(r) for r in rows] == [(4, 8, 0, 0, None)]
+
+
 @pytest.fixture(scope="module")
 def empty_sf(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("empty_sf")
