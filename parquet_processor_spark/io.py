@@ -18,8 +18,9 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # --- scratch lifecycle ----------------------------------------------------
@@ -57,11 +58,42 @@ def materializing_count(df: DataFrame) -> int:
     projections — which computes (and caches) every partition, so later
     actions never recompute below the checkpoint. A limit, sample or
     shuffle above it can leave partitions unmaterialized (extra jobs).
-    This is the fixpoint-loop probe primitive (guide §5 — fewer
-    driver-synchronized jobs): checkpoint materialization + convergence
-    statistic in one job, counted in the JVM.
+    Data-dependent loops reach it through :class:`Fixpoint`, which
+    keeps that narrow-plan precondition by construction.
     """
     return df._jdf.queryExecution().toRdd().count()
+
+
+class Fixpoint:
+    """One data-dependent loop's policy: rounds 1..``max_rounds``, the
+    per-round checkpoint and probe, and the round cap.
+
+    ``for r in loop:`` raises ``RuntimeError("<name> did not converge
+    in <max_rounds> rounds")`` when the body never breaks.
+    ``loop.changed(frame, where)`` lazily localCheckpoints the round's
+    change frame and counts it, or its rows matching ``where``: the
+    probe is the checkpoint's materializing action, so convergence test
+    and checkpoint cost ONE driver-synchronized job (guide §5), and the
+    counted plan is narrow by construction. It returns the materialized
+    frame, or None when nothing changed.
+
+    ``count`` is required: callers pass ``materializing_count`` as their
+    own module binds it, so a profiler that wraps that binding
+    (perfbench's ``io.probe`` layer wraps ``ops.graph``'s and
+    ``ops.dedup``'s) still sees every probe.
+    """
+
+    def __init__(self, name: str, max_rounds: int, count: Callable[[DataFrame], int]) -> None:
+        self.name, self.max_rounds, self._count = name, max_rounds, count
+
+    def __iter__(self) -> Iterator[int]:
+        yield from range(1, self.max_rounds + 1)
+        raise RuntimeError(f"{self.name} did not converge in {self.max_rounds} rounds")
+
+    def changed(self, frame: DataFrame, where: Column | None = None) -> DataFrame | None:
+        frame = frame.localCheckpoint(eager=False)
+        probe = frame if where is None else frame.where(where)
+        return frame if self._count(probe) else None  # eager-by-design: fixpoint probe + checkpoint materialization
 
 
 # --- sources -------------------------------------------------------------

@@ -349,8 +349,8 @@ _L_DIV = 3
     tags=("curation", "governance", "privacy"),
 )
 def anonymize_l_diversity(spark: SparkSession, sf: str) -> DataFrame:
-    """Suppress QI combos that are under-populated (< {_K_ANON} rows,
-    the k-anonymity bar) OR under-diverse (< {_L_DIV} distinct
+    """Suppress QI combos that are under-populated (< k=_K_ANON rows,
+    the k-anonymity bar) OR under-diverse (< l=_L_DIV distinct
     sensitive account-balance bands, the l-diversity bar). Sensitive
     attribute = floor(c_acctbal/5000) band — the coarse value an
     attacker learns from group membership.
@@ -483,7 +483,7 @@ def _qi_band_tvd(b: DataFrame) -> DataFrame:
 )
 def anonymize_t_closeness(spark: SparkSession, sf: str) -> DataFrame:
     """Suppress QI combos whose sensitive-band distribution sits more
-    than t = 0.{_T_CLOSE_PCT} total-variation away from the global
+    than t = _T_CLOSE_PCT/100 total-variation away from the global
     distribution — the attribute-disclosure guard l-diversity misses
     (a group can carry all 3 bands yet be 90% one of them). The exact
     TVD integers ride along for audit.
@@ -631,7 +631,7 @@ def anonymize_dp_counts(spark: SparkSession, sf: str) -> DataFrame:
 )
 def pipeline_privacy_audit(spark: SparkSession, sf: str) -> DataFrame:
     """Per-QI-group privacy release gate: all three triad verdicts
-    (k >= {_K_ANON}, l >= {_L_DIV}, t <= 0.{_T_CLOSE_PCT}) plus the
+    (k >= _K_ANON, l >= _L_DIV, t <= _T_CLOSE_PCT/100) plus the
     exact facts they derive from, in one shared-aggregate pass.
 
     100 TB shape: the (QI, band) count table is computed ONCE

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_processor_spark.io import materializing_count
+from parquet_processor_spark.io import Fixpoint, materializing_count
 from parquet_processor_spark.registry import query
 from parquet_processor_spark.session import session_memo
 from parquet_processor_spark.tables import t
@@ -950,8 +950,8 @@ def connected_components(nodes: DataFrame | None, edges: DataFrame) -> DataFrame
     Iterative DataFrame algorithm (the one family where a driver-side
     loop is the right Spark shape). Each round: (1) min-label
     propagation — labels join edges on src, min-aggregate per dst,
-    merge with the previous labels (one keyed shuffle); (2) from round
-    ``_CC_JUMP_AFTER`` on, POINTER JUMPING (path halving): label ←
+    merge with the previous labels (one keyed shuffle); (2) after round
+    ``_CC_JUMP_AFTER``, POINTER JUMPING (path halving): label ←
     label(label), a self-join on the label table. Step 1 alone needs
     diameter rounds, so an adversarial long-chain pair graph (diameter
     1000 → 1000 rounds) would blow any iteration cap; the jump step
@@ -972,7 +972,8 @@ def connected_components(nodes: DataFrame | None, edges: DataFrame) -> DataFrame
     if nodes is None:
         nodes = und.select(F.col("a").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()  # eager-by-design: iterative seed
-    for rnd in range(_CC_MAX_ITERS):
+    loop = Fixpoint("connected_components", _CC_MAX_ITERS, materializing_count)
+    for r in loop:
         neighbor_min = (
             und.join(labels, und["a"] == labels["node"])
             .groupBy(F.col("b").alias("node2"))
@@ -982,7 +983,7 @@ def connected_components(nodes: DataFrame | None, edges: DataFrame) -> DataFrame
             "node",
             F.least(F.col("label"), F.coalesce(F.col("n_min"), F.col("label"))).alias("label"),
         )
-        if rnd >= _CC_JUMP_AFTER:
+        if r > _CC_JUMP_AFTER:
             # Pointer jump: label ← label's own label. Labels only ever
             # decrease (min semilattice), so jumping never overshoots
             # the component minimum — it just shortcuts chains.
@@ -996,25 +997,19 @@ def connected_components(nodes: DataFrame | None, edges: DataFrame) -> DataFrame
                 ),
             )
         old = labels.select(F.col("node").alias("o_node"), F.col("label").alias("o_label"))
-        stepped = (
-            merged.join(old, merged["node"] == F.col("o_node"))
-            .select(
+        stepped = loop.changed(
+            merged.join(old, merged["node"] == F.col("o_node")).select(
                 "node",
                 "label",
                 (F.col("label") < F.col("o_label")).alias("improved"),
-            )
-        ).localCheckpoint(eager=False)  # materialized by the fused fixpoint count below
-        # r15 (guide §5 — fewer driver-synchronized jobs): the fixpoint
-        # probe IS the checkpoint's materializing action. The eager
-        # checkpoint + separate limit(1).count() probe paid three job
-        # launches per round; counting the improved rows over the
-        # lazily-checkpointed frame computes (and caches) every
-        # partition in ONE job and returns the test statistic.
-        changed = materializing_count(stepped.where(F.col("improved")))  # eager-by-design: fixpoint test + checkpoint materialization
-        labels = stepped.select("node", "label")
-        if changed == 0:
+            ),
+            where=F.col("improved"),
+        )
+        # labels only decrease, so no improved row means every label
+        # equals last round's: return those
+        if stepped is None:
             return labels
-    raise RuntimeError(f"connected_components did not converge in {_CC_MAX_ITERS} rounds")
+        labels = stepped.select("node", "label")
 
 
 @query(
@@ -1258,7 +1253,7 @@ def dedup_repeated_ngrams(spark: SparkSession, sf: str) -> DataFrame:
     reuses nothing heavier. Linear end-to-end — no pair join at any
     point, which is what makes the span-level signal usable where
     even blocked pair enumeration is too big. Docs shorter than
-    {_PASSAGE_N} words have no 8-grams and are absent by definition.
+    _PASSAGE_N words have no 8-grams and are absent by definition.
     """
     n = _PASSAGE_N
     w = t(spark, sf, "documents").select(

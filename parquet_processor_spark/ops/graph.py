@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_processor_spark.io import materializing_count
+from parquet_processor_spark.io import Fixpoint, materializing_count
 from parquet_processor_spark.registry import query
 from parquet_processor_spark.tables import t
 
@@ -442,7 +442,7 @@ def _lpa_oracle() -> str:
 
 @query("graph_label_propagation", oracle=_lpa_oracle(), tags=("graph", "iterative", "community"))
 def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
-    """{rounds}-round synchronous label propagation over the
+    """Fixed-round (_LPA_ROUNDS) synchronous label propagation over the
     co-purchase part graph: labels start as node ids; each round every
     node adopts the most frequent label among its neighbors (ties to
     the smallest label — deterministic, so the unrolled-CTE oracle
@@ -456,7 +456,7 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     moves; the per-round vote is two map-side-combined aggregates over
     (src, label) longs — integer counts, no float accumulation, every
     round bit-exact on both engines (the pagerank policy). Rounds are
-    a fixed shallow unroll ({rounds}); an open-ended variant would
+    a fixed shallow unroll (_LPA_ROUNDS); an open-ended variant would
     localCheckpoint labels per round like connected components.
     """
     from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
@@ -656,11 +656,11 @@ def _kcore_oracle() -> str:
 
 @query("graph_kcore", oracle=_kcore_oracle(), tags=("graph", "iterative", "kcore"))
 def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
-    """{_KCORE_K}-core onion decomposition of the co-purchase part
+    """k-core onion decomposition (k=_KCORE_K) of the co-purchase part
     graph: (node, layer, in_core) where layer is the peel round that
     removed the node (1-based) and in_core marks the survivors (layer
     NULL). The Spark side runs the real data-dependent loop to
-    FIXPOINT, raising at {_KCORE_MAX_ROUNDS} rounds (the oracle's
+    FIXPOINT, raising at _KCORE_MAX_ROUNDS rounds (the oracle's
     unroll); a fixture-guard test asserts convergence with margin so
     growth fails loudly instead of as a parity mystery.
 
@@ -669,7 +669,7 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     and localCheckpointed per round (the connected-components lineage
     discipline — O(rounds) plan depth, not O(rounds^2)). Peel rounds
     are O(graph depth), not O(nodes): each round removes every
-    sub-{_KCORE_K} node at once. Integer degrees, no floats anywhere.
+    node of degree below k at once. Integer degrees, no floats anywhere.
     """
     from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
 
@@ -685,21 +685,19 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     )
     alive = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
     layers = None
-    for r in range(1, _KCORE_MAX_ROUNDS + 1):
+    peel = Fixpoint("graph_kcore: peel loop", _KCORE_MAX_ROUNDS, materializing_count)
+    for r in peel:
         # edges is already restricted to alive endpoints (see below),
         # so the degree is a plain map-side-combined count on src
         deg = edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
         )
-        removed = (
+        removed = peel.changed(
             alive.join(deg, "node", "left")
             .where(F.coalesce(F.col("deg"), F.lit(0)) < _KCORE_K)
             .select("node")
-            .localCheckpoint(eager=False)  # materialized by the fused probe count
         )
-        # r15 (guide §5): the fixpoint probe doubles as the checkpoint's
-        # materializing action — one job per round instead of two
-        if materializing_count(removed) == 0:  # eager-by-design: fixpoint probe + checkpoint materialization
+        if removed is None:
             break
         fell = removed.select("node", F.lit(r).cast("int").alias("layer"))
         layers = fell if layers is None else layers.unionAll(fell)
@@ -711,8 +709,6 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
             .join(removed.select(F.col("node").alias("dst")), "dst", "left_anti")
             .localCheckpoint(eager=True)
         )
-    else:
-        raise RuntimeError(f"graph_kcore: peel loop did not converge in {_KCORE_MAX_ROUNDS} rounds")
     core = alive.select("node", F.lit(None).cast("int").alias("layer"))
     out = core if layers is None else layers.unionAll(core)
     return out.withColumn("in_core", F.col("layer").isNull())
@@ -777,7 +773,7 @@ def graph_bfs_distances(spark: SparkSession, sf: str) -> DataFrame:
     """Minimum hop distance from the seed set (node % 50 == 0) to every
     co-purchase node: (node, dist, reached); unreached components keep
     a NULL dist. The Spark side runs the data-dependent frontier loop
-    to fixpoint, raising at the oracle's {_BFS_MAX_ROUNDS}-round unroll,
+    to fixpoint, raising at the oracle's _BFS_MAX_ROUNDS-round unroll,
     with a convergence-margin test guarding the gap.
 
     100 TB shape: each round is ONE equi-join of the current frontier
@@ -804,21 +800,18 @@ def graph_bfs_distances(spark: SparkSession, sf: str) -> DataFrame:
     frontier = nodes.where(F.col("node") % 50 == 0).localCheckpoint(eager=True)
     visited = frontier
     dists = frontier.select("node", F.lit(0).cast("int").alias("dist"))
-    for r in range(1, _BFS_MAX_ROUNDS + 1):
-        frontier = (
+    expand = Fixpoint("graph_bfs_distances: frontier loop", _BFS_MAX_ROUNDS, materializing_count)
+    for r in expand:
+        frontier = expand.changed(
             edges.join(frontier.select(F.col("node").alias("src")), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint(eager=False)  # materialized by the fused probe count
         )
-        # r15 (guide §5): probe + checkpoint fused into one job
-        if materializing_count(frontier) == 0:  # eager-by-design: fixpoint probe + checkpoint materialization
+        if frontier is None:
             break
         dists = dists.unionAll(frontier.select("node", F.lit(r).cast("int").alias("dist")))
         visited = visited.unionAll(frontier).localCheckpoint(eager=True)
-    else:
-        raise RuntimeError(f"graph_bfs_distances: frontier loop did not converge in {_BFS_MAX_ROUNDS} rounds")
     return (
         nodes.join(dists, "node", "left")
         .select("node", "dist", F.col("dist").isNotNull().alias("reached"))
@@ -1209,12 +1202,13 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
     the k-core loop discipline — one map-side-combined min-aggregate
     shuffle per round over an edge list that only SHRINKS, edges
     repartitioned on the join key once and localCheckpointed per
-    round. Inner fixpoints are detected by a 1-row monotone invariant
-    (sum of labels strictly decreases / marked count strictly grows),
-    so convergence costs one scalar read per round, never a data
+    round. All three loops stop on an empty delta (no improved label,
+    no newly marked node, no node left): :class:`io.Fixpoint` counts
+    the round's change set in the one job that materializes its
+    checkpoint, so convergence costs no extra job and never a data
     compare. Labels are 8-byte longs; nothing wider ever shuffles.
     Peel progress is guaranteed (every class identifies its root's
-    SCC each peel), and the iteration caps fail loudly rather than
+    SCC each peel), and the round caps fail loudly rather than
     silently truncating.
     """
     sc = spark.sparkContext
@@ -1235,14 +1229,13 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
         edges_all.select(F.col("src").alias("node"))
         .union(edges_all.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)  # materialized by the peel-top probe count
     )
     edges = edges_all
     out = None
-    for _peel in range(_SCC_MAX_PEELS):
-        # r15 (guide §5): the peel-top probe doubles as the node table's
-        # checkpoint-materializing action — one job instead of two
-        if materializing_count(nodes) == 0:  # eager-by-design: peel fixpoint probe + checkpoint materialization
+    peels = Fixpoint("graph_scc: peel loop", _SCC_MAX_PEELS, materializing_count)
+    for _ in peels:
+        nodes = peels.changed(nodes)
+        if nodes is None:
             break
         # forward-min coloring to fixpoint: c(v) = min id reaching v.
         # DELTA ITERATION (r12): only labels that CHANGED last round
@@ -1251,11 +1244,11 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
         # every round, which made the forward pass own nearly all the
         # pass's shuffled bytes at ×100). The label table still takes
         # the improved-rows merge each round, but the edge join — the
-        # wide side — is frontier-bounded, and the empty-delta probe
-        # replaces the label-sum scalar as the fixpoint test.
+        # wide side — is frontier-bounded.
         lab = nodes.select("node", F.col("node").alias("c")).localCheckpoint(eager=True)
         changed = lab
-        for _it in range(_SCC_MAX_PROP):
+        forward = Fixpoint("graph_scc: forward coloring", _SCC_MAX_PROP, materializing_count)
+        for _ in forward:
             inc = (
                 edges.join(
                     changed.select(F.col("node").alias("src"), F.col("c").alias("cs")),
@@ -1264,13 +1257,12 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
                 .groupBy(F.col("dst").alias("node"))
                 .agg(F.min("cs").alias("cin"))
             )
-            changed = (
+            changed = forward.changed(
                 inc.join(lab, "node")
                 .where(F.col("cin") < F.col("c"))
                 .select("node", F.col("cin").alias("c"))
-                .localCheckpoint(eager=False)  # materialized by the fused probe count
             )
-            if materializing_count(changed) == 0:  # eager-by-design: empty-delta fixpoint probe + checkpoint materialization (one job, guide §5)
+            if changed is None:
                 break
             lab = (
                 lab.join(changed.select("node", F.col("c").alias("cn")), "node", "left")
@@ -1280,8 +1272,6 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
                 )
                 .localCheckpoint(eager=True)
             )
-        else:
-            raise RuntimeError("graph_scc: forward coloring did not converge")
         # backward pass restricted to each class, FRONTIER-ONLY (the
         # graph_bfs_distances discipline): mark = nodes known to reach
         # their class root (seeded by the roots themselves); each round
@@ -1293,8 +1283,9 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
         # graph-scale nit).
         mark = lab.where(F.col("c") == F.col("node")).localCheckpoint(eager=True)
         frontier = mark
-        for _it in range(_SCC_MAX_PROP):
-            frontier = (
+        backward = Fixpoint("graph_scc: backward pass", _SCC_MAX_PROP, materializing_count)
+        for _ in backward:
+            frontier = backward.changed(
                 edges.join(
                     frontier.select(F.col("node").alias("dst"), F.col("c").alias("mc")),
                     "dst",
@@ -1303,24 +1294,19 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
                 .join(lab, ["node", "c"])  # stay inside the class
                 .distinct()
                 .join(mark.select("node"), "node", "left_anti")
-                .localCheckpoint(eager=False)  # materialized by the fused probe count
             )
-            if materializing_count(frontier) == 0:  # eager-by-design: empty-frontier fixpoint probe + checkpoint materialization (one job, guide §5)
+            if frontier is None:
                 break
             mark = mark.unionAll(frontier).localCheckpoint(eager=True)
-        else:
-            raise RuntimeError("graph_scc: backward pass did not converge")
         found = mark.select("node", F.col("c").alias("scc_id"))
         out = found if out is None else out.union(found)
-        nodes = nodes.join(found, "node", "left_anti").localCheckpoint(eager=False)  # materialized by the next peel-top probe count
+        nodes = nodes.join(found, "node", "left_anti")
         gone = found.select(F.col("node").alias("g"))
         edges = (
             edges.join(gone.withColumnRenamed("g", "src"), "src", "left_anti")
             .join(gone.withColumnRenamed("g", "dst"), "dst", "left_anti")
             .localCheckpoint(eager=True)
         )
-    else:
-        raise RuntimeError("graph_scc: peel loop did not converge")
     if out is None:  # empty graph: no edges, no nodes, no components
         return spark.createDataFrame([], "node long, scc_id long, scc_size long")
     sizes = out.groupBy("scc_id").agg(F.count(F.lit(1)).cast("long").alias("scc_size"))

@@ -550,13 +550,13 @@ def _phash_bands(media: DataFrame) -> DataFrame:
 )
 def multimodal_dedup_perceptual(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual (dHash) near-dup detection over media payloads:
-    resize each payload to {_PHASH_PIX} block-mean samples, take the
+    resize each payload to _PHASH_PIX block-mean samples, take the
     64 adjacent-sample gradient bits, block on BAND-PAIR keys, verify
-    full Hamming <= {_PHASH_MAX_HAM} within blocks, and label each
+    full Hamming <= _PHASH_MAX_HAM within blocks, and label each
     media row with its lowest-id near-duplicate.
 
     Guaranteed recall, not probabilistic: with 8 bands of 8 bits, any
-    pair within Hamming {_PHASH_MAX_HAM} has >= 2 clean bands
+    pair within Hamming _PHASH_MAX_HAM has >= 2 clean bands
     (pigeonhole), so at least one of the C(8,2)=28 concatenated
     band-pair keys collides — the classic multi-index Hamming search.
     Injected re-encodes measure <= 5 flips; unrelated fixture pairs
@@ -871,10 +871,6 @@ def _phash_bands_arrow(media: DataFrame) -> DataFrame:
 #   ingest (+ injected re-encodes) -> exact byte dedup -> perceptual
 #   near-dup -> caption gating -> shard assignment.
 _MEDIA_SHARDS = 8
-
-
-def _media_sql() -> str:
-    return _PHASH_MEDIA_CTE
 
 
 def _survivors_sql() -> str:
@@ -1225,10 +1221,10 @@ def _audio_match_pairs(hits: DataFrame, nl: DataFrame) -> DataFrame:
 def multimodal_dedup_audio(spark: SparkSession, sf: str) -> DataFrame:
     """Shift-tolerant audio near-dup via landmark fingerprints: frame
     the byte stream, take strict energy peaks as anchors, hash each
-    (peak, one-of-next-{_AUDIO_FANOUT} peaks) pair as (quantized
+    (peak, one of the next F=_AUDIO_FANOUT peaks) pair as (quantized
     energy, quantized energy, frame gap), and match tracks through an
     inverted index on the hash — duplicates iff they share >=
-    max({_AUDIO_MIN_SHARED}, half the smaller track's landmark count)
+    max(_AUDIO_MIN_SHARED, half the smaller track's landmark count)
     hashes. A constant-offset shift (the injected 2-frame "silence"
     prefix) translates all peaks together, so every source landmark
     survives verbatim in the shifted copy — recall over fingerprintable
@@ -1239,7 +1235,7 @@ def multimodal_dedup_audio(spark: SparkSession, sf: str) -> DataFrame:
     100 TB shape: the inverted-index join moves only (track_id, hash)
     longs — payloads never leave the scan stage, and the fingerprint is
     whole-stage-codegen arithmetic (no Python, no UDF). Posting lists
-    are df-capped at {_AUDIO_DF_CAP} (mirrored in the oracle) so a
+    are df-capped at _AUDIO_DF_CAP (mirrored in the oracle) so a
     degenerate hash cannot go quadratic — the dedup_ngram_jaccard
     discipline. The pair aggregate is one shuffle on (ida, idb); the
     threshold join broadcasts nothing corpus-sized (n_landmarks rides

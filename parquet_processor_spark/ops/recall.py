@@ -558,7 +558,7 @@ def recall_sim_topk_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     ⌊√N⌋), nprobe = half — r14), so the cell-boundary ceiling holds
     at every SF instead of decaying past the check SFs; the residual
     shortfall vs that ceiling is PQ shortlist truncation, which the
-    exact-cosine refine of the top-{R} keeps near zero (see
+    exact-cosine refine of the top-R (R=_IVFPQ_R) keeps near zero (see
     recall_sim_topk_ivf_nprobe for the measured ceiling curve)."""
     from parquet_processor_spark.ops import vector as vec
 

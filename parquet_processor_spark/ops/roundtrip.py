@@ -424,7 +424,7 @@ _BINARY_PARTS = 8
     tags=("source", "multimodal"),
 )
 def scan_binary_files(spark: SparkSession, sf: str) -> DataFrame:
-    """Write documents as {_BINARY_PARTS} text part-files, scan them
+    """Write documents as _BINARY_PARTS text part-files, scan them
     back with the ``binaryFile`` source (path, modificationTime,
     length, content per file), and aggregate file count + content
     bytes. The oracle recomputes the expected byte total from the
@@ -730,7 +730,7 @@ def sink_manifest_pruned_scan(spark: SparkSession, sf: str) -> DataFrame:
     manifest harvest aggregates (file, min, max) — file-count rows —
     and at lake scale is maintained INCREMENTALLY at write time
     instead of re-derived; the query planner then opens overlap-
-    selected files only (here {_MANIFEST_FILES}-way clustering cuts a
+    selected files only (here _MANIFEST_FILES-way clustering cuts a
     1-year probe to ~1/4 of the files, asserted in tests). Correctness
     never depends on the pruning: files are selected by stats that
     BOUND their contents, and the residual filter still runs.
@@ -858,7 +858,7 @@ _EXPIRE_KEEP = 2
 def sink_snapshot_expire(spark: SparkSession, sf: str) -> DataFrame:
     """Publish three snapshots of orders (a date slice, that slice
     plus the urgent orders, the full table), expire down to the newest
-    {_EXPIRE_KEEP}, and report per-version (n_rows, expired, readable):
+    _EXPIRE_KEEP, and report per-version (n_rows, expired, readable):
     the expired version must be physically deleted (directory gone,
     n_rows 0), the survivors must read back complete (counts match the
     oracle's recomputation from source), and the _CURRENT pointer must
@@ -966,7 +966,7 @@ def publish_if_clean(df: DataFrame, root: str, version: int, n_violations: int) 
 def sink_checked_publish(spark: SparkSession, sf: str) -> DataFrame:
     """Two WAP attempts against one snapshot root: attempt 1 audits
     "totalprice positive" (clean on this corpus) and publishes;
-    attempt 2 audits "no orders on/after {_WAP_CUT}" (the corpus has
+    attempt 2 audits "no orders on/after _WAP_CUT" (the corpus has
     them) and is BLOCKED — the staged directory exists but _CURRENT
     still names version 1, and the reader-through-pointer row count
     proves it. The oracle recomputes both audits and the visible
@@ -1063,7 +1063,7 @@ def _rtbf_target_pred(key: F.Column) -> F.Column:
 )
 def sink_targeted_delete(spark: SparkSession, sf: str) -> DataFrame:
     """Copy-on-write targeted delete over a bucket-partitioned orders
-    table: write the table partitioned by ``o_custkey % {_RTBF_BUCKETS}``,
+    table: write the table partitioned by ``o_custkey % _RTBF_BUCKETS``,
     pick the ~1% md5-sampled target customers, rewrite ONLY the
     partitions holding a target (dynamic partition overwrite with the
     targets anti-joined out), and emit one audit row. Two facts are

@@ -768,7 +768,7 @@ def _kcenter_oracle() -> str:
 )
 def sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     """Greedy k-center picks over the embedding table: (round, vec_id,
-    radius_d2) for {_KCENTER_K} centers, where radius_d2 is the
+    radius_d2) for _KCENTER_K centers, where radius_d2 is the
     max-min squared distance at selection time — round r's radius is
     the coverage guarantee after r centers (non-increasing, asserted
     in tests). Seed = lowest vec_id; ties on distance break to the
@@ -880,7 +880,7 @@ _HARDNEG_K = 3
     tags=("sampling", "vector", "contrastive"),
 )
 def sample_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{_HARDNEG_K} hardest negatives per anchor: highest-cosine
+    """Top-K hardest negatives per anchor (K=_HARDNEG_K): highest-cosine
     corpus points whose label differs from the anchor's.
 
     100 TB shape: identical to sim_topk_batch — anchors broadcast, one

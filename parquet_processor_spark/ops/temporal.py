@@ -2158,7 +2158,7 @@ _TRIGRAM_K = 20
     tags=("events", "sequence", "mining"),
 )
 def events_path_trigrams(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{_TRIGRAM_K} consecutive event-type trigrams across all
+    """Top-K consecutive event-type trigrams (K=_TRIGRAM_K) across all
     user timelines, ordered by count with a full lexicographic
     tie-break.
 

@@ -913,7 +913,7 @@ def _bpe_oracle() -> str:
 
 @query("tokenizer_bpe_train", oracle=_bpe_oracle(), tags=("text", "tokenizer", "iterative"))
 def tokenizer_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
-    """Learn the first {rounds} BPE merges Sennrich-style: collapse
+    """Learn the first _BPE_ROUNDS BPE merges Sennrich-style: collapse
     the corpus to a (word, count) vocabulary once, then per round ONE
     count-weighted pair aggregate over the distinct-word symbol
     strings picks the most frequent adjacent symbol pair ((count
@@ -1405,7 +1405,7 @@ def _bm25_weights(spark: SparkSession, sf: str) -> DataFrame:
     tags=("text", "retrieval", "bm25"),
 )
 def text_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{_BM25_K} impact-ordered BM25 postings per query term.
+    """Top-K impact-ordered BM25 postings per query term (K=_BM25_K).
 
     weight = idf * tf_saturation with k1 = 6/5, b = 3/4:
       idf  = (2*(N - df) + 1) / (2*df + 1)        [linear odds, x2-scaled]
@@ -1695,16 +1695,16 @@ def _rrf_oracle() -> str:
 
 @query("search_hybrid_rrf", oracle=_rrf_oracle(), tags=("text", "vector", "retrieval", "rrf"))
 def search_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{_RRF_TOPK} hybrid search results: BM25 (fixed query terms)
-    and dense cosine (query = vec 0) pools of {_RRF_POOL} fused by
-    reciprocal-rank fusion, score = sum 1/({_RRF_K} + rank).
+    """Top-N hybrid search results (N=_RRF_TOPK): BM25 (fixed query terms)
+    and dense cosine (query = vec 0) pools of P=_RRF_POOL fused by
+    reciprocal-rank fusion, score = sum 1/(_RRF_K + rank).
 
     100 TB shape: each system ranks only its own COLLAPSED score spine
     (per-doc aggregates — the agg_auc precedent; production serves the
     pools from the BM25 impact index and the IVF-PQ index, both built
     here, so the global sorts become index reads); the fusion joins
-    two {_RRF_POOL}-row pools — broadcast-sized by construction —
-    and the output is {_RRF_TOPK} rows.
+    two P-row pools — broadcast-sized by construction —
+    and the output is N rows.
     """
     from pyspark.sql import Window
 

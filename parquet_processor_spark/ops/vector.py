@@ -1845,7 +1845,7 @@ def _ivfpq_oracle() -> str:
 def sim_topk_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-PQ ANN: SF-derived cell probe (n_cells = max(8, ⌊√N⌋),
     nprobe = half — the shared serving geometry) -> PQ asymmetric-distance
-    shortlist (top-{R} by codes alone) -> exact cosine rerank of the
+    shortlist (top-R by codes alone, R=_IVFPQ_R) -> exact cosine rerank of the
     shortlist -> top-10. HASH-CHECKED end to end: subvectors quantize
     to exact integers (floor(x * 2^24 + 0.5) of unit-normalized
     float32 — power-of-two scaling is IEEE-exact), so Lloyd's centroid
@@ -2443,7 +2443,7 @@ def _tune_band_sql(tbl: str, r: int, band: int) -> str:
 )
 def report_lsh_tuning(spark: SparkSession, sf: str) -> DataFrame:
     """Measured recall for every (r, L) banding cell over a SAMPLED
-    tau-ball: 1-in-{_TUNE_SAMPLE_MOD} deterministic md5 anchors, each
+    tau-ball: 1-in-M deterministic md5 anchors (M=_TUNE_SAMPLE_MOD), each
     paired against the whole corpus (anchor-neighborhood recall — the
     knn-gate shape). The per-cell recall estimator is unbiased and the
     oracle replays the identical sample predicate, so the report stays
@@ -2587,9 +2587,9 @@ _BATCH_K = 5
     tags=("vector", "batch", "serving"),
 )
 def sim_topk_batch(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{_BATCH_K} cosine neighbors for each of {_BATCH_Q} query
+    """Top-K cosine neighbors (K=_BATCH_K) for each of Q=_BATCH_Q query
     vectors in ONE corpus pass: broadcast the query batch, score every
-    (query, candidate) pair beside the scan, keep rank <= {_BATCH_K}
+    (query, candidate) pair beside the scan, keep rank <= K
     per query.
 
     100 TB shape: the corpus is scanned ONCE for the whole batch (vs Q
@@ -2683,8 +2683,8 @@ def _mmr_oracle() -> str:
 
 @query("sim_mmr_rerank", oracle=_mmr_oracle(), tags=("vector", "rerank", "diversity"))
 def sim_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
-    """Greedy MMR over the query-0 top-{_MMR_CAND} shortlist: pick
-    {_MMR_PICK} results maximizing (rel - max_sim_to_picked)/2 each
+    """Greedy MMR over the query-0 top-C shortlist (C=_MMR_CAND): pick
+    _MMR_PICK results maximizing (rel - max_sim_to_picked)/2 each
     step (first pick scores rel/2 — the empty-set convention), ties to
     the lowest id. Emits (pick, vec_id, mmr) — the greedy trace, not
     just the set, so ordering bugs cannot hide.
@@ -2860,8 +2860,8 @@ def _knn_graph_oracle() -> str:
 
 @query("sim_knn_graph", oracle=_knn_graph_oracle(), tags=("vector", "lsh", "knn", "graph"))
 def sim_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{_KNN_K} cosine neighbors for EVERY vector from banded-LSH
-    candidates (L={_KNN_BANDS} x r=3 literal hyperplanes — hash-checked
+    """Top-K cosine neighbors (K=_KNN_K) for EVERY vector from banded-LSH
+    candidates (L=_KNN_BANDS x r=3 literal hyperplanes — hash-checked
     end to end). Vectors whose buckets yield fewer than K candidates
     emit fewer rows; the measured miss rate vs exact k-NN is gated by
     ``recall_sim_knn_graph``.
@@ -2875,7 +2875,7 @@ def sim_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
     mirror row reuses the score, which is bitwise-safe because
     per-element products and the norm product commute; embeddings
     join back by id only for surviving pairs; and the rank<=
-    {_KNN_K} filter plans as WindowGroupLimit (partial top-K per map
+    K filter plans as WindowGroupLimit (partial top-K per map
     task BEFORE the src shuffle), so K*P rows cross the wire per
     source, never the candidate mass.
     """
@@ -2986,7 +2986,7 @@ def _mrl_oracle() -> str:
 
 @query("embedding_matryoshka_eval", oracle=_mrl_oracle(), tags=("vector", "eval", "matryoshka"))
 def embedding_matryoshka_eval(spark: SparkSession, sf: str) -> DataFrame:
-    """Per prefix width in {_MRL_DIMS}: top-{_MRL_K} overlap with the
+    """Per prefix width in _MRL_DIMS: top-K overlap (K=_MRL_K) with the
     full-dimension ranking and whether the top-1 survived truncation.
 
     100 TB shape: each arm is the sim_topk serving plan over a SLICED
@@ -3077,7 +3077,7 @@ def _upsert_oracle() -> str:
 def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """Grow the persisted IVF-PQ index by a delta batch with a FROZEN
     corpus-trained codebook: train on vectors below the
-    {_UPSERT_CUTOFF_FRAC} id-range cutoff, persist the corpus parts,
+    _UPSERT_CUTOFF_FRAC id-range cutoff, persist the corpus parts,
     encode + assign the delta against the frozen codebook/centroids,
     APPEND its rows to the at-rest parts, and serve the query from the
     merged index. Parity is physical: the merged-at-rest serve must
@@ -3312,7 +3312,7 @@ def sim_topk_filtered(spark: SparkSession, sf: str) -> DataFrame:
 def report_lsh_bucket_pressure(spark: SparkSession, sf: str) -> DataFrame:
     """Per-band posting-list pressure: bucket count, largest bucket,
     the candidate-pair mass the buckets expand to, and the number of
-    buckets over the {_EMB_BUCKET_CAP} cap (currently being dropped).
+    buckets over the _EMB_BUCKET_CAP cap (currently being dropped).
     Zero over-cap buckets means the caps are pure insurance; a
     non-zero count means blocking selectivity no longer matches the
     corpus and r needs raising (the ×10 replication soak in SCALE.md
@@ -3375,7 +3375,7 @@ def _knn_classify_oracle() -> str:
 @query("embedding_knn_classify", oracle=_knn_classify_oracle(), tags=("vector", "knn", "labeling"))
 def embedding_knn_classify(spark: SparkSession, sf: str) -> DataFrame:
     """Majority-vote label prediction per vector from its
-    top-{_KNN_K} cosine neighbors (ties to the smallest label id),
+    top-K cosine neighbors (K=_KNN_K; ties to the smallest label id),
     with the agreement count and actual-label match — the
     pseudo-labeling primitive a semi-supervised pipeline gates on
     (keep predictions with n_agree >= threshold as new labels).

@@ -168,20 +168,6 @@ def stream_dedup_keys(events: DataFrame, watermark: str = "30 minutes") -> DataF
     )
 
 
-def run_to_memory(stream: DataFrame, name: str, checkpoint: str) -> StreamingQuery:
-    """T1/T2: availableNow micro-batch run with a checkpointed offset log.
-    Re-running with the same checkpoint resumes (processes nothing new) —
-    the has_more/next_index analog."""
-    return (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete" if stream.isStreaming else "append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def run_with_dead_letter(
     events: DataFrame,
     ok_dir: str,

@@ -956,20 +956,65 @@ def test_kcore_raises_at_round_cap(spark, sf_dir, monkeypatch):
     layers = {r["node"]: r["layer"] for r in graph.graph_kcore(spark, sf_dir).collect()}
     assert layers == {i: min(i, n - 1 - i) + 1 for i in range(n)}
     monkeypatch.setattr(graph, "_KCORE_MAX_ROUNDS", 3)
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match=r"did not converge in \d+ rounds"):
         graph.graph_kcore(spark, sf_dir)
 
 
 def test_bfs_raises_at_round_cap(spark, sf_dir, monkeypatch):
-    # a 10-node chain seeded at node 0: distances reach 9
+    # a 10-node chain seeded at node 0: distances reach 9, after 9
+    # expanding rounds and one empty probe. Each round's probe is also
+    # its checkpoint's materializing job, so the build runs at most 83
+    # jobs (82 or 83 from run to run under AQE) and the collect 4
     from parquet_processor_spark.ops import graph
 
+    from .conftest import jobs_in_group
+
     _fake_copurchase(monkeypatch, spark, [(i, i + 1) for i in range(9)])
-    dist = {r["node"]: r["dist"] for r in graph.graph_bfs_distances(spark, sf_dir).collect()}
-    assert dist == {i: i for i in range(10)}
+    df, build = jobs_in_group(spark, "bfs_chain_build", lambda: graph.graph_bfs_distances(spark, sf_dir))
+    rows, run = jobs_in_group(spark, "bfs_chain_run", df.collect)
+    assert {r["node"]: r["dist"] for r in rows} == {i: i for i in range(10)}
+    assert build <= 83 and run <= 4, (build, run)
     monkeypatch.setattr(graph, "_BFS_MAX_ROUNDS", 5)
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match=r"did not converge in \d+ rounds"):
         graph.graph_bfs_distances(spark, sf_dir)
+
+
+def _fake_lineitem(monkeypatch, spark, paths):
+    # graph_scc reads lineitem through the module's ``t`` and draws an
+    # edge between consecutive parts of each order: one order per path
+    from parquet_processor_spark.ops import graph
+
+    rows = [(o, i + 1, p) for o, path in enumerate(paths) for i, p in enumerate(path)]
+    df = spark.createDataFrame(rows, "l_orderkey long, l_linenumber int, l_partkey long")
+    monkeypatch.setattr(graph, "t", lambda spark, sf, name: df)
+
+
+_SCC_CHAIN = [[0, 1, 2, 3]]
+# a 6-cycle plus a star out of 0: forward coloring settles in 2
+# rounds, the backward pass walks the cycle back in 6
+_SCC_CYCLE = [[0, 1, 2, 3, 4, 5, 0]] + [[0, k] for k in range(2, 6)]
+
+
+@pytest.mark.parametrize(
+    "paths, cap, loop",
+    [
+        (_SCC_CHAIN, "_SCC_MAX_PROP", "forward coloring"),  # needs 4 rounds
+        (_SCC_CYCLE, "_SCC_MAX_PROP", "backward pass"),
+        (_SCC_CHAIN, "_SCC_MAX_PEELS", "peel loop"),  # one peel per node, then the empty probe
+    ],
+    ids=["forward", "backward", "peel"],
+)
+def test_scc_raises_at_each_round_cap(spark, sf_dir, monkeypatch, paths, cap, loop):
+    from parquet_processor_spark.ops import graph
+
+    _fake_lineitem(monkeypatch, spark, paths)
+    if paths == _SCC_CYCLE:  # converges under the default caps
+        assert {tuple(r) for r in graph.graph_scc(spark, sf_dir).collect()} == {
+            (n, 0, 6) for n in range(6)
+        }
+    monkeypatch.setattr(graph, cap, 3)
+    with pytest.raises(RuntimeError, match=rf"graph_scc: {loop} did not converge in \d+ rounds"):
+        graph.graph_scc(spark, sf_dir)
 
 
 def test_decile_lift_matches_python_ranker(spark, sf_dir):

@@ -267,6 +267,23 @@ def test_connected_components_adversarial_diameter(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_connected_components_chain_jobs_and_round_cap(spark, monkeypatch):
+    # A 10-node chain outlasts the propagation-only rounds, so the
+    # pointer jump runs too. Each round's probe also materializes its
+    # checkpoint, so the build runs at most 54 jobs and the collect 1;
+    # capped at 2 rounds, the chain is still improving labels
+    from parquet_processor_spark.ops import dedup
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(9)], "src long, dst long")
+    df, build = jobs_in_group(spark, "cc_chain_build", lambda: dedup.connected_components(None, edges))
+    rows, run = jobs_in_group(spark, "cc_chain_run", df.collect)
+    assert {r["node"]: r["label"] for r in rows} == {i: 0 for i in range(10)}
+    assert build <= 54 and run <= 1, (build, run)
+    monkeypatch.setattr(dedup, "_CC_MAX_ITERS", 2)
+    with pytest.raises(RuntimeError, match=r"connected_components did not converge in \d+ rounds"):
+        dedup.connected_components(None, edges)
+
+
 def test_dedup_connected_merges_transitive_clusters(spark, sf_dir):
     # Every direct near-dup pair must land in one cluster, and cluster
     # ids must be the cluster minimum.

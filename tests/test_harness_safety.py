@@ -172,6 +172,24 @@ def test_bench_lists_are_registered():
     assert not dupes, f"queries timed twice: {dupes}"
 
 
+def test_query_docstrings_name_no_module_constant_in_braces():
+    # A docstring is a plain string, not an f-string: "{_KCORE_K}" in it
+    # reaches help() and the registry as the literal braces, not the
+    # value. Name the constant without braces ("k=_KCORE_K") instead.
+    import re
+    import sys
+
+    from parquet_processor_spark.registry import all_queries
+
+    offenders = {}
+    for name, fn in all_queries().items():
+        module = sys.modules[fn.__module__]
+        found = {x for x in re.findall(r"\{([A-Za-z_]\w*)\}", fn.__doc__ or "") if hasattr(module, x)}
+        if found:
+            offenders[name] = sorted(found)
+    assert not offenders, f"docstrings with literal {{CONSTANT}} placeholders: {offenders}"
+
+
 def test_injected_id_offset_clears_fixture_ids(spark):
     # multimodal_dedup_bytes and multimodal_dedup_perceptual re-key
     # injected duplicates as media_id + 1_000_000_000; if the fixture

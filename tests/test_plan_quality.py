@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from parquet_processor_spark.registry import all_queries
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, jobs_in_group
 
 
 def plan_of(spark, name: str) -> str:
@@ -1496,10 +1496,12 @@ def test_materializing_count_is_one_job_and_materializes_the_checkpoint(spark):
     # io.materializing_count's contract: over a narrow plan (filter +
     # projection) on a LAZY localCheckpoint, the probe is ONE job, and
     # that job materializes the checkpoint — a later action on the same
-    # frame never recomputes below it (the UDF runs once per row)
+    # frame never recomputes below it (the UDF runs once per row).
+    # io.Fixpoint.changed keeps the same contract, with or without
+    # ``where``, and returns None when the probe counts no row
     from pyspark.sql.types import LongType
 
-    from parquet_processor_spark.io import materializing_count
+    from parquet_processor_spark.io import Fixpoint, materializing_count
 
     sc = spark.sparkContext
     n = 200
@@ -1510,15 +1512,32 @@ def test_materializing_count_is_one_job_and_materializes_the_checkpoint(spark):
         calls.add(1)
         return x
 
-    base = spark.range(0, n, 1, 4).select(tick("id").alias("v")).localCheckpoint(eager=False)
-    group = "materializing_count_contract"
-    sc.setJobGroup(group, group)
-    try:
-        assert materializing_count(base.where(F.col("v") % 2 == 0).select("v")) == n // 2
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert calls.value == n
-    assert sorted(r["v"] for r in base.collect()) == list(range(n))
-    assert calls.value == n
+    even = F.col("v") % 2 == 0
+    loop = Fixpoint("contract", 3, materializing_count)
+
+    def count(src):
+        base = src.localCheckpoint(eager=False)
+        assert materializing_count(base.where(even).select("v")) == n // 2
+        return base
+
+    probes = {
+        "count": count,
+        "changed": loop.changed,
+        "changed_where": lambda src: loop.changed(src, where=even),
+        "changed_none": lambda src: loop.changed(src, where=F.col("v") < 0),
+    }
+    for name, probe in probes.items():
+        before = calls.value
+        src = spark.range(0, n, 1, 4).select(tick("id").alias("v"))
+        base, jobs = jobs_in_group(spark, f"materializing_count_contract_{name}", lambda: probe(src))
+        assert jobs == 1 and calls.value - before == n, (name, jobs)
+        if name == "changed_none":
+            assert base is None
+            continue
+        assert sorted(r["v"] for r in base.collect()) == list(range(n)), name
+        assert calls.value - before == n, name
+    rounds = []
+    with pytest.raises(RuntimeError, match=r"^contract did not converge in 3 rounds$"):
+        for r in loop:
+            rounds.append(r)
+    assert rounds == [1, 2, 3]
