@@ -1,15 +1,10 @@
-"""Sources and sinks (SURVEY.md §2.1 S1-S3, §2.2 K1-K4).
+"""Scratch directories and the one-job probes of data-dependent loops.
 
-The reference writes timestamped parquet snapshots per batch
-(test_parquet_processor.py:391-401), combined CSV/JSON artifacts
-(test_parquet_aggregator.yml:159-181), and segment/timestamp directory
-layouts (test_parquet_processor.yml:76,82). Here each is a thin,
-explicit-schema wrapper over the DataFrame reader/writer so every
-format round-trips through one code path.
-
-Scale notes: writes default to snappy parquet with partitionBy for the
-layout dirs; CSV/JSON sinks exist for interchange parity, not as the
-100 TB at-rest format.
+Sources and sinks (SURVEY.md §2.1 S1-S3, §2.2 K1-K4) call Spark's
+DataFrame reader and writer in place, with explicit schemas where a
+read could otherwise infer; ops/roundtrip.py round-trips each format
+(the reference's timestamped parquet snapshots, combined CSV/JSON
+artifacts and segment/timestamp layouts) through them.
 """
 
 from __future__ import annotations
@@ -20,8 +15,7 @@ import shutil
 import tempfile
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import Column, DataFrame
 
 # --- scratch lifecycle ----------------------------------------------------
 
@@ -95,56 +89,3 @@ class Fixpoint:
         probe = frame if where is None else frame.where(where)
         return frame if self._count(probe) else None  # eager-by-design: fixpoint probe + checkpoint materialization
 
-
-# --- sources -------------------------------------------------------------
-
-
-def read_parquet(spark: SparkSession, path: str, recursive: bool = False, merge_schema: bool = False) -> DataFrame:
-    """S2/S3: parquet scan; recursive discovery replaces the reference's
-    Path.rglob walk (aggregator.yml:121-128), mergeSchema replaces
-    pd.concat schema merging (U1)."""
-    reader = spark.read
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: T.StructType | str | None = None) -> DataFrame:
-    """S1: JSON scan; explicit schema preferred (no inference pass at scale)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType | str | None = None, header: bool = True) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-# --- sinks ---------------------------------------------------------------
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "append", partition_by: tuple[str, ...] = ()) -> None:
-    """K1/K4: parquet write, optionally with the reference's
-    {segment}/{run_ts} directory layout as partition columns."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """K2: header CSV (aggregator.yml:164-166)."""
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """K3: JSON-lines (statistics.json / skipped_records analog)."""
-    df.write.mode(mode).json(path)

@@ -799,7 +799,7 @@ _INCR_CUTOFF = "1997-01-01"
 )
 def agg_incremental_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Per-customer order rollup maintained incrementally: history
-    partials (orders before {cutoff}) merged with delta partials
+    partials (orders before _INCR_CUTOFF) merged with delta partials
     (orders on/after), equal by construction to the full recompute
     the oracle runs.
 
@@ -857,7 +857,7 @@ _COPURCHASE_MIN_SUPPORT = 2
     tags=("agg", "basket", "pairs"),
 )
 def agg_copurchase_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Part pairs co-purchased in >= {min_support} orders.
+    """Part pairs co-purchased in >= _COPURCHASE_MIN_SUPPORT orders.
 
     100 TB shape: one shuffle collapses lineitem to per-order sorted
     baskets (collect_set is map-side combined); pair expansion then
@@ -1081,7 +1081,7 @@ _LIFT_MIN_SUPPORT = 3
     tags=("agg", "basket", "lift"),
 )
 def agg_affinity_lift(spark: SparkSession, sf: str) -> DataFrame:
-    """Lift for co-purchased part pairs with support >= {m}.
+    """Lift for co-purchased part pairs with support >= _LIFT_MIN_SUPPORT.
 
     100 TB shape: pair counts come from the basket-generator expansion
     (agg_copurchase_pairs' plan — bounded by basket width, no
@@ -2130,7 +2130,7 @@ _CHI2_CRIT = (3.841, 5.991, 7.815, 9.488, 11.070, 12.592, 14.067, 15.507)
 def agg_chi_square(spark: SparkSession, sf: str) -> DataFrame:
     """Pearson chi-square over the arms x event-type contingency
     table, with the 5% verdict against the critical value for the
-    OBSERVED degrees of freedom (df 1-{len(_CHI2_CRIT)} literal table;
+    OBSERVED degrees of freedom (df 1 to len(_CHI2_CRIT) literal table;
     beyond that the verdict is conservatively false).
 
     100 TB shape: the contingency table is ONE map-side-combined

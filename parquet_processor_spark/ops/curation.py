@@ -705,7 +705,7 @@ _SEM_CONTAM_TAU = 0.35
     tags=("curation", "vector", "contamination"),
 )
 def curation_contamination_semantic(spark: SparkSession, sf: str) -> DataFrame:
-    """Flag corpus vectors within cosine {tau} of any benchmark vector.
+    """Flag corpus vectors within cosine _SEM_CONTAM_TAU of any benchmark vector.
 
     100 TB shape: the benchmark side is SMALL by nature (an eval
     suite, not a corpus) — broadcast it and score map-side in one

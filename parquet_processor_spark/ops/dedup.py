@@ -1703,7 +1703,7 @@ _BOILER_DF = 5
 )
 def text_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc boilerplate fraction: share of distinct shingles whose
-    corpus document frequency >= {df} (shared templated content).
+    corpus document frequency >= _BOILER_DF (shared templated content).
 
     100 TB shape: the DF statistic is the same map-side-combined
     aggregate drop_hot_shingles runs; the boilerplate shingle set is
@@ -1798,13 +1798,13 @@ _SPAN_CTES = f"""
 )
 def dedup_verbatim_spans(spark: SparkSession, sf: str) -> DataFrame:
     """Longest verbatim token run per document pair: hash every
-    {gram}-gram, keep grams shared by 2..{cap} docs (rare-anchor
-    posting lists — hot boilerplate grams are capped exactly like the
-    Jaccard family), join postings into (pair, pos_a, pos_b) matches,
-    and collapse each match DIAGONAL (pa - pb constant) into maximal
-    consecutive runs with the gaps-and-islands trick: within a
-    diagonal, pa - row_number() is constant exactly on consecutive
-    anchors. A run of L anchors is a verbatim span of L + {gram} - 1
+    gram-gram (gram=_SPAN_GRAM), keep grams shared by 2..cap docs
+    (cap=_SPAN_DF_CAP: rare-anchor posting lists — hot boilerplate
+    grams are capped exactly like the Jaccard family), join postings
+    into (pair, pos_a, pos_b) matches, and collapse each match
+    DIAGONAL (pa - pb constant) into maximal consecutive runs with the
+    gaps-and-islands trick: within a diagonal, pa - row_number() is
+    constant exactly on consecutive anchors. A run of L anchors is a verbatim span of L + gram - 1
     tokens; pairs report their longest span and span count.
 
     100 TB shape: linear in corpus tokens up to the posting join,
@@ -1815,7 +1815,7 @@ def dedup_verbatim_spans(spark: SparkSession, sf: str) -> DataFrame:
     anchor would be xxhash64 (8 bytes vs 32 on the wire); md5 here
     keeps the oracle engine-exact. This is the suffix-array
     exact-substring dedup result computed with joins: anchors find
-    every shared window >= {gram} tokens, and run-growing recovers the
+    every shared window >= gram tokens, and run-growing recovers the
     full span without materializing suffixes.
     """
     _, runs = _span_runs(spark, sf)
@@ -1912,7 +1912,7 @@ def _span_runs(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
 )
 def dedup_span_removal(spark: SparkSession, sf: str) -> DataFrame:
     """The APPLY step of exact-substring dedup (Lee et al. 2022):
-    strip every verbatim run of >= {min} tokens from the HIGHER-id
+    strip every verbatim run of >= min tokens (min=_SPAN_MIN_TOKENS) from the HIGHER-id
     document of each pair (the lower id stays canonical, exactly the
     keep-lowest policy of the exact/MinHash family), and fingerprint
     the cleaned text. Detection is dedup_verbatim_spans' run table;
@@ -1931,8 +1931,8 @@ def dedup_span_removal(spark: SparkSession, sf: str) -> DataFrame:
     it costs one corpus shuffle, the same order as the rewrite's own
     output write. The per-token exists() scan over a doc's intervals
     is O(tokens x intervals) with intervals per doc small by
-    construction (spans are >= {min} tokens, so a doc holds at most
-    len/{min} disjoint covered regions).
+    construction (spans are >= min tokens, so a doc holds at most
+    len/min disjoint covered regions).
     """
     toks, runs = _span_runs(spark, sf)
     start_b = F.col("start_a") - F.col("diag")

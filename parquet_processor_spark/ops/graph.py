@@ -353,8 +353,8 @@ def _local_clustering_oracle() -> str:
 
 @query("graph_local_clustering", oracle=_local_clustering_oracle(), tags=("graph", "pairs"))
 def graph_local_clustering(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{k} nodes by local clustering coefficient
-    (triangles_at_node / C(deg, 2)), among nodes with deg >= {mind}.
+    """Top-_LCC_TOP_K nodes by local clustering coefficient
+    (triangles_at_node / C(deg, 2)), among nodes with deg >= _LCC_MIN_DEG.
 
     100 TB shape: reuses the oriented-wedge triangle rows (each
     triangle attributed to its three vertices by ONE generator — no

@@ -275,7 +275,7 @@ _FUZZY_MAX_EDIT = 3
 )
 def join_fuzzy_names(spark: SparkSession, sf: str) -> DataFrame:
     """Fuzzy self-join of part names within edit distance
-    {max_edit}: collapse rows to the distinct-name dictionary, emit
+    _FUZZY_MAX_EDIT: collapse rows to the distinct-name dictionary, emit
     (name, blocker) keys for the first AND last word, pair names
     sharing any blocker, and keep pairs whose full edit distance
     clears the threshold — entity resolution's candidate-pair stage.

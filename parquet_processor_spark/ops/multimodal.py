@@ -19,6 +19,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -813,6 +814,20 @@ def multimodal_frame_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _code_point_sums(s: str | bytes | None) -> np.ndarray:
+    """int64 prefix sums, from 0 (length n + 1), of a payload's n
+    CHARACTER code points: None reads as "", bytes decode as UTF-8 with
+    replacement, and characters are utf-32 code points, matching the
+    JVM's substr/ascii semantics and the oracle's (a bytes decode would
+    diverge on any multibyte character)."""
+    if s is None:
+        s = ""
+    if not isinstance(s, str):
+        s = bytes(s).decode("utf-8", errors="replace")
+    b = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+    return np.concatenate(([0], np.cumsum(b, dtype=np.int64)))
+
+
 def _phash_bands_arrow(media: DataFrame) -> DataFrame:
     """Arrow-vectorized twin of :func:`_phash_bands` — same (media_id,
     b0..b7) output, bit-exact by construction: every quantity is
@@ -827,29 +842,15 @@ def _phash_bands_arrow(media: DataFrame) -> DataFrame:
     Equality with the JVM fold is asserted item-for-item in
     tests/test_multimodal.py.
     """
-    import numpy as np
 
     @F.pandas_udf("array<bigint>")
     def bands(content: pd.Series) -> pd.Series:
         out = []
         for s in content:
-            if s is None:
-                s = ""
-            if not isinstance(s, str):
-                s = bytes(s).decode("utf-8", errors="replace")
-            # CHARACTER code points (utf-32), matching the JVM/oracle
-            # split+ascii semantics — bytes would diverge on multibyte
-            b = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-            n = len(b)
-            if n == 0:
-                pix = np.zeros(_PHASH_PIX, dtype=np.int64)
-            else:
-                cs = np.concatenate(([0], np.cumsum(b, dtype=np.int64)))
-                idx = (np.arange(_PHASH_PIX + 1, dtype=np.int64) * n) // _PHASH_PIX
-                starts, ends = idx[:-1], idx[1:]
-                sums = cs[ends] - cs[starts]
-                lens = np.maximum(ends - starts, 1)
-                pix = sums // lens
+            cs = _code_point_sums(s)
+            idx = (np.arange(_PHASH_PIX + 1, dtype=np.int64) * (len(cs) - 1)) // _PHASH_PIX
+            starts, ends = idx[:-1], idx[1:]
+            pix = (cs[ends] - cs[starts]) // np.maximum(ends - starts, 1)  # all 0 when empty
             bits = (pix[:-1] > pix[1:]).astype(np.int64)
             chunk = bits.reshape(_PHASH_BANDS, 8)
             vals = (chunk * (1 << np.arange(8, dtype=np.int64))).sum(axis=1)
@@ -1289,25 +1290,15 @@ def _audio_landmarks_arrow(media: DataFrame) -> DataFrame:
     equality with the JVM fold is asserted item-for-item in
     tests/test_multimodal.py, including non-ASCII rows.
     """
-    import numpy as np
 
     @F.pandas_udf("array<bigint>")
     def hashes(content: pd.Series) -> pd.Series:
         out = []
         for s in content:
-            if s is None:
-                s = ""
-            if not isinstance(s, str):
-                s = bytes(s).decode("utf-8", errors="replace")
-            b = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-            n = len(b)
-            if n == 0:
-                e = np.zeros(1, dtype=np.int64)
-            else:
-                cs = np.concatenate(([0], np.cumsum(b, dtype=np.int64)))
-                starts = np.arange(0, n, _AUDIO_FR, dtype=np.int64)
-                ends = np.minimum(starts + _AUDIO_FR, n)
-                e = cs[ends] - cs[starts]
+            cs = _code_point_sums(s)
+            n = len(cs) - 1
+            starts = np.arange(0, n, _AUDIO_FR, dtype=np.int64)
+            e = cs[np.minimum(starts + _AUDIO_FR, n)] - cs[starts]
             if len(e) < 3:
                 out.append(np.empty(0, dtype=np.int64))
                 continue
@@ -1592,8 +1583,8 @@ def _scene_cut_oracle() -> str:
 def multimodal_scene_cut(spark: SparkSession, sf: str) -> DataFrame:
     """Per-frame scene segmentation: Hamming distance between each
     frame's dHash and its predecessor's, a cut where the distance
-    exceeds {ham} bits (frame 0 always opens scene 0), and a running
-    scene_id per media. Hash-checked — the dHash is the family's
+    exceeds _SCENE_CUT_HAM bits (frame 0 always opens scene 0), and a
+    running scene_id per media. Hash-checked — the dHash is the family's
     integer-exact signature and the cut logic is window arithmetic.
 
     100 TB shape: frames ride the payload's mapInPandas batch (the

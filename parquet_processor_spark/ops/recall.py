@@ -493,7 +493,7 @@ def _perceptual_recall_oracle() -> str:
 def recall_dedup_perceptual(spark: SparkSession, sf: str) -> DataFrame:
     """Every injected re-encode WITHIN the contracted Hamming radius
     must be flagged: the multi-index guarantees a shared band-pair
-    key within Hamming {r}, so in-radius recall is EXACTLY 1.0 by
+    key within Hamming multimodal._PHASH_MAX_HAM, so in-radius recall is EXACTLY 1.0 by
     construction (pigeonhole), not a tuned 0.9x. The gate conditions
     on the TRUE measured radius (r13: at sf0.1 four injected pairs
     measure Hamming 7-8 — the case-flip perturbation moves more block

@@ -11,7 +11,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_processor_spark import io as pio
 from parquet_processor_spark.numeric import dsum, dsum_sql
 from parquet_processor_spark.io import scratch_dir
 from parquet_processor_spark.registry import query
@@ -32,8 +31,8 @@ def _subset(spark: SparkSession, sf: str) -> DataFrame:
 @query("sink_parquet", oracle=_SELECT, tags=("sink",))
 def sink_parquet(spark: SparkSession, sf: str) -> DataFrame:
     out = scratch_dir("ppspark_sink_parquet_")
-    pio.write_parquet(_subset(spark, sf), out, mode="overwrite", partition_by=("l_returnflag",))
-    back = pio.read_parquet(spark, out)
+    _subset(spark, sf).write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+    back = spark.read.parquet(out)
     # partition column comes back typed as read; restore column order/types
     return back.select(
         "l_orderkey", "l_linenumber", "l_quantity", F.col("l_returnflag").cast("string").alias("l_returnflag")
@@ -80,12 +79,9 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         "o_orderpriority",
         F.concat(F.lit("b"), F.date_format("o_orderdate", "yyyy-MM")).alias("o_batch"),
     )
-    pio.write_parquet(
-        src.repartition("o_orderpriority", "o_batch"),
-        out,
-        mode="overwrite",
-        partition_by=("o_orderpriority", "o_batch"),
-    )
+    src.repartition("o_orderpriority", "o_batch").write.mode("overwrite").partitionBy(
+        "o_orderpriority", "o_batch"
+    ).parquet(out)
     # explicit schema: an all-empty layout has no footer to infer from
     back = spark.read.schema(
         "o_orderkey long, o_custkey long, o_totalprice double, "
@@ -107,11 +103,11 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 @query("sink_csv_roundtrip", oracle=_SELECT, tags=("sink",))
 def sink_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     out = scratch_dir("ppspark_sink_csv_")
-    pio.write_csv(_subset(spark, sf), out)
-    return pio.read_csv(
-        spark,
-        out,
-        schema="l_orderkey long, l_linenumber int, l_quantity double, l_returnflag string",
+    _subset(spark, sf).write.mode("overwrite").option("header", "true").csv(out)
+    return (
+        spark.read.option("header", "true")
+        .schema("l_orderkey long, l_linenumber int, l_quantity double, l_returnflag string")
+        .csv(out)
     )
 
 
@@ -119,12 +115,10 @@ def sink_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 @query("sink_json_roundtrip", oracle=_SELECT, tags=("sink",))
 def sink_json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     out = scratch_dir("ppspark_sink_json_")
-    pio.write_json(_subset(spark, sf), out)
-    return pio.read_json(
-        spark,
-        out,
-        schema="l_orderkey long, l_linenumber int, l_quantity double, l_returnflag string",
-    )
+    _subset(spark, sf).write.mode("overwrite").json(out)
+    return spark.read.schema(
+        "l_orderkey long, l_linenumber int, l_quantity double, l_returnflag string"
+    ).json(out)
 
 
 # ORC round trip — Spark's second bundled columnar format; same

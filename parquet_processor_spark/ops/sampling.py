@@ -312,7 +312,7 @@ _MIX_BUDGET = 100_000  # characters
 )
 def sample_budget_mix(spark: SparkSession, sf: str) -> DataFrame:
     """Documents selected per language up to its share of a global
-    {B}-character budget (alpha=0.5 weights), greedy in hash order.
+    _MIX_BUDGET-character budget (alpha=0.5 weights), greedy in hash order.
 
     100 TB shape: language totals are one map-side-combined aggregate
     (|langs| rows); weights/budgets are integer arithmetic on that

@@ -9,6 +9,8 @@ with no shuffle except the final aggregates.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -551,7 +553,7 @@ _HH_K = 20
     tags=("text", "agg", "topk"),
 )
 def agg_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact top-{K} tokens by corpus frequency, with corpus share.
+    """Exact top-K tokens (K=_HH_K) by corpus frequency, with corpus share.
 
     100 TB shape: token counts are ONE map-side-combined aggregate
     (Zipf-small shuffle: one row per distinct token per task); the
@@ -844,6 +846,19 @@ def _bpe_merge_round(syms: DataFrame, weight: str | None = None, keep: tuple[str
     return top, _bpe_apply(syms, top, keep + ((weight,) if weight else ()))
 
 
+def _bpe_merges(spark: SparkSession, sf: str) -> list[DataFrame]:
+    """The trained merges, one 1-row (pa, pb, n) winner per round in
+    round order. The vocab is localCheckpointed once (the ONE corpus
+    pass) and so is each winner, so no round replays the corpus
+    collapse or an earlier round's aggregate."""
+    vocab = _bpe_vocab(spark, sf).localCheckpoint()  # eager-by-design: the ONE corpus pass; rounds are vocab-mass
+    tops = []
+    for _ in range(_BPE_ROUNDS):
+        tops.append(_bpe_top_pair(vocab, "cnt").localCheckpoint())  # eager-by-design: 1-row winner
+        vocab = _bpe_apply(vocab, tops[-1], ("cnt",))
+    return tops
+
+
 def _bpe_vocab(spark: SparkSession, sf: str) -> DataFrame:
     """The ONE corpus pass: collapse documents to the (sym, cnt)
     vocabulary — each distinct word char-spaced ('hello' ->
@@ -937,22 +952,11 @@ def tokenizer_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
     thousands of real merges you would ALSO re-checkpoint the vocab
     every ~50 rounds to bound the replace-chain depth.)
     """
-    vocab = _bpe_vocab(spark, sf).localCheckpoint()  # eager-by-design: the ONE corpus pass; rounds are vocab-mass
-    merges = []
-    for rnd in range(1, _BPE_ROUNDS + 1):
-        top = _bpe_top_pair(vocab, "cnt").localCheckpoint()  # eager-by-design: 1-row winner; earlier rounds never replay
-        vocab = _bpe_apply(vocab, top, ("cnt",))
-        merges.append(
-            top.select(
-                F.lit(rnd).cast("int").alias("round"),
-                F.concat_ws(" ", "pa", "pb").alias("pair"),
-                "n",
-            )
-        )
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    return out
+    merges = [
+        top.select(F.lit(rnd).cast("int").alias("round"), F.concat_ws(" ", "pa", "pb").alias("pair"), "n")
+        for rnd, top in enumerate(_bpe_merges(spark, sf), 1)
+    ]
+    return functools.reduce(DataFrame.unionByName, merges)
 
 
 def _bpe_apply_oracle() -> str:
@@ -1012,7 +1016,7 @@ def tokenizer_bpe_apply(spark: SparkSession, sf: str) -> DataFrame:
     collect. Word-interior surgery is safe across docs because the
     boundary symbol '|' appears in no merge pair.
     """
-    vocab = _bpe_vocab(spark, sf).localCheckpoint()  # eager-by-design: the ONE corpus pass for training
+    tops = _bpe_merges(spark, sf)
     docs = t(spark, sf, "documents").select(
         "doc_id",
         F.array_join(
@@ -1023,9 +1027,7 @@ def tokenizer_bpe_apply(spark: SparkSession, sf: str) -> DataFrame:
             f" {_BPE_WORD_SEP} ",
         ).alias("sym"),
     )
-    for _ in range(_BPE_ROUNDS):
-        top = _bpe_top_pair(vocab, "cnt").localCheckpoint()  # eager-by-design: 1-row winner
-        vocab = _bpe_apply(vocab, top, ("cnt",))
+    for top in tops:
         docs = _bpe_apply(docs, top, ("doc_id",))
     toks = F.filter(
         F.split(F.col("sym"), " "),
@@ -1784,7 +1786,7 @@ _FH_BUCKETS = 64
     tags=("text", "ml", "encode"),
 )
 def feature_hashing_trick(spark: SparkSession, sf: str) -> DataFrame:
-    """Hash token counts into a fixed {D}-bucket feature space.
+    """Hash token counts into a fixed D-bucket feature space (D=_FH_BUCKETS).
 
     HASH-CHECKED: the bucket is the shared md5-60bit primitive mod D
     (engine-neutral), the counts exact. 100 TB shape: one narrow

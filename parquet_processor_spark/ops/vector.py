@@ -18,6 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,9 +61,44 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-# Nearest-centroid arithmetic shared by the Arrow kernels and the Lloyd
-# rounds. Every fold is np.cumsum's left-to-right sum, so it is bitwise
-# the sequential F.aggregate fold of the JVM expressions it replaced.
+# The NumPy kernel layer: every Arrow kernel in this module builds its
+# matrices with _rows_matrix and sums with _fold, so each one is bitwise
+# its JVM and DuckDB twins. Codebooks ride the kernel's closure.
+def _rows_matrix(rows, dtype=None) -> np.ndarray:
+    """One 2-D array from a sequence of fixed-width rows (an Arrow list
+    column as a pandas Series, or the fields of collected Rows), built
+    by one concatenate and reshape. Ragged rows raise, as np.stack did.
+    Without ``dtype`` integer rows stay int64; a None element reads as
+    NaN under a float ``dtype``. Empty input gives (0, 0)."""
+    rows = list(rows)
+    if not rows:
+        return np.zeros((0, 0), dtype=dtype or np.float64)
+    width = len(rows[0])
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"ragged rows: expected width {width}")
+    return np.concatenate(rows, dtype=dtype, casting="unsafe").reshape(len(rows), width)
+
+
+def _fold(x: np.ndarray) -> np.ndarray:
+    """Sum over the last axis as a sequential left fold. np.cumsum is
+    np.add.accumulate, left to right by specification (never pairwise
+    like np.sum), so every total is bitwise the F.aggregate fold of the
+    JVM expressions and DuckDB's list_reduce over the same float64
+    terms. NumPy does not formally pin that order, so
+    tests/test_dedup_vector.py::test_numpy_cumsum_is_still_a_sequential_left_fold
+    fails first if a release changes it."""
+    return np.cumsum(x, axis=-1)[..., -1]
+
+
+def _hyperplane_sigs(E: np.ndarray, C: np.ndarray, r: int) -> np.ndarray:
+    """(rows, planes / r) int64 band signatures of ``E``: bit j of band b
+    is whether the projection onto plane ``C[b * r + j]`` (sliced to E's
+    width) is positive, the arithmetic of :func:`_plane_sign` packed as
+    :func:`lsh_band_keys` and :func:`_tune_band_sign_cols` pack it."""
+    bits = (_fold(E[:, None, :] * C[None, :, : E.shape[1]]) > 0).astype(np.int64)
+    return (bits.reshape(len(E), -1, r) << np.arange(r)).sum(axis=2)
+
+
 def _codebook(
     rows, id_col: str, vec_col: str, group_col: str | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -74,20 +110,18 @@ def _codebook(
     ids = np.array([key(r) for r in rows], dtype=np.int64)
     if group_col:
         ids = ids.reshape(len(rows), 2)
-    if not rows:
-        return ids, np.zeros((0, 0), dtype=np.float64)
-    return ids, np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    return ids, _rows_matrix([r[vec_col] for r in rows], np.float64)
 
 
 def _cos_best(emat: np.ndarray, cmat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Per row: (index, cosine) of the most similar centroid. The cosine
     is one IEEE division of dot/(na*nc); ties and NaNs go to the first
     (lowest-id) centroid, as the old (s, -cid) struct max did."""
-    na = np.sqrt(np.cumsum(emat * emat, axis=1)[:, -1])
-    ncs = np.sqrt(np.cumsum(cmat * cmat, axis=1)[:, -1])
+    na = np.sqrt(_fold(emat * emat))
+    ncs = np.sqrt(_fold(cmat * cmat))
     scores = np.empty((emat.shape[0], len(cmat)), dtype=np.float64)
     for j in range(len(cmat)):
-        scores[:, j] = np.cumsum(emat * cmat[j], axis=1)[:, -1] / (na * ncs[j])
+        scores[:, j] = _fold(emat * cmat[j]) / (na * ncs[j])
     idx = np.argmax(scores, axis=1)
     return idx, scores[np.arange(len(idx)), idx]
 
@@ -99,7 +133,7 @@ def _l2_best(q: np.ndarray, cmat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     d = np.empty((q.shape[0], len(cmat)), dtype=np.float64)
     for j in range(len(cmat)):
         diff = q - cmat[j]
-        d[:, j] = np.cumsum(diff * diff, axis=1)[:, -1]
+        d[:, j] = _fold(diff * diff)
     idx = np.argmin(d, axis=1)
     return idx, d[np.arange(len(idx)), idx]
 
@@ -153,9 +187,10 @@ def lloyd_round(
 
     An array<bigint> column sums in int64, exactly and order-free, so
     the centroids do not depend on partitioning; other columns sum in
-    float64. A null row counts in n_rows and joins no cell. Rows must be
-    fixed-width; a null element reads as NaN on the float path and
-    raises on the integer path.
+    float64. Rows must be fixed-width (ragged rows raise).
+
+    Null policy: a null row counts in n_rows and joins no cell; a null
+    element reads as NaN on the float path and raises on the integer path.
     """
     best = {"cos": _cos_best, "l2": _l2_best}[metric]
     exact = df.schema[col].dataType.elementType.typeName() == "long"
@@ -168,7 +203,7 @@ def lloyd_round(
             mask = vals.notna().to_numpy()
             out = []
             if len(cids) and mask.any():
-                x = np.stack(list(vals[mask]))
+                x = _rows_matrix(vals[mask])
                 if exact and x.dtype.kind != "i":
                     raise ValueError(f"lloyd_round: null element in {col}")
                 g = pdf[group].to_numpy()[mask] if group else np.zeros(len(x), dtype=np.int64)
@@ -216,7 +251,7 @@ def lloyd_round(
 def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
     """Map-side IVF cell assignment: collect the (cid, c_emb) centroid
     table once (bounded control state — sqrt(N) rows by the derived
-    geometry), broadcast it to the executors inside an Arrow kernel's
+    geometry), ship it to the executors inside an Arrow kernel's
     closure, and pick each vector's best cell with a per-batch NumPy
     argmax — one ArrowEvalPython pass beside the scan, zero shuffle.
 
@@ -225,11 +260,11 @@ def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
     (row, centroid) — dot + both norms via zip_with/aggregate — which
     at the SF-derived cell count (n_cells = √N) cost ~3.1 s at sf0.1
     vs 0.30 s for this kernel (measured; plans/r14). Bit-exactness is
-    preserved because np.cumsum accumulates left-to-right exactly like
-    the sequential fold (float32→float64 casts are exact, norms are
-    the same sqrt-of-fold, the cosine is the same one-IEEE-division of
-    dot/(na*nc)), np.argmax resolves ties — and NaNs — to the lowest
-    centroid id exactly like the previous (s, -cid) struct max, and
+    preserved because every sum is :func:`_fold` (float32→float64
+    casts are exact, norms are the same sqrt-of-fold, the cosine is the
+    same one-IEEE-division of dot/(na*nc)), np.argmax resolves ties —
+    and NaNs — to the lowest centroid id exactly like the previous
+    (s, -cid) struct max, and
     the bitwise equality of every (cell, best_cos) against the old
     expression tree is pinned by tests/test_dedup_vector.py.
 
@@ -246,28 +281,18 @@ def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
     # n_cells = sqrt(N) control rows — the same mass the previous
     # shape collapsed into a single broadcast array row
 
+    # Null policy: a null embedding gives (null, null). No fixture row
+    # is null; the old struct max gave (lowest cid, null) there.
     @F.pandas_udf("cell bigint, best_cos double")
     def _best(emb: pd.Series) -> pd.DataFrame:
-        n = len(emb)
-        mask = np.array([v is not None for v in emb], dtype=bool)
-        if n == 0 or len(cids) == 0 or not mask.any():
-            none = pd.Series([None] * n, dtype="object")
-            return pd.DataFrame({"cell": none, "best_cos": none})
-        emat = np.stack([np.asarray(v, dtype=np.float64) for v in emb[mask]])
-        idx, best = _cos_best(emat, cmat)
-        if mask.all():
-            return pd.DataFrame({"cell": cids[idx], "best_cos": best})
-        # null embeddings emit (null, null). Precondition: every
-        # fixture embedding is non-null (generation fills all rows;
-        # the empty-input suite covers the 0-row case), so this branch
-        # only guards pathological input. NOTE the old struct-max shape
-        # differed here — (lowest cid, null) — but only for null
-        # embeddings, which cannot occur in fixtures; non-null rows
-        # keep their argmax
-        cell = pd.Series([None] * n, dtype="object")
-        best_cos = pd.Series([None] * n, dtype="object")
-        cell[mask] = list(cids[idx])
-        best_cos[mask] = list(best)
+        mask = emb.notna().to_numpy()
+        cell = pd.Series([None] * len(emb), dtype="object")
+        best_cos = pd.Series([None] * len(emb), dtype="object")
+        if len(cids) and mask.any():
+            idx, best = _cos_best(_rows_matrix(emb[mask], np.float64), cmat)
+            if mask.all():
+                return pd.DataFrame({"cell": cids[idx], "best_cos": best})
+            cell[mask], best_cos[mask] = list(cids[idx]), list(best)
         return pd.DataFrame({"cell": cell, "best_cos": best_cos})
 
     return e.withColumn("_best", _best(F.col("embedding"))).select(
@@ -424,12 +449,10 @@ def lsh_band_keys_arrow(n_bands: int = _N_BANDS):
     higher-order-function folds evaluate element-by-element (~3 ms/row
     for 16 bands; measured 6 s warm over 2000 rows) — exactly the case
     the engine's UDF policy reserves Arrow kernels for. The numpy path
-    is bit-exact with the JVM fold and therefore with the DuckDB
-    oracles: ``np.cumsum`` is ``np.add.accumulate`` — a SEQUENTIAL
-    left fold by specification (never pairwise like ``np.sum``) — over
-    the identical float64 products, so every projection, sign, and key
-    matches the JVM twin exactly (asserted vector-for-vector in
-    tests/test_dedup_vector.py). ~4x warm speedup at sf0.1; the gap
+    (:func:`_hyperplane_sigs`) folds the identical float64 products
+    with :func:`_fold`, so every projection, sign, and key matches the
+    JVM twin and the DuckDB oracles exactly (asserted vector-for-vector
+    in tests/test_dedup_vector.py). ~4x warm speedup at sf0.1; the gap
     widens with corpus size.
 
     At 100 TB: one Arrow batch per task, planes shipped once in the
@@ -445,13 +468,8 @@ def lsh_band_keys_arrow(n_bands: int = _N_BANDS):
     def keys(emb: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype=object)
-        E = np.stack([np.asarray(e, dtype=np.float64) for e in emb])
-        Cs = C[:, : E.shape[1]]
-        proj = np.cumsum(E[:, None, :] * Cs[None, :, :], axis=2)[:, :, -1]
-        signs = (proj > 0).astype(np.int64)
-        sig = sum(signs[:, j::r] * (1 << j) for j in range(r))
-        out = np.arange(n_bands, dtype=np.int64)[None, :] * 8 + sig
-        return pd.Series(list(out))
+        sig = _hyperplane_sigs(_rows_matrix(emb, np.float64), C, r)
+        return pd.Series(list(np.arange(n_bands, dtype=np.int64)[None, :] * 8 + sig))
 
     return keys
 
@@ -569,13 +587,12 @@ def bucket_pair_cos(e: DataFrame, n_bands: int, cap: int = _EMB_BUCKET_CAP) -> D
 
     Bit-exactness (the pair_cos_arrow contract, pinned by
     tests/test_dedup_vector.py::test_bucket_pair_cos_bit_exact...):
-    per pair the dot is np.cumsum(A*B)[-1] — the identical sequential
-    left fold — and per-vector norms are the same sqrt-of-cumsum the
-    JVM norm() fold computes (the assign_cells precedent); the one
-    IEEE division matches dot/(na*nb). Multi-band duplicate pairs are
-    re-scored per shared bucket, but deterministically identically, so
-    the pair-level dropDuplicates keeps the same rows the
-    score-after-dedup shape produced.
+    per pair the dot is :func:`_fold` of A*B, and per-vector norms are
+    the JVM norm() fold itself; the one IEEE division matches
+    dot/(na*nb). Multi-band duplicate pairs are re-scored per shared
+    bucket, but deterministically identically, so the pair-level
+    dropDuplicates keeps the same rows the score-after-dedup shape
+    produced.
 
     Hot buckets past ``cap`` drop BEFORE any payload is grouped (the
     capped_band_postings anti-join, same statistic, same keyed Arrow
@@ -608,12 +625,12 @@ def bucket_pair_cos(e: DataFrame, n_bands: int, cap: int = _EMB_BUCKET_CAP) -> D
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-        E = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+        E = _rows_matrix(pdf["embedding"], np.float64)
         ii, jj = np.triu_indices(s, k=1)
         out_a, out_b, out_c = [], [], []
         for lo in range(0, len(ii), 65536):  # bounded scratch per chunk
             ic, jc = ii[lo : lo + 65536], jj[lo : lo + 65536]
-            d = np.cumsum(E[ic] * E[jc], axis=1)[:, -1]  # the sequential left fold
+            d = _fold(E[ic] * E[jc])
             out_a.append(ids[ic])
             out_b.append(ids[jc])
             out_c.append(d / (nrm[ic] * nrm[jc]))
@@ -1045,51 +1062,39 @@ def _ivf_qdist(qv, cv):
 def _ivf_assign_q(qv_df: DataFrame, cb: DataFrame) -> DataFrame:
     """qv_df's columns plus ``cell``: argmin-distance assignment against
     the k-row trained centroid table (k = derived n_cells <= sqrt(N) —
-    bounded control state), collected once, shipped via sc.broadcast
-    (one fetch per executor), and argmin'd per batch in NumPy — one
-    ArrowEvalPython pass beside the scan; the corpus never shuffles
-    for assignment (assign_cells' map-side shape).
+    bounded control state), collected once, carried in the kernel's
+    closure, and argmin'd per batch in NumPy — one ArrowEvalPython pass
+    beside the scan; the corpus never shuffles for assignment
+    (assign_cells' map-side shape). A closure over 1 MB
+    (spark.broadcast.UDFCompressionThreshold) is itself shipped as a
+    broadcast that lives as long as the UDF.
 
     r15 (guide §4.2, the assign_cells/_ivfpq_assign_det pattern): the
     previous shape evaluated an interpreted zip_with/aggregate fold
     per (row, centroid) against a broadcast array — the same
     per-element interpreted cost the r14 kernels removed elsewhere.
     Bit-exact with the old array_min(transform(struct(d, cid))): the
-    distance is np.cumsum((q-c)*(q-c)) — the identical sequential left
-    fold as _ivf_qdist (its 0.0 seed is bitwise-neutral: squares are
-    never -0.0), int64 q's cast to float64 exactly (|q| <= 2^24 *
-    sqrt scale < 2^53), and np.argmin's first-hit rule over
-    cid-ascending rows equals the struct-min (d, cid) tie ordering.
-    Null handling replicates the struct-min exactly: a null qv (or any
-    null element) made every per-centroid distance null and the
-    struct-min then tied down to the LOWEST cid — here a null row
-    yields all-NaN distances and np.argmin likewise returns the first
-    (lowest-cid) index. Pinned bitwise by tests/test_dedup_vector.py::
+    distance is :func:`_fold` of (q-c)*(q-c), the same sum as
+    _ivf_qdist (its 0.0 seed is bitwise-neutral: squares are never
+    -0.0), int64 q's cast to float64 exactly (|q| <= 2^24 * sqrt scale
+    < 2^53), and np.argmin's first-hit rule over cid-ascending rows
+    equals the struct-min (d, cid) tie ordering. Pinned bitwise by
+    tests/test_dedup_vector.py::
     test_ivf_assign_q_arrow_bit_exact_with_jvm_struct_min.
     """
     cids, cmat = _codebook(cb.select("cid", "cv").collect(), "cid", "cv")  # eager-by-design: k-row trained-centroid control table
-    bc = cb.sparkSession.sparkContext.broadcast((cids, cmat))
 
+    # Null policy: a null row (or null element) gives the lowest cid, as
+    # the struct-min over all-null distances did (all-NaN -> argmin 0).
     @F.pandas_udf("bigint")
     def _cell(qv: pd.Series) -> pd.Series:
-        cids_b, cmat_b = bc.value
         n = len(qv)
-        if n == 0 or len(cids_b) == 0:
+        if n == 0 or len(cids) == 0:
             return pd.Series([None] * n, dtype="object")
-        mask = np.array([v is not None for v in qv], dtype=bool)
-        out = pd.Series([None] * n, dtype="object")
+        mask = qv.notna().to_numpy()
+        out = pd.Series([int(cids[0])] * n, dtype="object")
         if mask.any():
-            # None elements inside a row become NaN -> all-NaN distance
-            # row -> argmin index 0 == lowest cid (the struct-min rule)
-            Q = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in qv[mask]]
-            )
-            out[mask] = list(cids_b[_l2_best(Q, cmat_b)[0]])
-        else:
-            # whole-row nulls: every distance was null, struct-min tie
-            # broke to the lowest cid
-            return pd.Series([int(cids_b[0])] * n, dtype="object")
-        out[~mask] = int(cids_b[0])
+            out[mask] = list(cids[_l2_best(_rows_matrix(qv[mask], np.float64), cmat)[0]])
         return out
 
     return qv_df.select(*qv_df.columns, _cell(F.col("qv")).alias("cell"))
@@ -1209,8 +1214,8 @@ def _ivf_trained_oracle() -> str:
 )
 def sim_topk_ivf_trained(spark: SparkSession, sf: str) -> DataFrame:
     """IVF ANN served from Lloyd-TRAINED centroids at the derived
-    geometry (n_cells = max(8, ⌊√N⌋) seeds, {iters} integer-Lloyd
-    rounds, nprobe = half the cells) — kmeans_ivf_train's training
+    geometry (n_cells = max(8, ⌊√N⌋) seeds, _IVF_TRAIN_ITERS
+    integer-Lloyd rounds, nprobe = half the cells) — kmeans_ivf_train's training
     loop wired into an actual hash-checked serve. The probe ranking
     and cell assignment use the same pinned-order quantized distance
     the training used; the rerank is exact cosine over the candidate
@@ -1535,12 +1540,11 @@ def _ivfpq_assign_det(subsq: DataFrame, cb: DataFrame) -> DataFrame:
 
     The codebook is bounded control state (M*K rows, a constant of the
     index format): it collects once into :func:`_codebook`'s (m, cid)
-    sort, ships to the executors via sc.broadcast (one fetch per
-    executor), and each batch scores its rows with :func:`_group_best`
-    over :func:`_l2_best` — the per-subspace argmin the Lloyd rounds
-    use. One ArrowEvalPython pass beside the scan, no shuffle.
+    sort, rides the kernel's closure (as in :func:`_ivf_assign_q`), and
+    each batch scores its rows with :func:`_group_best` over
+    :func:`_l2_best` — the per-subspace argmin the Lloyd rounds use. One ArrowEvalPython pass beside the scan, no shuffle.
     Bit-exact with a JVM broadcast join + min(struct(d, cid)) over
-    _det_l2sq: np.cumsum over the 4 dims is the same left-associated
+    _det_l2sq: :func:`_fold` over the 4 dims is the same left-associated
     ((t1²+t2²)+t3²)+t4² float64 tree (|q| <= 2^24, so the int -> double
     cast is exact), and np.argmin's first hit over cid-ascending rows
     is the struct-min tie order. Pinned bitwise by
@@ -1557,18 +1561,16 @@ def _ivfpq_assign_det(subsq: DataFrame, cb: DataFrame) -> DataFrame:
         "c",
         group_col="m",
     )
-    bc = cb.sparkSession.sparkContext.broadcast((keys, cmat))
 
     @F.pandas_udf("bigint")
     def _code(
         m: pd.Series, q1: pd.Series, q2: pd.Series, q3: pd.Series, q4: pd.Series
     ) -> pd.Series:
-        keys_b, cmat_b = bc.value
-        if len(keys_b) == 0:
+        if len(keys) == 0:
             return pd.Series([None] * len(m), dtype="object")
         q = np.stack([s.to_numpy(dtype=np.float64) for s in (q1, q2, q3, q4)], axis=1)
-        idx, _ = _group_best(_l2_best, q, m.to_numpy(), keys_b[:, 0], cmat_b)
-        return pd.Series(keys_b[idx, 1])
+        idx, _ = _group_best(_l2_best, q, m.to_numpy(), keys[:, 0], cmat)
+        return pd.Series(keys[idx, 1])
 
     return subsq.select(
         *subsq.columns, _code(F.col("m"), *[F.col(f"q{d}") for d in dims]).alias("cell")
@@ -1898,16 +1900,13 @@ def sink_ann_index_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     out = scratch_dir("ppspark_annindex_")
     # r15 (guide §2.6 — overlap independent jobs): the three part
     # writes are independent; submit them from a thread pool so the
-    # wall is the slowest write, not three sequential barriers
+    # wall is the slowest write, not three sequential barriers. Each
+    # thread inherits the caller's local properties (job group, pool).
     from concurrent.futures import ThreadPoolExecutor
 
+    write = inheritable_thread_target(spark)(lambda p: ix[p].write.mode("overwrite").parquet(f"{out}/{p}"))
     with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [
-            pool.submit(
-                lambda p: ix[p].write.mode("overwrite").parquet(f"{out}/{p}"), part
-            )
-            for part in ("assign", "codes", "cb")
-        ]:
+        for fut in [pool.submit(write, part) for part in ("assign", "codes", "cb")]:
             fut.result()
     fresh = _ivfpq_serve(ix)
     at_rest = dict(ix)
@@ -1969,8 +1968,8 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup: assign every embedding to its nearest centroid
     (map-side argmax — zero shuffle), pair vectors only WITHIN a cell,
     and mark each vector a semantic duplicate of its lowest-id
-    within-cell neighbor with cosine >= {tau} (keep-lowest canonical,
-    the exact/MinHash family's policy). This is the published
+    within-cell neighbor with cosine >= _SEMDEDUP_TAU (keep-lowest
+    canonical, the exact/MinHash family's policy). This is the published
     web-scale semantic dedup recipe: clustering is the blocking key.
 
     100 TB shape: the only quadratic is per-cell (sum of cell sizes
@@ -2056,23 +2055,18 @@ def pair_cos_arrow():
     keep the fixture's buckets dense — measured 1.7M candidates from
     2000 vectors at sf0.1), and the interpreted higher-order fold costs
     ~30 us/pair — exactly the hot spot the engine's UDF policy reserves
-    Arrow kernels for (the lsh_band_keys_arrow precedent). np.cumsum
-    accumulates left-to-right in every NumPy release to date, so the
-    float64 dot — and the one-IEEE-division cosine — matches the JVM
-    fold and the DuckDB oracle bitwise TODAY; NumPy does not formally
-    pin the accumulation order, so the real guard is the pair-for-pair
-    equality test in tests/test_dedup_vector.py (a SIMD/pairwise-
-    summation change there fails loudly; the fallback is an explicit
-    per-dimension add loop). ~25x warm speedup at sf0.1.
+    Arrow kernels for (the lsh_band_keys_arrow precedent). The float64
+    dot is :func:`_fold` of A*B, so it, and the one-IEEE-division
+    cosine, match the JVM fold and the DuckDB oracle bitwise (pinned
+    pair for pair in tests/test_dedup_vector.py). ~25x warm speedup at
+    sf0.1.
     """
 
     @F.pandas_udf("double")
     def cos(ea: pd.Series, eb: pd.Series, na: pd.Series, nb: pd.Series) -> pd.Series:
         if len(ea) == 0:
             return pd.Series([], dtype="float64")
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in ea])
-        B = np.stack([np.asarray(v, dtype=np.float64) for v in eb])
-        d = np.cumsum(A * B, axis=1)[:, -1]
+        d = _fold(_rows_matrix(ea, np.float64) * _rows_matrix(eb, np.float64))
         return pd.Series(d / (na.to_numpy() * nb.to_numpy()))
 
     return cos
@@ -2241,7 +2235,7 @@ def embedding_random_projection(spark: SparkSession, sf: str) -> DataFrame:
     per row beside the scan, zero shuffles; the planes live in the
     plan as literals (few KB). Interpreted-fold cost matters at corpus
     scale exactly as it did for band keys, and the same Arrow matmul
-    twin (lsh_band_keys_arrow's np.cumsum recipe) applies verbatim if
+    twin (lsh_band_keys_arrow's :func:`_fold` recipe) applies verbatim if
     k grows — the fold spelling is kept here because the oracle proves
     it bit-exact.
     """
@@ -2350,38 +2344,21 @@ def _tune_band_sign_arrow():
     ~25 us/plane/row and the grid needs 144 plane signs per vector —
     ~7 s of the report's wall at sf0.1 — exactly the dense-matmul
     case the engine reserves Arrow kernels for (lsh_band_keys_arrow
-    precedent). Bit-exact with the JVM fold and the DuckDB oracle:
-    np.cumsum is a sequential left fold over identical float64
-    products (pinned by test_numpy_cumsum_is_still_a_sequential_left_
-    fold and the parity test in tests/test_dedup_vector.py)."""
-    planes = []
-    for r in _TUNE_GRID_R:
-        base = _TUNE_PLANE_BASE + r * 100
-        for band in range(max(_TUNE_GRID_L)):
-            for j in range(r):
-                planes.append(base + band * r + j)
-    C = np.array([_plane_coeffs(p) for p in planes])
-    grid_r = _TUNE_GRID_R
-    max_l = max(_TUNE_GRID_L)
+    precedent). Bit-exact with the JVM fold and the DuckDB oracle by
+    :func:`_hyperplane_sigs` (pinned by the parity test in
+    tests/test_dedup_vector.py)."""
+    n_bands = max(_TUNE_GRID_L)
+    grid = [
+        (r, np.array([_plane_coeffs(_TUNE_PLANE_BASE + r * 100 + p) for p in range(n_bands * r)]))
+        for r in _TUNE_GRID_R
+    ]
 
     @F.pandas_udf("array<bigint>")
     def sigs(emb: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype=object)
-        E = np.stack([np.asarray(e, dtype=np.float64) for e in emb])
-        Cs = C[:, : E.shape[1]]
-        proj = np.cumsum(E[:, None, :] * Cs[None, :, :], axis=2)[:, :, -1]
-        s = (proj > 0).astype(np.int64)
-        cols = []
-        idx = 0
-        for r in grid_r:
-            for _band in range(max_l):
-                sig = np.zeros(len(E), dtype=np.int64)
-                for j in range(r):
-                    sig += s[:, idx] << j
-                    idx += 1
-                cols.append(sig)
-        return pd.Series(list(np.stack(cols, axis=1)))
+        E = _rows_matrix(emb, np.float64)
+        return pd.Series(list(np.concatenate([_hyperplane_sigs(E, C, r) for r, C in grid], axis=1)))
 
     return sigs
 
@@ -3130,7 +3107,8 @@ def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
     # parts write as concurrent driver threads; each part's append
     # chains after its own overwrite (same directory), but the three
     # chains are independent, so the wall is the slowest chain, not
-    # the sum of five sequential write barriers.
+    # the sum of five sequential write barriers. Each thread inherits
+    # the caller's local properties (job group, pool).
     from concurrent.futures import ThreadPoolExecutor
 
     def _write_codes() -> None:
@@ -3147,7 +3125,9 @@ def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
         cb.write.mode("overwrite").parquet(f"{out}/cb")
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(w) for w in (_write_codes, _write_assign, _write_cb)]:
+        for fut in [
+            pool.submit(inheritable_thread_target(spark)(w)) for w in (_write_codes, _write_assign, _write_cb)
+        ]:
             fut.result()
     # serve from the merged at-rest parts vs the in-memory frozen build
     probe = _ivf_probe_list(e, cent, params)

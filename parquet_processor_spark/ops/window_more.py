@@ -148,11 +148,11 @@ _ROLL_N = 5  # current row + 4 preceding
     tags=("window", "median", "frame"),
 )
 def window_rolling_median(spark: SparkSession, sf: str) -> DataFrame:
-    """Trailing-{n}-row median of `value` per user.
+    """Trailing-n-row median of `value` per user (n=_ROLL_N).
 
     100 TB shape: one hash shuffle on user_id (the frame lives inside
     the partition sort); collect_list over a ROWS frame holds at most
-    {n} elements per row — O(frame) state, never the whole partition.
+    n elements per row — O(frame) state, never the whole partition.
     The median is array arithmetic in codegen: sort the frame copy,
     pick the middle (odd) or average the two middles (even), matching
     DuckDB's interpolating median bit-for-bit — both engines compute

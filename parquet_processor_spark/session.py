@@ -63,18 +63,16 @@ def _fair_pools_file() -> str:
 def get_spark(
     app_name: str = "parquet-processor-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_partitions = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(2 * int(cpus))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(2 * int(cpus)))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -185,6 +183,21 @@ def run_in_pool(spark: SparkSession, pool: str, fn):
         return fn()
     finally:
         sc.setLocalProperty("spark.scheduler.pool", None)
+
+
+def jobs_in_group(spark: SparkSession, group: str, fn):
+    """(fn(), number of Spark jobs fn ran), counted under job group
+    ``group``, which is cleared afterwards. Like the pool property, the
+    job group is thread-local: a job from another thread counts only if
+    that thread inherited it (``pyspark.inheritable_thread_target``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def stop_streams(spark: SparkSession, timeout_sec: float = 30.0) -> int:

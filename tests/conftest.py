@@ -7,21 +7,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from parquet_processor_spark.session import get_spark
+from parquet_processor_spark.session import get_spark, jobs_in_group  # noqa: F401 — re-exported to the tests
 
 SF_SMALL = "/root/testdata/sf0.001"
-
-
-def jobs_in_group(spark, group, fn):
-    """(fn(), number of Spark jobs fn ran), counted under a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -690,6 +690,20 @@ def test_ann_sink_ledger_does_not_read_scratch_when_consumed(spark, sf_dir, name
     assert df.collect() == want
 
 
+@pytest.mark.parametrize("name", ["sink_ann_index_upsert", "sink_ann_index_roundtrip"])
+def test_ann_sink_write_threads_run_in_the_callers_job_group(spark, sf_dir, name):
+    # The ANN sinks write their index parts from worker threads. Those
+    # threads inherit the caller's local properties, so every job the
+    # build runs lands in the caller's job group and jobs_in_group
+    # counts it; none runs ungrouped.
+    from parquet_processor_spark.registry import all_queries
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    _, jobs = jobs_in_group(spark, f"ann_threads_{name}", lambda: all_queries()[name](spark, sf_dir))
+    assert jobs >= 3 and not set(tracker.getJobIdsForGroup(None)) - before
+
+
 def test_rp_coeff_literals_parse_bit_exact_in_duckdb():
     # The e0 exponent-form spelling must recover every projection
     # coefficient bit-exactly in DuckDB (bare decimals parse as
@@ -1227,6 +1241,25 @@ def test_numpy_cumsum_is_still_a_sequential_left_fold():
         "pair_cos_arrow's cumsum dot with an explicit order-pinned loop "
         "(see its docstring) before trusting cross-engine hashes"
     )
+
+
+def test_rows_matrix_raises_on_ragged_rows_and_keeps_int64():
+    # The one row->matrix conversion of the Arrow kernels. A bare
+    # reshape would accept rows of widths 3 and 1 as a 2x2 matrix.
+    import numpy as np
+    import pandas as pd
+    import pytest
+
+    from parquet_processor_spark.ops.vector import _rows_matrix
+
+    with pytest.raises(ValueError, match="ragged"):
+        _rows_matrix(pd.Series([np.array([1.0, 2.0, 3.0]), np.array([4.0])]))
+    ints = _rows_matrix(pd.Series([np.array([1, 2]), np.array([3, 4])], index=[7, 9]))
+    assert ints.dtype == np.int64 and ints.tolist() == [[1, 2], [3, 4]]
+    # a None element reads as NaN under a float dtype (collected Rows)
+    floats = _rows_matrix([[1, None], [2.5, 3]], np.float64)
+    assert floats.dtype == np.float64 and np.isnan(floats[0, 1]) and floats[1].tolist() == [2.5, 3.0]
+    assert _rows_matrix(pd.Series([], dtype=object)).shape == (0, 0)
 
 
 def test_capped_band_postings_drops_hot_buckets(spark):

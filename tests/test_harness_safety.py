@@ -173,21 +173,26 @@ def test_bench_lists_are_registered():
 
 
 def test_query_docstrings_name_no_module_constant_in_braces():
-    # A docstring is a plain string, not an f-string: "{_KCORE_K}" in it
-    # reaches help() and the registry as the literal braces, not the
-    # value. Name the constant without braces ("k=_KCORE_K") instead.
+    # A docstring is a plain string, not an f-string: "{_KCORE_K}",
+    # "{k}" or "{len(_CHI2_CRIT)}" in it reaches help() and the registry
+    # as the literal braces, not the value. Name the value without
+    # braces ("k=_KCORE_K") instead. Names meant literally are listed;
+    # set notation ("{new, retained, ...}") and subscripts ("x_{t-k}")
+    # are neither a name nor a call, so they never match.
     import re
-    import sys
 
     from parquet_processor_spark.registry import all_queries
 
+    literal = {
+        "sink_partitioned_roundtrip": {"segment", "timestamp"},  # the directory layout
+    }
     offenders = {}
     for name, fn in all_queries().items():
-        module = sys.modules[fn.__module__]
-        found = {x for x in re.findall(r"\{([A-Za-z_]\w*)\}", fn.__doc__ or "") if hasattr(module, x)}
+        found = set(re.findall(r"\{([A-Za-z_][\w.]*(?:\(.*?\))?)\}", fn.__doc__ or ""))
+        found -= literal.get(name, set())
         if found:
             offenders[name] = sorted(found)
-    assert not offenders, f"docstrings with literal {{CONSTANT}} placeholders: {offenders}"
+    assert not offenders, f"docstrings with literal {{name}} placeholders: {offenders}"
 
 
 def test_injected_id_offset_clears_fixture_ids(spark):
