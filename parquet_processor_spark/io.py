@@ -1,10 +1,13 @@
-"""Scratch directories and the one-job probes of data-dependent loops.
+"""Scratch directories, the versioned-snapshot table layout, and the
+one-job probes of data-dependent loops.
 
 Sources and sinks (SURVEY.md §2.1 S1-S3, §2.2 K1-K4) call Spark's
 DataFrame reader and writer in place, with explicit schemas where a
 read could otherwise infer; ops/roundtrip.py round-trips each format
 (the reference's timestamped parquet snapshots, combined CSV/JSON
-artifacts and segment/timestamp layouts) through them.
+artifacts and segment/timestamp layouts) through them. The one table
+commit protocol, for the versioned sinks and the streaming state
+tables alike, lives here.
 """
 
 from __future__ import annotations
@@ -15,7 +18,7 @@ import shutil
 import tempfile
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 
 # --- scratch lifecycle ----------------------------------------------------
 
@@ -37,6 +40,83 @@ def scratch_dir(prefix: str) -> str:
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         _SCRATCH_ROOT.append(root)
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
+
+
+# --- versioned snapshots ---------------------------------------------------
+
+# A table is a root holding immutable snap-<v>/ parquet directories and
+# one _CURRENT pointer file naming the committed version — the
+# poor-man's table format (what Delta's _last_checkpoint / Iceberg's
+# version-hint encode). Writers stage a new directory and flip the
+# pointer LAST with one os.replace, so a reader always resolves a
+# complete snapshot, a crash strands only an unreferenced directory,
+# and older versions stay readable until expired (time travel).
+# Reference analog: the supersede-snapshot rewrite,
+# test_parquet_processor.py:362-364.
+
+
+def _snapshot_dir(root: str, version: int) -> str:
+    return os.path.join(root, f"snap-{version}")
+
+
+def stage_snapshot(df: DataFrame, root: str, version: int) -> None:
+    """Write snap-<version>/ without committing it: readers keep the
+    current version until :func:`publish_snapshot` flips the pointer."""
+    df.write.mode("overwrite").parquet(_snapshot_dir(root, version))
+
+
+def publish_snapshot(df: DataFrame, root: str, version: int) -> None:
+    """Stage snap-<version>/, then flip the _CURRENT pointer atomically
+    LAST — the commit. A crash before the flip strands only an
+    unreferenced directory; readers of the previous version are never
+    torn."""
+    stage_snapshot(df, root, version)
+    pointer = os.path.join(root, "_CURRENT")
+    tmp = pointer + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(str(version))
+    os.replace(tmp, pointer)  # the atomic commit: flip the pointer LAST
+
+
+def current_snapshot_version(root: str) -> int | None:
+    """The committed version under ``root``, or None when nothing was
+    ever published there."""
+    try:
+        with open(os.path.join(root, "_CURRENT")) as fh:
+            return int(fh.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def read_snapshot(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
+    """The committed snapshot under ``root``, or ``version`` (time
+    travel). Raises FileNotFoundError when no version is committed."""
+    if version is None:
+        version = current_snapshot_version(root)
+        if version is None:
+            raise FileNotFoundError(f"no committed snapshot under {root}")
+    return spark.read.parquet(_snapshot_dir(root, version))
+
+
+def expire_snapshots(root: str, keep: int) -> list[int]:
+    """Delete every version older than the newest ``keep``, but never
+    the committed version or a newer one (a newer one is staged, not
+    yet committed). Returns the deleted versions, oldest first.
+    Delete-behind only: a reader pinned to an expired version loses it."""
+    if keep < 1:
+        raise ValueError(f"keep must be >= 1, got {keep}")
+    current = current_snapshot_version(root)
+    if current is None:
+        return []
+    names = (n.removeprefix("snap-") for n in os.listdir(root) if n.startswith("snap-"))
+    versions = sorted(int(n) for n in names if n.isdigit())
+    expired = [v for v in versions[:-keep] if v < current]
+    for v in expired:
+        shutil.rmtree(_snapshot_dir(root, v))
+    return expired
+
+
+# --- data-dependent loops ---------------------------------------------------
 
 
 def materializing_count(df: DataFrame) -> int:

@@ -12,7 +12,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_processor_spark.numeric import dsum, dsum_sql
-from parquet_processor_spark.io import scratch_dir
+from parquet_processor_spark.io import (
+    current_snapshot_version,
+    expire_snapshots,
+    publish_snapshot,
+    read_snapshot,
+    scratch_dir,
+    stage_snapshot,
+)
 from parquet_processor_spark.registry import query
 from parquet_processor_spark.tables import t
 
@@ -454,36 +461,10 @@ def scan_binary_files(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Versioned-snapshot layout with a pointer-file commit — the
-# poor-man's table format (what Delta's _last_checkpoint / Iceberg's
-# version-hint encode): every writer publishes a NEW immutable
-# snap-<v>/ directory and flips one tiny pointer file last (atomic
-# os.replace), so readers always resolve a complete snapshot, a crash
-# mid-write strands only an unreferenced directory, and old versions
-# stay queryable (time travel). This is also the protocol the
-# streaming state swap's recovery path approximates
-# (streaming/jobs.py:_recover_state) — here it is the queryable
-# at-rest variant. Reference analog: the supersede-snapshot rewrite,
-# test_parquet_processor.py:362-364.
+# Versioned-snapshot sinks on io.py's pointer-file commit
+# (publish_snapshot and friends), the protocol the streaming state
+# tables (streaming/jobs.py) also commit through, one version per batch.
 _SNAP_CUT = "1996-01-01"
-
-
-def publish_snapshot(df: DataFrame, root: str, version: int) -> None:
-    """Write an immutable snap-<version>/ directory, then flip the
-    _CURRENT pointer atomically LAST — the commit protocol. A crash
-    before the flip strands only an unreferenced directory; readers of
-    the previous version are never torn."""
-    df.write.mode("overwrite").parquet(os.path.join(root, f"snap-{version}"))
-    pointer = os.path.join(root, "_CURRENT")
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, pointer)  # the atomic commit: flip the pointer LAST
-
-
-def current_snapshot_version(root: str) -> int:
-    with open(os.path.join(root, "_CURRENT")) as fh:
-        return int(fh.read().strip())
 
 
 @query(
@@ -523,8 +504,7 @@ def sink_versioned_snapshots(spark: SparkSession, sf: str) -> DataFrame:
     current = current_snapshot_version(out)
 
     def summarize(version: int) -> DataFrame:
-        snap = spark.read.parquet(os.path.join(out, f"snap-{version}"))
-        return snap.agg(
+        return read_snapshot(spark, out, version).agg(
             F.lit(version).cast("int").alias("version"),
             F.count(F.lit(1)).alias("n_rows"),
             dsum("o_totalprice", "total_price"),
@@ -864,31 +844,24 @@ def sink_snapshot_expire(spark: SparkSession, sf: str) -> DataFrame:
     reader-safety contract. The survivors' readability proof is the
     same scan any consumer runs; nothing is rewritten.
     """
-    import shutil
-
     out = scratch_dir("ppspark_expire_")
     orders = t(spark, sf, "orders")
     cut = F.col("o_orderdate") < F.lit(f"{_SNAP_CUT} 00:00:00").cast("timestamp")
-    publish_snapshot(orders.where(cut), out, 1)
-    publish_snapshot(orders.where(cut | (F.col("o_orderpriority") == "1-URGENT")), out, 2)
-    publish_snapshot(orders, out, 3)
-
-    # expire: delete every snap-*/ older than the newest _EXPIRE_KEEP
+    slices = [
+        orders.where(cut),
+        orders.where(cut | (F.col("o_orderpriority") == "1-URGENT")),
+        orders,
+    ]
+    for v, snap in enumerate(slices, start=1):
+        publish_snapshot(snap, out, v)
     current = current_snapshot_version(out)
-    versions = sorted(
-        int(d.split("-")[1]) for d in os.listdir(out) if d.startswith("snap-")
-    )
-    for v in versions[:-_EXPIRE_KEEP]:
-        shutil.rmtree(os.path.join(out, f"snap-{v}"))
+    expired = expire_snapshots(out, keep=_EXPIRE_KEEP)
 
     rows = []
-    for v in versions:
-        path = os.path.join(out, f"snap-{v}")
-        alive = os.path.isdir(path)
-        if alive:
-            snap = spark.read.parquet(path)
+    for v in range(1, len(slices) + 1):
+        if v not in expired:
             rows.append(
-                snap.agg(
+                read_snapshot(spark, out, v).agg(
                     F.lit(v).cast("int").alias("version"),
                     F.count(F.lit(1)).alias("n_rows"),
                     F.lit(False).alias("expired"),
@@ -904,7 +877,7 @@ def sink_snapshot_expire(spark: SparkSession, sf: str) -> DataFrame:
                     F.lit(False).alias("readable"),
                 )
             )
-    assert current == versions[-1]
+    assert current == len(slices)
     out_df = rows[0]
     for r in rows[1:]:
         out_df = out_df.unionByName(r)
@@ -923,16 +896,12 @@ _WAP_CUT = "1997-06-01"  # fixture has orders past this -> attempt 2 fails its a
 
 
 def publish_if_clean(df: DataFrame, root: str, version: int, n_violations: int) -> bool:
-    """Stage snap-<version>/ unconditionally; flip _CURRENT only when
-    the audit found zero violations. Returns whether it published."""
-    df.write.mode("overwrite").parquet(os.path.join(root, f"snap-{version}"))
+    """Stage ``version`` unconditionally; commit it only when the audit
+    found zero violations. Returns whether it published."""
     if n_violations == 0:
-        pointer = os.path.join(root, "_CURRENT")
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, pointer)
+        publish_snapshot(df, root, version)
         return True
+    stage_snapshot(df, root, version)
     return False
 
 
@@ -989,8 +958,7 @@ def sink_checked_publish(spark: SparkSession, sf: str) -> DataFrame:
         rows.append((version, int(stats["n"]), int(stats["bad"]), published))
     current = current_snapshot_version(out)
     # the reader-through-pointer verification IS the operator's point
-    snap = spark.read.parquet(os.path.join(out, f"snap-{current}"))
-    n_visible = snap.count()  # eager-by-design: sink round-trip barrier
+    n_visible = read_snapshot(spark, out).count()  # eager-by-design: sink round-trip barrier
     return spark.createDataFrame(
         [
             (v, n, bad, pub, v == current, n_visible)
@@ -1772,8 +1740,7 @@ def sink_time_travel_read(spark: SparkSession, sf: str) -> DataFrame:
     reads = None
     for ts in (150, 250, 990):
         v = resolve(ts)
-        snap = spark.read.parquet(os.path.join(out, f"snap-{v}"))
-        one = snap.agg(
+        one = read_snapshot(spark, out, v).agg(
             F.lit(ts).cast("int").alias("as_of_ts"),
             F.lit(v).cast("int").alias("resolved_version"),
             F.count(F.lit(1)).alias("n_rows"),

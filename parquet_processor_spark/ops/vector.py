@@ -15,6 +15,8 @@ is evaluated — the all-pairs product never materializes.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -97,6 +99,19 @@ def _hyperplane_sigs(E: np.ndarray, C: np.ndarray, r: int) -> np.ndarray:
     :func:`lsh_band_keys` and :func:`_tune_band_sign_cols` pack it."""
     bits = (_fold(E[:, None, :] * C[None, :, : E.shape[1]]) > 0).astype(np.int64)
     return (bits.reshape(len(E), -1, r) << np.arange(r)).sum(axis=2)
+
+
+def _sig_matrix(
+    emb: pd.Series, width: int, sigs: Callable[[np.ndarray], np.ndarray]
+) -> np.ndarray:
+    """(rows, ``width``) int64 signatures ``sigs(E)`` of the non-null
+    embeddings of ``emb``; a null embedding's row stays all-zero bits,
+    as ``when(null > 0, 1).otherwise(0)`` gives the JVM twins."""
+    out = np.zeros((len(emb), width), dtype=np.int64)
+    mask = emb.notna().to_numpy()
+    if mask.any():
+        out[mask] = sigs(_rows_matrix(emb[mask], np.float64))
+    return out
 
 
 def _codebook(
@@ -464,12 +479,12 @@ def lsh_band_keys_arrow(n_bands: int = _N_BANDS):
         [_plane_coeffs(_N_PLANES + b * r + j) for b in range(n_bands) for j in range(r)]
     )
 
+    # Null policy: a null embedding gets keys b*8 (all sign bits 0), as the JVM twin.
     @F.pandas_udf("array<bigint>")
     def keys(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        sig = _hyperplane_sigs(_rows_matrix(emb, np.float64), C, r)
-        return pd.Series(list(np.arange(n_bands, dtype=np.int64)[None, :] * 8 + sig))
+        sig = _sig_matrix(emb, n_bands, lambda E: _hyperplane_sigs(E, C, r))
+        band_keys = np.arange(n_bands, dtype=np.int64)[None, :] * 8 + sig
+        return pd.Series(list(band_keys), dtype=object)
 
     return keys
 
@@ -2353,12 +2368,15 @@ def _tune_band_sign_arrow():
         for r in _TUNE_GRID_R
     ]
 
+    # Null policy: a null embedding gets all-zero signatures, as the JVM twin.
     @F.pandas_udf("array<bigint>")
     def sigs(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        E = _rows_matrix(emb, np.float64)
-        return pd.Series(list(np.concatenate([_hyperplane_sigs(E, C, r) for r, C in grid], axis=1)))
+        sig = _sig_matrix(
+            emb,
+            n_bands * len(grid),
+            lambda E: np.concatenate([_hyperplane_sigs(E, C, r) for r, C in grid], axis=1),
+        )
+        return pd.Series(list(sig), dtype=object)
 
     return sigs
 

@@ -22,7 +22,9 @@ and idempotent under task retry.
 
 from __future__ import annotations
 
+import re
 import time
+import urllib.parse
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -60,6 +62,34 @@ def no_network_transport(url: str) -> dict[str, str]:
     )
 
 
+def _require_http(url: str) -> None:
+    """Refuse every URL scheme but http(s): manifest rows are untrusted
+    input, and a transport would otherwise happily read file:// (local
+    filesystem into the output parquet) or ftp:// targets."""
+    scheme = urllib.parse.urlsplit(url).scheme.lower()
+    if scheme not in ("http", "https"):
+        raise ValueError(f"refusing non-http(s) URL scheme {scheme!r}: {url}")
+
+
+_META = re.compile(
+    r"<meta\s+(?:name|property)=[\"']([^\"']+)[\"']\s+content=[\"']([^\"']*)[\"']",
+    re.IGNORECASE,
+)
+_TITLE = re.compile(r"<title>([^<]*)</title>", re.IGNORECASE)
+
+
+def _meta_fields(html: str, page: dict[str, str]) -> dict[str, str]:
+    """Add the page's ``<meta name|property= content=>`` pairs (an
+    OpenGraph ``og:`` prefix stripped) and its ``<title>`` to ``page``,
+    never overwriting a field already there; returns ``page``."""
+    for m in _META.finditer(html):
+        page.setdefault(m.group(1).removeprefix("og:"), m.group(2))
+    title = _TITLE.search(html)
+    if title:
+        page.setdefault("title", title.group(1).strip())
+    return page
+
+
 def make_urllib_transport(
     timeout_s: float = 10.0,
     user_agent: str = "parquet-processor-spark/1.0",
@@ -80,23 +110,17 @@ def make_urllib_transport(
     stage's retry + dead-letter policy (make_fetcher) absorbs — same
     policy the reference applies around its driver (:274-350).
 
-    Only http(s) URLs are accepted: manifest rows are untrusted input,
-    and urllib would otherwise happily read file:// (local filesystem
-    into the output parquet) or ftp:// targets.
+    Only http(s) URLs are accepted (:func:`_require_http`).
 
-    The closure is serialized to executors by Spark; only stdlib
-    modules are touched inside, so it is safe on any cluster image.
+    The closure is serialized to executors by Spark; it touches only
+    the stdlib and this module's parsing helpers.
     """
 
     def transport(url: str) -> dict[str, str]:
         import json as _json
-        import re as _re
-        import urllib.parse as _parse
         import urllib.request as _request
 
-        scheme = _parse.urlsplit(url).scheme.lower()
-        if scheme not in ("http", "https"):
-            raise ValueError(f"refusing non-http(s) URL scheme {scheme!r}: {url}")
+        _require_http(url)
         req = _request.Request(url, headers={"User-Agent": user_agent})
         with _request.urlopen(req, timeout=timeout_s) as resp:  # noqa: S310 — caller-supplied URL is the point
             ctype = (resp.headers.get("Content-Type") or "").lower()
@@ -106,18 +130,7 @@ def make_urllib_transport(
             if not isinstance(data, dict):
                 raise ValueError(f"JSON page is not an object: {url}")
             return {str(k): str(v) for k, v in data.items() if v is not None}
-        text = body.decode("utf-8", errors="replace")
-        page: dict[str, str] = {}
-        for m in _re.finditer(
-            r"<meta\s+(?:name|property)=[\"']([^\"']+)[\"']\s+content=[\"']([^\"']*)[\"']",
-            text,
-            _re.IGNORECASE,
-        ):
-            key = m.group(1).removeprefix("og:")
-            page.setdefault(key, m.group(2))
-        title = _re.search(r"<title>([^<]*)</title>", text, _re.IGNORECASE)
-        if title:
-            page.setdefault("title", title.group(1).strip())
+        page = _meta_fields(body.decode("utf-8", errors="replace"), {})
         if not page:
             raise ValueError(f"no extractable metadata fields at {url}")
         return page
@@ -138,27 +151,16 @@ def _extract_rendered_fields(html: str) -> dict[str, str]:
     (lower, spaces→underscores, parens stripped). <meta>/<title> pairs
     are merged in as a fallback so static pages behave exactly like
     the urllib transport."""
-    import re as _re
-
     page: dict[str, str] = {}
-    for m in _re.finditer(
+    for m in re.finditer(
         r"<div[^>]*class=[\"'][^\"']*(?:field-name|showcase-label)[^\"']*[\"'][^>]*>"
         r"\s*([^<]+?)\s*</div>\s*<div[^>]*>\s*([^<]*?)\s*</div>",
         html,
-        _re.IGNORECASE,
+        re.IGNORECASE,
     ):
         key = m.group(1).lower().replace(" ", "_").replace("(", "").replace(")", "")
         page.setdefault(key, m.group(2).split("\n")[0].strip())
-    for m in _re.finditer(
-        r"<meta\s+(?:name|property)=[\"']([^\"']+)[\"']\s+content=[\"']([^\"']*)[\"']",
-        html,
-        _re.IGNORECASE,
-    ):
-        page.setdefault(m.group(1).removeprefix("og:"), m.group(2))
-    title = _re.search(r"<title>([^<]*)</title>", html, _re.IGNORECASE)
-    if title:
-        page.setdefault("title", title.group(1).strip())
-    return page
+    return _meta_fields(html, page)
 
 
 def make_browser_transport(
@@ -201,11 +203,7 @@ def make_browser_transport(
         return driver
 
     def transport(url: str) -> dict[str, str]:
-        import urllib.parse as _parse
-
-        scheme = _parse.urlsplit(url).scheme.lower()
-        if scheme not in ("http", "https"):
-            raise ValueError(f"refusing non-http(s) URL scheme {scheme!r}: {url}")
+        _require_http(url)
         driver = state.get("driver")
         if driver is None:
             driver = (driver_factory or default_factory)()

@@ -120,17 +120,6 @@ def scrape_schema() -> T.StructType:
 # Required downstream contract (evaluate_test_run.py:24-29).
 REQUIRED_COLUMNS = ("url", "processing_time", "error", "batch_index")
 
-# Dead-letter record (test_parquet_processor.py:338-344).
-SKIPPED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("index", T.LongType(), True),
-        T.StructField("reason", T.StringType(), True),
-        T.StructField("processing_time", T.DoubleType(), True),
-        T.StructField("attempts", T.IntegerType(), True),
-    ]
-)
-
 # Aggregator statistics record (test_parquet_aggregator.yml:169-176).
 STATS_SCHEMA = T.StructType(
     [

@@ -8,6 +8,8 @@ built-in Structured Streaming facility:
 
 - T1 micro-batches  → trigger(availableNow/processingTime)
 - T2 resume offsets → option("checkpointLocation", …) offset log
+- T3 superseding snapshots → foreachBatch state tables, one versioned
+  snapshot (io.publish_snapshot) committed per batch id
 - T4 dead-letter    → foreachBatch split write
 - T5 lateness       → withWatermark + windowed aggregation
 - T6 event windows  → window()/session_window over events.ts
@@ -16,11 +18,18 @@ built-in Structured Streaming facility:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from parquet_processor_spark.io import (
+    current_snapshot_version,
+    expire_snapshots,
+    publish_snapshot,
+    read_snapshot,
+)
 from parquet_processor_spark.tables import _normalize_event_time
 
 
@@ -208,102 +217,70 @@ def _latest_per_user(df: DataFrame) -> DataFrame:
     )
 
 
-def _recover_state(state_dir: str) -> None:
-    """Make the swap protocol crash-safe: heal any interrupted
-    write-new -> rename-old -> rename-new -> drop-old sequence before
-    the next merge reads state.
+def _state_table(
+    stream: DataFrame,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
+    output_mode: str,
+    state_root: str,
+    checkpoint: str,
+) -> StreamingQuery:
+    """Maintain a state table under ``state_root`` from ``stream``: each
+    micro-batch folds into the current snapshot by
+    ``merge(batch, state)`` (``state`` is None before the first commit)
+    and commits the result as version ``batch_id`` through
+    io.publish_snapshot — write the new version, flip the pointer last —
+    then expires every older version. A reader never sees a half-written
+    table, and a crash before the flip leaves the previous version
+    current.
 
-    A crash between rename(state_dir, old) and rename(tmp, state_dir)
-    leaves NO state_dir while the streaming checkpoint already marks
-    the batch committed (availableNow will not replay it), so without
-    recovery a restart silently rebuilds from empty (r6 ADVICE item).
-    Policy: if state_dir is missing, promote the newest COMPLETE
-    .tmp-* (parquet _SUCCESS marker — it holds the post-merge state of
-    the committed batch); else restore the newest .old-*; then drop
-    every remaining leftover.
+    ``foreachBatch`` is at-least-once: a batch that committed here but
+    crashed before the streaming checkpoint recorded it runs again with
+    the same ``batch_id``. The committed version is that batch id, so a
+    batch at or below it is a replay and is skipped, never merged twice.
+    Contract: a state root belongs to one checkpoint, since batch ids
+    restart at 0 under a fresh checkpoint.
     """
-    import shutil
 
-    parent = os.path.dirname(state_dir) or "."
-    base = os.path.basename(state_dir)
-    if not os.path.isdir(parent):
-        return
-    leftovers = {"tmp": [], "old": []}
-    for name in os.listdir(parent):
-        for kind in ("tmp", "old"):
-            prefix = f"{base}.{kind}-"
-            if name.startswith(prefix):
-                try:
-                    leftovers[kind].append((int(name[len(prefix):]), os.path.join(parent, name)))
-                except ValueError:
-                    pass
-    if not os.path.isdir(state_dir):
-        complete_tmps = [
-            (b, p) for b, p in leftovers["tmp"] if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if complete_tmps:
-            _, newest = max(complete_tmps)
-            os.rename(newest, state_dir)
-            leftovers = {k: [(b, p) for b, p in v if p != newest] for k, v in leftovers.items()}
-        elif leftovers["old"]:
-            _, newest = max(leftovers["old"])
-            os.rename(newest, state_dir)
-            leftovers = {k: [(b, p) for b, p in v if p != newest] for k, v in leftovers.items()}
-    for _, p in leftovers["tmp"] + leftovers["old"]:
-        shutil.rmtree(p, ignore_errors=True)
+    def commit(batch: DataFrame, batch_id: int) -> None:
+        current = current_snapshot_version(state_root)
+        if current is not None and current >= batch_id:
+            return  # replay of a committed batch
+        spark = batch.sparkSession
+        state = None if current is None else read_snapshot(spark, state_root, current)
+        publish_snapshot(merge(batch, state), state_root, batch_id)
+        expire_snapshots(state_root, keep=1)
 
-
-def _swap_state(merged: DataFrame, state_dir: str, batch_id: int) -> None:
-    """Commit ``merged`` as the new state directory: write-new ->
-    rename-old -> rename-new -> drop-old. Readers never see a
-    half-written table; _recover_state heals any crash mid-sequence."""
-    import shutil
-
-    tmp = f"{state_dir}.tmp-{batch_id}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = f"{state_dir}.old-{batch_id}"
-    if os.path.isdir(state_dir):
-        os.rename(state_dir, old)
-    os.rename(tmp, state_dir)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    return (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(commit)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_with_upsert(events: DataFrame, state_dir: str, checkpoint: str) -> StreamingQuery:
     """T3 as a continuously-maintained sink: a keyed latest-state table
     upserted by ``foreachBatch`` merge. Each micro-batch reduces to one
-    row per user (map-side-combined ``max_by``), merges with the
-    current state under the same newest-wins rule, and swaps the state
-    directory atomically (write-new → rename-old → rename-new →
-    drop-old), so a reader never sees a half-written table and a crash
-    mid-swap leaves either the old or the new complete state.
+    row per user (map-side-combined ``max_by``) and merges with the
+    current state under the same newest-wins rule; :func:`_state_table`
+    commits each merge as a new snapshot version.
 
     100 TB shape: the merge cost is O(|state| + |batch|) with one
     shuffle on the key — the batch side is pre-shrunk to one row per
     key before touching the state. On a real deployment the state
     would live in a table format with MERGE support (Delta/Iceberg)
-    so the rewrite touches only changed files; the
-    directory-swap stands in for that commit protocol with plain
-    parquet, exactly as the reference supersedes its snapshot files
-    (flush-every-10 rewrite, test_parquet_processor.py:362-364).
+    so the rewrite touches only changed files; the versioned snapshot
+    stands in for that commit protocol with plain parquet, exactly as
+    the reference supersedes its snapshot files (flush-every-10
+    rewrite, test_parquet_processor.py:362-364).
     """
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        _recover_state(state_dir)
-        delta = _latest_per_user(batch)
-        if os.path.isdir(state_dir):
-            cur = spark.read.parquet(state_dir)
-            merged = _latest_per_user(cur.unionByName(delta))
-        else:
-            merged = delta
-        _swap_state(merged, state_dir, batch_id)
 
-    return (
-        events.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    def merge(batch: DataFrame, state: DataFrame | None) -> DataFrame:
+        delta = _latest_per_user(batch)
+        return delta if state is None else _latest_per_user(state.unionByName(delta))
+
+    return _state_table(events, merge, "append", state_dir, checkpoint)
 
 
 def run_trending_update(events: DataFrame, state_dir: str, checkpoint: str) -> StreamingQuery:
@@ -314,16 +291,10 @@ def run_trending_update(events: DataFrame, state_dir: str, checkpoint: str) -> S
 
     The streaming aggregation keeps the (hour_start, user_id) counts
     in the state store and, in update mode, each micro-batch emits
-    ONLY the spine cells that batch touched. ``foreachBatch`` upserts
-    those cells into the at-rest parquet spine by key (anti-join the
-    delta's keys, append the delta) under the same
-    write-new → swap → recover commit protocol as
-    :func:`run_with_upsert`. Per-batch cost: input rows = the new
-    slice (pinned by the incremental pytest, the OHLC recipe), delta
-    rows = |touched cells| ≤ input rows, never |state|. On a real
-    deployment the spine lives in a MERGE-capable table so the upsert
-    rewrites only touched files; the directory swap stands in for
-    that commit protocol with plain parquet.
+    ONLY the spine cells that batch touched, upserted into the at-rest
+    parquet spine by :func:`run_spine_update`. Per-batch cost: input
+    rows = the new slice (pinned by the incremental pytest, the OHLC
+    recipe), delta rows = |touched cells| ≤ input rows, never |state|.
     """
     counts = (
         events.where(F.col("ts").isNotNull())
@@ -343,8 +314,7 @@ def run_spine_update(
     #5): any streaming aggregation spine in UPDATE output mode, each
     micro-batch emitting only the spine cells it touched, upserted
     into the at-rest parquet state by ``keys`` (anti-join the delta's
-    keys, append the delta) under the write-new → swap → recover
-    commit protocol of :func:`run_with_upsert`.
+    keys, append the delta) and committed by :func:`_state_table`.
 
     Update-mode rows ARE the new totals for the touched keys —
     replace-by-key, no re-aggregation here. Per-batch cost:
@@ -354,26 +324,12 @@ def run_spine_update(
     incremental pytests, the OHLC recipe).
     """
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        _recover_state(state_dir)
-        delta = batch
-        if os.path.isdir(state_dir):
-            cur = spark.read.parquet(state_dir)
-            merged = cur.join(
-                delta.select(*keys), list(keys), "left_anti"
-            ).unionByName(delta)
-        else:
-            merged = delta
-        _swap_state(merged, state_dir, batch_id)
+    def merge(batch: DataFrame, state: DataFrame | None) -> DataFrame:
+        if state is None:
+            return batch
+        return state.join(batch.select(*keys), list(keys), "left_anti").unionByName(batch)
 
-    return (
-        spine.writeStream.outputMode("update")
-        .foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _state_table(spine, merge, "update", state_dir, checkpoint)
 
 
 def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
@@ -384,47 +340,17 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
     return events.join(F.broadcast(dim), "user_id", "left")
 
 
-def stream_stream_view_purchase(events: DataFrame, horizon: str = "30 minutes") -> DataFrame:
-    """Stream-stream inner join: purchases matched to any view by the
-    same user within ``horizon`` before the purchase. Both sides are
+def stream_stream_view_purchase(
+    events: DataFrame, horizon: str = "30 minutes", how: str = "inner"
+) -> DataFrame:
+    """Stream-stream join: purchases matched to any view by the same
+    user within ``horizon`` before the purchase. Both sides are
     watermarked so the join state is bounded — the interval condition
-    lets Spark expire buffered rows past the horizon."""
-    views = (
-        events.where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_event_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", horizon)
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_event_id"),
-            F.col("ts").alias("purchase_ts"),
-            "value",
-        )
-        .withWatermark("purchase_ts", horizon)
-    )
-    return purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr(f"interval {horizon}")),
-        "inner",
-    ).select(
-        "purchase_event_id", F.col("p_user").alias("user_id"), "purchase_ts", "value",
-        "view_event_id", "view_ts",
-    )
+    lets Spark expire buffered rows past the horizon.
 
-
-def stream_stream_view_purchase_outer(events: DataFrame, horizon: str = "30 minutes") -> DataFrame:
-    """Stream-stream LEFT OUTER join: every purchase emits — matched to
-    its views within ``horizon`` immediately, or as a NULL-view row
-    once the watermark proves no matching view can still arrive. The
-    null emission is the part the inner variant cannot exercise: an
+    ``how="left_outer"`` makes every purchase emit — matched to its
+    views within ``horizon`` immediately, or as a NULL-view row once
+    the watermark proves no matching view can still arrive. An
     unmatched purchase sits in the join state until the global
     watermark (min over both sides' per-operator watermarks) passes
     its eviction bound, and only then emits with nulls — bounded state
@@ -456,7 +382,7 @@ def stream_stream_view_purchase_outer(events: DataFrame, horizon: str = "30 minu
         (F.col("p_user") == F.col("v_user"))
         & (F.col("view_ts") <= F.col("purchase_ts"))
         & (F.col("view_ts") >= F.col("purchase_ts") - F.expr(f"interval {horizon}")),
-        "left_outer",
+        how,
     ).select(
         "purchase_event_id", F.col("p_user").alias("user_id"), "purchase_ts", "value",
         "view_event_id", "view_ts",
@@ -487,47 +413,35 @@ def _cdc_reduce(rows: DataFrame) -> DataFrame:
 def run_with_tombstones(events: DataFrame, state_dir: str, checkpoint: str) -> StreamingQuery:
     """Streaming CDC apply: the continuously-maintained twin of
     ops/temporal.cdc_apply_tombstones. Each micro-batch reduces to one
-    candidate row per key PLUS its version count, merges with current
-    state under (sum counts, newest-wins change), and swaps the state
-    directory atomically (same commit protocol as run_with_upsert).
-    Tombstones ('error' ops) stay IN the state as dead keys — dropping
-    them would resurrect a key if an older batch replayed after the
-    delete.
+    candidate row per key PLUS its version count and merges with the
+    current state under (sum counts, newest-wins change), committed by
+    :func:`_state_table` like run_with_upsert. Tombstones ('error' ops)
+    stay IN the state as dead keys — dropping them would resurrect a
+    key if an older change arrived after the delete.
 
     100 TB shape: merge cost O(|state| + |batch|) with one shuffle on
     the key; the batch side collapses map-side before touching state.
     The (count, argmax) state is mergeable partial state — the same
     algebra that makes the batch operator's shuffle carry one row per
-    key makes the streaming merge correct under any batch split.
+    key makes the streaming merge correct under any batch split. The
+    sum is not idempotent, which is why a replayed batch must be
+    skipped rather than merged again.
     """
 
-    def as_state(rows: DataFrame) -> DataFrame:
-        return rows.select(
-            "user_id",
-            F.lit(1).cast("long").alias("n_versions"),
-            "ts",
-            "event_id",
-            "event_type",
-            "value",
+    def merge(batch: DataFrame, state: DataFrame | None) -> DataFrame:
+        delta = _cdc_reduce(
+            batch.select(
+                "user_id",
+                F.lit(1).cast("long").alias("n_versions"),
+                "ts",
+                "event_id",
+                "event_type",
+                "value",
+            )
         )
+        return delta if state is None else _cdc_reduce(state.unionByName(delta))
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        _recover_state(state_dir)
-        delta = _cdc_reduce(as_state(batch))
-        if os.path.isdir(state_dir):
-            cur = spark.read.parquet(state_dir)
-            merged = _cdc_reduce(cur.unionByName(delta))
-        else:
-            merged = delta
-        _swap_state(merged, state_dir, batch_id)
-
-    return (
-        events.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _state_table(events, merge, "append", state_dir, checkpoint)
 
 
 def ohlc_bars(

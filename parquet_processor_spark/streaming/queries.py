@@ -17,13 +17,12 @@ batch twin: ``window_tumbling`` (ops/windows.py) for
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_processor_spark.io import scratch_dir
+from parquet_processor_spark.io import current_snapshot_version, read_snapshot, scratch_dir
 from parquet_processor_spark.ops import temporal as _temporal  # noqa: F401 — registers the donor oracle below
 from parquet_processor_spark.registry import _ORACLES, query
 from parquet_processor_spark.streaming.jobs import (
@@ -243,8 +242,8 @@ def streaming_static_join(spark: SparkSession, sf: str) -> DataFrame:
 def streaming_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """T3 as a continuously-maintained sink: stream the events table
     through the foreachBatch keyed upsert (streaming/jobs.py
-    run_with_upsert — newest (ts, event_id) per user wins, state swapped
-    atomically per batch) and return the final state table.
+    run_with_upsert — newest (ts, event_id) per user wins, one state
+    snapshot committed per batch) and return the final state table.
     Deterministic regardless of how micro-batches split the input:
     newest-wins is associative and commutative over batches, so the
     batch-mode ``row_number() = 1`` twin is the oracle."""
@@ -254,7 +253,7 @@ def streaming_upsert(spark: SparkSession, sf: str) -> DataFrame:
     base = scratch_dir("ppspark_upsert_")
     q = run_with_upsert(events, f"{base}/state", f"{base}/ckpt")
     await_done(q)
-    return spark.read.parquet(f"{base}/state")
+    return read_snapshot(spark, f"{base}/state")
 
 
 @query(
@@ -293,7 +292,7 @@ def streaming_cdc_tombstones(spark: SparkSession, sf: str) -> DataFrame:
     await_done(q)
     from pyspark.sql import functions as F
 
-    return spark.read.parquet(f"{base}/state").select(
+    return read_snapshot(spark, f"{base}/state").select(
         "user_id",
         "n_versions",
         F.col("event_id").alias("last_event_id"),
@@ -696,8 +695,8 @@ def _update_spine_backfill(
     pytests (the OHLC recipe).
 
     ``start_job(events, state_dir, checkpoint)`` starts the upsert
-    query; an empty source yields zero micro-batches and no state
-    dir, in which case the spine is the empty relation of
+    query; an empty source yields zero micro-batches and no committed
+    snapshot, in which case the spine is the empty relation of
     ``empty_schema``.
     """
     events = read_event_stream(
@@ -706,9 +705,9 @@ def _update_spine_backfill(
     base = scratch_dir(prefix)
     q = start_job(events, f"{base}/state", f"{base}/ckpt")
     await_done(q)
-    if not os.path.isdir(f"{base}/state"):
+    if current_snapshot_version(f"{base}/state") is None:
         return spark.createDataFrame([], empty_schema)
-    return spark.read.parquet(f"{base}/state")
+    return read_snapshot(spark, f"{base}/state")
 
 
 @query(
@@ -837,7 +836,7 @@ def streaming_stream_join_outer(spark: SparkSession, sf: str) -> DataFrame:
     shuffles only the two event spines; the null emission adds zero
     state, it IS the eviction path doing double duty as output.
     """
-    from parquet_processor_spark.streaming.jobs import stream_stream_view_purchase_outer
+    from parquet_processor_spark.streaming.jobs import stream_stream_view_purchase
 
     events = read_event_stream(spark, f"{sf}/events.parquet")
-    return _run_stream(stream_stream_view_purchase_outer(events), "append")
+    return _run_stream(stream_stream_view_purchase(events, how="left_outer"), "append")

@@ -1321,6 +1321,41 @@ def test_tune_band_sign_arrow_matches_jvm_fold(spark, sf_dir):
     assert a == b
 
 
+def test_arrow_sign_kernels_match_jvm_on_a_null_embedding(spark, sf_dir):
+    # Null policy of the hyperplane-sign kernels: the JVM twins give a
+    # null embedding all sign bits 0 (when(null > 0, 1).otherwise(0)),
+    # and so does the DuckDB oracle; each Arrow kernel must give the
+    # same row beside a non-null one, not raise in the Python worker.
+    from parquet_processor_spark.ops.vector import (
+        _TUNE_GRID_L,
+        _TUNE_GRID_R,
+        _tune_band_sign_arrow,
+        _tune_band_sign_cols,
+        lsh_band_keys,
+        lsh_band_keys_arrow,
+    )
+    from parquet_processor_spark.tables import t
+
+    one = t(spark, sf_dir, "embeddings").where(F.col("vec_id") == 0).select("vec_id", "embedding")
+    e = one.unionByName(
+        one.select(
+            F.lit(-1).cast("long").alias("vec_id"),
+            F.lit(None).cast(one.schema["embedding"].dataType).alias("embedding"),
+        )
+    )
+    emb = F.col("embedding")
+    keys = e.select("vec_id", lsh_band_keys(emb, 4).alias("jvm"), lsh_band_keys_arrow(4)(emb).alias("arw"))
+    rows = {r["vec_id"]: (list(r["jvm"]), list(r["arw"])) for r in keys.collect()}
+    assert rows[-1] == ([0, 8, 16, 24], [0, 8, 16, 24])
+    assert rows[0][0] == rows[0][1]
+    sign_cols = [c for r in _TUNE_GRID_R for c in _tune_band_sign_cols(emb, r)]
+    sigs = e.select("vec_id", F.array(*sign_cols).alias("jvm"), _tune_band_sign_arrow()(emb).alias("arw"))
+    rows = {r["vec_id"]: (list(r["jvm"]), list(r["arw"])) for r in sigs.collect()}
+    width = len(_TUNE_GRID_R) * max(_TUNE_GRID_L)
+    assert rows[-1] == ([0] * width, [0] * width)
+    assert rows[0][0] == rows[0][1]
+
+
 def test_bitext_mutual_is_a_partial_matching(spark, sf_dir):
     # mutual-argmax output is a partial matching: each src pairs with
     # at most one tgt and vice versa; langs are the declared slice; and

@@ -304,3 +304,23 @@ def test_hardcoded_true_oracle_columns_are_all_data_derived_tripwires():
         "unexpected": {k: v for k, v in got.items() if ALLOWED.get(k) != v},
         "missing": {k: v for k, v in ALLOWED.items() if got.get(k) != v},
     }
+
+
+def test_only_io_spells_the_snapshot_layout():
+    # One table commit protocol: io.py owns the snap-<v>/ + _CURRENT
+    # layout (publish_snapshot, read_snapshot, expire_snapshots), so a
+    # module that builds those paths itself has forked the protocol.
+    # No module renames a directory either: the rename-swap commit is
+    # gone, and a rename is not atomic against a concurrent reader.
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "parquet_processor_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        name = str(path.relative_to(pkg))
+        if name != "io.py" and ('"_CURRENT"' in text or "snap-{" in text):
+            offenders.append(f"{name}: snapshot layout")
+        if "os.rename(" in text:
+            offenders.append(f"{name}: os.rename(")
+    assert not offenders, offenders

@@ -6,11 +6,15 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from parquet_processor_spark.ops.roundtrip import (
+from parquet_processor_spark.io import (
     current_snapshot_version,
+    expire_snapshots,
     publish_snapshot,
+    read_snapshot,
+    stage_snapshot,
 )
 from parquet_processor_spark.tables import t
 
@@ -26,12 +30,11 @@ def test_crashed_writer_never_tears_the_current_snapshot(spark, tmp_path):
     publish_snapshot(orders.limit(10), root, 1)
     publish_snapshot(orders.limit(25), root, 2)
     # simulate the crash: data written, pointer flip never happened
-    orders.limit(40).write.mode("overwrite").parquet(os.path.join(root, "snap-3"))
+    stage_snapshot(orders.limit(40), root, 3)
     assert current_snapshot_version(root) == 2
-    cur = spark.read.parquet(os.path.join(root, f"snap-{current_snapshot_version(root)}"))
-    assert cur.count() == 25
+    assert read_snapshot(spark, root).count() == 25
     # time travel to v1 still works; the stranded v3 dir is vacuumable
-    assert spark.read.parquet(os.path.join(root, "snap-1")).count() == 10
+    assert read_snapshot(spark, root, 1).count() == 10
 
 
 def test_crashed_pointer_tmp_is_ignored(spark, tmp_path):
@@ -43,6 +46,24 @@ def test_crashed_pointer_tmp_is_ignored(spark, tmp_path):
     with open(os.path.join(root, "_CURRENT.tmp"), "w") as fh:
         fh.write("9")  # torn writer's leftover
     assert current_snapshot_version(root) == 1
+
+
+def test_expire_keeps_the_current_and_newer_staged_versions(spark, tmp_path):
+    # Expiry is delete-behind: it never removes the committed version,
+    # nor a staged version newer than it, whatever ``keep`` says; an
+    # empty root has no version and nothing to expire.
+    root = str(tmp_path)
+    assert current_snapshot_version(root) is None
+    assert expire_snapshots(root, keep=1) == []
+    with pytest.raises(FileNotFoundError):
+        read_snapshot(spark, root)
+    orders = t(spark, SF_SMALL, "orders")
+    publish_snapshot(orders.limit(10), root, 1)
+    publish_snapshot(orders.limit(25), root, 2)
+    stage_snapshot(orders.limit(40), root, 3)
+    assert expire_snapshots(root, keep=1) == [1]
+    assert read_snapshot(spark, root).count() == 25
+    assert read_snapshot(spark, root, 3).count() == 40
 
 
 def test_shard_assignment_is_a_pure_function_of_doc_id(spark):
@@ -140,10 +161,7 @@ def test_checked_publish_blocks_dirty_snapshots_and_keeps_readers_on_last_good(s
     import glob
     import os
 
-    from parquet_processor_spark.ops.roundtrip import (
-        current_snapshot_version,
-        publish_if_clean,
-    )
+    from parquet_processor_spark.ops.roundtrip import publish_if_clean
     from parquet_processor_spark.tables import t
 
     import tempfile
@@ -154,8 +172,7 @@ def test_checked_publish_blocks_dirty_snapshots_and_keeps_readers_on_last_good(s
     assert not publish_if_clean(orders, root, 2, n_violations=5)
     assert current_snapshot_version(root) == 1
     assert os.path.isdir(os.path.join(root, "snap-2"))  # staged, unreferenced
-    visible = spark.read.parquet(os.path.join(root, f"snap-{current_snapshot_version(root)}"))
-    assert visible.count() == 10
+    assert read_snapshot(spark, root).count() == 10
     # a later clean attempt publishes over the stranded stage
     assert publish_if_clean(orders.limit(20), root, 3, n_violations=0)
     assert current_snapshot_version(root) == 3

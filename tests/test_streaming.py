@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_processor_spark.io import read_snapshot
 from parquet_processor_spark.streaming.jobs import (
     read_event_stream,
     run_with_dead_letter,
@@ -228,7 +229,7 @@ def test_foreachbatch_upsert_maintains_latest_state(spark, events_dir, tmp_path)
     ck = str(tmp_path / "ck_upsert")
     q = run_with_upsert(read_event_stream(spark, events_dir), state, ck)
     await_done(q)
-    got = {tuple(r) for r in spark.read.parquet(state).collect()}
+    got = {tuple(r) for r in read_snapshot(spark, state).collect()}
     want = {tuple(r) for r in _latest_per_user(t(spark, SF_SMALL, "events")).collect()}
     assert got == want
     # growth: one user gets a newer event than anything in the corpus
@@ -249,7 +250,7 @@ def test_foreachbatch_upsert_maintains_latest_state(spark, events_dir, tmp_path)
     try:
         q2 = run_with_upsert(read_event_stream(spark, events_dir), state, ck)
         await_done(q2)
-        after = spark.read.parquet(state)
+        after = read_snapshot(spark, state)
         [(uid, etype)] = newer.select("user_id", "event_type").collect()
         assert after.where(F.col("user_id") == uid).collect()[0]["event_type"] == etype
         # untouched keys keep their rows; key count is unchanged
@@ -277,80 +278,52 @@ def test_foreachbatch_cdc_tombstones_matches_batch_operator(spark, events_dir, t
     ck = str(tmp_path / "ck_cdc")
     q = run_with_tombstones(read_event_stream(spark, events_dir), state, ck)
     await_done(q)
-    got_df = spark.read.parquet(state).select(
-        "user_id",
-        "n_versions",
-        F.col("event_id").alias("last_event_id"),
-        (F.col("event_type") == "error").alias("is_deleted"),
-        F.when(F.col("event_type") != "error", F.col("value")).alias("live_value"),
-    )
-    got = {tuple(r) for r in got_df.collect()}
+    got = _cdc_rows(spark, state)
     want = {tuple(r) for r in cdc_apply_tombstones(spark, SF_SMALL).collect()}
     assert got == want
     assert any(r[3] for r in got), "corpus contains 'error' ops: some key must be dead"
 
 
-def test_state_swap_recovers_from_crash_between_renames(spark, tmp_path):
-    # Simulate a crash BETWEEN rename(state_dir, old) and
-    # rename(tmp, state_dir): state_dir is gone, the committed batch's
-    # complete .tmp-* (with _SUCCESS) and the prior .old-* both linger.
-    # _recover_state must promote the COMPLETE tmp (the post-merge
-    # state of the batch the checkpoint already marked committed), not
-    # silently rebuild from empty — and must clean the leftovers.
+def _cdc_rows(spark, state):
+    """The CDC state table projected to cdc_apply_tombstones' columns."""
+    return {
+        tuple(r)
+        for r in read_snapshot(spark, state)
+        .select(
+            "user_id",
+            "n_versions",
+            F.col("event_id").alias("last_event_id"),
+            (F.col("event_type") == "error").alias("is_deleted"),
+            F.when(F.col("event_type") != "error", F.col("value")).alias("live_value"),
+        )
+        .collect()
+    }
+
+
+def test_state_table_skips_a_replayed_micro_batch(spark, events_dir, tmp_path):
+    # foreachBatch is at-least-once: a batch whose state commit landed
+    # but whose checkpoint commit did not runs again with the same
+    # batch id. Drop the last commit-log entry to force that replay;
+    # the state table must skip it. Merging it twice would double
+    # every touched key's version count.
     import os
 
-    from parquet_processor_spark.streaming.jobs import _recover_state
+    from parquet_processor_spark.ops.temporal import cdc_apply_tombstones
+    from parquet_processor_spark.streaming.jobs import run_with_tombstones
 
-    state = str(tmp_path / "state")
-    spark.createDataFrame([(1, "old")], "user_id long, v string").write.parquet(
-        str(tmp_path / "state.old-3")
-    )
-    spark.createDataFrame([(1, "new"), (2, "new")], "user_id long, v string").write.parquet(
-        str(tmp_path / "state.tmp-4")
-    )
-    _recover_state(state)
-    assert os.path.isdir(state)
-    assert spark.read.parquet(state).count() == 2  # tmp-4 promoted
-    assert not os.path.exists(str(tmp_path / "state.old-3"))
-    assert not os.path.exists(str(tmp_path / "state.tmp-4"))
-
-
-def test_state_swap_recovers_from_crash_mid_write(spark, tmp_path):
-    # Crash DURING merged.write: tmp has no _SUCCESS marker -> the old
-    # state must come back (the batch will NOT replay, but the standing
-    # state survives instead of vanishing).
-    import os
-
-    from parquet_processor_spark.streaming.jobs import _recover_state
-
-    state = str(tmp_path / "state")
-    spark.createDataFrame([(1, "old")], "user_id long, v string").write.parquet(
-        str(tmp_path / "state.old-3")
-    )
-    incomplete = tmp_path / "state.tmp-4"
-    incomplete.mkdir()
-    (incomplete / "part-00000.parquet").write_bytes(b"partial")
-    _recover_state(state)
-    assert os.path.isdir(state)
-    assert spark.read.parquet(state).collect()[0]["v"] == "old"
-    assert not os.path.exists(str(incomplete))
-
-
-def test_state_swap_recovery_noop_after_clean_commit(spark, tmp_path):
-    # After a clean swap (state_dir present), recovery must only sweep
-    # stray leftovers and never touch the committed state.
-    import os
-
-    from parquet_processor_spark.streaming.jobs import _recover_state
-
-    state = str(tmp_path / "state")
-    spark.createDataFrame([(1, "cur")], "user_id long, v string").write.parquet(state)
-    spark.createDataFrame([(1, "old")], "user_id long, v string").write.parquet(
-        str(tmp_path / "state.old-7")
-    )
-    _recover_state(state)
-    assert spark.read.parquet(state).collect()[0]["v"] == "cur"
-    assert not os.path.exists(str(tmp_path / "state.old-7"))
+    state = str(tmp_path / "cdc_state")
+    ck = str(tmp_path / "ck_cdc")
+    await_done(run_with_tombstones(read_event_stream(spark, events_dir), state, ck))
+    commits = os.path.join(ck, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert last == 1, "the fixture streams as two micro-batches"
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    q = run_with_tombstones(read_event_stream(spark, events_dir), state, ck)
+    await_done(q)
+    assert os.path.exists(os.path.join(commits, str(last))), "the batch did not replay"
+    want = {tuple(r) for r in cdc_apply_tombstones(spark, SF_SMALL).collect()}
+    assert _cdc_rows(spark, state) == want
 
 
 def test_streaming_changepoint_matches_the_batch_twin(spark, sf_dir):
@@ -469,7 +442,7 @@ def test_streaming_trending_update_is_incremental_and_matches_batch(
     cols = ["hour_start", "user_id", "n_events", "rk"]
     got = {
         tuple(r[c] for c in cols)
-        for r in trending_rank_of_counts(spark.read.parquet(state)).collect()
+        for r in trending_rank_of_counts(read_snapshot(spark, state)).collect()
     }
     want = {
         tuple(r[c] for c in cols)
@@ -533,7 +506,7 @@ def test_streaming_update_twins_are_incremental_and_match_batch(
     assert all(p["numInputRows"] < total for p in progress), (
         "a micro-batch re-read history instead of its slice"
     )
-    got_df = serve(spark.read.parquet(state))
+    got_df = serve(read_snapshot(spark, state))
     got = {tuple(r) for r in got_df.collect()}
     want = {tuple(r) for r in batch().collect()}
     assert got == want and len(want) > 0
@@ -545,14 +518,11 @@ def test_stream_stream_outer_join_null_emission(spark, events_dir, tmp_path):
     # emit EXACTLY ONCE with null view columns, but only those the
     # final global watermark (min over both sides - 30 min) released;
     # newer unmatched purchases stay buffered, never silently null.
-    from parquet_processor_spark.streaming.jobs import (
-        stream_stream_view_purchase,
-        stream_stream_view_purchase_outer,
-    )
+    from parquet_processor_spark.streaming.jobs import stream_stream_view_purchase
 
     stream = read_event_stream(spark, events_dir, max_files_per_trigger=2)
     _run(
-        stream_stream_view_purchase_outer(stream),
+        stream_stream_view_purchase(stream, how="left_outer"),
         "ssjo_t",
         str(tmp_path / "ck_ssjo"),
         mode="append",
