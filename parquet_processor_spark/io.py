@@ -1,13 +1,16 @@
-"""Scratch directories, the versioned-snapshot table layout, and the
-one-job probes of data-dependent loops.
+"""Scratch directories, the two table commits (versioned snapshots and
+copy-on-write partition rewrites), and the one-job probes of
+data-dependent loops.
 
 Sources and sinks (SURVEY.md §2.1 S1-S3, §2.2 K1-K4) call Spark's
 DataFrame reader and writer in place, with explicit schemas where a
 read could otherwise infer; ops/roundtrip.py round-trips each format
 (the reference's timestamped parquet snapshots, combined CSV/JSON
-artifacts and segment/timestamp layouts) through them. The one table
-commit protocol, for the versioned sinks and the streaming state
-tables alike, lives here.
+artifacts and segment/timestamp layouts) through them. Both table
+commits live here: the versioned-snapshot protocol, for the versioned
+sinks and the streaming state tables alike, and the partition rewrite
+(:func:`rewrite_partitions`) that the copy-on-write sinks (targeted
+delete, MERGE, day restatement) commit through.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ import atexit
 import os
 import shutil
 import tempfile
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
@@ -114,6 +117,54 @@ def expire_snapshots(root: str, keep: int) -> list[int]:
     for v in expired:
         shutil.rmtree(_snapshot_dir(root, v))
     return expired
+
+
+# --- partition rewrites -----------------------------------------------------
+
+# A partitioned table is a root of <col>=<value>/ parquet directories
+# (the reference's segment/timestamp layout). A copy-on-write rewrite
+# replaces whole partitions through Spark's dynamic overwrite, which
+# swaps only the partitions the write has rows for. Every written file
+# carries a fresh job UUID in its name, so a partition's file listing
+# changes exactly when the write replaced it.
+
+
+def partition_files(root: str, col: str) -> dict[str, list[str]]:
+    """``{value: sorted data-file names}`` for every ``col=value``
+    directory under ``root``. Values are the directory names' strings;
+    hidden and ``_``-prefixed files (checksums, markers) are skipped,
+    as Spark's reader skips them."""
+    prefix = f"{col}="
+    return {
+        entry.name.removeprefix(prefix): sorted(
+            f for f in os.listdir(entry.path) if not f.startswith((".", "_"))
+        )
+        for entry in os.scandir(root)
+        if entry.is_dir() and entry.name.startswith(prefix)
+    }
+
+
+def rewrite_partitions(df: DataFrame, root: str, col: str, touched: Iterable) -> bool:
+    """Commit ``df`` as the new content of the ``touched`` partitions of
+    the ``col``-partitioned table at ``root``: dynamic-overwrite it,
+    then delete each touched partition the write had no rows for (its
+    listing did not change), because that partition's new content is
+    empty. ``df`` may lazily read ``root``. Returns whether every
+    partition outside ``touched`` kept its exact file listing."""
+    touched = {str(v) for v in touched}
+    before = partition_files(root, col)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(root)
+    )
+    after = partition_files(root, col)
+    for value in touched & before.keys():
+        if after.get(value) == before[value]:
+            shutil.rmtree(os.path.join(root, f"{col}={value}"))
+    kept = {v: files for v, files in before.items() if v not in touched}
+    return kept == {v: files for v, files in after.items() if v not in touched}
 
 
 # --- data-dependent loops ---------------------------------------------------

@@ -2919,13 +2919,13 @@ def _boot_oracle() -> str:
 @query("agg_bootstrap_ci", oracle=_boot_oracle(), tags=("agg", "stats", "bootstrap"))
 def agg_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
     """Percentile-bootstrap CI for mean purchase value via the Poisson
-    bootstrap: B={B} deterministic replicate weights per row (one
+    bootstrap: B=_BOOT_B deterministic replicate weights per row (one
     md5-60bit base hash + B universal-hash uniforms through the exact
     Poisson(1) inverse CDF), every replicate's (Sum w, Sum w*x)
-    accumulated as exact bigints in one aggregate, CI = the ({K}th,
-    {BK}th) order statistics of the B replicate means (a ~94% central
-    interval at B=32; production runs B=512 for 95%+ and the plan
-    shape is unchanged).
+    accumulated as exact bigints in one aggregate, CI = the (Kth,
+    (B+1-K)th) order statistics of the B replicate means, K=_BOOT_K
+    (a ~94% central interval at B=32; production runs B=512 for 95%+
+    and the plan shape is unchanged).
 
     100 TB shape: THE point of the Poisson trick — one scan, zero
     shuffles beyond the single 1-row aggregate exchange, no
@@ -2936,7 +2936,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
     ONE row of B doubles. Weights stay integer (0-6), so every
     shuffled value is exact; the only IEEE ops are the final
     per-replicate divisions and they are identical in both engines.
-    """.format(B=_BOOT_B, K=_BOOT_K, BK=_BOOT_B + 1 - _BOOT_K)
+    """
     m = (
         t(spark, sf, "events")
         .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
@@ -4288,8 +4288,8 @@ _TRIM_ALPHA_PCT = 10  # percent trimmed from EACH side
     tags=("agg", "robust", "stats"),
 )
 def agg_trimmed_mean(spark: SparkSession, sf: str) -> DataFrame:
-    """{p}%-per-side trimmed mean of finished-order value (exact
-    cents).
+    """p%-per-side (p=_TRIM_ALPHA_PCT) trimmed mean of finished-order
+    value (exact cents).
 
     100 TB shape: ranks come from the two-phase global index over the
     cents spine (x-range buckets + broadcast offsets); the trim is a
@@ -4297,7 +4297,7 @@ def agg_trimmed_mean(spark: SparkSession, sf: str) -> DataFrame:
     the kept sum is one map-side-combined integer aggregate — no
     ordered single task anywhere (plan shares the window_cume_dist
     pin).
-    """.format(p=_TRIM_ALPHA_PCT)
+    """
     from parquet_processor_spark.ops.windows import global_row_number
 
     src = (

@@ -1031,7 +1031,7 @@ _KGEN = 10  # the release ladder climbs until EVERY group clears this
 def anonymize_generalize(spark: SparkSession, sf: str) -> DataFrame:
     """Release all customers at the minimal generalization level —
     nation, region, geography-suppressed, or (last rung) fully
-    suppressed QI — at which EVERY released group reaches k={k}.
+    suppressed QI — at which EVERY released group reaches k=_KGEN.
     ``gen_level`` (same for all rows, full-domain) and each released
     group's size make the ladder auditable; the last rung collapses
     the release to ONE group, so the k property can only fail if the
@@ -1045,7 +1045,7 @@ def anonymize_generalize(spark: SparkSession, sf: str) -> DataFrame:
     the only fact-table shuffle, and it's the same exchange a
     release-audit count would pay anyway. Adding ladder rungs adds
     1-row broadcast minimums, never fact-table passes.
-    """.format(k=_KGEN)
+    """
     c = (
         t(spark, sf, "customer")
         .join(

@@ -2334,23 +2334,24 @@ _SETSIM_NUM, _SETSIM_DEN = 1, 2  # Jaccard >= 1/2
     tags=("join", "similarity", "prefix-filter", "dedup"),
 )
 def join_set_similarity(spark: SparkSession, sf: str) -> DataFrame:
-    """All document pairs with shingle Jaccard >= {num}/{den}, found
-    EXACTLY via prefix filtering: tokens rank rarest-first (global
-    (df, h) order), each doc keeps only its first n - ceil(tau*n) + 1
-    tokens, and candidate pairs come from the PREFIX self-join — every
-    qualifying pair provably shares a prefix token, so the verified
-    output equals the brute-force join bit for bit.
+    """All document pairs with shingle Jaccard >= num/den
+    (num=_SETSIM_NUM, den=_SETSIM_DEN), found EXACTLY via prefix
+    filtering: tokens rank rarest-first (global (df, h) order), each doc
+    keeps only its first n - ceil(tau*n) + 1 tokens, and candidate pairs
+    come from the PREFIX self-join — every qualifying pair provably
+    shares a prefix token, so the verified output equals the brute-force
+    join bit for bit.
 
     100 TB shape: the candidate join touches prefix tokens only
     (a (1-tau) fraction of the corpus, rarest tokens first — exactly
     the tokens with the SHORTEST posting lists, which is why
     rarest-first is the canonical order); intersection counting is
     candidate-driven (two narrow hash joins), never all-pairs; the
-    threshold test is exact integer arithmetic ({den}*common >=
-    {num}*union) with one final double division for the reported
+    threshold test is exact integer arithmetic (den*common >=
+    num*union) with one final double division for the reported
     score. The per-doc ranking window partitions by doc_id — bounded
     by doc size, never corpus-mass.
-    """.format(num=_SETSIM_NUM, den=_SETSIM_DEN)
+    """
     from pyspark.sql import Window
 
     # r14 (guide §2.4 — remove duplicated subtrees): the shingle-hash
@@ -2486,9 +2487,10 @@ def join_set_similarity(spark: SparkSession, sf: str) -> DataFrame:
     tags=("join", "similarity", "lsh", "dedup", "verify"),
 )
 def join_set_similarity_verify(spark: SparkSession, sf: str) -> DataFrame:
-    """Document pairs with EXACT shingle Jaccard >= {num}/{den}, but
-    candidates restricted to MinHash-LSH band collisions (df-capped) —
-    the linear-scale production variant of :func:`join_set_similarity`.
+    """Document pairs with EXACT shingle Jaccard >= num/den
+    (num=_SETSIM_NUM, den=_SETSIM_DEN), but candidates restricted to
+    MinHash-LSH band collisions (df-capped) — the linear-scale
+    production variant of :func:`join_set_similarity`.
 
     100 TB shape: candidate generation is the dedup_near pipeline
     minus the signatures (8-byte band keys through one capped window +
@@ -2499,7 +2501,7 @@ def join_set_similarity_verify(spark: SparkSession, sf: str) -> DataFrame:
     The est-Jaccard of dedup_near is replaced by the TRUE Jaccard here;
     downstream clustering (dedup_connected_lsh) can consume these
     verified edges unchanged.
-    """.format(num=_SETSIM_NUM, den=_SETSIM_DEN)
+    """
     sig = _minhash_sig_cached(spark, sf)
     bands = _band_rows(sig.select("doc_id", "sig")).select("doc_id", "band", "band_sig")
     # narrow capped blocks: same window-cap + collect_list discipline

@@ -887,10 +887,11 @@ def _walk_step_sql(prev: str, s: int) -> str:
     tags=("graph", "sampling", "iterative"),
 )
 def graph_random_walks(spark: SparkSession, sf: str) -> DataFrame:
-    """Length-{K} hash-deterministic walks over the trade graph from
-    every {M}th customer node: per step, the frontier joins the edge
-    list and each walk keeps the neighbor with the minimal keyed md5
-    draw — the DeepWalk corpus sampler as a reproducible dataflow.
+    """Length-K (K=_WALK_STEPS) hash-deterministic walks over the trade
+    graph from every Mth (M=_WALK_SEED_MOD) customer node: per step, the
+    frontier joins the edge list and each walk keeps the neighbor with
+    the minimal keyed md5 draw — the DeepWalk corpus sampler as a
+    reproducible dataflow.
 
     100 TB shape: each step is ONE keyed join of the (walk_id, node)
     frontier against the CAPPED neighbor lists plus a map-side
@@ -901,7 +902,7 @@ def graph_random_walks(spark: SparkSession, sf: str) -> DataFrame:
     discipline). The cap subset is walk-independent (md5(src:dst)
     rank), so it is computed once per graph — at rest in production —
     and the WindowGroupLimit rewrite prunes it map-side here.
-    """.format(K=_WALK_STEPS, M=_WALK_SEED_MOD)
+    """
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
     l = t(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     e0 = (
@@ -1023,7 +1024,7 @@ _PPR_SEED_MOD = 10
 )
 def graph_ppr(spark: SparkSession, sf: str) -> DataFrame:
     """3-round integer personalized PageRank from the custkey %
-    {mod} == 0 seed cohort over the customer-supplier trade graph:
+    _PPR_SEED_MOD == 0 seed cohort over the customer-supplier trade graph:
     initial mass sits on seeds only, the 15% teleport restarts onto
     seeds only, and everything else follows graph_pagerank's exact
     bigint recursion (share = mass div deg, remainder stays home,
@@ -1038,7 +1039,7 @@ def graph_ppr(spark: SparkSession, sf: str) -> DataFrame:
     shares table starts at |seeds| rows and grows with the reached
     frontier, not the node count. The left join + coalesce keeps
     unreached nodes exact-zero (integer mass: no float drift).
-    """.format(mod=_PPR_SEED_MOD)
+    """
     e0 = (
         t(spark, sf, "orders")
         .join(t(spark, sf, "lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
@@ -1355,19 +1356,19 @@ def _hits_oracle() -> str:
 
 @query("graph_hits", oracle=_hits_oracle(), tags=("graph", "iterative", "hits"))
 def graph_hits(spark: SparkSession, sf: str) -> DataFrame:
-    """{r}-round unnormalized HITS over the purchase graph: customers
-    are pure hubs, suppliers pure authorities (the graph is
-    bipartite), scores are exact integer weighted-path counts — a
-    hub's score after round k counts length-2k alternating paths from
+    """r-round (r=_HITS_ROUNDS) unnormalized HITS over the purchase
+    graph: customers are pure hubs, suppliers pure authorities (the
+    graph is bipartite), scores are exact integer weighted-path counts —
+    a hub's score after round k counts length-2k alternating paths from
     it, which is exactly what normalized HITS ranks by.
 
     100 TB shape: the edge list is built once (one fact join +
     distinct, checkpointed pre-partitioned); each half-round is ONE
     map-side-combined sum shuffle keyed by the receiving side — the
     pagerank loop discipline with integer state and zero divisions.
-    Overflow headroom: scores grow ~ deg^{r2}; at B=1 start and 2
+    Overflow headroom: scores grow ~ deg^(2r-1); at B=1 start and 2
     rounds, even 1e6-degree hubs stay far inside int64.
-    """.format(r=_HITS_ROUNDS, r2=2 * _HITS_ROUNDS - 1)
+    """
     e0 = (
         t(spark, sf, "orders")
         .join(t(spark, sf, "lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))

@@ -15,8 +15,10 @@ from parquet_processor_spark.numeric import dsum, dsum_sql
 from parquet_processor_spark.io import (
     current_snapshot_version,
     expire_snapshots,
+    partition_files,
     publish_snapshot,
     read_snapshot,
+    rewrite_partitions,
     scratch_dir,
     stage_snapshot,
 )
@@ -741,8 +743,8 @@ def sink_manifest_pruned_scan(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # Dynamic partition overwrite — the nightly RESTATEMENT path: re-run
-# one day's partition in place without touching siblings (Spark's
-# partitionOverwriteMode=dynamic, the INSERT OVERWRITE contract).
+# one day's partition in place without touching siblings (the INSERT
+# OVERWRITE contract, committed by io.rewrite_partitions).
 # The restated day rewrites values through a deterministic adjustment
 # so the proof is two-sided: the restated partition changed exactly as
 # specified AND every other partition is byte-identical to source.
@@ -785,12 +787,7 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     restated = e.where(F.col("event_date") == day).withColumn(
         "value", F.col("value") * 2
     )
-    (
-        restated.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_date")
-        .parquet(out)
-    )
+    rewrite_partitions(restated, out, "event_date", [_RESTATE_DAY])
     back = spark.read.parquet(out)
     return back.groupBy("event_date").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1027,11 +1024,12 @@ def sink_targeted_delete(spark: SparkSession, sf: str) -> DataFrame:
     """Copy-on-write targeted delete over a bucket-partitioned orders
     table: write the table partitioned by ``o_custkey % _RTBF_BUCKETS``,
     pick the ~1% md5-sampled target customers, rewrite ONLY the
-    partitions holding a target (dynamic partition overwrite with the
-    targets anti-joined out), and emit one audit row. Two facts are
-    verified PHYSICALLY, not assumed: every untouched partition's
-    file listing is identical before and after (no spurious rewrite),
-    and a full re-read finds zero target rows (the deletion took).
+    partitions holding a target (:func:`rewrite_partitions` with the
+    targets anti-joined out; a partition left with no rows is deleted),
+    and emit one audit row. Two facts are verified PHYSICALLY, not
+    assumed: every untouched partition's file listing is identical
+    before and after (no spurious rewrite), and a full re-read finds
+    zero target rows (the deletion took).
 
     100 TB shape: the rewrite cost is proportional to the AFFECTED
     partitions, not the table — the target-bucket filter prunes the
@@ -1089,11 +1087,7 @@ def sink_targeted_delete(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
         .collect()  # eager-by-design: the affected-partition list IS catalog state (<= _RTBF_BUCKETS rows)
     ]
-    listing_before = {
-        b: sorted(os.listdir(os.path.join(out, f"bucket={b}")))
-        for b in range(_RTBF_BUCKETS)
-        if os.path.isdir(os.path.join(out, f"bucket={b}"))
-    }
+    untouched_intact = True
     if tb:
         remaining = (
             spark.read.parquet(out)
@@ -1101,22 +1095,7 @@ def sink_targeted_delete(spark: SparkSession, sf: str) -> DataFrame:
             .join(F.broadcast(targets), F.col("o_custkey") == F.col("target_key"), "left_anti")
             .select("o_orderkey", "o_custkey", "bucket")
         )
-        (
-            remaining.write.partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(out)
-        )
-    listing_after = {
-        b: sorted(os.listdir(os.path.join(out, f"bucket={b}")))
-        for b in range(_RTBF_BUCKETS)
-        if os.path.isdir(os.path.join(out, f"bucket={b}"))
-    }
-    untouched_intact = all(
-        listing_before[b] == listing_after.get(b)
-        for b in listing_before
-        if b not in set(tb)
-    )
+        untouched_intact = rewrite_partitions(remaining, out, "bucket", tb)
     after = spark.read.parquet(out)
     targets_remaining = (
         after.join(F.broadcast(targets), F.col("o_custkey") == F.col("target_key"), "left_semi")
@@ -1499,14 +1478,17 @@ _MERGE_INS = 13  # else % 13 == 0      -> INSERT (key -> -k, status 'I')
 )
 def sink_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """Copy-on-write MERGE against a bucket-partitioned orders table:
-    write orders partitioned by ``o_orderkey % {nb}``, derive a change
-    batch (deletes %{d}, updates %{u} -> status 'U', inserts %{i} ->
-    key -k / status 'I'; precedence delete > update > insert keeps the
+    write orders partitioned by ``o_orderkey % nb``, derive a change
+    batch (deletes % d, updates % u -> status 'U', inserts % i -> key
+    -k / status 'I'; nb=_MERGE_BUCKETS, d=_MERGE_DEL, u=_MERGE_UPD,
+    i=_MERGE_INS; precedence delete > update > insert keeps the
     classes disjoint), rewrite ONLY the buckets containing a changed
-    key, and emit one audit row. Verified physically, not assumed:
-    untouched partitions' file listings are identical before/after,
-    and a full re-read shows every delete gone, every insert present
-    with status 'I', every update reading 'U' (``merge_ok``).
+    key (:func:`rewrite_partitions`, which also deletes a bucket the
+    merge empties), and emit one audit row. Verified physically, not
+    assumed: untouched partitions' file listings are identical
+    before/after, and a full re-read shows every delete gone, every
+    insert present with status 'I', every update reading 'U'
+    (``merge_ok``).
 
     100 TB shape: the MERGE cost is proportional to AFFECTED
     partitions — the rewrite scan partition-prunes to the touched
@@ -1516,7 +1498,7 @@ def sink_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
     Production swaps modulo bucketing for the table's partition
     spec + a key->partition index, and deletion-vector/MoR formats
     defer the rewrite — the audit contract is format-agnostic.
-    """.format(nb=_MERGE_BUCKETS, d=_MERGE_DEL, u=_MERGE_UPD, i=_MERGE_INS)
+    """
     out = scratch_dir("ppspark_merge_")
     k = F.col("o_orderkey")
     base = t(spark, sf, "orders").select(
@@ -1563,11 +1545,7 @@ def sink_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
         .collect()  # eager-by-design: see above
     )
-    listing_before = {
-        b: sorted(os.listdir(os.path.join(out, f"bucket={b}")))
-        for b in range(_MERGE_BUCKETS)
-        if os.path.isdir(os.path.join(out, f"bucket={b}"))
-    }
+    untouched_intact = True
     if tb:
         at_rest = spark.read.parquet(out).where(F.col("bucket").isin(tb))
         ks = F.col("o_orderkey")
@@ -1588,38 +1566,7 @@ def sink_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
             F.pmod(-k, F.lit(_MERGE_BUCKETS)).alias("bucket"),
         )
         merged = survivors.unionByName(inserts)
-        written = {
-            r["bucket"]
-            # eager-by-design: <= _MERGE_BUCKETS catalog rows, and it must
-            # evaluate BEFORE the overwrite mutates `out` (merged is lazy)
-            for r in merged.select("bucket").distinct().collect()  # eager-by-design
-        }
-        (
-            merged.write.partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(out)
-        )
-        # Dynamic overwrite only swaps directories it writes: a touched
-        # bucket whose every row was deleted (and that received no
-        # insert) gets NO new data, so its stale directory would stay
-        # visible. Drop those directories explicitly — the delete must
-        # commit even when it empties the bucket.
-        import shutil
-        for b in set(tb) - written:
-            p = os.path.join(out, f"bucket={b}")
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-    listing_after = {
-        b: sorted(os.listdir(os.path.join(out, f"bucket={b}")))
-        for b in range(_MERGE_BUCKETS)
-        if os.path.isdir(os.path.join(out, f"bucket={b}"))
-    }
-    untouched_intact = all(
-        listing_before[b] == listing_after.get(b)
-        for b in listing_before
-        if b not in set(tb)
-    )
+        untouched_intact = rewrite_partitions(merged, out, "bucket", tb)
     after = spark.read.parquet(out)
     ka = F.col("o_orderkey")
     checks = (
@@ -1783,7 +1730,7 @@ _DV_DEL = 13  # o_orderkey % 13 == 0 -> deleted
 )
 def sink_merge_on_read_dv(spark: SparkSession, sf: str) -> DataFrame:
     """Merge-on-read delete: write orders bucket-partitioned, apply a
-    delete set (keys % {d} == 0) as PER-BUCKET deletion-vector
+    delete set (keys % _DV_DEL == 0) as PER-BUCKET deletion-vector
     sidecars under _dv/ — base data files byte-untouched (verified by
     file-listing compare, the MoR contract) — serve reads through the
     base ⟕anti DV join, then COMPACT (fold vectors into rewritten
@@ -1801,7 +1748,7 @@ def sink_merge_on_read_dv(spark: SparkSession, sf: str) -> DataFrame:
     over many deletes. Real DVs are positional bitmaps inside the
     format; the key-set sidecar here carries the same semantics at
     the engine level.
-    """.format(d=_DV_DEL)
+    """
     import shutil
 
     out = scratch_dir("ppspark_mor_dv_")
@@ -1822,21 +1769,12 @@ def sink_merge_on_read_dv(spark: SparkSession, sf: str) -> DataFrame:
         return spark.createDataFrame([(0, 0, 0, 0, True, True)], schema)
     base.write.partitionBy("bucket").mode("overwrite").parquet(base_dir)
 
-    listing_before = {
-        b: sorted(os.listdir(os.path.join(base_dir, f"bucket={b}")))
-        for b in range(_DV_BUCKETS)
-        if os.path.isdir(os.path.join(base_dir, f"bucket={b}"))
-    }
+    listing_before = partition_files(base_dir, "bucket")
     # the DELETE: write the dead keys as per-bucket sidecars — the only
     # bytes this operation writes anywhere
     dv = base.where(k % _DV_DEL == 0).select("o_orderkey", "bucket")
     dv.write.partitionBy("bucket").mode("overwrite").parquet(dv_dir)
-    listing_after = {
-        b: sorted(os.listdir(os.path.join(base_dir, f"bucket={b}")))
-        for b in range(_DV_BUCKETS)
-        if os.path.isdir(os.path.join(base_dir, f"bucket={b}"))
-    }
-    base_untouched = listing_before == listing_after
+    base_untouched = partition_files(base_dir, "bucket") == listing_before
 
     at_rest = spark.read.parquet(base_dir)
     dv_read = spark.read.parquet(dv_dir).select("o_orderkey", "bucket")

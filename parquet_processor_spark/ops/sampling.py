@@ -1172,21 +1172,21 @@ _CHUNK_SEQ_LEN = 512
 )
 def pack_concat_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """Assign every document its (sequence, offset) spans in the
-    concatenated-corpus layout: sequences are exactly {B} tokens, a
-    doc whose tokens straddle a boundary emits one span row per
-    touched sequence with in-doc and in-sequence offsets — the
-    manifest a shard writer uses to materialize fixed-length training
-    rows without padding.
+    concatenated-corpus layout: sequences are exactly B tokens
+    (B=_CHUNK_SEQ_LEN), a doc whose tokens straddle a boundary emits one
+    span row per touched sequence with in-doc and in-sequence offsets —
+    the manifest a shard writer uses to materialize fixed-length
+    training rows without padding.
 
     100 TB shape: the global token offset comes from the TWO-PHASE
     cumulative sum (data-derived buckets, per-bucket window,
     broadcast triangular offsets — windows.global_cumsum_before), so
     no single-partition Window.orderBy ever sees the corpus; the span
-    expansion is a generator bounded by ceil(doc_len/{B})+1 rows per
+    expansion is a generator bounded by ceil(doc_len/B)+1 rows per
     doc. Only (doc_id, counts) longs move — text never shuffles; the
     oracle spells the same arithmetic over a plain single-stream
     window.
-    """.format(B=_CHUNK_SEQ_LEN)
+    """
     from parquet_processor_spark.ops.windows import global_cumsum_before
 
     d = t(spark, sf, "documents").select(
@@ -1260,23 +1260,23 @@ _PPS_N = 500  # fixed sample positions; cum*n stays < 2^63 for corpora to ~1e16 
     tags=("sample", "pps", "weights"),
 )
 def sample_pps(spark: SparkSession, sf: str) -> DataFrame:
-    """Systematic PPS sample of orders by total price: {n} positions
-    at spacing T/{n} from start U = md5('pps:1') % T select each order
+    """Systematic PPS sample of orders by total price: n=_PPS_N positions
+    at spacing T/n from start U = md5('pps:1') % T select each order
     floor-counting positions inside its [cum, cum+size) interval —
     all arithmetic exact int64 (sizes in cents, positions scaled by
-    {n}; the +T shift keeps every div numerator non-negative so both
+    n; the +T shift keeps every div numerator non-negative so both
     engines' integral division agrees), big units can be drawn
-    multiple times (n_hits), and ht_weight = T/({n}*size) is the
+    multiple times (n_hits), and ht_weight = T/(n*size) is the
     exact Horvitz-Thompson reciprocal inclusion density.
 
     100 TB shape: the cumulative line is the TWO-PHASE global cumsum
     (global_cumsum_before — data-derived key-range buckets, no
     single-partition sort over the order spine); T and U are a 1-row
     broadcast; selection is codegen arithmetic beside the scan. The
-    {n}-position design keeps cum*{n} inside int64 to ~1e16 cents of
+    n-position design keeps cum*n inside int64 to ~1e16 cents of
     corpus mass; past that the same formulas widen to decimal(38,0)
     unchanged.
-    """.format(n=_PPS_N)
+    """
     from parquet_processor_spark.ops.windows import global_cumsum_before
 
     sized = t(spark, sf, "orders").select(
@@ -1369,9 +1369,9 @@ def sample_stratified_neyman(spark: SparkSession, sf: str) -> DataFrame:
     """Neyman-optimal stratified sample of documents by language:
     per-stratum SD of n_chars from exact integer moments (population
     form — a 1-doc stratum contributes zero mass, never a
-    divide-by-zero), budget {b} split largest-remainder on N_h*S_h
-    shares (exactly exhausting the budget, capped at stratum size),
-    then the md5-rank deterministic pick inside each stratum with
+    divide-by-zero), budget b=_NEYMAN_BUDGET split largest-remainder on
+    N_h*S_h shares (exactly exhausting the budget, capped at stratum
+    size), then the md5-rank deterministic pick inside each stratum with
     design weight N_h/n_h.
 
     100 TB shape: stratum moments are ONE map-side-combined
@@ -1381,7 +1381,7 @@ def sample_stratified_neyman(spark: SparkSession, sf: str) -> DataFrame:
     broadcast allocation. sqrt is IEEE correctly-rounded, every other
     number is exact-int-derived, and the share formulas are one text
     — so even the double allocation ranks identically cross-engine.
-    """.format(b=_NEYMAN_BUDGET)
+    """
     st = t(spark, sf, "documents").groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("nh"),
         F.sum("n_chars").cast("long").alias("sx"),
@@ -1458,15 +1458,16 @@ _KFOLD_K = 5
     tags=("sampling", "dedup", "graph", "cv"),
 )
 def sample_kfold(spark: SparkSession, sf: str) -> DataFrame:
-    """Cluster-keyed {k}-fold assignment: fold = md5-60bit(cluster_id)
-    mod {k} over the connected-component dedup labels.
+    """Cluster-keyed k-fold (k=_KFOLD_K) assignment: fold =
+    md5-60bit(cluster_id) mod k over the connected-component dedup
+    labels.
 
     100 TB shape: identical cost profile to split_leakage_safe — the
     closure labels are computed anyway by the dedup pass; the fold id
     is a narrow md5 projection on the label column (no extra
     shuffle). The 60-bit hash is non-negative, so `%` agrees across
     engines without a floorMod dance.
-    """.format(k=_KFOLD_K)
+    """
     from parquet_processor_spark.ops import dedup
 
     labels = dedup.dedup_connected(spark, sf).select("doc_id", "cluster_id")

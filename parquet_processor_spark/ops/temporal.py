@@ -2608,15 +2608,15 @@ _TREND_K = 5
     tags=("temporal", "window", "topk"),
 )
 def events_trending_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{k} users per hour by event count, rank carried and ties
-    broken by user_id so the leaderboard is deterministic.
+    """Top-k (k=_TREND_K) users per hour by event count, rank carried
+    and ties broken by user_id so the leaderboard is deterministic.
 
     100 TB shape: one map-side-combined (hour, user) count, then a
     WindowGroupLimit-rewritten rank filter — per-task partial top-k
     before the hour-keyed exchange (plan-asserted). State per hour is
     k rows; the full user×hour matrix never materializes anywhere
     downstream of the first aggregate.
-    """.format(k=_TREND_K)
+    """
     c = (
         t(spark, sf, "events")
         .groupBy(
@@ -2716,10 +2716,11 @@ def _cuped_oracle() -> str:
 
 @query("events_cuped", oracle=_cuped_oracle(), tags=("temporal", "experiment", "cuped"))
 def events_cuped(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-arm CUPED-adjusted experiment readout: users hash-split
-    into two arms, X = pre-{cut} event count, Y = post-{cut} purchase
-    cents; reports raw and adjusted means plus raw and adjusted
-    variances (the shrink is the sensitivity win CUPED exists for).
+    """Per-arm CUPED-adjusted experiment readout: users hash-split into
+    two arms, X = pre-cut event count, Y = post-cut purchase cents
+    (cut=_CUPED_CUT); reports raw and adjusted means plus raw and
+    adjusted variances (the shrink is the sensitivity win CUPED exists
+    for).
 
     100 TB shape: the corpus collapses to the user spine in ONE
     map-side-combined aggregate (arm, X, Y per user); pooled theta is
@@ -2728,7 +2729,7 @@ def events_cuped(spark: SparkSession, sf: str) -> DataFrame:
     exact sums, so the readout hash-checks bitwise — and the
     degenerate cases (constant X) yield NULL theta via nullif, not an
     ANSI error.
-    """.format(cut=_CUPED_CUT)
+    """
     e = t(spark, sf, "events")
     cut = F.lit(f"{_CUPED_CUT} 00:00:00").cast("timestamp")
     u = e.groupBy("user_id").agg(
@@ -3027,7 +3028,7 @@ def _did_texts() -> tuple[str, str]:
     tags=("temporal", "experiment", "causal", "did"),
 )
 def events_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
-    """Difference-in-differences over the {cut} boundary: per-user
+    """Difference-in-differences over the _CUPED_CUT boundary: per-user
     purchase cents pre/post, arm 1 treated vs arm 0 control (the
     CUPED split), DiD = (treated change) - (control change) with the
     pooled per-cell variance SE. One row; degenerate cells go NULL
@@ -3040,7 +3041,7 @@ def events_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
     that row. The same plan as events_cuped — the causal kit's three
     artifacts (SRM gate, CUPED readout, DiD estimate) all price at
     one user-spine pass each.
-    """.format(cut=_CUPED_CUT)
+    """
     e = t(spark, sf, "events")
     cut = F.lit(f"{_CUPED_CUT} 00:00:00").cast("timestamp")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
@@ -3267,15 +3268,16 @@ _ACF_R = (
     tags=("temporal", "timeseries", "diagnostic"),
 )
 def events_autocorrelation(spark: SparkSession, sf: str) -> DataFrame:
-    """Lag-1..{k} ACF of daily event counts (Pearson over lagged
-    pairs; lags with < 2 pairs or zero variance go NULL via nullif).
+    """Lag-1..k (k=_ACF_MAX_LAG) ACF of daily event counts (Pearson over
+    lagged pairs; lags with < 2 pairs or zero variance go NULL via
+    nullif).
 
     100 TB shape: the event stream collapses to the |days| spine in
     ONE map-side-combined aggregate; the lag fan-out and self-join
     run on that tiny spine (broadcast), and each lag's statistic is a
     shared-text expression over six integers — event volume only ever
     touches the first aggregate.
-    """.format(k=_ACF_MAX_LAG)
+    """
     daily = (
         t(spark, sf, "events")
         .where(F.col("ts").isNotNull())

@@ -1953,20 +1953,21 @@ _COLL_TOPK = 50
     tags=("text", "collocation", "pmi"),
 )
 def text_collocations(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{k} collocations by PMI odds ratio (support >= {s}):
-    (wa, wb, counts, pmi_ratio) with ratio = n_ab*T/(n_a*n_b) — the
-    exact monotone image of PMI, computed as one division of double-
-    cast exact counts (the operand tree is spelled identically in
-    both engines, so the ranking and the score hash-check).
+    """Top-k (k=_COLL_TOPK) collocations by PMI odds ratio (support >=
+    s, s=_COLL_MIN_SUPPORT): (wa, wb, counts, pmi_ratio) with ratio =
+    n_ab*T/(n_a*n_b) — the exact monotone image of PMI, computed as one
+    division of double- cast exact counts (the operand tree is spelled
+    identically in both engines, so the ranking and the score
+    hash-check).
 
     100 TB shape: bigram expansion is map-only array arithmetic over
     the tokenized row (the quality_bigram_lm rule — never a
     positional self-join); both count aggregates are map-side
     combined; the unigram join keys on the vocabulary (broadcast
     below the vocab cap); T is a 1-row broadcast; and the final
-    ranking compiles to TakeOrderedAndProject — per-task top-{k},
+    ranking compiles to TakeOrderedAndProject — per-task top-k,
     never a global sort.
-    """.format(k=_COLL_TOPK, s=_COLL_MIN_SUPPORT)
+    """
     w = t(spark, sf, "documents").select(
         "doc_id",
         F.expr(r"filter(split(text, '\\s+'), x -> x != '')").alias("words"),
@@ -2051,8 +2052,8 @@ def _textrank_oracle() -> str:
 
 @query("text_textrank_keywords", oracle=_textrank_oracle(), tags=("text", "keywords", "graph"))
 def text_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-{k} corpus keywords by 3-round integer PageRank over the
-    distinct word-adjacency graph (undirected, both directions
+    """Top-k (k=_TR_TOPK) corpus keywords by 3-round integer PageRank
+    over the distinct word-adjacency graph (undirected, both directions
     materialized; self-loops dropped) — (word, deg, mass) ranked
     mass-desc with a word tie-break.
 
@@ -2063,7 +2064,7 @@ def text_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
     checkpointed edge list; the final ranking compiles to
     TakeOrderedAndProject. Nodes are words (value domain), so the
     shuffle keys are short strings bounded by vocabulary, not corpus.
-    """.format(k=_TR_TOPK)
+    """
     from parquet_processor_spark.ops.graph import _B, _ROUNDS, _mass_step
 
     w = t(spark, sf, "documents").select(

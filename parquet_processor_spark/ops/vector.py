@@ -114,6 +114,18 @@ def _sig_matrix(
     return out
 
 
+def _nan_rows(emb: pd.Series) -> np.ndarray:
+    """float64 matrix of the embeddings in ``emb`` with a null embedding
+    as a row of NaN, so every fold it enters is NaN, which PySpark's
+    Arrow serializer returns as null."""
+    live = emb.notna().to_numpy()
+    rows = _rows_matrix(emb[live], np.float64)
+    out = np.full((len(emb), rows.shape[1] or 1), np.nan)
+    if live.any():
+        out[live] = rows
+    return out
+
+
 def _codebook(
     rows, id_col: str, vec_col: str, group_col: str | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -640,7 +652,8 @@ def bucket_pair_cos(e: DataFrame, n_bands: int, cap: int = _EMB_BUCKET_CAP) -> D
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-        E = _rows_matrix(pdf["embedding"], np.float64)
+        # Null policy: a pair with a null embedding scores null, as the JVM dot/(na*nb).
+        E = _nan_rows(pdf["embedding"])
         ii, jj = np.triu_indices(s, k=1)
         out_a, out_b, out_c = [], [], []
         for lo in range(0, len(ii), 65536):  # bounded scratch per chunk
@@ -2077,11 +2090,10 @@ def pair_cos_arrow():
     sf0.1.
     """
 
+    # Null policy: a pair with a null side scores null, as the JVM dot/(na*nb).
     @F.pandas_udf("double")
     def cos(ea: pd.Series, eb: pd.Series, na: pd.Series, nb: pd.Series) -> pd.Series:
-        if len(ea) == 0:
-            return pd.Series([], dtype="float64")
-        d = _fold(_rows_matrix(ea, np.float64) * _rows_matrix(eb, np.float64))
+        d = _fold(_nan_rows(ea) * _nan_rows(eb))
         return pd.Series(d / (na.to_numpy() * nb.to_numpy()))
 
     return cos
@@ -3660,7 +3672,7 @@ def _mrr_oracle() -> str:
 
 @query("eval_retrieval_mrr", oracle=_mrr_oracle(), tags=("vector", "knn", "eval", "retrieval"))
 def eval_retrieval_mrr(spark: SparkSession, sf: str) -> DataFrame:
-    """Mean reciprocal rank and hit-rate@{k} of the banded-LSH kNN
+    """Mean reciprocal rank and hit-rate@k (k=_KNN_K) of the banded-LSH kNN
     graph, grading same-label neighbors as relevant.
 
     100 TB shape: rides sim_knn_graph's capped-bucket plan (K rows
@@ -3669,7 +3681,7 @@ def eval_retrieval_mrr(spark: SparkSession, sf: str) -> DataFrame:
     one map-side-combined min; the metrics are a 1-row expression
     over exact integers (sixtieths), so the floats are two divisions
     — bitwise cross-engine regardless of partitioning.
-    """.format(k=_KNN_K)
+    """
     # r14 (guide §2.4 — duplicated subtrees): the K-rows-per-vector
     # graph feeds BOTH the relevance join and the n_queries count;
     # unshared, the whole banded-LSH + pair-score + top-K subtree
@@ -3825,12 +3837,11 @@ def _ivf_curve_oracle() -> str:
     tags=("vector", "ivf", "report", "evidence"),
 )
 def report_ivf_recall_curve(spark: SparkSession, sf: str) -> DataFrame:
-    """Brute-force top-10 overlap of the IVF ANN at probe depths
-    num/8 of the derived cell count for num in {nums}: one row per
-    depth with the resolved absolute nprobe, exact counts both
-    engines. num=4 is the served operating point
-    (sim_topk_ivf_nprobe); num=8 probes every cell and must recover
-    the brute-force list exactly.
+    """Brute-force top-10 overlap of the IVF ANN at probe depths num/8
+    of the derived cell count for num in _IVF_CURVE_NUMS: one row per
+    depth with the resolved absolute nprobe, exact counts both engines.
+    num=4 is the served operating point (sim_topk_ivf_nprobe); num=8
+    probes every cell and must recover the brute-force list exactly.
 
     100 TB shape: each arm is the sim_topk_ivf_nprobe plan (broadcast
     centroids + broadcast probe list — cost multiplier = probed
@@ -3838,7 +3849,7 @@ def report_ivf_recall_curve(spark: SparkSession, sf: str) -> DataFrame:
     serving team picks nprobe for a recall target on THEIR corpus,
     and its monotone shape + full recovery at n_cells probes are
     pinned by tests/test_r13_invariants.py.
-    """.format(nums=list(_IVF_CURVE_NUMS))
+    """
     # eager-by-design: the 10-row brute result is consumed by all
     # {len_arms} arms — without the cut each arm re-executes the
     # brute-force scan (r13 advice)
@@ -3955,18 +3966,18 @@ _IVF_TARGET_RECALL_10 = 7  # >= 7 of the brute top-10
 )
 def report_ivf_operating_point(spark: SparkSession, sf: str) -> DataFrame:
     """The operating-point pick off report_ivf_recall_curve: the
-    smallest probe depth (eighths numerator) whose measured brute-
-    force overlap reaches min({target}, n_brute) — the min() keeps an
-    under-10-result corpus from making the target unreachable — plus
-    whether the standing served depth (num={served}) satisfies the
-    target on this corpus. Monotone curve => the pick is the exact
-    knee, and full probe always qualifies, so the pick exists for any
-    non-empty corpus.
+    smallest probe depth (eighths numerator) whose measured brute- force
+    overlap reaches min(target, n_brute), target = _IVF_TARGET_RECALL_10
+    — the min() keeps an under-10-result corpus from making the target
+    unreachable — plus whether the standing served depth
+    (num=_IVF_SERVE_NUM) satisfies the target on this corpus. Monotone
+    curve => the pick is the exact knee, and full probe always
+    qualifies, so the pick exists for any non-empty corpus.
 
     100 TB shape: the curve's arms (each cost ∝ its probed fraction)
     dominate; the pick is a 5-row aggregate. Run after re-index or
     drift: served_depth_ok flipping false IS the re-tune alarm.
-    """.format(target=_IVF_TARGET_RECALL_10, served=_IVF_SERVE_NUM)
+    """
     curve = report_ivf_recall_curve(spark, sf).localCheckpoint(
         eager=True
     )  # eager-by-design: 5-row curve read by pick + join

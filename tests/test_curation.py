@@ -1432,7 +1432,13 @@ def test_merge_upsert_audit_and_physical_flags(spark, sf_dir):
     )
     from parquet_processor_spark.tables import t
 
-    r = sink_merge_upsert(spark, sf_dir).collect()[0]
+    from .conftest import jobs_in_group
+
+    # the build runs 12 jobs at sf0.001 on 4 cores, so a new eager
+    # action in the sink fails here
+    df, build = jobs_in_group(spark, "merge_upsert_build", lambda: sink_merge_upsert(spark, sf_dir))
+    [r], run = jobs_in_group(spark, "merge_upsert_run", df.collect)
+    assert build <= 12 and run <= 1, (build, run)
     keys = [x["o_orderkey"] for x in t(spark, sf_dir, "orders").select("o_orderkey").collect()]
     n_del = sum(1 for k in keys if k % _MERGE_DEL == 0)
     n_upd = sum(1 for k in keys if k % _MERGE_DEL != 0 and k % _MERGE_UPD == 0)
@@ -1720,6 +1726,51 @@ def test_merge_upsert_partial_touch_and_delete_only_bucket(spark, tmp_path):
     # i.e. the emptied bucket's stale directory was really dropped
     assert r["untouched_intact"] is True
     assert r["merge_ok"] is True
+
+
+def test_targeted_delete_commits_when_it_empties_a_bucket(spark, tmp_path, monkeypatch):
+    """sink_targeted_delete's twin of the delete-only bucket: every
+    order in one bucket belongs to one forgotten customer, so the
+    rewrite has no rows for that bucket. A dynamic overwrite alone
+    leaves such a bucket's directory, and its rows, in place; the
+    commit must delete it."""
+    import datetime as _dt
+    import hashlib
+
+    from parquet_processor_spark.ops import roundtrip
+    from parquet_processor_spark.tables import TABLES, t
+
+    from .conftest import SF_SMALL
+
+    # the first key _rtbf_target_pred selects, spelled in Python
+    target = next(
+        k
+        for k in range(1, 10_000)
+        if int(hashlib.md5(str(k).encode()).hexdigest()[:13], 16) % roundtrip._RTBF_MOD == 0
+    )
+    bucket = target % roundtrip._RTBF_BUCKETS
+    kept = [c for c in range(1, 40) if c % roundtrip._RTBF_BUCKETS != bucket][:20]
+    ts = _dt.datetime(2024, 1, 1)
+    orders = [(o, target, "O", 100.0, ts, "1-URGENT") for o in (1, 2, 3)]
+    orders += [(10 + i, c, "O", 100.0, ts, "1-URGENT") for i, c in enumerate(kept)]
+    d = tmp_path / "rtbf_fixture"
+    for tab in TABLES:
+        base = t(spark, SF_SMALL, tab).limit(0)
+        if tab == "orders":
+            base = base.unionByName(spark.createDataFrame(orders, base.schema))
+        if tab == "customer":
+            base = base.unionByName(spark.createDataFrame([(target, "c", 1, 0.0, "X")], base.schema))
+        base.write.mode("overwrite").parquet(str(d / f"{tab}.parquet"))
+    table = tmp_path / "rtbf_table"
+    monkeypatch.setattr(roundtrip, "scratch_dir", lambda prefix: str(table))
+
+    [r] = roundtrip.sink_targeted_delete(spark, str(d)).collect()
+    assert (r["rows_before"], r["rows_deleted"], r["rows_after"]) == (23, 3, 20)
+    assert r["n_partitions_rewritten"] == 1
+    assert r["targets_remaining"] == 0
+    assert r["untouched_intact"] is True
+    assert not (table / f"bucket={bucket}").exists()
+    assert spark.read.parquet(str(table)).count() == r["rows_after"]
 
 
 def test_scc_on_a_crafted_graph_with_known_components(spark, tmp_path):

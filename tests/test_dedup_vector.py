@@ -1356,6 +1356,38 @@ def test_arrow_sign_kernels_match_jvm_on_a_null_embedding(spark, sf_dir):
     assert rows[0][0] == rows[0][1]
 
 
+def test_pair_cos_kernels_match_jvm_on_a_null_embedding(spark, sf_dir):
+    # Null policy of the pair-cosine kernels: the JVM dot/(na*nb) of a
+    # pair with a null side is null, and so is the DuckDB oracle's; each
+    # Arrow kernel must score that pair null beside non-null pairs, not
+    # raise in the Python worker. Two null vectors share every band
+    # bucket, so bucket_pair_cos scores their pair too.
+    from parquet_processor_spark.ops.vector import bucket_pair_cos, pair_cos_arrow
+    from parquet_processor_spark.tables import t
+
+    two = t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 2).select("vec_id", "embedding")
+    e = two.unionByName(
+        spark.range(-2, 0).select(
+            F.col("id").cast(two.schema["vec_id"].dataType).alias("vec_id"),
+            F.lit(None).cast(two.schema["embedding"].dataType).alias("embedding"),
+        )
+    )
+    a = e.select(F.col("vec_id").alias("ida"), F.col("embedding").alias("ea"), norm(F.col("embedding")).alias("na"))
+    b = e.select(F.col("vec_id").alias("idb"), F.col("embedding").alias("eb"), norm(F.col("embedding")).alias("nb"))
+    ea, eb, na, nb = (F.col(c) for c in ("ea", "eb", "na", "nb"))
+    pairs = a.join(b, F.col("ida") < F.col("idb")).select(
+        "ida", "idb", (dot(ea, eb) / (na * nb)).alias("jvm"), pair_cos_arrow()(ea, eb, na, nb).alias("arw")
+    )
+    rows = {(r["ida"], r["idb"]): (r["jvm"], r["arw"]) for r in pairs.collect()}
+    assert len(rows) == 6
+    for (ida, _), (jvm, arw) in rows.items():
+        assert jvm == arw
+        assert (jvm is None) == (ida < 0)
+    scored = {(r["a_id"], r["b_id"]): r["cos_sim"] for r in bucket_pair_cos(e, 4).collect()}
+    assert scored[(-2, -1)] is None
+    assert all(c == rows[pair][0] for pair, c in scored.items())
+
+
 def test_bitext_mutual_is_a_partial_matching(spark, sf_dir):
     # mutual-argmax output is a partial matching: each src pairs with
     # at most one tgt and vice versa; langs are the declared slice; and

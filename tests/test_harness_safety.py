@@ -195,6 +195,25 @@ def test_query_docstrings_name_no_module_constant_in_braces():
     assert not offenders, f"docstrings with literal {{name}} placeholders: {offenders}"
 
 
+def test_query_docstrings_are_plain_strings():
+    # A body that opens with """...""".format(...) is an expression, not
+    # a docstring: __doc__ is None, so help() and the placeholder check
+    # above never see the text. Name the constant in a plain docstring.
+    import ast
+    import inspect
+    import textwrap
+
+    from parquet_processor_spark.registry import all_queries
+
+    offenders = []
+    for name, fn in all_queries().items():
+        first = ast.parse(textwrap.dedent(inspect.getsource(fn))).body[0].body[0]
+        call = first.value if isinstance(first, ast.Expr) else None
+        if isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute) and call.func.attr == "format":
+            offenders.append(name)
+    assert not offenders, f"queries whose docstring is a str.format call: {offenders}"
+
+
 def test_injected_id_offset_clears_fixture_ids(spark):
     # multimodal_dedup_bytes and multimodal_dedup_perceptual re-key
     # injected duplicates as media_id + 1_000_000_000; if the fixture
@@ -323,4 +342,21 @@ def test_only_io_spells_the_snapshot_layout():
             offenders.append(f"{name}: snapshot layout")
         if "os.rename(" in text:
             offenders.append(f"{name}: os.rename(")
+    assert not offenders, offenders
+
+
+def test_only_io_spells_the_partition_overwrite():
+    # One copy-on-write partition commit: io.rewrite_partitions owns the
+    # dynamic overwrite, the listing compare and the emptied-partition
+    # delete. A module that sets partitionOverwriteMode itself has forked
+    # it, and a dynamic overwrite alone leaves an emptied partition's
+    # old rows visible.
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "parquet_processor_spark"
+    offenders = [
+        str(path.relative_to(pkg))
+        for path in sorted(pkg.rglob("*.py"))
+        if str(path.relative_to(pkg)) != "io.py" and "partitionOverwriteMode" in path.read_text()
+    ]
     assert not offenders, offenders

@@ -1,6 +1,7 @@
 """Sink-protocol contract tests: crash behavior of the versioned
 snapshot commit (the pointer-file protocol sink_versioned_snapshots
-publishes with) and the training-shard layout contract."""
+publishes with), the copy-on-write partition rewrite, and the
+training-shard layout contract."""
 
 from __future__ import annotations
 
@@ -12,8 +13,10 @@ from pyspark.sql import functions as F
 from parquet_processor_spark.io import (
     current_snapshot_version,
     expire_snapshots,
+    partition_files,
     publish_snapshot,
     read_snapshot,
+    rewrite_partitions,
     stage_snapshot,
 )
 from parquet_processor_spark.tables import t
@@ -152,6 +155,36 @@ def test_dynamic_overwrite_touches_only_the_restated_day(spark, sf_dir, tmp_path
     changed = [d for d in before if before[d] != after.get(d)]
     assert changed == [f"event_date={_RESTATE_DAY}"]
     assert set(before) == set(after), "dynamic overwrite dropped sibling partitions"
+
+
+def test_rewrite_partitions_drops_emptied_and_keeps_untouched_partitions(spark, tmp_path):
+    # p=0 is touched and gets no rows (emptied: its directory must go),
+    # p=1 is touched and rewritten, p=2 is untouched (listing and bytes
+    # stable); a write that lands outside `touched` reports False
+    import hashlib
+
+    root = str(tmp_path / "t")
+    rows = spark.createDataFrame([(i, i % 3) for i in range(12)], "k long, p int")
+    rows.write.partitionBy("p").mode("overwrite").parquet(root)
+
+    def digests(value):
+        d = tmp_path / "t" / f"p={value}"
+        return {f.name: hashlib.md5(f.read_bytes()).hexdigest() for f in d.iterdir()}
+
+    before = partition_files(root, "p")
+    assert sorted(before) == ["0", "1", "2"] and all(before.values())
+    kept = digests(2)
+    new = spark.read.parquet(root).where(F.col("p") == 1).withColumn("k", F.col("k") * 10)
+    assert rewrite_partitions(new, root, "p", [0, 1])
+    after = partition_files(root, "p")
+    assert sorted(after) == ["1", "2"]
+    assert after["1"] != before["1"] and after["2"] == before["2"]
+    assert digests(2) == kept
+    got = sorted((r["k"], r["p"]) for r in spark.read.parquet(root).collect())
+    assert got == sorted([(k * 10, 1) for k in (1, 4, 7, 10)] + [(k, 2) for k in (2, 5, 8, 11)])
+
+    outside = spark.createDataFrame([(99, 2)], "k long, p int")
+    assert not rewrite_partitions(outside, root, "p", [1])
 
 
 def test_checked_publish_blocks_dirty_snapshots_and_keeps_readers_on_last_good(spark, sf_dir):
