@@ -60,7 +60,11 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """dot / (norm * norm); null when either side is all-zero (zero
+    divisor), as DuckDB's 0.0/0.0 and the Arrow kernels' NaN are, where
+    ANSI division would raise. Any other divisor is the same one IEEE
+    division."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 # The NumPy kernel layer: every Arrow kernel in this module builds its
@@ -147,8 +151,9 @@ def _cos_best(emat: np.ndarray, cmat: np.ndarray) -> tuple[np.ndarray, np.ndarra
     na = np.sqrt(_fold(emat * emat))
     ncs = np.sqrt(_fold(cmat * cmat))
     scores = np.empty((emat.shape[0], len(cmat)), dtype=np.float64)
-    for j in range(len(cmat)):
-        scores[:, j] = _fold(emat * cmat[j]) / (na * ncs[j])
+    with np.errstate(invalid="ignore", divide="ignore"):  # a zero-norm row scores NaN
+        for j in range(len(cmat)):
+            scores[:, j] = _fold(emat * cmat[j]) / (na * ncs[j])
     idx = np.argmax(scores, axis=1)
     return idx, scores[np.arange(len(idx)), idx]
 
@@ -275,57 +280,94 @@ def lloyd_round(
     return cids[kept], cents, n_rows, inertia
 
 
-def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """Map-side IVF cell assignment: collect the (cid, c_emb) centroid
-    table once (bounded control state — sqrt(N) rows by the derived
-    geometry), ship it to the executors inside an Arrow kernel's
-    closure, and pick each vector's best cell with a per-batch NumPy
-    argmax — one ArrowEvalPython pass beside the scan, zero shuffle.
+def _lloyd(
+    df: DataFrame, col: str, k: int, iters: int, metric: str, group: str | None = None
+) -> tuple[np.ndarray, np.ndarray, float | None]:
+    """Deterministic Lloyd training of the codebook of ``df[col]``: the
+    seeds are the rows of vec_id 1..k (k per group with ``group``, no
+    RNG), then ``iters`` :func:`lloyd_round` passes, a fixed count with
+    no float-convergence test. One job for the seed collect and one per
+    round. Returns (cids, centroids, loss of round 1), the loss against
+    the seeds (None when no row was assigned)."""
+    seeds = df.where(F.col("vec_id").between(1, k)).collect()  # eager-by-design: k seed rows per group
+    cids, cmat = _codebook(seeds, "vec_id", col, group_col=group)
+    loss_init = None
+    for r in range(iters):
+        cids, cmat, _, loss = lloyd_round(df, col, cids, cmat, metric, group)
+        if r == 0:
+            loss_init = loss
+    return cids, cmat, loss_init
 
-    r14 optimization (guide §4.2, the pair_cos_arrow precedent): the
-    previous shape evaluated three interpreted higher-order folds per
-    (row, centroid) — dot + both norms via zip_with/aggregate — which
-    at the SF-derived cell count (n_cells = √N) cost ~3.1 s at sf0.1
-    vs 0.30 s for this kernel (measured; plans/r14). Bit-exactness is
-    preserved because every sum is :func:`_fold` (float32→float64
-    casts are exact, norms are the same sqrt-of-fold, the cosine is the
-    same one-IEEE-division of dot/(na*nc)), np.argmax resolves ties —
-    and NaNs — to the lowest centroid id exactly like the previous
-    (s, -cid) struct max, and
-    the bitwise equality of every (cell, best_cos) against the old
-    expression tree is pinned by tests/test_dedup_vector.py.
 
-    The naive shape (crossJoin + groupBy + max_by) funnels the FULL
-    float vectors through an Exchange just to pick a winner — at 100 TB
-    that is a corpus-wide shuffle of the widest column for what is
-    per-row arithmetic (FAISS assigns cells map-side for the same
-    reason, with exactly this broadcast-centroid layout).
+def _lloyd_evidence(
+    df: DataFrame, col: str, k: int, iters: int, metric: str, group: str | None = None
+) -> tuple[int, bool | None]:
+    """(rows, loss(final) <= loss(init)) of a :func:`_lloyd` training:
+    one more pass against the trained codebook gives the row count and
+    the final loss. Lloyd never increases the loss, so the gate is that
+    boolean, with 1e-9 slack for the float sum; exact centroid floats
+    depend on partial-sum order, the boolean does not. Null when either
+    loss is (no row assigned)."""
+    cids, cmat, loss_init = _lloyd(df, col, k, iters, metric, group)
+    _, _, n_rows, loss_final = lloyd_round(df, col, cids, cmat, metric, group)
+    if loss_init is None or loss_final is None:
+        return n_rows, None
+    return n_rows, loss_final <= loss_init + 1e-9
 
-    Returns e's columns plus ``cell`` (winning centroid id) and
-    ``best_cos`` (its cosine score).
+
+def nearest(
+    vec: Column, cids: np.ndarray, cmat: np.ndarray, metric: str, group: Column | None = None
+) -> Column:
+    """struct<cell bigint, score double>: each row's nearest centroid of
+    a :func:`_codebook` (cids, cmat), by :func:`_cos_best` (``metric``
+    "cos", the cosine) or :func:`_l2_best` ("l2", L2²). With ``group``
+    the cids are (group, id) rows and a row is scored only against its
+    own group's centroids. The codebook rides the kernel's closure: one
+    ArrowEvalPython pass beside the scan, no shuffle, the corpus never
+    moves (FAISS assigns cells map-side in the same layout).
+
+    Every sum is :func:`_fold`, so each score is bitwise the JVM and
+    DuckDB folds: float32 and |int| <= 2^53 cast to float64 exactly, a
+    fold's 0.0 seed is bitwise-neutral (squares are never -0.0), the
+    cosine is one IEEE division of dot/(na*nc), and the first-hit
+    argmax/argmin over id-ascending rows is the struct-min/max and
+    ``order by score, cid`` tie rule.
+
+    Policy, that of the DuckDB twins (a null or 0/0 score sorts last):
+    a null, all-NaN or (cos) zero-norm row gets the lowest centroid id
+    of its group and a null score; an empty codebook gives a null cell;
+    a group with no centroid raises. A centroid that would score NaN
+    against every row, a non-finite coordinate or (cos) zero norm,
+    raises here: argmax takes it first, DuckDB last.
     """
-    cids, cmat = _codebook(cent.select("cid", "c_emb").collect(), "cid", "c_emb")  # eager-by-design:
-    # n_cells = sqrt(N) control rows — the same mass the previous
-    # shape collapsed into a single broadcast array row
+    best = {"cos": _cos_best, "l2": _l2_best}[metric]
+    if not np.isfinite(cmat).all() or (metric == "cos" and len(cmat) and not _fold(cmat * cmat).all()):
+        raise ValueError(f"nearest: a centroid scores NaN under {metric}")
+    ids = cids[:, 1] if group is not None else cids
+    cg = cids[:, 0] if group is not None else np.zeros(len(cids), dtype=np.int64)
 
-    # Null policy: a null embedding gives (null, null). No fixture row
-    # is null; the old struct max gave (lowest cid, null) there.
-    @F.pandas_udf("cell bigint, best_cos double")
-    def _best(emb: pd.Series) -> pd.DataFrame:
-        mask = emb.notna().to_numpy()
-        cell = pd.Series([None] * len(emb), dtype="object")
-        best_cos = pd.Series([None] * len(emb), dtype="object")
-        if len(cids) and mask.any():
-            idx, best = _cos_best(_rows_matrix(emb[mask], np.float64), cmat)
-            if mask.all():
-                return pd.DataFrame({"cell": cids[idx], "best_cos": best})
-            cell[mask], best_cos[mask] = list(cids[idx]), list(best)
-        return pd.DataFrame({"cell": cell, "best_cos": best_cos})
+    @F.pandas_udf("cell bigint, score double")
+    def _nearest(v: pd.Series, g: pd.Series) -> pd.DataFrame:
+        if not len(cids):
+            return pd.DataFrame({"cell": pd.Series([None] * len(v), dtype="object"), "score": np.nan})
+        idx, score = _group_best(best, _nan_rows(v), g.to_numpy(), cg, cmat)
+        return pd.DataFrame({"cell": ids[idx], "score": score})
 
-    return e.withColumn("_best", _best(F.col("embedding"))).select(
+    return _nearest(vec, F.lit(0) if group is None else group)
+
+
+def assign_cells(e: DataFrame, cent: DataFrame) -> DataFrame:
+    """e's columns plus ``cell`` and ``best_cos``: each embedding's
+    max-cosine centroid of the (cid, c_emb) table and its score, by
+    :func:`nearest`. The centroid table is bounded control state
+    (n_cells = sqrt(N) rows by the derived geometry), collected once.
+    The naive shape (crossJoin + groupBy + max_by) would shuffle the
+    full float vectors just to pick a winner per row."""
+    cids, cmat = _codebook(cent.select("cid", "c_emb").collect(), "cid", "c_emb")  # eager-by-design: n_cells control rows
+    return e.withColumn("_best", nearest(F.col("embedding"), cids, cmat, "cos")).select(
         *e.columns,
         F.col("_best.cell").alias("cell"),
-        F.col("_best.best_cos").alias("best_cos"),
+        F.col("_best.score").alias("best_cos"),
     )
 
 
@@ -652,7 +694,7 @@ def bucket_pair_cos(e: DataFrame, n_bands: int, cap: int = _EMB_BUCKET_CAP) -> D
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-        # Null policy: a pair with a null embedding scores null, as the JVM dot/(na*nb).
+        # Null policy: a pair with a null or all-zero embedding scores null, as the JVM cosine.
         E = _nan_rows(pdf["embedding"])
         ii, jj = np.triu_indices(s, k=1)
         out_a, out_b, out_c = [], [], []
@@ -661,7 +703,8 @@ def bucket_pair_cos(e: DataFrame, n_bands: int, cap: int = _EMB_BUCKET_CAP) -> D
             d = _fold(E[ic] * E[jc])
             out_a.append(ids[ic])
             out_b.append(ids[jc])
-            out_c.append(d / (nrm[ic] * nrm[jc]))
+            with np.errstate(invalid="ignore", divide="ignore"):  # a zero-norm side scores NaN
+                out_c.append(d / (nrm[ic] * nrm[jc]))
         return pd.DataFrame(
             {
                 "a_id": np.concatenate(out_a),
@@ -986,11 +1029,8 @@ def sim_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# IVF centroid TRAINING: k-means (Lloyd), one map-only pass per round
-# (lloyd_round) — the missing half of sim_topk_ivf, whose centroids
-# are a fixed seed set. Deterministic throughout: init = the embeddings of
-# vec_id 1..k (no RNG), ties in assignment break to the lowest cid,
-# fixed iteration count (no float-convergence test).
+# IVF centroid TRAINING: k-means (_lloyd) — the missing half of
+# sim_topk_ivf, whose centroids are a fixed seed set.
 _KM_K = 8
 _KM_ITERS = 4
 
@@ -1007,35 +1047,17 @@ def kmeans_ivf_train(spark: SparkSession, sf: str) -> DataFrame:
     """Train IVF cells with Lloyd iterations and emit the oracle-checkable
     facts: k, corpus size, and inertia(final) <= inertia(init).
 
-    Each round is one :func:`lloyd_round` pass (cosine argmax
-    assignment, per-cell count/sum/loss partials map-side, one collect,
-    the mean update on the driver): the corpus never shuffles and the
-    k centroids ride the kernel's closure. Round 1's pass also gives
-    inertia(init); a fifth pass against the round-4 centroids gives the
-    final count and inertia. At most eight jobs a call: the table read,
+    :func:`_lloyd_evidence` over cosine: each round is one
+    :func:`lloyd_round` pass (cosine argmax assignment, per-cell
+    count/sum/loss partials map-side, one collect, the mean update on
+    the driver), so the corpus never shuffles and the k centroids ride
+    the kernel's closure. At most eight jobs a call: the table read,
     the seed collect, five passes, and the final action over the
     one-row result (a LocalTableScan). Empty input gives n_assigned 0
     and a null inertia_improved, as the aggregate over no rows did.
-
-    Exact centroid float values depend on partial-sum order, which is
-    why the driver gate is the inertia MONOTONICITY boolean plus exact
-    counts, not centroid coordinates (same policy as ops/recall.py).
     """
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
-    seeds = e.where(F.col("vec_id").between(1, _KM_K)).collect()  # eager-by-design: k seed rows
-    cids, cmat = _codebook(seeds, "vec_id", "embedding")
-    inertia_init = None
-    for r in range(_KM_ITERS):
-        cids, cmat, _, inertia = lloyd_round(e, "embedding", cids, cmat, "cos")
-        if r == 0:
-            inertia_init = inertia
-    _, _, n_assigned, inertia_final = lloyd_round(e, "embedding", cids, cmat, "cos")
-    improved = (
-        None
-        if inertia_init is None or inertia_final is None
-        # 1e-9 slack: inertia is a float sum; Lloyd never increases it
-        else inertia_final <= inertia_init + 1e-9
-    )
+    n_assigned, improved = _lloyd_evidence(e, "embedding", _KM_K, _KM_ITERS, "cos")
     return spark.createDataFrame(
         pa.table(
             {
@@ -1048,9 +1070,8 @@ def kmeans_ivf_train(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # N254: IVF serving from TRAINED centroids — kmeans_ivf_train wired
-# into the serving path (the r13 sweep's remedy, completed: r14 first
-# made the geometry SF-derived with seed centroids; this member
-# serves the same derived n_cells/nprobe from Lloyd-TRAINED cells).
+# into the serving path: the same derived n_cells/nprobe as
+# sim_topk_ivf, served from Lloyd-TRAINED cells.
 # Hash-exact end to end by the IVFPQ discipline: unit-normalized
 # vectors quantize to exact ints (floor(x * 2^24 + 0.5) — power-of-
 # two scaling is IEEE-exact), Lloyd's per-(cell, dim) sums are
@@ -1087,71 +1108,18 @@ def _ivf_qdist(qv, cv):
     )
 
 
-def _ivf_assign_q(qv_df: DataFrame, cb: DataFrame) -> DataFrame:
-    """qv_df's columns plus ``cell``: argmin-distance assignment against
-    the k-row trained centroid table (k = derived n_cells <= sqrt(N) —
-    bounded control state), collected once, carried in the kernel's
-    closure, and argmin'd per batch in NumPy — one ArrowEvalPython pass
-    beside the scan; the corpus never shuffles for assignment
-    (assign_cells' map-side shape). A closure over 1 MB
-    (spark.broadcast.UDFCompressionThreshold) is itself shipped as a
-    broadcast that lives as long as the UDF.
-
-    r15 (guide §4.2, the assign_cells/_ivfpq_assign_det pattern): the
-    previous shape evaluated an interpreted zip_with/aggregate fold
-    per (row, centroid) against a broadcast array — the same
-    per-element interpreted cost the r14 kernels removed elsewhere.
-    Bit-exact with the old array_min(transform(struct(d, cid))): the
-    distance is :func:`_fold` of (q-c)*(q-c), the same sum as
-    _ivf_qdist (its 0.0 seed is bitwise-neutral: squares are never
-    -0.0), int64 q's cast to float64 exactly (|q| <= 2^24 * sqrt scale
-    < 2^53), and np.argmin's first-hit rule over cid-ascending rows
-    equals the struct-min (d, cid) tie ordering. Pinned bitwise by
-    tests/test_dedup_vector.py::
-    test_ivf_assign_q_arrow_bit_exact_with_jvm_struct_min.
-    """
-    cids, cmat = _codebook(cb.select("cid", "cv").collect(), "cid", "cv")  # eager-by-design: k-row trained-centroid control table
-
-    # Null policy: a null row (or null element) gives the lowest cid, as
-    # the struct-min over all-null distances did (all-NaN -> argmin 0).
-    @F.pandas_udf("bigint")
-    def _cell(qv: pd.Series) -> pd.Series:
-        n = len(qv)
-        if n == 0 or len(cids) == 0:
-            return pd.Series([None] * n, dtype="object")
-        mask = qv.notna().to_numpy()
-        out = pd.Series([int(cids[0])] * n, dtype="object")
-        if mask.any():
-            out[mask] = list(cids[_l2_best(_rows_matrix(qv[mask], np.float64), cmat)[0]])
-        return out
-
-    return qv_df.select(*qv_df.columns, _cell(F.col("qv")).alias("cell"))
-
-
-def _ivf_train_cells(e: DataFrame, params: DataFrame, iters: int = _IVF_TRAIN_ITERS) -> tuple[DataFrame, DataFrame]:
-    """(qv, cb): the quantized corpus and the Lloyd-trained centroid
-    table (cid, cv array<double>) under the derived n_cells geometry.
-    Seeds are the qv of vec_id 1..n_cells; each round is one
-    :func:`lloyd_round` pass (L2 argmin by _ivf_assign_q's arithmetic,
-    int64 per-cell sums, one IEEE division per coordinate), so every
-    codebook is bitwise the oracle's unrolled integer Lloyd. cb is built
-    from Arrow (a LocalTableScan), so collecting or broadcasting it runs
-    no job."""
+def _ivf_train_cells(
+    e: DataFrame, params: DataFrame, iters: int = _IVF_TRAIN_ITERS
+) -> tuple[DataFrame, np.ndarray, np.ndarray]:
+    """(qv, cids, centroids): the quantized corpus and its :func:`_lloyd`
+    L2 codebook under the derived n_cells geometry (seeds: the qv of
+    vec_id 1..n_cells). Per-cell sums are int64 and each coordinate is
+    one IEEE division, so every codebook is bitwise the oracle's
+    unrolled integer Lloyd."""
     qv = _ivf_qvec(e).localCheckpoint(eager=True)  # eager-by-design: read by every Lloyd round + the serve
     n_cells = params.select("n_cells").first()[0]  # eager-by-design: 1-row geometry
-    seeds = qv.where(F.col("vec_id").between(1, n_cells)).collect()  # eager-by-design: n_cells seed rows
-    cids, cmat = _codebook(seeds, "vec_id", "qv")
-    for _ in range(iters):
-        cids, cmat, _, _ = lloyd_round(qv, "qv", cids, cmat, "l2")
-    cb = qv.sparkSession.createDataFrame(
-        pa.table(
-            {
-                "cid": pa.array(cids.tolist(), pa.int64()),
-                "cv": pa.array(cmat.tolist(), pa.list_(pa.float64())),
-            }
-        )
-    )
-    return qv, cb
+    cids, cmat, _ = _lloyd(qv, "qv", n_cells, iters, "l2")
+    return qv, cids, cmat
 
 
 def _ivf_trained_oracle() -> str:
@@ -1261,8 +1229,16 @@ def sim_topk_ivf_trained(spark: SparkSession, sf: str) -> DataFrame:
     """
     e = t(spark, sf, "embeddings")
     params = _ivf_params(e)
-    qv, cb = _ivf_train_cells(e.select("vec_id", "embedding"), params)
-    assigned = _ivf_assign_q(qv, cb).select("vec_id", "cell")
+    qv, cids, cmat = _ivf_train_cells(e.select("vec_id", "embedding"), params)
+    assigned = qv.select("vec_id", nearest(F.col("qv"), cids, cmat, "l2").cell.alias("cell"))
+    cb = spark.createDataFrame(  # a LocalTableScan: broadcasting it runs no job
+        pa.table(
+            {
+                "cid": pa.array(cids.tolist(), pa.int64()),
+                "cv": pa.array(cmat.tolist(), pa.list_(pa.float64())),
+            }
+        )
+    )
     from pyspark.sql import Window
 
     # probe = the query's top-nprobe TRAINED cells by the same
@@ -1454,36 +1430,19 @@ def embedding_pq_train(spark: SparkSession, sf: str) -> DataFrame:
     policy as kmeans_ivf_train (exact centroid floats are partial-sum-
     order dependent; the BOOLEAN is not).
 
-    kmeans_ivf_train's shape with one codebook per subspace: each round
-    is one grouped :func:`lloyd_round` pass over the (vec_id, m,
-    subvector) rows (``group="m"``), so all M codebooks train in the
-    same map-only pass and the corpus never shuffles. Round 1's pass
-    gives SSE(init); a last pass against the trained codebooks gives
-    SSE(final) and the code count. Six jobs a call: the table read, the
-    seed collect, three passes and the corpus count; the one-row result
-    is a LocalTableScan. Codes for the full corpus would then be
-    written 4 bytes/vector — the compression that lets an IVF-PQ probe
-    scan codes instead of floats. Deterministic: init codebook =
-    subvectors of vec_id 1..K, argmin ties break to the lowest code id,
-    fixed iteration count. Empty input gives 0 vectors, 0 codes and a
-    null sse_improved.
+    kmeans_ivf_train's :func:`_lloyd_evidence` with one codebook per
+    subspace: each round is one grouped :func:`lloyd_round` pass over
+    the (vec_id, m, subvector) rows (``group="m"``), so all M codebooks
+    train in the same map-only pass and the corpus never shuffles. Six
+    jobs a call: the table read, the seed collect, three passes and the
+    corpus count; the one-row result is a LocalTableScan. Codes for the
+    full corpus would then be written 4 bytes/vector — the compression
+    that lets an IVF-PQ probe scan codes instead of floats. Empty input
+    gives 0 vectors, 0 codes and a null sse_improved.
     """
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
     subs = _pq_subvectors(e)
-    seeds = subs.where(F.col("vec_id").between(1, _PQ_K)).collect()  # eager-by-design: M*K seed rows
-    cids, cmat = _codebook(seeds, "vec_id", "sub", group_col="m")
-    sse_init = None
-    for r in range(_PQ_ITERS):
-        cids, cmat, _, sse = lloyd_round(subs, "sub", cids, cmat, "l2", group="m")
-        if r == 0:
-            sse_init = sse
-    _, _, n_codes, sse_final = lloyd_round(subs, "sub", cids, cmat, "l2", group="m")
-    improved = (
-        None
-        if sse_init is None or sse_final is None
-        # 1e-9 slack: SSE is a float sum; Lloyd never increases it
-        else sse_final <= sse_init + 1e-9
-    )
+    n_codes, improved = _lloyd_evidence(subs, "sub", _PQ_K, _PQ_ITERS, "l2", group="m")
     n_vectors = materializing_count(e)  # eager-by-design: the corpus size the code count is checked against
     return spark.createDataFrame(
         pa.table(
@@ -1561,67 +1520,21 @@ def _det_l2sq(qp: str, cp: str) -> F.Column:
     return out
 
 
-def _ivfpq_assign_det(subsq: DataFrame, cb: DataFrame) -> DataFrame:
-    """subsq's columns plus ``cell``: per (vec_id, m) the argmin-L2 code
-    among subspace m's codebook rows, ties to the lowest cid — the
-    final encode of the trained index.
-
-    The codebook is bounded control state (M*K rows, a constant of the
-    index format): it collects once into :func:`_codebook`'s (m, cid)
-    sort, rides the kernel's closure (as in :func:`_ivf_assign_q`), and
-    each batch scores its rows with :func:`_group_best` over
-    :func:`_l2_best` — the per-subspace argmin the Lloyd rounds use. One ArrowEvalPython pass beside the scan, no shuffle.
-    Bit-exact with a JVM broadcast join + min(struct(d, cid)) over
-    _det_l2sq: :func:`_fold` over the 4 dims is the same left-associated
-    ((t1²+t2²)+t3²)+t4² float64 tree (|q| <= 2^24, so the int -> double
-    cast is exact), and np.argmin's first hit over cid-ascending rows
-    is the struct-min tie order. Pinned bitwise by
-    tests/test_dedup_vector.py::test_ivfpq_assign_arrow_bit_exact_with_jvm_min_struct.
-    Preconditions: every m in subsq has codebook rows (the kernel
-    raises otherwise), and codebook coordinates are non-NaN (np.argmin
-    picks a NaN where min(struct) ranks it last; cb entries are
-    exact-integer means).
-    """
-    dims = range(1, _IVFPQ_SUBDIM + 1)
-    keys, cmat = _codebook(
-        cb.select("m", "cid", F.array(*[f"c{d}" for d in dims]).alias("c")).collect(),  # eager-by-design: M*K-row codebook
-        "cid",
-        "c",
-        group_col="m",
-    )
-
-    @F.pandas_udf("bigint")
-    def _code(
-        m: pd.Series, q1: pd.Series, q2: pd.Series, q3: pd.Series, q4: pd.Series
-    ) -> pd.Series:
-        if len(keys) == 0:
-            return pd.Series([None] * len(m), dtype="object")
-        q = np.stack([s.to_numpy(dtype=np.float64) for s in (q1, q2, q3, q4)], axis=1)
-        idx, _ = _group_best(_l2_best, q, m.to_numpy(), keys[:, 0], cmat)
-        return pd.Series(keys[idx, 1])
-
-    return subsq.select(
-        *subsq.columns, _code(F.col("m"), *[F.col(f"q{d}") for d in dims]).alias("cell")
-    )
-
-
-def _ivfpq_train_det(subsq: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
-    """Deterministic Lloyd on quantized subvectors: seeds are the rows
-    of vec_id 1..k, and each round is one grouped :func:`lloyd_round`
-    pass (``group="m"``, L2 argmin within each subspace) over the exact
-    int64 subvectors — per-cell sums are order-free bigints followed by
-    ONE IEEE division per coordinate, so every round's codebook is
-    bit-identical across engines and partitionings (the oracle replays
-    it). Returns (cb, enc): the codebook (m int, cid bigint, c1..c4
-    double), built from Arrow (a LocalTableScan, so collecting or
-    broadcasting it runs no job), and the final encode by
-    :func:`_ivfpq_assign_det`."""
+def _ivfpq_train_det(
+    subsq: DataFrame, k: int, iters: int
+) -> tuple[DataFrame, np.ndarray, np.ndarray]:
+    """:func:`_lloyd` over the exact int64 subvectors, one codebook per
+    subspace (``group="m"``, seeds: the rows of vec_id 1..k). Per-cell
+    sums are order-free bigints and each coordinate is ONE IEEE
+    division, so every round's codebook is bit-identical across engines
+    and partitionings (the oracle replays it). Returns (cb, keys,
+    centroids): the codebook as a frame (m int, cid bigint, c1..c4
+    double) built from Arrow (a LocalTableScan, so collecting or
+    broadcasting it runs no job) and as :func:`_codebook` arrays for
+    :func:`_ivfpq_codes`."""
     dims = range(1, _IVFPQ_SUBDIM + 1)
     rows = subsq.select("vec_id", "m", F.array(*[f"q{d}" for d in dims]).alias("q"))
-    seeds = rows.where(F.col("vec_id").between(1, k)).collect()  # eager-by-design: M*k seed rows
-    keys, cmat = _codebook(seeds, "vec_id", "q", group_col="m")
-    for _ in range(iters):
-        keys, cmat, _, _ = lloyd_round(rows, "q", keys, cmat, "l2", group="m")
+    keys, cmat, _ = _lloyd(rows, "q", k, iters, "l2", group="m")
     cmat = cmat.reshape(len(keys), _IVFPQ_SUBDIM)  # an empty codebook comes back (0, 0)
     cb = subsq.sparkSession.createDataFrame(
         pa.table(
@@ -1632,7 +1545,17 @@ def _ivfpq_train_det(subsq: DataFrame, k: int, iters: int) -> tuple[DataFrame, D
             }
         )
     )
-    return cb, _ivfpq_assign_det(subsq, cb)
+    return cb, keys, cmat
+
+
+def _ivfpq_codes(subsq: DataFrame, keys: np.ndarray, cmat: np.ndarray) -> DataFrame:
+    """(vec_id, cm, code): each subvector's :func:`nearest` L2 code in
+    its own subspace's codebook, the encode of the trained index.
+    Bitwise the JVM min(struct(_det_l2sq, cid)): the fold over the 4
+    dims is the same left-associated float64 tree."""
+    q = F.array(*[f"q{d}" for d in range(1, _IVFPQ_SUBDIM + 1)])
+    code = nearest(q, keys, cmat, "l2", group=F.col("m")).cell
+    return subsq.select("vec_id", F.col("m").alias("cm"), code.alias("code"))
 
 
 # Session-scoped index memo (session_memo): the trained IVF-PQ parts
@@ -1659,13 +1582,11 @@ def _ivfpq_build_uncached(spark: SparkSession, sf: str) -> dict[str, DataFrame]:
     # without the cut each of those re-runs the unit-normalize +
     # quantize lineage (measured ~2x on the serve)
     subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
-    cb, enc = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
+    cb, keys, cmat = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
     # eager-by-design: the memoized index parts (the per-vector codes
     # re-derive the whole training otherwise — one assignment pass
     # materialized once per session, read by every consumer)
-    codes = enc.select(
-        "vec_id", F.col("m").alias("cm"), F.col("cell").alias("code")
-    ).localCheckpoint(eager=True)
+    codes = _ivfpq_codes(subsq, keys, cmat).localCheckpoint(eager=True)
     qsub = subsq.where(F.col("vec_id") == 0).select(
         "m", *[f"q{d}" for d in range(1, _IVFPQ_SUBDIM + 1)]
     )
@@ -2090,11 +2011,12 @@ def pair_cos_arrow():
     sf0.1.
     """
 
-    # Null policy: a pair with a null side scores null, as the JVM dot/(na*nb).
+    # Null policy: a pair with a null or all-zero side scores null, as the JVM cosine.
     @F.pandas_udf("double")
     def cos(ea: pd.Series, eb: pd.Series, na: pd.Series, nb: pd.Series) -> pd.Series:
         d = _fold(_nan_rows(ea) * _nan_rows(eb))
-        return pd.Series(d / (na.to_numpy() * nb.to_numpy()))
+        with np.errstate(invalid="ignore", divide="ignore"):  # a zero-norm side scores NaN
+            return pd.Series(d / (na.to_numpy() * nb.to_numpy()))
 
     return cos
 
@@ -3118,11 +3040,11 @@ def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
     # re-checks / bench passes in one session
     def _train_corpus():
         subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
-        cb, _ = _ivfpq_train_det(subsq.where(F.col("vec_id") < c), _IVFPQ_K, _IVFPQ_ITERS)
-        enc_all = _ivfpq_assign_det(subsq, cb)  # FROZEN codebook for corpus AND delta
-        codes_all = enc_all.select(
-            "vec_id", F.col("m").alias("cm"), F.col("cell").alias("code")
-        ).localCheckpoint(eager=True)  # eager-by-design: feeds both writes + the in-memory serve
+        cb, keys, cmat = _ivfpq_train_det(subsq.where(F.col("vec_id") < c), _IVFPQ_K, _IVFPQ_ITERS)
+        # FROZEN codebook for corpus AND delta
+        codes_all = _ivfpq_codes(subsq, keys, cmat).localCheckpoint(
+            eager=True
+        )  # eager-by-design: feeds both writes + the in-memory serve
         return subsq, cb, codes_all
 
     subsq, cb, codes_all = session_memo(spark, "ivfpq_upsert_corpus", sf, _train_corpus)

@@ -325,6 +325,29 @@ def test_kmeans_ivf_train_runs_at_most_eight_jobs(spark, sf_dir):
     assert jobs <= 8, jobs
 
 
+def _assign_l2(qv, cb):
+    """The reference rounds' assignment step: qv's columns plus the
+    :func:`nearest` L2 ``cell`` over a (cid, cv) codebook frame."""
+    from parquet_processor_spark.ops.vector import _codebook, nearest
+
+    cids, cmat = _codebook(cb.collect(), "cid", "cv")
+    return qv.select(*qv.columns, nearest(F.col("qv"), cids, cmat, "l2").cell.alias("cell"))
+
+
+def _assign_pq(subsq, cb):
+    """The reference rounds' assignment step: subsq's columns plus the
+    per-subspace :func:`nearest` L2 ``cell`` over an (m, cid, c1..c4)
+    codebook frame."""
+    from parquet_processor_spark.ops.vector import _codebook, nearest
+
+    c = F.array("c1", "c2", "c3", "c4").alias("c")
+    keys, cmat = _codebook(cb.select("m", "cid", c).collect(), "cid", "c", group_col="m")
+    q = F.array("q1", "q2", "q3", "q4")
+    return subsq.select(
+        *subsq.columns, nearest(q, keys, cmat, "l2", group=F.col("m")).cell.alias("cell")
+    )
+
+
 def test_ivf_train_cells_runs_one_job_per_round(spark, sf_dir):
     from parquet_processor_spark.ops.vector import _ivf_params, _ivf_train_cells
     from parquet_processor_spark.tables import t
@@ -347,7 +370,6 @@ def test_ivf_train_cells_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
     # coordinate must be bitwise equal.
     from parquet_processor_spark.ops.vector import (
         _IVF_TRAIN_ITERS,
-        _ivf_assign_q,
         _ivf_params,
         _ivf_train_cells,
     )
@@ -355,7 +377,7 @@ def test_ivf_train_cells_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
 
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     params = _ivf_params(e)
-    qv, cb = _ivf_train_cells(e, params)
+    qv, cids, cmat = _ivf_train_cells(e, params)
     ref = (
         qv.crossJoin(F.broadcast(params.select("n_cells")))
         .where(F.col("vec_id").between(F.lit(1), F.col("n_cells")))
@@ -366,7 +388,7 @@ def test_ivf_train_cells_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
     )
     for _ in range(_IVF_TRAIN_ITERS):
         ref = (
-            _ivf_assign_q(qv, ref)
+            _assign_l2(qv, ref)
             .select("cell", F.posexplode("qv").alias("i", "x"))
             .groupBy("cell", "i")
             .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -384,7 +406,7 @@ def test_ivf_train_cells_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
             .select(F.col("cell").alias("cid"), "cv")
             .localCheckpoint(eager=True)
         )
-    got = sorted((r["cid"], r["cv"]) for r in cb.collect())
+    got = sorted(zip(cids.tolist(), cmat.tolist()))
     want = sorted((r["cid"], r["cv"]) for r in ref.collect())
     assert got == want and len(got) >= 8
 
@@ -485,7 +507,6 @@ def test_ivfpq_train_det_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
     from parquet_processor_spark.ops.vector import (
         _IVFPQ_ITERS,
         _IVFPQ_K,
-        _ivfpq_assign_det,
         _ivfpq_qsubs,
         _ivfpq_train_det,
         _unit,
@@ -495,7 +516,7 @@ def test_ivfpq_train_det_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
     dims = range(1, 5)
     e = _unit(t(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
-    cb, _ = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
+    cb, _, _ = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
     ref = subsq.where(F.col("vec_id").between(1, _IVFPQ_K)).select(
         "m",
         F.col("vec_id").alias("cid"),
@@ -503,7 +524,7 @@ def test_ivfpq_train_det_codebook_bit_exact_with_dataframe_lloyd(spark, sf_dir):
     )
     for _ in range(_IVFPQ_ITERS):
         ref = (
-            _ivfpq_assign_det(subsq, ref)
+            _assign_pq(subsq, ref)
             .groupBy("m", "cell")
             .agg(
                 *[
@@ -1047,10 +1068,9 @@ def test_assign_cells_arrow_bit_exact_with_jvm_argmax(spark, sf_dir):
 
 
 def test_ivfpq_assign_arrow_bit_exact_with_jvm_min_struct(spark, sf_dir):
-    # r14: _ivfpq_assign_det moved from broadcast-join + min-struct
-    # aggregate to a NumPy argmin kernel over the closure-collected
-    # codebook. This pins bitwise equality of every (vec_id, m) -> cell
-    # against the previous expression tree (same left-associated d2,
+    # The IVF-PQ encode (_ivfpq_codes, a grouped nearest) against the
+    # JVM broadcast join + min-struct aggregate it replaced: bitwise
+    # equality of every (vec_id, m) -> code (same left-associated d2,
     # min(struct(d, cid)) tie rule).
     from pyspark.sql import functions as F
 
@@ -1058,7 +1078,7 @@ def test_ivfpq_assign_arrow_bit_exact_with_jvm_min_struct(spark, sf_dir):
         _IVFPQ_ITERS,
         _IVFPQ_K,
         _det_l2sq,
-        _ivfpq_assign_det,
+        _ivfpq_codes,
         _ivfpq_qsubs,
         _ivfpq_train_det,
         _unit,
@@ -1067,11 +1087,11 @@ def test_ivfpq_assign_arrow_bit_exact_with_jvm_min_struct(spark, sf_dir):
 
     e = _unit(t(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     subsq = _ivfpq_qsubs(e).localCheckpoint(eager=True)
-    cb, _ = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
+    cb, keys, cmat = _ivfpq_train_det(subsq, _IVFPQ_K, _IVFPQ_ITERS)
     cb = cb.localCheckpoint(eager=True)
     new = {
-        (r["vec_id"], r["m"]): r["cell"]
-        for r in _ivfpq_assign_det(subsq, cb).collect()
+        (r["vec_id"], r["cm"]): r["code"]
+        for r in _ivfpq_codes(subsq, keys, cmat).collect()
     }
     d2 = _det_l2sq("q", "c")
     old = {
@@ -1086,27 +1106,29 @@ def test_ivfpq_assign_arrow_bit_exact_with_jvm_min_struct(spark, sf_dir):
 
 
 def test_ivf_assign_q_arrow_bit_exact_with_jvm_struct_min(spark, sf_dir):
-    # r15: _ivf_assign_q moved from the interpreted zip_with/aggregate
-    # fold + array_min(struct(d, cid)) over a broadcast centroid array
-    # to the NumPy argmin kernel (guide §4.2 — the _ivfpq_assign_det
-    # pattern at full width). This pins bitwise equality of every
-    # vec_id -> cell against the previous expression tree on the
-    # Lloyd-trained centroid table at the derived geometry.
+    # sim_topk_ivf_trained's cell assignment (an L2 nearest) against the
+    # interpreted zip_with/aggregate fold + array_min(struct(d, cid))
+    # over a broadcast centroid array it replaced: bitwise equality of
+    # every vec_id -> cell on the Lloyd-trained centroid table at the
+    # derived geometry.
     from pyspark.sql import functions as F
 
     from parquet_processor_spark.ops.vector import (
-        _ivf_assign_q,
         _ivf_params,
         _ivf_qdist,
         _ivf_train_cells,
+        nearest,
     )
     from parquet_processor_spark.tables import t
 
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv, cb = _ivf_train_cells(e, _ivf_params(e))
-    cb = cb.localCheckpoint(eager=True)
+    qv, cids, cmat = _ivf_train_cells(e, _ivf_params(e))
+    cb = spark.createDataFrame(
+        list(zip(cids.tolist(), cmat.tolist())), "cid long, cv array<double>"
+    ).localCheckpoint(eager=True)
     new = {
-        r["vec_id"]: r["cell"] for r in _ivf_assign_q(qv, cb).select("vec_id", "cell").collect()
+        r["vec_id"]: r["cell"]
+        for r in qv.select("vec_id", nearest(F.col("qv"), cids, cmat, "l2").cell.alias("cell")).collect()
     }
     # the pre-r15 expression tree, verbatim
     cb_arr = cb.agg(F.collect_list(F.struct(F.col("cid"), F.col("cv"))).alias("_cents"))
@@ -1131,11 +1153,8 @@ def test_ivf_assign_q_arrow_bit_exact_with_jvm_struct_min(spark, sf_dir):
 def test_centroid_kernels_build_from_a_worker_thread(spark):
     # The ANN sinks build and write from ThreadPoolExecutor workers,
     # where the thread-local SparkSession.getActiveSession() is None;
-    # both broadcast kernels must take the context from their own
-    # codebook frame instead.
+    # the centroid kernel, plain and grouped, must build and run there.
     from concurrent.futures import ThreadPoolExecutor
-
-    from parquet_processor_spark.ops.vector import _ivf_assign_q, _ivfpq_assign_det
 
     qv = spark.createDataFrame(
         [(1, [0.0, 0.0]), (2, [9.0, 9.0])], "vec_id long, qv array<double>"
@@ -1153,8 +1172,8 @@ def test_centroid_kernels_build_from_a_worker_thread(spark):
     )
 
     def build_and_collect():
-        ivf = {r["vec_id"]: r["cell"] for r in _ivf_assign_q(qv, ivf_cb).collect()}
-        pq = {r["vec_id"]: r["cell"] for r in _ivfpq_assign_det(subsq, pq_cb).collect()}
+        ivf = {r["vec_id"]: r["cell"] for r in _assign_l2(qv, ivf_cb).collect()}
+        pq = {r["vec_id"]: r["cell"] for r in _assign_pq(subsq, pq_cb).collect()}
         return ivf, pq
 
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -1357,35 +1376,124 @@ def test_arrow_sign_kernels_match_jvm_on_a_null_embedding(spark, sf_dir):
 
 
 def test_pair_cos_kernels_match_jvm_on_a_null_embedding(spark, sf_dir):
-    # Null policy of the pair-cosine kernels: the JVM dot/(na*nb) of a
-    # pair with a null side is null, and so is the DuckDB oracle's; each
-    # Arrow kernel must score that pair null beside non-null pairs, not
-    # raise in the Python worker. Two null vectors share every band
-    # bucket, so bucket_pair_cos scores their pair too.
-    from parquet_processor_spark.ops.vector import bucket_pair_cos, pair_cos_arrow
+    # Null policy of the cosine kernels: a pair with a null or all-zero
+    # side scores null in the JVM cosine (a zero divisor under ANSI),
+    # the DuckDB oracle (0.0/0.0 is NULL) and each Arrow kernel, beside
+    # non-null pairs, and no kernel raises. Null and zero vectors share
+    # every band bucket (all sign bits 0), so bucket_pair_cos scores
+    # their pairs too.
+    import duckdb
+
+    from parquet_processor_spark.ops.vector import _cos_sql, bucket_pair_cos, pair_cos_arrow
     from parquet_processor_spark.tables import t
 
     two = t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 2).select("vec_id", "embedding")
+    id_type, emb_type = two.schema["vec_id"].dataType, two.schema["embedding"].dataType
     e = two.unionByName(
         spark.range(-2, 0).select(
-            F.col("id").cast(two.schema["vec_id"].dataType).alias("vec_id"),
-            F.lit(None).cast(two.schema["embedding"].dataType).alias("embedding"),
+            F.col("id").cast(id_type).alias("vec_id"),
+            F.lit(None).cast(emb_type).alias("embedding"),
+        )
+    ).unionByName(
+        two.where(F.col("vec_id") == 0).select(
+            F.lit(-3).cast(id_type).alias("vec_id"),
+            F.transform("embedding", lambda x: F.lit(0.0).cast(emb_type.elementType)).alias("embedding"),
         )
     )
     a = e.select(F.col("vec_id").alias("ida"), F.col("embedding").alias("ea"), norm(F.col("embedding")).alias("na"))
     b = e.select(F.col("vec_id").alias("idb"), F.col("embedding").alias("eb"), norm(F.col("embedding")).alias("nb"))
     ea, eb, na, nb = (F.col(c) for c in ("ea", "eb", "na", "nb"))
     pairs = a.join(b, F.col("ida") < F.col("idb")).select(
-        "ida", "idb", (dot(ea, eb) / (na * nb)).alias("jvm"), pair_cos_arrow()(ea, eb, na, nb).alias("arw")
+        "ida", "idb", cosine(ea, eb).alias("jvm"), pair_cos_arrow()(ea, eb, na, nb).alias("arw")
     )
     rows = {(r["ida"], r["idb"]): (r["jvm"], r["arw"]) for r in pairs.collect()}
-    assert len(rows) == 6
+    assert len(rows) == 10
     for (ida, _), (jvm, arw) in rows.items():
         assert jvm == arw
         assert (jvm is None) == (ida < 0)
+    con = duckdb.connect()
+    con.execute("create table e (vec_id bigint, embedding float[])")
+    con.executemany("insert into e values (?, ?)", [tuple(r) for r in e.collect()])
+    duck = con.execute(
+        f"select a.vec_id, b.vec_id, {_cos_sql('a', 'b')} from e a join e b on a.vec_id < b.vec_id"
+    ).fetchall()
+    assert {(ida, idb): c for ida, idb, c in duck} == {pair: jvm for pair, (jvm, _) in rows.items()}
     scored = {(r["a_id"], r["b_id"]): r["cos_sim"] for r in bucket_pair_cos(e, 4).collect()}
-    assert scored[(-2, -1)] is None
+    assert scored[(-3, -2)] is None and scored[(-2, -1)] is None
     assert all(c == rows[pair][0] for pair, c in scored.items())
+
+
+def test_nearest_policy_matches_duckdb(spark):
+    # nearest's stated policy against the DuckDB twins' rule, row_number()
+    # over (order by score, cid) with NULLs last: a null, all-NaN or
+    # (cos) all-zero row gets the lowest cid of its group and a null
+    # score, an empty codebook a null cell, a missing group raises, and
+    # a centroid that scores NaN against every row raises up front
+    # (argmax would take it first, DuckDB last). assign_cells, a cos
+    # nearest, follows it too.
+    import duckdb
+    import numpy as np
+    from pyspark.errors import PythonException
+    from pyspark.sql import Row
+
+    from parquet_processor_spark.ops.vector import _codebook, _cos_sql, assign_cells, nearest
+
+    nan = float("nan")
+    xs = [
+        (1, 0, [1.0, 0.0]),
+        (2, 0, [0.5, 2.0]),
+        (3, 1, None),
+        (4, 1, [0.0, 0.0]),
+        (5, 1, [nan, nan]),
+        (6, 1, [3.0, 3.0]),
+    ]
+    cents = [(0, 7, [1.0, 1.0]), (0, 3, [0.0, 1.0]), (0, 5, [1.0, 0.0]), (1, 9, [2.0, 2.0]), (1, 8, [-1.0, 2.0])]
+    x = spark.createDataFrame(xs, "vec_id long, g int, embedding array<double>")
+    con = duckdb.connect()
+    con.execute("create table e (vec_id bigint, g int, embedding double[])")
+    con.executemany("insert into e values (?, ?, ?)", xs)
+    con.execute("create table c (g int, cid bigint, embedding double[])")
+    con.executemany("insert into c values (?, ?, ?)", cents)
+    l2 = (
+        "list_reduce(list_prepend(cast(0 as double), list_transform(generate_series(1, 2), "
+        "i -> (e.embedding[i] - c.embedding[i]) * (e.embedding[i] - c.embedding[i]))), (acc, v) -> acc + v)"
+    )
+
+    def duck(score, order, on):
+        return {
+            vid: (cell, s)
+            for vid, cell, s in con.execute(
+                f"""select vec_id, cid, s from (
+                      select e.vec_id, c.cid, {score} as s,
+                             row_number() over (partition by e.vec_id order by s {order}, c.cid) as rn
+                      from e left join c on {on}) where rn = 1"""
+            ).fetchall()
+        }
+
+    def got(col):
+        return {r["vec_id"]: (r["n"]["cell"], r["n"]["score"]) for r in x.select("vec_id", col.alias("n")).collect()}
+
+    rows = [Row(g=g, cid=cid, c=c) for g, cid, c in cents]
+    cids, cmat = _codebook(rows, "cid", "c")
+    keys, kmat = _codebook(rows, "cid", "c", group_col="g")
+    emb = F.col("embedding")
+    cos = got(nearest(emb, cids, cmat, "cos"))
+    assert cos == duck(_cos_sql("e", "c"), "desc", "true")
+    assert cos[3] == cos[4] == cos[5] == (3, None)
+    l2_grouped = got(nearest(emb, keys, kmat, "l2", group=F.col("g")))
+    assert l2_grouped == duck(l2, "", "e.g = c.g")
+    assert l2_grouped[3] == l2_grouped[5] == (8, None)
+    empty = got(nearest(emb, np.zeros((0, 2), dtype=np.int64), np.zeros((0, 0)), "l2", group=F.col("g")))
+    assert empty == duck(l2, "", "false") == {v: (None, None) for v, _, _ in xs}
+    with pytest.raises(PythonException, match="group 1 missing from the codebook"):
+        got(nearest(emb, keys[:3], kmat[:3], "l2", group=F.col("g")))
+    with pytest.raises(ValueError, match="scores NaN"):
+        nearest(emb, cids, np.vstack([cmat[:-1], [nan, 0.0]]), "l2")
+    with pytest.raises(ValueError, match="scores NaN"):
+        nearest(emb, cids, np.vstack([cmat[:-1], [0.0, 0.0]]), "cos")
+    cent = spark.createDataFrame([(cid, c) for _, cid, c in cents], "cid long, c_emb array<double>")
+    cells = {r["vec_id"]: (r["cell"], r["best_cos"]) for r in assign_cells(x, cent).collect()}
+    assert cells == cos
 
 
 def test_bitext_mutual_is_a_partial_matching(spark, sf_dir):

@@ -360,3 +360,37 @@ def test_only_io_spells_the_partition_overwrite():
         if str(path.relative_to(pkg)) != "io.py" and "partitionOverwriteMode" in path.read_text()
     ]
     assert not offenders, offenders
+
+
+def test_only_nearest_and_lloyd_round_score_a_codebook():
+    # One nearest-centroid kernel: ops.vector.nearest is the only
+    # pandas UDF that scores rows against a codebook, and lloyd_round
+    # the only other caller of the scorers. Another shell around them
+    # forks the null/NaN/empty-codebook policy that nearest states.
+    import ast
+    import pathlib
+
+    scorers = {"_group_best", "_cos_best", "_l2_best"}
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "parquet_processor_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for top in ast.parse(path.read_text()).body:
+            if not isinstance(top, ast.FunctionDef):
+                continue
+            names = {n.id for n in ast.walk(top) if isinstance(n, ast.Name)}
+            if names & scorers and top.name not in scorers | {"nearest", "lloyd_round"}:
+                offenders.append(f"{rel}:{top.name} calls {sorted(names & scorers)}")
+            if not rel.startswith("ops/") or top.name == "nearest":
+                continue
+            for fn in ast.walk(top):
+                udf = isinstance(fn, ast.FunctionDef) and any(
+                    "pandas_udf" in ast.unparse(d) for d in fn.decorator_list
+                )
+                if not udf:
+                    continue
+                used = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+                used |= {n.attr for n in ast.walk(fn) if isinstance(n, ast.Attribute)}
+                if used & (scorers | {"_codebook", "argmin", "argmax"}):
+                    offenders.append(f"{rel}:{top.name}.{fn.name} scores a codebook")
+    assert not offenders, offenders
