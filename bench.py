@@ -28,289 +28,60 @@ its own noise estimate.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import statistics
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from parquet_processor_spark.registry import all_queries  # noqa: E402
-from parquet_processor_spark.session import clear_session_memos, get_spark, session_memo_counts  # noqa: E402
+from parquet_processor_spark.registry import all_queries, tags  # noqa: E402
+from parquet_processor_spark.session import (  # noqa: E402
+    clear_session_memos,
+    get_spark,
+    jobs_in_group,
+    session_memo_counts,
+)
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_class",
-    "q13_order_distribution",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_part_supplier_types",
-    "q17_small_quantity",
-    "q18_large_orders",
-    "q19_brand_bands",
-    "q20_part_promotion",
-    "q21_waiting_suppliers",
-    "q22_idle_customers",
-    "join_broadcast_equi",
-    "join_range",
-    "join_asof",
-    "join_skew_salted",
-    "join_bucketed",
-    "agg_rollup",
-    "window_rank",
-    "window_running_sum",
-    "window_tumbling",
-    "window_session",
-    "window_sliding",
-    "distinct_dedup",
-    "dedup_exact",
-    "dedup_near",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "text_stats",
-    "token_count",
-    "quality_score",
-    "sim_topk",
-    "sim_topk_ivf",
-    "topk_order_limit",
-]
+# Membership is a registry tag, never a list kept here: the headline
+# set carries "bench"; newer operators carry "bench_extended" and are
+# timed separately (single pass, after the headline passes) so the
+# headline total stays comparable to BASELINE_BENCH across rounds while
+# their cost is still on record.
+HEADLINE = [name for name, ts in tags().items() if "bench" in ts]
+EXTENDED = [name for name, ts in tags().items() if "bench_extended" in ts]
 
-# Newer operators timed separately (single pass, after the headline
-# passes) so the headline total stays comparable to BASELINE_BENCH
-# across rounds while their cost is still on record.
-EXTENDED = [
-    "agg_calibration",
-    "sink_targeted_delete",
-    "search_hybrid_rrf",
-    "embedding_matryoshka_eval",
-    "multimodal_keyframes",
-    "sink_ann_index_upsert",
-    "dedup_url",
-    "sim_topk_filtered",
-    "report_lsh_bucket_pressure",
-    "sample_class_balance",
-    "table_vacuum_orphans",
-    "embedding_knn_classify",
-    "dedup_connected",
-    "dedup_connected_lsh",
-    "quality_unigram_rarity",
-    "events_funnel",
-    "sink_sorted_roundtrip",
-    "curation_cap_per_source",
-    "curation_contamination",
-    "curation_pii_scrub",
-    "curation_repetition",
-    "dedup_containment",
-    "doc_chunk_windows",
-    "graph_pagerank",
-    "tokenize_to_ids",
-    "events_anomaly_p99",
-    "sim_topk_lsh",
-    "dedup_embedding_lsh",
-    "scd2_intervals",
-    "join_interval_overlap",
-    "profile_columns",
-    "feature_zscore",
-    "agg_heavy_hitters",
-    "quality_bigram_lm",
-    "join_bloom_filtered",
-    "events_gap_fill",
-    "agg_incremental_merge",
-    "agg_copurchase_pairs",
-    "join_range_bucketed",
-    "sample_temperature_mix",
-    "events_markov",
-    "events_rolling_distinct",
-    "agg_rfm_scores",
-    "dedup_repeated_ngrams",
-    "window_rolling_median",
-    "events_funnel_windowed",
-    "agg_abc_analysis",
-    "agg_affinity_lift",
-    "orders_open_over_time",
-    "join_scd2_pointintime",
-    "agg_gini",
-    "sample_budget_mix",
-    "join_asof_nearest",
-    "dedup_incremental",
-    "dedup_incremental_minhash",
-    "sim_topk_ivf_nprobe",
-    "quality_diversity",
-    "agg_heavy_hitters_grouped",
-    "table_diff",
-    "sink_mergeschema_roundtrip",
-    "agg_weighted_median",
-    "sink_compacted_roundtrip",
-    "sample_negative_pairs",
-    "scan_csv_badrecords",
-    "split_leakage_safe",
-    "sample_downweight_dups",
-    "doc_novelty",
-    "window_ewma",
-    "events_attribution",
-    "feature_mad_outliers",
-    "cdc_apply_tombstones",
-    "graph_triangles",
-    "scan_binary_files",
-    "agg_regression",
-    "feature_winsorize",
-    "text_boilerplate",
-    "embedding_pq_train",
-    "tokenizer_bpe_train",
-    "tokenizer_bpe_apply",
-    "sink_partitioned_roundtrip",
-    "multimodal_dedup_perceptual",
-    "sim_topk_ivfpq",
-    "dedup_verbatim_spans",
-    "dedup_span_removal",
-    "sink_versioned_snapshots",
-    "sink_ann_index_roundtrip",
-    "graph_label_propagation",
-    "table_expectations",
-    "streaming_expectations",
-    "sink_training_shards",
-    "error_approx_intersection",
-    "join_fuzzy_names",
-    "dedup_semdedup",
-    "pipeline_curate_corpus",
-    "text_html_strip",
-    "window_drawdown",
-    "agg_benford",
-    "join_null_safe",
-    "quality_gopher_rules",
-    "multimodal_dedup_bytes",
-    "graph_local_clustering",
-    "scd2_apply_changes",
-    "events_cohort_ltv",
-    "agg_count_min",
-    "anonymize_k_anonymity",
-    "sample_importance_dsir",
-    "agg_bitmap_index",
-    "sim_range_search",
-    "embedding_random_projection",
-    "multimodal_clip_pairs",
-    "streaming_count_min",
-    "monitor_feature_drift",
-    "quality_ccnet_buckets",
-    "dedup_cluster_report",
-    "tokenizer_bpe_eval",
-    "multimodal_frame_dedup",
-    "events_survival_table",
-    "graph_link_prediction",
-    "events_bot_detection",
-    "curation_contamination_spans",
-    "events_seasonality",
-    "sink_codec_roundtrip",
-    "sink_manifest_pruned_scan",
-    "sink_partition_overwrite_dynamic",
-    "agg_ab_test",
-    "pipeline_curate_media",
-    "report_lsh_tuning",
-    # round-8 additions
-    "anonymize_dp_counts",
-    "text_readability",
-    "report_ivf_balance",
-    "events_forecast_linear",
-    "sim_knn_graph",
-    "multimodal_scene_cut",
-    "streaming_forecast",
-    "sample_curriculum_mix",
-    "graph_bfs_distances",
-    "sink_checked_publish",
-    "agg_decile_lift",
-    "pipeline_cost_estimate",
-    "agg_auc",
-    # round-10 additions
-    "mine_bitext_mutual",
-    "feature_target_encode",
-    "agg_cohens_kappa",
-    "curation_contamination_semantic",
-    "events_sequence_negation",
-    "agg_gini_impurity",
-    "feature_hashing_trick",
-    "sink_bloom_pruned_scan",
-    "report_source_overlap",
-    "anonymize_pseudonymize",
-    # round-10 second-wave additions
-    "report_curation_funnel",
-    "sample_epoch_repeat",
-    "agg_bootstrap_ci",
-    "sink_merge_upsert",
-    "events_ohlc_bars",
-    "agg_regression_multi",
-    "streaming_ohlc",
-    "error_bootstrap_ci",
-    "sim_topk_lsh_multiprobe",
-    "anonymize_generalize",
-    "pack_concat_chunks",
-    "graph_random_walks",
-    "events_trending_topk",
-    "agg_classification_report",
-    # round-11 additions
-    "streaming_trending_topk",
-    "join_set_similarity",
-    "graph_ppr",
-    "graph_scc",
-    "sample_pps",
-    "anonymize_dp_mean",
-    "sink_time_travel_read",
-    "text_collocations",
-    "events_cuped",
-    "events_attribution_markov",
-    "graph_hits",
-    "agg_ab_srm",
-    "sample_stratified_neyman",
-    "text_textrank_keywords",
-    "sink_merge_on_read_dv",
-    "scan_change_data_feed",
-    "report_dataset_datasheet",
-    "events_diff_in_diff",
-    # round-12 additions
-    "join_set_similarity_verify",
-    "streaming_trending_topk_update",
-    "agg_mcnemar",
-    "agg_cramers_v",
-    "agg_kendall_tau",
-    "agg_spearman_rho",
-    "feature_quantile_bin",
-    "agg_anova",
-    "sample_kfold",
-    "events_event_study",
-    "recall_join_set_similarity_verify",
-    "agg_tost_equivalence",
-    "eval_retrieval_mrr",
-    "graph_modularity",
-    # round-13 wave
-    "join_right_outer",
-    "agg_string_agg",
-    "window_cume_dist",
-    "streaming_changepoint_update",
-    "streaming_forecast_update",
-    "streaming_count_min_update",
-    "agg_levene",
-    "agg_proportions_ztest",
-    "agg_cochran_q",
-    "split_time_embargo",
-    "graph_degree_assortativity",
-    "events_autocorrelation",
-    "report_embedding_health",
-    "agg_hhi",
-    "agg_trimmed_mean",
-    "feature_time_windows",
-    "events_cem_att",
-    "anonymize_date_shift",
-    "report_ivf_recall_curve",
-]
+
+class Run(NamedTuple):
+    """One build + noop write of a registered query."""
+
+    secs: float
+    build_jobs: int
+    run_jobs: int
+    memo_hits: int  # > 0: this run served from a session memo (serve path)
+
+
+_runs = itertools.count()  # a fresh job group per run
+
+
+def _memo_hits() -> int:
+    return sum(c["hits"] for c in session_memo_counts().values())
+
+
+def run_once(spark, name: str, sf_dir: str) -> Run:
+    """Build query ``name`` at ``sf_dir`` (its eager actions), then write
+    it to the noop sink; each part's Spark jobs are counted under its own
+    job group (``session.jobs_in_group``)."""
+    query = all_queries()[name]
+    tag = f"{name}#{next(_runs)}"
+    hits = _memo_hits()
+    t0 = time.perf_counter()
+    df, build = jobs_in_group(spark, f"{tag}.build", lambda: query(spark, sf_dir))
+    _, run = jobs_in_group(spark, f"{tag}.run", df.write.format("noop").mode("overwrite").save)
+    return Run(time.perf_counter() - t0, build, run, _memo_hits() - hits)
 
 
 def main() -> None:
@@ -318,7 +89,6 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
 
     # Warm-up: one pass at the smallest SF (pays JIT/codegen cheaply and
     # surfaces hard failures early), then ONE UNTIMED PASS AT THE TARGET
@@ -335,26 +105,25 @@ def main() -> None:
     # headline timing.
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
 
-    def memo_lookups() -> int:
-        return sum(c["hits"] + c["misses"] for c in session_memo_counts().values())
-
-    # untimed build + run; True when it looked up a session memo, i.e.
-    # the timed runs that follow measure the query's SERVE path
-    def warm(name: str, path: str) -> bool:
-        before = memo_lookups()
+    def warm(name: str, path: str) -> None:
         try:
-            queries[name](spark, path).write.format("noop").mode("overwrite").save()
+            run_once(spark, name, path)
         except Exception:
             pass  # warm-up is best-effort; the timed run surfaces real failures
-        return memo_lookups() > before
 
     for name in HEADLINE:
         warm(name, warm_dir)
 
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    # Rows whose timed run hit a session memo measure the query's SERVE
+    # path. Only the timed run's own hits count: memos are keyed by sf,
+    # so a warm-up lookup at another sf says nothing about the timed run.
+    serve_path: list[str] = []
+
+    def sample(name: str) -> float:
+        r = run_once(spark, name, sf_dir)
+        if r.memo_hits and name not in serve_path:
+            serve_path.append(name)
+        return r.secs
 
     # Calibration probes: FIXED workloads (constant plan, constant
     # data, independent of the query catalog) timed before and after
@@ -382,7 +151,7 @@ def main() -> None:
                 .save()
             )
             runs.append(time.perf_counter() - t0)
-        return sorted(runs)[1]
+        return statistics.median(runs)
 
     def calibration_probe_io() -> float:
         # Fixed parquet scan at the TARGET SF: full-column read of
@@ -401,10 +170,10 @@ def main() -> None:
             t0 = time.perf_counter()
             probe.write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
-        return sorted(runs)[1]
+        return statistics.median(runs)
 
-    # untimed target-SF warm pass; its memo lookups mark the serve path
-    serve_path = [name for name in HEADLINE if warm(name, sf_dir)]
+    for name in HEADLINE:
+        warm(name, sf_dir)  # untimed target-SF warm pass
 
     calibration_probe()  # untimed: pays the probe's own codegen
     calibration_probe_io()  # untimed: pays codegen + first page-cache fill
@@ -420,7 +189,7 @@ def main() -> None:
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for name in HEADLINE:
         for _ in range(n_passes):
-            samples[name].append(run_once(name))
+            samples[name].append(sample(name))
 
     # Standing baseline (BASELINE_BENCH.json = best prior round at the
     # same SF) for outlier re-runs and the stderr delta report.
@@ -439,7 +208,7 @@ def main() -> None:
     for name in HEADLINE:
         b = base_q.get(name)
         if b and min(samples[name]) / b > 1.5:
-            samples[name].append(run_once(name))
+            samples[name].append(sample(name))
 
     # Extended operators: warmed only now (after the headline timing —
     # see the warm-up note above), each isolated in try/except — one
@@ -447,15 +216,14 @@ def main() -> None:
     # whole benchmark after the headline passes already completed.
     extended: dict[str, float | None] = {}
     for name in EXTENDED:
-        if warm(name, warm_dir):
-            serve_path.append(name)
+        warm(name, warm_dir)
         try:
-            extended[name] = round(run_once(name), 3)
+            extended[name] = round(sample(name), 3)
         except Exception as exc:  # noqa: BLE001
             print(f"EXTENDED FAILED {name}: {exc}", file=sys.stderr)
             extended[name] = None
 
-    # Serve-path disclosure: the serve_path rows' warm builds filled a
+    # Serve-path disclosure: the serve_path rows' timed runs hit a
     # session memo, so their timed rows above measure the SERVE path
     # (post-training cost), not an end-to-end number. Each also gets
     # ONE memo-cleared end-to-end sample, so the artifact carries both.
@@ -463,7 +231,7 @@ def main() -> None:
     for name in serve_path:
         clear_session_memos()
         try:
-            queries_e2e[name] = round(run_once(name), 3)
+            queries_e2e[name] = round(run_once(spark, name, sf_dir).secs, 3)
         except Exception:  # noqa: BLE001
             queries_e2e[name] = None
 
@@ -486,12 +254,7 @@ def main() -> None:
     # indistinguishable from session weather). The min is kept
     # alongside (queries_min / value_min and BENCH_LOCAL) so rounds
     # recorded under the old min policy stay comparable.
-    def median(ts: list[float]) -> float:
-        s = sorted(ts)
-        n = len(s)
-        return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-
-    times = {name: round(median(ts), 3) for name, ts in samples.items()}
+    times = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     times_min = {name: round(min(ts), 3) for name, ts in samples.items()}
     suspect = sorted(
         (n for n in times if base_q.get(n) and times[n] / base_q[n] > 1.3),
@@ -549,7 +312,7 @@ def main() -> None:
         "sf": sf_val,
         "passes": n_passes,
         "spread_max": max(spread.values()),
-        "spread_median": sorted(spread.values())[len(spread) // 2],
+        "spread_median": statistics.median_high(spread.values()),
         # fixed-workload probes timed before/after the headline passes:
         # a session-wide multiplier (GC/code-cache weather) moves the
         # CPU pair, page-cache/disk weather moves the IO pair; repo
@@ -572,8 +335,8 @@ def main() -> None:
         # Bounded so the driver's 2000-char stdout tail always holds
         # the full line (r5 lesson); BENCH_LOCAL.json has every min.
         "regressed_min": regressed_min,
-        # headline rows whose timed passes ride a session memo the warm
-        # pass populated (serve-path cost); memo-cleared end-to-end
+        # headline rows whose timed passes hit a session memo
+        # (serve-path cost); memo-cleared end-to-end
         # samples are on the extended line (queries_e2e) and in
         # BENCH_LOCAL.json
         "serve_path": [name for name in serve_path if name in HEADLINE],

@@ -206,7 +206,7 @@ def agg_approx_distinct(spark: SparkSession, sf: str) -> DataFrame:
       join region on n_regionkey = r_regionkey
     group by rollup (r_name, n_name)
     """,
-    tags=("agg", "rollup"),
+    tags=("agg", "rollup", "bench"),
 )
 def agg_rollup(spark: SparkSession, sf: str) -> DataFrame:
     c = t(spark, sf, "customer")
@@ -663,7 +663,7 @@ _PROFILE_COLS = ("l_quantity", "l_shipdate", "l_returnflag", "l_extendedprice")
     union all
     select 'l_extendedprice', n_rows, c_nulls, c_dist, c_min, c_max from s
     """,
-    tags=("agg", "profile", "diagnostic"),
+    tags=("agg", "profile", "diagnostic", "bench_extended"),
 )
 def profile_columns(spark: SparkSession, sf: str) -> DataFrame:
     """Null count, distinct cardinality, min/max for four lineitem
@@ -740,7 +740,7 @@ def profile_columns(spark: SparkSession, sf: str) -> DataFrame:
              / sqrt(s.sxx / s.n - (s.sx / s.n) * (s.sx / s.n)) as z
     from lineitem l join s on l.l_returnflag = s.l_returnflag
     """,
-    tags=("agg", "ml", "normalize"),
+    tags=("agg", "ml", "normalize", "bench_extended"),
 )
 def feature_zscore(spark: SparkSession, sf: str) -> DataFrame:
     """Per-returnflag z-score of l_quantity on every lineitem row.
@@ -795,7 +795,7 @@ _INCR_CUTOFF = "1997-01-01"
     from orders
     group by o_custkey
     """,
-    tags=("agg", "incremental", "scale"),
+    tags=("agg", "incremental", "scale", "bench_extended"),
 )
 def agg_incremental_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Per-customer order rollup maintained incrementally: history
@@ -854,7 +854,7 @@ _COPURCHASE_MIN_SUPPORT = 2
     group by 1, 2
     having count(*) >= {_COPURCHASE_MIN_SUPPORT}
     """,
-    tags=("agg", "basket", "pairs"),
+    tags=("agg", "basket", "pairs", "bench_extended"),
 )
 def agg_copurchase_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Part pairs co-purchased in >= _COPURCHASE_MIN_SUPPORT orders.
@@ -911,7 +911,7 @@ def agg_copurchase_pairs(spark: SparkSession, sf: str) -> DataFrame:
            ntile(5) over (order by monetary desc, o_custkey) as m_score
     from rfm
     """,
-    tags=("agg", "rfm", "window"),
+    tags=("agg", "rfm", "window", "bench_extended"),
 )
 def agg_rfm_scores(spark: SparkSession, sf: str) -> DataFrame:
     """Per-customer RFM metrics + quintile scores (1 = best).
@@ -993,7 +993,7 @@ def agg_rfm_scores(spark: SparkSession, sf: str) -> DataFrame:
                 else 'C' end as abc_class
     from ranked
     """,
-    tags=("agg", "pareto", "window"),
+    tags=("agg", "pareto", "window", "bench_extended"),
 )
 def agg_abc_analysis(spark: SparkSession, sf: str) -> DataFrame:
     """Per-part revenue with cumulative share and A/B/C class.
@@ -1078,7 +1078,7 @@ _LIFT_MIN_SUPPORT = 3
       join item i2 on p.p2 = i2.l_partkey
       cross join n
     """,
-    tags=("agg", "basket", "lift"),
+    tags=("agg", "basket", "lift", "bench_extended"),
 )
 def agg_affinity_lift(spark: SparkSession, sf: str) -> DataFrame:
     """Lift for co-purchased part pairs with support >= _LIFT_MIN_SUPPORT.
@@ -1145,7 +1145,7 @@ def agg_affinity_lift(spark: SparkSession, sf: str) -> DataFrame:
              - cast(max(n) + 1 as double) / max(n) as gini
     from ranked
     """,
-    tags=("agg", "gini", "diagnostic"),
+    tags=("agg", "gini", "diagnostic", "bench_extended"),
 )
 def agg_gini(spark: SparkSession, sf: str) -> DataFrame:
     """Gini coefficient of per-part revenue (0 = uniform, 1 = one part
@@ -1206,7 +1206,7 @@ def agg_gini(spark: SparkSession, sf: str) -> DataFrame:
     from c where 2 * cw >= tw
     group by flag
     """,
-    tags=("agg", "quantile"),
+    tags=("agg", "quantile", "bench_extended"),
 )
 def agg_weighted_median(spark: SparkSession, sf: str) -> DataFrame:
     """Per-group weighted median: the smallest value whose cumulative
@@ -1277,7 +1277,7 @@ def agg_weighted_median(spark: SparkSession, sf: str) -> DataFrame:
              / ((n * sxx - sx * sx) * (n * syy - sy * sy)) as r2
     from s
     """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "bench_extended"),
 )
 def agg_regression(spark: SparkSession, sf: str) -> DataFrame:
     """OLS of discount on quantity per return flag: slope, intercept,
@@ -1338,7 +1338,7 @@ def agg_regression(spark: SparkSession, sf: str) -> DataFrame:
     from orders where o_totalprice > 0
     group by 1 order by 1
     """,
-    tags=("agg", "audit", "quality"),
+    tags=("agg", "audit", "quality", "bench_extended"),
 )
 def agg_benford(spark: SparkSession, sf: str) -> DataFrame:
     """First-significant-digit distribution of order totals.
@@ -1419,7 +1419,7 @@ def agg_benford(spark: SparkSession, sf: str) -> DataFrame:
       select 'lineitem_ship_after_order', cast(n as bigint), cast(date_viol as bigint) from lo
     )
     """,
-    tags=("agg", "quality", "constraints", "diagnostic"),
+    tags=("agg", "quality", "constraints", "diagnostic", "bench_extended"),
 )
 def table_expectations(spark: SparkSession, sf: str) -> DataFrame:
     """Data-quality constraint suite: PK uniqueness, FK integrity,
@@ -1598,7 +1598,7 @@ def _cms_estimates(spark: SparkSession, sf: str) -> DataFrame:
            cast(n_est - n_exact as bigint) as n_over
     from cms_est
     """,
-    tags=("agg", "sketch", "approx"),
+    tags=("agg", "sketch", "approx", "bench_extended"),
 )
 def agg_count_min(spark: SparkSession, sf: str) -> DataFrame:
     """Per-token CMS estimate vs exact count (overestimate visible)."""
@@ -1630,7 +1630,7 @@ def agg_count_min(spark: SparkSession, sf: str) -> DataFrame:
     from orders
     group by 1, 2
     """,
-    tags=("agg", "bitmap", "rollup"),
+    tags=("agg", "bitmap", "rollup", "bench_extended"),
 )
 def agg_bitmap_index(spark: SparkSession, sf: str) -> DataFrame:
     """Month-activity bitmaps per (priority, year) via bit_or rollup.
@@ -1753,7 +1753,7 @@ def _welch_arm_moments(m: DataFrame) -> DataFrame:
              )) > 1.96 as significant_95
     from w
     """,
-    tags=("agg", "stats", "experiment"),
+    tags=("agg", "stats", "experiment", "bench_extended"),
 )
 def agg_ab_test(spark: SparkSession, sf: str) -> DataFrame:
     """Welch t statistic between hash-split arms over purchase value.
@@ -2320,7 +2320,7 @@ def agg_ab_power(spark: SparkSession, sf: str) -> DataFrame:
     from d cross join tot
     group by decile, tot.n_total, tot.n_pos
     """,
-    tags=("agg", "eval", "lift"),
+    tags=("agg", "eval", "lift", "bench_extended"),
 )
 def agg_decile_lift(spark: SparkSession, sf: str) -> DataFrame:
     """Per-decile conversion rate and lift with users ranked by view
@@ -2422,7 +2422,7 @@ def agg_decile_lift(spark: SparkSession, sf: str) -> DataFrame:
                   / (2 * n_pos * (n - n_pos)) end as auc
     from s
     """,
-    tags=("agg", "eval", "stats"),
+    tags=("agg", "eval", "stats", "bench_extended"),
 )
 def agg_auc(spark: SparkSession, sf: str) -> DataFrame:
     """Exact tie-corrected ROC AUC of the view-count score against the
@@ -2523,7 +2523,7 @@ def agg_auc(spark: SparkSession, sf: str) -> DataFrame:
              as abs_gap
     from per, m
     """,
-    tags=("agg", "eval", "stats", "calibration"),
+    tags=("agg", "eval", "stats", "calibration", "bench_extended"),
 )
 def agg_calibration(spark: SparkSession, sf: str) -> DataFrame:
     """Reliability table: per score-decile mean normalized prediction
@@ -2628,7 +2628,7 @@ def agg_calibration(spark: SparkSession, sf: str) -> DataFrame:
     join c on l.l_returnflag = c.l_returnflag
     cross join g
     """,
-    tags=("agg", "ml", "encode"),
+    tags=("agg", "ml", "encode", "bench_extended"),
 )
 def feature_target_encode(spark: SparkSession, sf: str) -> DataFrame:
     """Leave-one-out target encoding of l_returnflag against l_quantity.
@@ -2714,7 +2714,7 @@ def feature_target_encode(spark: SparkSession, sf: str) -> DataFrame:
            end as kappa
     from ct
     """,
-    tags=("agg", "ml", "labels", "evidence"),
+    tags=("agg", "ml", "labels", "evidence", "bench_extended"),
 )
 def agg_cohens_kappa(spark: SparkSession, sf: str) -> DataFrame:
     """Cohen's kappa between two deterministic binary raters.
@@ -2790,7 +2790,7 @@ def agg_cohens_kappa(spark: SparkSession, sf: str) -> DataFrame:
            cast(n * n - sum_sq as double) / (n * n) as gini_impurity
     from g
     """,
-    tags=("agg", "ml", "labels"),
+    tags=("agg", "ml", "labels", "bench_extended"),
 )
 def agg_gini_impurity(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source Gini impurity of the language distribution.
@@ -2916,7 +2916,7 @@ def _boot_oracle() -> str:
     """
 
 
-@query("agg_bootstrap_ci", oracle=_boot_oracle(), tags=("agg", "stats", "bootstrap"))
+@query("agg_bootstrap_ci", oracle=_boot_oracle(), tags=("agg", "stats", "bootstrap", "bench_extended"))
 def agg_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
     """Percentile-bootstrap CI for mean purchase value via the Poisson
     bootstrap: B=_BOOT_B deterministic replicate weights per row (one
@@ -3037,7 +3037,7 @@ _REG3_D2 = (
            {_REG3_D2} / nullif({_REG3_DET}, 0.0) as beta_discount
     from s
     """,
-    tags=("agg", "stats", "regression"),
+    tags=("agg", "stats", "regression", "bench_extended"),
 )
 def agg_regression_multi(spark: SparkSession, sf: str) -> DataFrame:
     """Per-returnflag OLS of extendedprice on (quantity, discount):
@@ -3107,7 +3107,7 @@ _SRM_CUTOFF = 10.83
              > {_SRM_CUTOFF} as srm_detected
     from c
     """,
-    tags=("agg", "stats", "experiment", "guardrail"),
+    tags=("agg", "stats", "experiment", "guardrail", "bench_extended"),
 )
 def agg_ab_srm(spark: SparkSession, sf: str) -> DataFrame:
     """SRM guardrail over the SAME md5 arm split events_cuped
@@ -3190,7 +3190,7 @@ _MCNEMAR_CRIT = 3.841  # chi2 df=1, 5%
              > {_MCNEMAR_CRIT}, false) as significant_95
     from g
     """,
-    tags=("agg", "stats", "experiment", "paired"),
+    tags=("agg", "stats", "experiment", "paired", "bench_extended"),
 )
 def agg_mcnemar(spark: SparkSession, sf: str) -> DataFrame:
     """Paired 2x2 gate-disagreement table and McNemar chi-square over
@@ -3278,7 +3278,7 @@ def agg_mcnemar(spark: SparkSession, sf: str) -> DataFrame:
                   / nullif(least(tot.n_r - 1, tot.n_c - 1), 0) as cramers_v2
     from s cross join tot
     """,
-    tags=("agg", "stats", "association", "drift"),
+    tags=("agg", "stats", "association", "drift", "bench_extended"),
 )
 def agg_cramers_v(spark: SparkSession, sf: str) -> DataFrame:
     """Squared Cramér's V over the order-status x order-priority
@@ -3374,7 +3374,7 @@ def agg_cramers_v(spark: SparkSession, sf: str) -> DataFrame:
                          * cast(s.n * (s.n - 1) - ty2 as double)) / 2.0, 0.0) as tau_b
     from s cross join conc cross join disc
     """,
-    tags=("agg", "stats", "rank", "association"),
+    tags=("agg", "stats", "rank", "association", "bench_extended"),
 )
 def agg_kendall_tau(spark: SparkSession, sf: str) -> DataFrame:
     """Tie-adjusted Kendall rank correlation between l_quantity and
@@ -3475,7 +3475,7 @@ def agg_kendall_tau(spark: SparkSession, sf: str) -> DataFrame:
              as rho
     from s
     """,
-    tags=("agg", "stats", "rank", "association"),
+    tags=("agg", "stats", "rank", "association", "bench_extended"),
 )
 def agg_spearman_rho(spark: SparkSession, sf: str) -> DataFrame:
     """Tie-corrected Spearman rho between l_quantity and discount
@@ -3554,7 +3554,7 @@ _QBIN_K = 10
            cast(sum(cast(o_totalprice as decimal(18,2))) as double) as sum_price
     from b group by bin
     """,
-    tags=("feature", "agg", "binning", "ranked-bins"),
+    tags=("feature", "agg", "binning", "ranked-bins", "bench_extended"),
 )
 def feature_quantile_bin(spark: SparkSession, sf: str) -> DataFrame:
     """Equal-frequency decile binning of order total price (ties split
@@ -3629,7 +3629,7 @@ def feature_quantile_bin(spark: SparkSession, sf: str) -> DataFrame:
              as f_stat
     from tot cross join parts
     """,
-    tags=("agg", "stats", "experiment", "drift"),
+    tags=("agg", "stats", "experiment", "drift", "bench_extended"),
 )
 def agg_anova(spark: SparkSession, sf: str) -> DataFrame:
     """One-way ANOVA F over per-source document length: exact integer
@@ -3748,7 +3748,7 @@ _TOST_VERDICT = f"coalesce({_TOST_T_LO} > 1.645 and {_TOST_T_HI} < -1.645, false
            {_TOST_VERDICT} as equivalent_90
     from w
     """,
-    tags=("agg", "stats", "experiment", "equivalence"),
+    tags=("agg", "stats", "experiment", "equivalence", "bench_extended"),
 )
 def agg_tost_equivalence(spark: SparkSession, sf: str) -> DataFrame:
     """Welch-TOST equivalence verdict between the hash-split arms over
@@ -3819,7 +3819,7 @@ def agg_tost_equivalence(spark: SparkSession, sf: str) -> DataFrame:
     select segs.c_nationkey, segments, n_segments, top_customers
     from segs left join tc using (c_nationkey)
     """,
-    tags=("agg", "listagg", "report"),
+    tags=("agg", "listagg", "report", "bench_extended"),
 )
 def agg_string_agg(spark: SparkSession, sf: str) -> DataFrame:
     """Per-nation listagg twice over: the sorted distinct market
@@ -3931,7 +3931,7 @@ def agg_string_agg(spark: SparkSession, sf: str) -> DataFrame:
              as f_bf
     from tot cross join parts
     """,
-    tags=("agg", "stats", "experiment", "drift"),
+    tags=("agg", "stats", "experiment", "drift", "bench_extended"),
 )
 def agg_levene(spark: SparkSession, sf: str) -> DataFrame:
     """Brown-Forsythe F over per-source document-length deviations
@@ -4042,7 +4042,7 @@ _PZ_Z = (
            abs({_PZ_Z}) > 1.96 as significant_95
     from s
     """,
-    tags=("agg", "stats", "experiment"),
+    tags=("agg", "stats", "experiment", "bench_extended"),
 )
 def agg_proportions_ztest(spark: SparkSession, sf: str) -> DataFrame:
     """Pooled two-proportion z on per-user conversion between the
@@ -4124,7 +4124,7 @@ _CQ_Q = f"({_CQ_NUM} / nullif(3 * nn - rr, 0))"
            coalesce({_CQ_Q} > 5.991, false) as significant_95
     from s
     """,
-    tags=("agg", "stats", "experiment"),
+    tags=("agg", "stats", "experiment", "bench_extended"),
 )
 def agg_cochran_q(spark: SparkSession, sf: str) -> DataFrame:
     """Cochran's Q over per-user view/click/purchase participation
@@ -4210,7 +4210,7 @@ _HHI_NORM = (
            {_HHI_NORM} as hhi_normalized
     from g join nation on nationkey = n_nationkey
     """,
-    tags=("agg", "concentration", "diagnostic"),
+    tags=("agg", "concentration", "diagnostic", "bench_extended"),
 )
 def agg_hhi(spark: SparkSession, sf: str) -> DataFrame:
     """Per-nation HHI of supplier revenue shares (1/n = uniform,
@@ -4285,7 +4285,7 @@ _TRIM_ALPHA_PCT = 10  # percent trimmed from EACH side
            cast(sum(c) as double) / (100.0 * count(*)) as trimmed_mean
     from kept
     """,
-    tags=("agg", "robust", "stats"),
+    tags=("agg", "robust", "stats", "bench_extended"),
 )
 def agg_trimmed_mean(spark: SparkSession, sf: str) -> DataFrame:
     """p%-per-side (p=_TRIM_ALPHA_PCT) trimmed mean of finished-order

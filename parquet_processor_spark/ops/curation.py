@@ -52,7 +52,7 @@ _CAP_PER_SOURCE = 10
       from documents
     ) where rk <= {_CAP_PER_SOURCE}
     """,
-    tags=("curation", "sampling"),
+    tags=("curation", "sampling", "bench_extended"),
 )
 def curation_cap_per_source(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source quota cap: keep at most K docs per source, chosen by
@@ -120,7 +120,7 @@ def _assert_broadcastable(bench_docs: DataFrame, max_docs: int = _MAX_BENCH_DOCS
     group by a.doc_id, b.doc_id
     having count(*) >= {_MIN_SHARED}
     """,
-    tags=("curation", "dedup"),
+    tags=("curation", "dedup", "bench_extended"),
 )
 def curation_contamination(spark: SparkSession, sf: str) -> DataFrame:
     """Benchmark-contamination check: flag (train doc, benchmark doc)
@@ -190,7 +190,7 @@ _TERM = r"\bcustomer\b"
              '{_TERM}', '[REDACTED]', 'g') <> text) as was_redacted
     from documents
     """,
-    tags=("curation", "text"),
+    tags=("curation", "text", "bench_extended"),
 )
 def curation_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
     """PII/term scrubbing: chained regexp_replace redaction.
@@ -234,7 +234,7 @@ _REP_DENOM = 10
            (max_n * {_REP_DENOM} > n_words) as is_repetitive
     from s
     """,
-    tags=("curation", "text"),
+    tags=("curation", "text", "bench_extended"),
 )
 def curation_repetition(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher-style repetition signal: fraction of the doc taken by its
@@ -286,7 +286,7 @@ _K_ANON = 10
     from customer c
     join g on c.c_mktsegment = g.c_mktsegment and c.c_nationkey = g.c_nationkey
     """,
-    tags=("curation", "governance", "privacy"),
+    tags=("curation", "governance", "privacy", "bench_extended"),
 )
 def anonymize_k_anonymity(spark: SparkSession, sf: str) -> DataFrame:
     """Suppress quasi-identifier combos carried by fewer than k rows.
@@ -571,7 +571,7 @@ def _dp_sql(tag: str) -> str:
            cast(greatest(n + {_dp_sql('1')} - {_dp_sql('2')}, 0) as bigint) as dp_n
     from g
     """,
-    tags=("curation", "governance", "privacy", "dp"),
+    tags=("curation", "governance", "privacy", "dp", "bench_extended"),
 )
 def anonymize_dp_counts(spark: SparkSession, sf: str) -> DataFrame:
     """epsilon = ln(2) differentially-private per-QI-group counts via
@@ -702,7 +702,7 @@ _SEM_CONTAM_TAU = 0.35
            max(cos) >= {_SEM_CONTAM_TAU} as is_contaminated
     from scored group by vec_id
     """,
-    tags=("curation", "vector", "contamination"),
+    tags=("curation", "vector", "contamination", "bench_extended"),
 )
 def curation_contamination_semantic(spark: SparkSession, sf: str) -> DataFrame:
     """Flag corpus vectors within cosine _SEM_CONTAM_TAU of any benchmark vector.
@@ -787,7 +787,7 @@ def _pseudonym(key) -> F.Column:
     from c left join o on o.pseudo_id = c.pseudo_id
     group by c.pseudo_id, c.c_custkey
     """,
-    tags=("curation", "privacy", "pseudonymize"),
+    tags=("curation", "privacy", "pseudonymize", "bench_extended"),
 )
 def anonymize_pseudonymize(spark: SparkSession, sf: str) -> DataFrame:
     """Keyed pseudonym join: one row per pseudonymized customer with
@@ -895,7 +895,7 @@ _FUNNEL_MIN_DISTINCT_RATIO = 0.5
     )
     order by stage
     """,
-    tags=("curation", "report", "pipeline"),
+    tags=("curation", "report", "pipeline", "bench_extended"),
 )
 def report_curation_funnel(spark: SparkSession, sf: str) -> DataFrame:
     """Per-gate survivor counts for the standard curation screen
@@ -1026,7 +1026,7 @@ _KGEN = 10  # the release ladder climbs until EVERY group clears this
              as qi_group_n
     from rel
     """,
-    tags=("curation", "governance", "privacy", "generalize"),
+    tags=("curation", "governance", "privacy", "generalize", "bench_extended"),
 )
 def anonymize_generalize(spark: SparkSession, sf: str) -> DataFrame:
     """Release all customers at the minimal generalization level —
@@ -1146,7 +1146,7 @@ def _dpm_sql(tag: str) -> str:
              as dp_mean
     from g
     """,
-    tags=("curation", "governance", "privacy", "dp"),
+    tags=("curation", "governance", "privacy", "dp", "bench_extended"),
 )
 def anonymize_dp_mean(spark: SparkSession, sf: str) -> DataFrame:
     """DP mean order value per priority segment: clamped integer sums
@@ -1229,7 +1229,7 @@ _DS_LONG = 1000
            cast(count(*) as double) / (select n_docs from s)
     from d group by lang
     """,
-    tags=("curation", "report", "datasheet"),
+    tags=("curation", "report", "datasheet", "bench_extended"),
 )
 def report_dataset_datasheet(spark: SparkSession, sf: str) -> DataFrame:
     """Tall (metric, value) datasheet for the documents corpus:
@@ -1320,7 +1320,7 @@ _DSHIFT_SPAN = 29  # offsets take values in [-14, +14]
            min(ts + interval 1 day * shift_days) as shifted_min_ts
     from s group by user_id
     """,
-    tags=("curation", "privacy", "temporal"),
+    tags=("curation", "privacy", "temporal", "bench_extended"),
 )
 def anonymize_date_shift(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user audit of the keyed date shift: the constant offset,

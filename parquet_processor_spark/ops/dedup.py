@@ -37,7 +37,7 @@ from parquet_processor_spark.tables import t
     from documents
     group by md5(text)
     """,
-    tags=("dedup",),
+    tags=("dedup", "bench"),
 )
 def dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -214,7 +214,7 @@ def drop_hot_shingles(sh: DataFrame, cap: int = _SHINGLE_DF_CAP) -> DataFrame:
       join sizes sb on p.doc_b = sb.doc_id
     where cast(p.n_common as double) / (sa.n_sh + sb.n_sh - p.n_common) >= 0.2
     """,
-    tags=("dedup",),
+    tags=("dedup", "bench"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     # Blocking runs on xxhash64(shingle) longs, not shingle strings:
@@ -272,7 +272,7 @@ _CONTAINMENT_TAU = 0.6
       join sizes sb on p.doc_b = sb.doc_id
     where cast(p.n_common as double) / least(sa.n_sh, sb.n_sh) >= {_CONTAINMENT_TAU}
     """,
-    tags=("dedup",),
+    tags=("dedup", "bench_extended"),
 )
 def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     """Containment near-dup pairs: |shared shingles| / min(|A|, |B|)
@@ -619,7 +619,7 @@ def _dedup_near_oracle() -> str:
     """
 
 
-@query("dedup_near", oracle=_dedup_near_oracle(), tags=("dedup", "lsh"))
+@query("dedup_near", oracle=_dedup_near_oracle(), tags=("dedup", "lsh", "bench"))
 def dedup_near(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH candidate pairs with verified Jaccard-over-signature.
 
@@ -766,7 +766,7 @@ def _emb_lsh_oracle() -> str:
     """
 
 
-@query("dedup_embedding_lsh", oracle=_emb_lsh_oracle(), tags=("dedup", "vector", "lsh"))
+@query("dedup_embedding_lsh", oracle=_emb_lsh_oracle(), tags=("dedup", "vector", "lsh", "bench_extended"))
 def dedup_embedding_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup with random-hyperplane LSH blocking — the
     100 TB path. HASH-CHECKED: the hyperplane coefficients are
@@ -876,7 +876,7 @@ def _simhash_oracle() -> str:
     """
 
 
-@query("dedup_simhash", oracle=_simhash_oracle(), tags=("dedup", "simhash"))
+@query("dedup_simhash", oracle=_simhash_oracle(), tags=("dedup", "simhash", "bench"))
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash signatures + 16-bit-chunk LSH buckets — HASH-CHECKED
     end to end since r10: the 64 signature bits are two 32-bit md5
@@ -1054,7 +1054,7 @@ def connected_components(nodes: DataFrame | None, edges: DataFrame) -> DataFrame
     from documents d left join reach t on d.doc_id = t.node
     group by d.doc_id
     """,
-    tags=("dedup", "graph", "iterative"),
+    tags=("dedup", "graph", "iterative", "bench_extended"),
 )
 def dedup_connected(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus dedup by transitive closure: cluster_id = smallest doc_id
@@ -1176,7 +1176,7 @@ def _connected_lsh_oracle() -> str:
     """
 
 
-@query("dedup_connected_lsh", oracle=_connected_lsh_oracle(), tags=("dedup", "graph", "lsh", "iterative"))
+@query("dedup_connected_lsh", oracle=_connected_lsh_oracle(), tags=("dedup", "graph", "lsh", "iterative", "bench_extended"))
 def dedup_connected_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """The 100 TB fuzzy-dedup composition end-to-end: MinHash-LSH
     candidate pairs (signature-estimated Jaccard >= 0.2) → transitive
@@ -1238,7 +1238,7 @@ _PASSAGE_N = 8
     from grams gr join df on gr.g = df.g
     group by gr.doc_id
     """,
-    tags=("dedup", "ngram", "curation"),
+    tags=("dedup", "ngram", "curation", "bench_extended"),
 )
 def dedup_repeated_ngrams(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc count and fraction of 8-gram passages shared with at
@@ -1322,7 +1322,7 @@ _INCR_DEDUP_CUTOFF_FRAC = 0.8  # last 20% of ids = the delta
            dup_within_delta = 1 as dup_within_delta
     from marked
     """,
-    tags=("dedup", "incremental"),
+    tags=("dedup", "incremental", "bench_extended"),
 )
 def dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     """Classify each delta document: new-unique, duplicate of the
@@ -1547,7 +1547,7 @@ def _incremental_minhash_oracle() -> str:
 @query(
     "dedup_incremental_minhash",
     oracle=_incremental_minhash_oracle(),
-    tags=("dedup", "lsh", "incremental"),
+    tags=("dedup", "lsh", "incremental", "bench_extended"),
 )
 def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     """Classify each delta document by NEAR-duplication (MinHash-LSH):
@@ -1631,7 +1631,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
            cast(coalesce(n.n_novel, cast(0 as bigint)) as double) / s.n_sh as novelty
     from sizes s left join novel n on s.doc_id = n.doc_id
     """,
-    tags=("dedup", "text", "curation"),
+    tags=("dedup", "text", "curation", "bench_extended"),
 )
 def doc_novelty(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc novelty = |shingles first seen in this doc| / |shingles|.
@@ -1699,7 +1699,7 @@ _BOILER_DF = 5
            cast(n_boiler as double) / n_sh as boiler_frac
     from per_doc
     """,
-    tags=("dedup", "text", "curation"),
+    tags=("dedup", "text", "curation", "bench_extended"),
 )
 def text_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc boilerplate fraction: share of distinct shingles whose
@@ -1794,7 +1794,7 @@ _SPAN_CTES = f"""
     from runs group by doc_a, doc_b
     having max(span_tokens) >= {_SPAN_MIN_TOKENS}
     """,
-    tags=("dedup", "text", "spans"),
+    tags=("dedup", "text", "spans", "bench_extended"),
 )
 def dedup_verbatim_spans(spark: SparkSession, sf: str) -> DataFrame:
     """Longest verbatim token run per document pair: hash every
@@ -1908,7 +1908,7 @@ def _span_runs(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
     from toks t left join kept k on k.doc_id = t.doc_id
     group by t.doc_id, len(t.ws)
     """,
-    tags=("dedup", "text", "spans", "curation"),
+    tags=("dedup", "text", "spans", "curation", "bench_extended"),
 )
 def dedup_span_removal(spark: SparkSession, sf: str) -> DataFrame:
     """The APPLY step of exact-substring dedup (Lee et al. 2022):
@@ -1983,7 +1983,7 @@ def _cluster_report_oracle() -> str:
     """
 
 
-@query("dedup_cluster_report", oracle=_cluster_report_oracle(), tags=("dedup", "report"))
+@query("dedup_cluster_report", oracle=_cluster_report_oracle(), tags=("dedup", "report", "bench_extended"))
 def dedup_cluster_report(spark: SparkSession, sf: str) -> DataFrame:
     """Duplicate-cluster size distribution — the dedup REPORT artifact
     (what Dolma/RedPajama publish alongside the deduped corpus): one
@@ -2051,7 +2051,7 @@ def dedup_cluster_report(spark: SparkSession, sf: str) -> DataFrame:
            cast(count(*) as bigint) as n_bench_matches
     from crossing group by train_id
     """,
-    tags=("curation", "contamination", "spans"),
+    tags=("curation", "contamination", "spans", "bench_extended"),
 )
 def curation_contamination_spans(spark: SparkSession, sf: str) -> DataFrame:
     """Training docs sharing a long verbatim run with the benchmark.
@@ -2170,7 +2170,7 @@ _URL_CANON_SQL = f"""
            c.doc_id > min(c.doc_id) over (partition by c.canonical_url) as is_dup
     from canon c
     """,
-    tags=("dedup", "url", "curation"),
+    tags=("dedup", "url", "curation", "bench_extended"),
 )
 def dedup_url(spark: SparkSession, sf: str) -> DataFrame:
     """Canonical-URL dedup: normalize each document's (derived) URL —
@@ -2239,7 +2239,7 @@ def dedup_url(spark: SparkSession, sf: str) -> DataFrame:
     join tot t2 on t1.source <> t2.source
     left join hits h on h.source_a = t1.source and h.source_b = t2.source
     """,
-    tags=("dedup", "report", "curation"),
+    tags=("dedup", "report", "curation", "bench_extended"),
 )
 def report_source_overlap(spark: SparkSession, sf: str) -> DataFrame:
     """Ordered-pair shingle overlap fractions between document sources.
@@ -2331,7 +2331,7 @@ _SETSIM_NUM, _SETSIM_DEN = 1, 2  # Jaccard >= 1/2
       join sizes sb on p.doc_b = sb.doc_id
     where {_SETSIM_DEN} * p.n_common >= {_SETSIM_NUM} * (sa.n + sb.n - p.n_common)
     """,
-    tags=("join", "similarity", "prefix-filter", "dedup"),
+    tags=("join", "similarity", "prefix-filter", "dedup", "bench_extended"),
 )
 def join_set_similarity(spark: SparkSession, sf: str) -> DataFrame:
     """All document pairs with shingle Jaccard >= num/den
@@ -2484,7 +2484,7 @@ def join_set_similarity(spark: SparkSession, sf: str) -> DataFrame:
       join sizes sb on sb.doc_id = m.doc_b
     where {_SETSIM_DEN} * m.n_common >= {_SETSIM_NUM} * (sa.n + sb.n - m.n_common)
     """,
-    tags=("join", "similarity", "lsh", "dedup", "verify"),
+    tags=("join", "similarity", "lsh", "dedup", "verify", "bench_extended"),
 )
 def join_set_similarity_verify(spark: SparkSession, sf: str) -> DataFrame:
     """Document pairs with EXACT shingle Jaccard >= num/den

@@ -103,7 +103,7 @@ def _mass_step(masses: DataFrame, edges: DataFrame) -> DataFrame:
     )
     select node, deg, mass from m3
     """,
-    tags=("graph", "iterative"),
+    tags=("graph", "iterative", "bench_extended"),
 )
 def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """3-round damped PageRank over the customer–supplier graph.
@@ -251,7 +251,7 @@ def _triangles_oracle() -> str:
     """
 
 
-@query("graph_triangles", oracle=_triangles_oracle(), tags=("graph", "pairs"))
+@query("graph_triangles", oracle=_triangles_oracle(), tags=("graph", "pairs", "bench_extended"))
 def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
     """Exact triangle count by degree-ordered orientation: every edge
     points from its lower-(degree, id) endpoint to the higher one, so
@@ -351,7 +351,7 @@ def _local_clustering_oracle() -> str:
     """
 
 
-@query("graph_local_clustering", oracle=_local_clustering_oracle(), tags=("graph", "pairs"))
+@query("graph_local_clustering", oracle=_local_clustering_oracle(), tags=("graph", "pairs", "bench_extended"))
 def graph_local_clustering(spark: SparkSession, sf: str) -> DataFrame:
     """Top-_LCC_TOP_K nodes by local clustering coefficient
     (triangles_at_node / C(deg, 2)), among nodes with deg >= _LCC_MIN_DEG.
@@ -440,7 +440,7 @@ def _lpa_oracle() -> str:
     """
 
 
-@query("graph_label_propagation", oracle=_lpa_oracle(), tags=("graph", "iterative", "community"))
+@query("graph_label_propagation", oracle=_lpa_oracle(), tags=("graph", "iterative", "community", "bench_extended"))
 def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     """Fixed-round (_LPA_ROUNDS) synchronous label propagation over the
     co-purchase part graph: labels start as node ids; each round every
@@ -536,7 +536,7 @@ def _linkpred_oracle() -> str:
     """
 
 
-@query("graph_link_prediction", oracle=_linkpred_oracle(), tags=("graph", "recommend"))
+@query("graph_link_prediction", oracle=_linkpred_oracle(), tags=("graph", "recommend", "bench_extended"))
 def graph_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     """Top-K predicted co-purchase links by neighbor-set Jaccard.
 
@@ -768,7 +768,7 @@ def _bfs_oracle() -> str:
     """
 
 
-@query("graph_bfs_distances", oracle=_bfs_oracle(), tags=("graph", "iterative", "bfs"))
+@query("graph_bfs_distances", oracle=_bfs_oracle(), tags=("graph", "iterative", "bfs", "bench_extended"))
 def graph_bfs_distances(spark: SparkSession, sf: str) -> DataFrame:
     """Minimum hop distance from the seed set (node % 50 == 0) to every
     co-purchase node: (node, dist, reached); unreached components keep
@@ -884,7 +884,7 @@ def _walk_step_sql(prev: str, s: int) -> str:
     union all select walk_id, cast(step as int), node from w2
     union all select walk_id, cast(step as int), node from w3
     """,
-    tags=("graph", "sampling", "iterative"),
+    tags=("graph", "sampling", "iterative", "bench_extended"),
 )
 def graph_random_walks(spark: SparkSession, sf: str) -> DataFrame:
     """Length-K (K=_WALK_STEPS) hash-deterministic walks over the trade
@@ -1020,7 +1020,7 @@ _PPR_SEED_MOD = 10
     select node, deg, mass, node % {2 * _PPR_SEED_MOD} = 0 as is_seed
     from m3 where mass > 0
     """,
-    tags=("graph", "iterative", "ppr"),
+    tags=("graph", "iterative", "ppr", "bench_extended"),
 )
 def graph_ppr(spark: SparkSession, sf: str) -> DataFrame:
     """3-round integer personalized PageRank from the custkey %
@@ -1191,7 +1191,7 @@ def _scc_oracle() -> str:
            cast(count(*) over (partition by scc_id) as bigint) as scc_size
     from base
     """,
-    tags=("graph", "iterative", "scc"),
+    tags=("graph", "iterative", "scc", "bench_extended"),
 )
 def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
     """(node, scc_id, scc_size) with scc_id = the minimum node id in
@@ -1354,7 +1354,7 @@ def _hits_oracle() -> str:
     """
 
 
-@query("graph_hits", oracle=_hits_oracle(), tags=("graph", "iterative", "hits"))
+@query("graph_hits", oracle=_hits_oracle(), tags=("graph", "iterative", "hits", "bench_extended"))
 def graph_hits(spark: SparkSession, sf: str) -> DataFrame:
     """r-round (r=_HITS_ROUNDS) unnormalized HITS over the purchase
     graph: customers are pure hubs, suppliers pure authorities (the
@@ -1467,7 +1467,7 @@ def _modularity_oracle() -> str:
     """
 
 
-@query("graph_modularity", oracle=_modularity_oracle(), tags=("graph", "community", "eval"))
+@query("graph_modularity", oracle=_modularity_oracle(), tags=("graph", "community", "eval", "bench_extended"))
 def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
     """Newman modularity Q of the co-purchase communities found by
     :func:`graph_label_propagation`, plus the partition's shape
@@ -1574,7 +1574,7 @@ def _assortativity_oracle() -> str:
 @query(
     "graph_degree_assortativity",
     oracle=_assortativity_oracle(),
-    tags=("graph", "diagnostic"),
+    tags=("graph", "diagnostic", "bench_extended"),
 )
 def graph_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     """Degree assortativity of the co-purchase graph (the

@@ -30,7 +30,7 @@ from parquet_processor_spark.tables import t
     from orders join customer on o_custkey = c_custkey
     where o_orderstatus = 'O'
     """,
-    tags=("join",),
+    tags=("join", "bench"),
 )
 def join_broadcast_equi(spark: SparkSession, sf: str) -> DataFrame:
     o = t(spark, sf, "orders").where(F.col("o_orderstatus") == "O")
@@ -53,7 +53,7 @@ def join_broadcast_equi(spark: SparkSession, sf: str) -> DataFrame:
      and b.ts > a.ts
      and b.ts <= a.ts + interval 5 minutes
     """,
-    tags=("join", "range"),
+    tags=("join", "range", "bench"),
 )
 def join_range(spark: SparkSession, sf: str) -> DataFrame:
     e = t(spark, sf, "events")
@@ -130,7 +130,7 @@ def join_left_outer(spark: SparkSession, sf: str) -> DataFrame:
     from orders o right join customer c
       on o.o_custkey = c.c_custkey and o.o_orderpriority = '1-URGENT'
     """,
-    tags=("join",),
+    tags=("join", "bench_extended"),
 )
 def join_right_outer(spark: SparkSession, sf: str) -> DataFrame:
     """100 TB shape: the non-preserved (left) side carries the pushed
@@ -211,7 +211,7 @@ def join_cross(spark: SparkSession, sf: str) -> DataFrame:
     select o.o_orderkey, o.prio, c.n_orders
     from o join c on o.prio is not distinct from c.prio
     """,
-    tags=("join", "nulls"),
+    tags=("join", "nulls", "bench_extended"),
 )
 def join_null_safe(spark: SparkSession, sf: str) -> DataFrame:
     """Join orders to per-priority counts with NULL keys matching NULL
@@ -271,7 +271,7 @@ _FUZZY_MAX_EDIT = 3
     from cand
     where levenshtein(name_a, name_b) <= {_FUZZY_MAX_EDIT}
     """,
-    tags=("join", "fuzzy", "dedup"),
+    tags=("join", "fuzzy", "dedup", "bench_extended"),
 )
 def join_fuzzy_names(spark: SparkSession, sf: str) -> DataFrame:
     """Fuzzy self-join of part names within edit distance

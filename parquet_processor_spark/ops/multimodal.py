@@ -339,7 +339,7 @@ def multimodal_frames(spark: SparkSession, sf: str) -> DataFrame:
            cast(count(*) as bigint) as n_copies
     from media group by 1
     """,
-    tags=("multimodal", "dedup"),
+    tags=("multimodal", "dedup", "bench_extended"),
 )
 def multimodal_dedup_bytes(spark: SparkSession, sf: str) -> DataFrame:
     """Group binary payloads by md5(bytes), keep the lowest media_id.
@@ -547,7 +547,7 @@ def _phash_bands(media: DataFrame) -> DataFrame:
 @query(
     "multimodal_dedup_perceptual",
     oracle=_phash_oracle(),
-    tags=("multimodal", "dedup", "perceptual"),
+    tags=("multimodal", "dedup", "perceptual", "bench_extended"),
 )
 def multimodal_dedup_perceptual(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual (dHash) near-dup detection over media payloads:
@@ -688,7 +688,7 @@ _CLIP_CAP_MAX_TOK = 64
     from documents m
     left join best b on m.source = b.source
     """,
-    tags=("multimodal", "curation"),
+    tags=("multimodal", "curation", "bench_extended"),
 )
 def multimodal_clip_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Pair every media payload with its source's best gated caption.
@@ -760,7 +760,7 @@ _FRAME_CTE = f"""
       from ( {{inner}} ) r
     )
     """.format(inner=_phash_oracle(_FRAME_CTE)),
-    tags=("multimodal", "dedup", "perceptual", "frames"),
+    tags=("multimodal", "dedup", "perceptual", "frames", "bench_extended"),
 )
 def multimodal_frame_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup FRAMES across the media corpus (dHash + Hamming).
@@ -938,7 +938,7 @@ def _survivors_sql() -> str:
                      % {_MEDIA_SHARDS} end as shard
     from disp
     """,
-    tags=("multimodal", "pipeline", "curation"),
+    tags=("multimodal", "pipeline", "curation", "bench_extended"),
 )
 def pipeline_curate_media(spark: SparkSession, sf: str) -> DataFrame:
     """Raw media payloads -> training manifest, with per-item audit.
@@ -1579,7 +1579,7 @@ def _scene_cut_oracle() -> str:
     """
 
 
-@query("multimodal_scene_cut", oracle=_scene_cut_oracle(), tags=("multimodal", "video", "segmentation"))
+@query("multimodal_scene_cut", oracle=_scene_cut_oracle(), tags=("multimodal", "video", "segmentation", "bench_extended"))
 def multimodal_scene_cut(spark: SparkSession, sf: str) -> DataFrame:
     """Per-frame scene segmentation: Hamming distance between each
     frame's dHash and its predecessor's, a cut where the distance
@@ -1674,7 +1674,7 @@ def _keyframes_oracle() -> str:
     """
 
 
-@query("multimodal_keyframes", oracle=_keyframes_oracle(), tags=("multimodal", "video", "keyframes"))
+@query("multimodal_keyframes", oracle=_keyframes_oracle(), tags=("multimodal", "video", "keyframes", "bench_extended"))
 def multimodal_keyframes(spark: SparkSession, sf: str) -> DataFrame:
     """One keyframe per detected scene: the longest frame (ties to the
     earliest), with the scene's extent facts. Composes the

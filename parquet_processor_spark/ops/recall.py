@@ -581,7 +581,7 @@ def recall_sim_topk_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
            true as within_err
     from events
     """,
-    tags=("agg", "approx", "evidence"),
+    tags=("agg", "approx", "evidence", "bench_extended"),
 )
 def error_approx_intersection(spark: SparkSession, sf: str) -> DataFrame:
     """Sketch-based set-INTERSECTION estimate gate: |clickers ∩ buyers|
@@ -981,7 +981,7 @@ def _error_bootstrap_oracle() -> str:
 @query(
     "error_bootstrap_ci",
     oracle=_error_bootstrap_oracle(),
-    tags=("agg", "stats", "bootstrap", "evidence"),
+    tags=("agg", "stats", "bootstrap", "evidence", "bench_extended"),
 )
 def error_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
     """Evidence gate for agg_bootstrap_ci: the B=32 percentile interval
@@ -1058,7 +1058,7 @@ def recall_sim_topk_lsh_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
         "select count(*) as n_true_pairs, true as recall_ok "
         f"from ({_ORACLES['join_set_similarity']})"
     ),
-    tags=("join", "similarity", "lsh", "evidence"),
+    tags=("join", "similarity", "lsh", "evidence", "bench_extended"),
 )
 def recall_join_set_similarity_verify(spark: SparkSession, sf: str) -> DataFrame:
     """N222's error gate: the bounded verify operator's recall against

@@ -67,7 +67,7 @@ _PART_SELECT = """
 """
 
 
-@query("sink_partitioned_roundtrip", oracle=_PART_SELECT, tags=("sink", "layout"))
+@query("sink_partitioned_roundtrip", oracle=_PART_SELECT, tags=("sink", "layout", "bench_extended"))
 def sink_partitioned_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """Write orders partitioned by (priority, month-batch) — the
     reference's {segment}/{timestamp}/ directory contract — and read
@@ -237,7 +237,7 @@ def sink_zorder_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from lineitem
     where l_shipdate >= date '1997-01-01' and l_shipdate < date '1997-04-01'
     """,
-    tags=("sink", "layout"),
+    tags=("sink", "layout", "bench_extended"),
 )
 def sink_sorted_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     out = scratch_dir("ppspark_sink_sorted_")
@@ -270,7 +270,7 @@ def sink_sorted_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     select l_orderkey, l_linenumber, l_quantity, l_returnflag
     from lineitem where l_quantity >= 40 and l_linenumber % 2 = 1
     """,
-    tags=("sink", "source", "schema"),
+    tags=("sink", "source", "schema", "bench_extended"),
 )
 def sink_mergeschema_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """Write two parquet batches under different schema versions (v1
@@ -312,7 +312,7 @@ _COMPACT_TARGET_ROWS = 50_000  # stand-in for a bytes target (fixture rows are f
 @query(
     "sink_compacted_roundtrip",
     oracle=_SELECT,
-    tags=("sink", "layout", "maintenance"),
+    tags=("sink", "layout", "maintenance", "bench_extended"),
 )
 def sink_compacted_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """Fragment the subset into many tiny files, compact the directory
@@ -357,7 +357,7 @@ def sink_compacted_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
            cast(sum(cast(l_quantity as bigint)) as bigint) as qty_sum
     from sub
     """,
-    tags=("source", "robustness"),
+    tags=("source", "robustness", "bench_extended"),
 )
 def scan_csv_badrecords(spark: SparkSession, sf: str) -> DataFrame:
     """Write a CSV containing both clean rows and injected malformed
@@ -424,7 +424,7 @@ _BINARY_PARTS = 8
            cast(sum(octet_length(encode(text)) + 1) as bigint) as total_bytes
     from documents
     """,
-    tags=("source", "multimodal"),
+    tags=("source", "multimodal", "bench_extended"),
 )
 def scan_binary_files(spark: SparkSession, sf: str) -> DataFrame:
     """Write documents as _BINARY_PARTS text part-files, scan them
@@ -481,7 +481,7 @@ _SNAP_CUT = "1996-01-01"
     from orders
     order by version
     """.format(dsum=dsum_sql("o_totalprice", "total_price")),
-    tags=("sink", "layout", "versioning"),
+    tags=("sink", "layout", "versioning", "bench_extended"),
 )
 def sink_versioned_snapshots(spark: SparkSession, sf: str) -> DataFrame:
     """Publish two successive snapshots of orders under snap-1/ and
@@ -542,7 +542,7 @@ _SHARD_HEX = "0123456789abcdef"
            arg_min(doc_id, hh) as first_doc
     from s group by shard
     """,
-    tags=("sink", "sampling", "shards"),
+    tags=("sink", "sampling", "shards", "bench_extended"),
 )
 def sink_training_shards(spark: SparkSession, sf: str) -> DataFrame:
     """Scatter documents into 16 hash-assigned shards, write them
@@ -620,7 +620,7 @@ _CODECS = ("snappy", "zstd")
     where l_shipdate < date '1995-01-01'
     group by 1, 2
     """,
-    tags=("sink", "codec", "roundtrip"),
+    tags=("sink", "codec", "roundtrip", "bench_extended"),
 )
 def sink_codec_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """Write under each codec, read back, return the per-group digest
@@ -697,7 +697,7 @@ _MANIFEST_HI = "1995-12-31"
     from orders
     where o_orderdate between date '{_MANIFEST_LO}' and date '{_MANIFEST_HI}'
     """,
-    tags=("sink", "manifest", "pruning"),
+    tags=("sink", "manifest", "pruning", "bench_extended"),
 )
 def sink_manifest_pruned_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Range query served through a min-max file manifest.
@@ -763,7 +763,7 @@ _RESTATE_DAY = "2024-01-15"
     from events where ts is not null
     group by 1
     """,
-    tags=("sink", "partitioned", "restatement"),
+    tags=("sink", "partitioned", "restatement", "bench_extended"),
 )
 def sink_partition_overwrite_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     """Write day-partitioned events, restate ONE day in place via
@@ -921,7 +921,7 @@ def publish_if_clean(df: DataFrame, root: str, version: int, n_violations: int) 
     from o
     order by version
     """,
-    tags=("sink", "snapshot", "quality", "governance"),
+    tags=("sink", "snapshot", "quality", "governance", "bench_extended"),
 )
 def sink_checked_publish(spark: SparkSession, sf: str) -> DataFrame:
     """Two WAP attempts against one snapshot root: attempt 1 audits
@@ -1018,7 +1018,7 @@ def _rtbf_target_pred(key: F.Column) -> F.Column:
            true as untouched_intact
     from stats
     """,
-    tags=("sink", "governance", "privacy", "delete"),
+    tags=("sink", "governance", "privacy", "delete", "bench_extended"),
 )
 def sink_targeted_delete(spark: SparkSession, sf: str) -> DataFrame:
     """Copy-on-write targeted delete over a bucket-partitioned orders
@@ -1152,7 +1152,7 @@ def sink_targeted_delete(spark: SparkSession, sf: str) -> DataFrame:
     # any table of >= 4 rows, n for tinier ones, and one schema-only
     # file for an empty table — so least(4, greatest(n, 1)) holds at
     # every fixture size.
-    tags=("sink", "maintenance", "vacuum"),
+    tags=("sink", "maintenance", "vacuum", "bench_extended"),
 )
 def table_vacuum_orphans(spark: SparkSession, sf: str) -> DataFrame:
     """Reconcile a parquet table's directory listing against its file
@@ -1291,7 +1291,7 @@ def _bloomix_pos_sql(seed: int, key_sql: str) -> str:
            h.n_rows_found = f.n_rows_full as no_false_negatives
     from hits h join full_cnt f using (c_custkey)
     """,
-    tags=("sink", "bloom", "layout", "scale"),
+    tags=("sink", "bloom", "layout", "scale", "bench_extended"),
 )
 def sink_bloom_pruned_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Write orders bucket-partitioned + a per-bucket bloom index at
@@ -1474,7 +1474,7 @@ _MERGE_INS = 13  # else % 13 == 0      -> INSERT (key -> -k, status 'I')
            true as untouched_intact, true as merge_ok
     from s
     """,
-    tags=("sink", "merge", "upsert", "cdc"),
+    tags=("sink", "merge", "upsert", "cdc", "bench_extended"),
 )
 def sink_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """Copy-on-write MERGE against a bucket-partitioned orders table:
@@ -1644,7 +1644,7 @@ _TT_CUTS = ("1995-01-01", "1996-01-01", None)  # v1, v2, v3=full
              as total_price
     from q order by q.as_of_ts
     """,
-    tags=("sink", "layout", "versioning", "time-travel"),
+    tags=("sink", "layout", "versioning", "time-travel", "bench_extended"),
 )
 def sink_time_travel_read(spark: SparkSession, sf: str) -> DataFrame:
     """Publish three snapshots of orders (growing date cuts) with a
@@ -1726,7 +1726,7 @@ _DV_DEL = 13  # o_orderkey % 13 == 0 -> deleted
            true as base_files_untouched, true as compaction_ok
     from o
     """,
-    tags=("sink", "merge-on-read", "deletion-vectors", "cdc"),
+    tags=("sink", "merge-on-read", "deletion-vectors", "cdc", "bench_extended"),
 )
 def sink_merge_on_read_dv(spark: SparkSession, sf: str) -> DataFrame:
     """Merge-on-read delete: write orders bucket-partitioned, apply a
@@ -1870,7 +1870,7 @@ def sink_merge_on_read_dv(spark: SparkSession, sf: str) -> DataFrame:
     union all
     select o_orderkey, 'update_postimage', post_status from feed where kind = 'update'
     """,
-    tags=("scan", "cdc", "cdf", "versioning"),
+    tags=("scan", "cdc", "cdf", "versioning", "bench_extended"),
 )
 def scan_change_data_feed(spark: SparkSession, sf: str) -> DataFrame:
     """Row-level CDF between version 1 (orders as-is) and version 2

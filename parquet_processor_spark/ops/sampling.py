@@ -233,7 +233,7 @@ _TEMP_SCALE = float(1 << 52)
     from documents d join rates r on d.lang = r.lang
     where ('0x' || substr(md5(cast(d.doc_id as varchar)), 1, 13))::bigint < r.thr
     """,
-    tags=("sampling", "mixing"),
+    tags=("sampling", "mixing", "bench_extended"),
 )
 def sample_temperature_mix(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic temperature (alpha=0.5) language rebalance.
@@ -308,7 +308,7 @@ _MIX_BUDGET = 100_000  # characters
            cast(cum_chars as bigint) as cum_chars
     from ordered where cum_chars <= budget
     """,
-    tags=("sampling", "mixing", "budget"),
+    tags=("sampling", "mixing", "budget", "bench_extended"),
 )
 def sample_budget_mix(spark: SparkSession, sf: str) -> DataFrame:
     """Documents selected per language up to its share of a global
@@ -374,7 +374,7 @@ _NEG_K = 2
     from cand c semi join ids p on c.neg_id = p.doc_id
     where c.neg_id <> c.doc_id
     """,
-    tags=("sampling", "vector", "pairs"),
+    tags=("sampling", "vector", "pairs", "bench_extended"),
 )
 def sample_negative_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """K deterministic negative partners per anchor document
@@ -446,7 +446,7 @@ def _cluster_nibble_sql() -> str:
                 then 'train' else 'test' end as split
     from labels
     """,
-    tags=("sampling", "dedup", "graph"),
+    tags=("sampling", "dedup", "graph", "bench_extended"),
 )
 def split_leakage_safe(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster-aware 13/16-train hash split: the split key is the
@@ -486,7 +486,7 @@ def split_leakage_safe(spark: SparkSession, sf: str) -> DataFrame:
            cast(1.0 as double) / s.cluster_size as weight
     from labels l join sizes s on l.cluster_id = s.cluster_id
     """,
-    tags=("sampling", "dedup", "graph"),
+    tags=("sampling", "dedup", "graph", "bench_extended"),
 )
 def sample_downweight_dups(spark: SparkSession, sf: str) -> DataFrame:
     """Soft dedup: keep every document but weight it 1/cluster_size so
@@ -551,7 +551,7 @@ def sample_downweight_dups(spark: SparkSession, sf: str) -> DataFrame:
            ((r.doc_id = k.keep_id) and r.n_chars >= q.q25) as selected
     from ranked r join keep k on r.cluster_id = k.cluster_id, q
     """,
-    tags=("sampling", "dedup", "curation", "pipeline"),
+    tags=("sampling", "dedup", "curation", "pipeline", "bench_extended"),
 )
 def pipeline_curate_corpus(spark: SparkSession, sf: str) -> DataFrame:
     """The full curation pipeline as one query: closure labels →
@@ -652,7 +652,7 @@ _DSIR_SEED_TOKEN = "vector"
     from per_doc p join documents d using (doc_id)
     cross join totals
     """,
-    tags=("sampling", "curation", "dsir"),
+    tags=("sampling", "curation", "dsir", "bench_extended"),
 )
 def sample_importance_dsir(spark: SparkSession, sf: str) -> DataFrame:
     """Importance-ratio data selection against a seed-topic target.
@@ -975,7 +975,7 @@ def _curr_grade_sql() -> str:
     select doc_id, grade_band, share_pct, h < share_pct as selected
     from s
     """,
-    tags=("sampling", "curriculum", "quality"),
+    tags=("sampling", "curriculum", "quality", "bench_extended"),
 )
 def sample_curriculum_mix(spark: SparkSession, sf: str) -> DataFrame:
     """Difficulty-keyed curriculum slice: per readability grade band,
@@ -1036,7 +1036,7 @@ def sample_curriculum_mix(spark: SparkSession, sf: str) -> DataFrame:
     from ranked r, m
     where r.rk <= m.m
     """,
-    tags=("sampling", "balance", "curation"),
+    tags=("sampling", "balance", "curation", "bench_extended"),
 )
 def sample_class_balance(spark: SparkSession, sf: str) -> DataFrame:
     """Downsample every language class to the minority class's size:
@@ -1098,7 +1098,7 @@ def _epochs_col() -> F.Column:
     select doc_id, lang, epochs, cast(unnest(generate_series(1, epochs)) as int) as epoch
     from e
     """,
-    tags=("sampling", "mixing", "epochs"),
+    tags=("sampling", "mixing", "epochs", "bench_extended"),
 )
 def sample_epoch_repeat(spark: SparkSession, sf: str) -> DataFrame:
     """Epoch-repeat expansion: high-quality documents appear
@@ -1168,7 +1168,7 @@ _CHUNK_SEQ_LEN = 512
                 - greatest(seq_id * {_CHUNK_SEQ_LEN}, tok_start) as bigint) as n_toks
     from spans
     """,
-    tags=("sampling", "packing", "text"),
+    tags=("sampling", "packing", "text", "bench_extended"),
 )
 def pack_concat_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """Assign every document its (sequence, offset) spans in the
@@ -1257,7 +1257,7 @@ _PPS_N = 500  # fixed sample positions; cum*n stays < 2^63 for corpora to ~1e16 
            cast(t as double) / ({_PPS_N} * cents) as ht_weight
     from hits where n_hits > 0
     """,
-    tags=("sample", "pps", "weights"),
+    tags=("sample", "pps", "weights", "bench_extended"),
 )
 def sample_pps(spark: SparkSession, sf: str) -> DataFrame:
     """Systematic PPS sample of orders by total price: n=_PPS_N positions
@@ -1364,7 +1364,7 @@ def _neyman_oracle() -> str:
     """
 
 
-@query("sample_stratified_neyman", oracle=_neyman_oracle(), tags=("sample", "strata", "neyman"))
+@query("sample_stratified_neyman", oracle=_neyman_oracle(), tags=("sample", "strata", "neyman", "bench_extended"))
 def sample_stratified_neyman(spark: SparkSession, sf: str) -> DataFrame:
     """Neyman-optimal stratified sample of documents by language:
     per-stratum SD of n_chars from exact integer moments (population
@@ -1455,7 +1455,7 @@ _KFOLD_K = 5
                 % {_KFOLD_K} as int) as fold
     from labels
     """,
-    tags=("sampling", "dedup", "graph", "cv"),
+    tags=("sampling", "dedup", "graph", "cv", "bench_extended"),
 )
 def sample_kfold(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster-keyed k-fold (k=_KFOLD_K) assignment: fold =
@@ -1508,7 +1508,7 @@ _TSPLIT_TRAIN_END = "2024-01-19 00:00:00"  # cut minus the 3-day embargo
            max(ts) as max_ts
     from lab group by split
     """,
-    tags=("sampling", "split", "temporal", "leakage"),
+    tags=("sampling", "split", "temporal", "leakage", "bench_extended"),
 )
 def split_time_embargo(spark: SparkSession, sf: str) -> DataFrame:
     """Per-split audit of the purged temporal split: train strictly

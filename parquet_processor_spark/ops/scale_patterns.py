@@ -38,7 +38,7 @@ _SALT = 8
     from orders o join lineitem l on o.o_orderkey = l.l_orderkey
     group by o.o_orderkey, o.o_orderpriority
     """,
-    tags=("join", "skew", "scale"),
+    tags=("join", "skew", "scale", "bench"),
 )
 def join_skew_salted(spark: SparkSession, sf: str) -> DataFrame:
     li = t(spark, sf, "lineitem").withColumn(
@@ -69,7 +69,7 @@ def join_skew_salted(spark: SparkSession, sf: str) -> DataFrame:
     from customer c join orders o on c.c_custkey = o.o_custkey
     where o.o_totalprice > 100000
     """,
-    tags=("join", "bucket", "scale"),
+    tags=("join", "bucket", "scale", "bench"),
 )
 def join_bucketed(spark: SparkSession, sf: str) -> DataFrame:
     left, right = bucketed_tables(spark, sf)
@@ -278,7 +278,7 @@ def _bloom_pos(seed: int, key) -> "F.Column":
                   0.0) <= {_BLOOM_FP_BOUND}) as bloom_ok
     from flagged
     """,
-    tags=("join", "bloom", "scale", "evidence"),
+    tags=("join", "bloom", "scale", "evidence", "bench_extended"),
 )
 def join_bloom_filtered(spark: SparkSession, sf: str) -> DataFrame:
     """Bloom-pruned semi-join evidence row: candidate/member counts,
@@ -366,7 +366,7 @@ _RANGE_BUCKET_US = 300_000_000  # 5 minutes in microseconds
     from events a join events b
       on b.ts > a.ts and b.ts <= a.ts + interval 5 minutes
     """,
-    tags=("join", "range", "bucket", "scale"),
+    tags=("join", "range", "bucket", "scale", "bench_extended"),
 )
 def join_range_bucketed(spark: SparkSession, sf: str) -> DataFrame:
     """All (base, follow) event pairs with follow in (base, base+5min],

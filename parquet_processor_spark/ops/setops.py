@@ -43,7 +43,7 @@ def union_by_name(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "distinct_dedup",
     oracle="select distinct l_returnflag, l_linestatus from lineitem",
-    tags=("setop", "dedup"),
+    tags=("setop", "dedup", "bench"),
 )
 def distinct_dedup(spark: SparkSession, sf: str) -> DataFrame:
     return t(spark, sf, "lineitem").select("l_returnflag", "l_linestatus").distinct()
@@ -146,7 +146,7 @@ def set_except_all(spark: SparkSession, sf: str) -> DataFrame:
                 else 'unchanged' end as status
     from v_old o full outer join v_new n on o.doc_id = n.doc_id
     """,
-    tags=("setop", "pipeline"),
+    tags=("setop", "pipeline", "bench_extended"),
 )
 def table_diff(spark: SparkSession, sf: str) -> DataFrame:
     """Row-level diff of two corpus snapshots keyed by doc_id:

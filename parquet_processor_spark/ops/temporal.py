@@ -52,7 +52,7 @@ from parquet_processor_spark.tables import t
       asof left join views v
         on p.user_id = v.user_id and p.ts >= v.ts
     """,
-    tags=("join", "asof", "temporal"),
+    tags=("join", "asof", "temporal", "bench"),
 )
 def join_asof(spark: SparkSession, sf: str) -> DataFrame:
     ev = t(spark, sf, "events")
@@ -134,7 +134,7 @@ def join_asof(spark: SparkSession, sf: str) -> DataFrame:
     from grouped
     group by user_id, sess_id
     """,
-    tags=("window", "session", "temporal"),
+    tags=("window", "session", "temporal", "bench"),
 )
 def window_session(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -212,7 +212,7 @@ def sessionize_events(spark: SparkSession, sf: str) -> DataFrame:
     from events cross join (values (0), (1)) as offsets(k)
     group by 1
     """,
-    tags=("window", "sliding", "temporal"),
+    tags=("window", "sliding", "temporal", "bench"),
 )
 def window_sliding(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -257,7 +257,7 @@ def window_sliding(spark: SparkSession, sf: str) -> DataFrame:
       left join c on v.user_id = c.user_id
       left join p on v.user_id = p.user_id
     """,
-    tags=("temporal", "window"),
+    tags=("temporal", "window", "bench_extended"),
 )
 def events_funnel(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user funnel: earliest view, earliest click strictly after
@@ -322,7 +322,7 @@ def events_funnel(spark: SparkSession, sf: str) -> DataFrame:
     from events e join thr t on e.event_type = t.event_type
     where e.value > t.p99
     """,
-    tags=("events", "anomaly", "percentile"),
+    tags=("events", "anomaly", "percentile", "bench_extended"),
 )
 def events_anomaly_p99(spark: SparkSession, sf: str) -> DataFrame:
     """Events whose value exceeds their type's exact 99th percentile.
@@ -532,7 +532,7 @@ def join_asof_tolerance(spark: SparkSession, sf: str) -> DataFrame:
     from changes
     window w as (partition by user_id order by ts, state)
     """,
-    tags=("temporal", "window", "scd"),
+    tags=("temporal", "window", "scd", "bench_extended"),
 )
 def scd2_intervals(spark: SparkSession, sf: str) -> DataFrame:
     """SCD2 validity intervals from the per-user event-type stream.
@@ -609,7 +609,7 @@ def _session_sql(event_type: str) -> str:
     from v join p on v.user_id = p.user_id
                  and v.s_start < p.s_end and p.s_start < v.s_end
     """,
-    tags=("join", "temporal", "interval"),
+    tags=("join", "temporal", "interval", "bench_extended"),
 )
 def join_interval_overlap(spark: SparkSession, sf: str) -> DataFrame:
     """Overlapping (view-session × purchase-session) pairs per user.
@@ -688,7 +688,7 @@ def join_interval_overlap(spark: SparkSession, sf: str) -> DataFrame:
            (d.day_value is not null) as is_observed
     from grid g left join daily d on g.user_id = d.user_id and g.day = d.day
     """,
-    tags=("temporal", "timeseries", "gapfill"),
+    tags=("temporal", "timeseries", "gapfill", "bench_extended"),
 )
 def events_gap_fill(spark: SparkSession, sf: str) -> DataFrame:
     """Daily per-user grid over each user's active span, forward-filled.
@@ -754,7 +754,7 @@ def events_gap_fill(spark: SparkSession, sf: str) -> DataFrame:
              / sum(n) over (partition by prev_type) as p_next
     from trans
     """,
-    tags=("temporal", "markov", "events"),
+    tags=("temporal", "markov", "events", "bench_extended"),
 )
 def events_markov(spark: SparkSession, sf: str) -> DataFrame:
     """(prev, next) event-type transition counts and P(next | prev).
@@ -805,7 +805,7 @@ def events_markov(spark: SparkSession, sf: str) -> DataFrame:
     from days d join fan f on f.target_day = d.day
     group by d.day
     """,
-    tags=("temporal", "window", "distinct"),
+    tags=("temporal", "window", "distinct", "bench_extended"),
 )
 def events_rolling_distinct(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct users active in the trailing 7 days, per observed day.
@@ -870,7 +870,7 @@ _FUNNEL_WINDOW_SECONDS = 3600
       left join c on v.user_id = c.user_id
       left join p on v.user_id = p.user_id
     """,
-    tags=("temporal", "funnel", "window"),
+    tags=("temporal", "funnel", "window", "bench_extended"),
 )
 def events_funnel_windowed(spark: SparkSession, sf: str) -> DataFrame:
     """events_funnel with a 1-hour conversion bound per stage.
@@ -952,7 +952,7 @@ def events_funnel_windowed(spark: SparkSession, sf: str) -> DataFrame:
                 as bigint) as n_open
     from daily
     """,
-    tags=("temporal", "interval", "window"),
+    tags=("temporal", "interval", "window", "bench_extended"),
 )
 def orders_open_over_time(spark: SparkSession, sf: str) -> DataFrame:
     """Orders in flight per day (open from order date through last
@@ -1024,7 +1024,7 @@ def orders_open_over_time(spark: SparkSession, sf: str) -> DataFrame:
     from purchases p
       asof join scd s on p.user_id = s.user_id and p.ts >= s.valid_from
     """,
-    tags=("temporal", "scd", "asof", "join"),
+    tags=("temporal", "scd", "asof", "join", "bench_extended"),
 )
 def join_scd2_pointintime(spark: SparkSession, sf: str) -> DataFrame:
     """Each purchase with the SCD2 state version valid at its instant.
@@ -1126,7 +1126,7 @@ def join_scd2_pointintime(spark: SparkSession, sf: str) -> DataFrame:
                 else f.f_ts end as nearest_view_ts
     from back b join fwd f on b.purchase_event_id = f.purchase_event_id
     """,
-    tags=("join", "asof", "temporal"),
+    tags=("join", "asof", "temporal", "bench_extended"),
 )
 def join_asof_nearest(spark: SparkSession, sf: str) -> DataFrame:
     """Nearest view per purchase (either direction; prior wins ties).
@@ -1245,7 +1245,7 @@ _TOUCH_TYPES = ("view", "click", "signup")
     select event_id, user_id, first_touch, last_touch, cast(n_touches as bigint) as n_touches
     from p where event_type = 'purchase'
     """,
-    tags=("events", "window", "funnel"),
+    tags=("events", "window", "funnel", "bench_extended"),
 )
 def events_attribution(spark: SparkSession, sf: str) -> DataFrame:
     """First/last-touch attribution per conversion: for each purchase,
@@ -1332,7 +1332,7 @@ def events_attribution(spark: SparkSession, sf: str) -> DataFrame:
            (r.dev > cast(3 as double) * d.mad) as is_outlier
     from r2 r join mad d on r.user_id = d.user_id
     """,
-    tags=("feature", "agg", "robustness"),
+    tags=("feature", "agg", "robustness", "bench_extended"),
 )
 def feature_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user robust outliers: |value - median| > 3 * MAD, with both
@@ -1406,7 +1406,7 @@ def feature_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
            case when event_type <> 'error' then value end as live_value
     from ranked where rk = 1
     """,
-    tags=("cdc", "maintenance", "agg"),
+    tags=("cdc", "maintenance", "agg", "bench_extended"),
 )
 def cdc_apply_tombstones(spark: SparkSession, sf: str) -> DataFrame:
     """Latest-wins changelog apply: one row per key with its version
@@ -1468,7 +1468,7 @@ def cdc_apply_tombstones(spark: SparkSession, sf: str) -> DataFrame:
            (r.value < b.p05 or r.value > b.p95) as clipped
     from r join b on r.event_type = b.event_type
     """,
-    tags=("feature", "agg", "robustness"),
+    tags=("feature", "agg", "robustness", "bench_extended"),
 )
 def feature_winsorize(spark: SparkSession, sf: str) -> DataFrame:
     """Per-event-type winsorized value: clamp to the discrete
@@ -1560,7 +1560,7 @@ def _scd2_finish(changes: DataFrame) -> DataFrame:
     from changes
     window w as (partition by user_id order by ts, state)
     """,
-    tags=("temporal", "scd", "cdc", "maintenance"),
+    tags=("temporal", "scd", "cdc", "maintenance", "bench_extended"),
 )
 def scd2_apply_changes(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental SCD2 merge: split the log at a data-derived cutoff
@@ -1644,7 +1644,7 @@ def scd2_apply_changes(spark: SparkSession, sf: str) -> DataFrame:
                 as double) as cum_value
     from cell
     """,
-    tags=("temporal", "cohort", "window"),
+    tags=("temporal", "cohort", "window", "bench_extended"),
 )
 def events_cohort_ltv(spark: SparkSession, sf: str) -> DataFrame:
     """Per (signup-week cohort, week offset): active users, period
@@ -1727,7 +1727,7 @@ _DRIFT_SPLIT = "2024-01-16"  # fixture midpoint; a real monitor slides this dail
            cast(t.drift_sum as double) / (2.0 * t.n_tot * t.m_tot) > 0.05 as drift_alert
     from buckets b cross join tot t
     """,
-    tags=("events", "monitor", "quality"),
+    tags=("events", "monitor", "quality", "bench_extended"),
 )
 def monitor_feature_drift(spark: SparkSession, sf: str) -> DataFrame:
     """TVD drift between reference and current windows, exactly.
@@ -1813,7 +1813,7 @@ _SURV_CENSOR_DAYS = 7
                 rows between unbounded preceding and current row) as hazard
     from per_day
     """,
-    tags=("events", "survival", "analytics"),
+    tags=("events", "survival", "analytics", "bench_extended"),
 )
 def events_survival_table(spark: SparkSession, sf: str) -> DataFrame:
     """Discrete-time life table over user event lifetimes.
@@ -1900,7 +1900,7 @@ _BOT_JITTER_US = 1_000_000  # max-min gap under 1 s across >=5 events = scripted
              and max_gap_us - min_gap_us < {_BOT_JITTER_US} as is_bot
     from stats
     """,
-    tags=("events", "abuse", "monitor"),
+    tags=("events", "abuse", "monitor", "bench_extended"),
 )
 def events_bot_detection(spark: SparkSession, sf: str) -> DataFrame:
     """Flag users whose inter-event gaps are machine-regular.
@@ -1982,7 +1982,7 @@ def events_bot_detection(spark: SparkSession, sf: str) -> DataFrame:
     where n_in_frame = 7 and span_in_frame = 6
     group by 1
     """,
-    tags=("events", "timeseries", "seasonality"),
+    tags=("events", "timeseries", "seasonality", "bench_extended"),
 )
 def events_seasonality(spark: SparkSession, sf: str) -> DataFrame:
     """Per-weekday seasonal index of event volume, exactly.
@@ -2337,7 +2337,7 @@ def events_growth_accounting(spark: SparkSession, sf: str) -> DataFrame:
     from s
     where n >= 2 and n * sxx - sx * sx > 0
     """,
-    tags=("events", "timeseries", "forecast"),
+    tags=("events", "timeseries", "forecast", "bench_extended"),
 )
 def events_forecast_linear(spark: SparkSession, sf: str) -> DataFrame:
     """Per-event-type OLS trend over the daily count spine with
@@ -2438,7 +2438,7 @@ def forecast_of_daily(daily: DataFrame) -> DataFrame:
            err_in_grp = 0 as clean
     from w2 where event_type = 'purchase' and cum_views >= 1
     """,
-    tags=("events", "temporal", "cep"),
+    tags=("events", "temporal", "cep", "bench_extended"),
 )
 def events_sequence_negation(spark: SparkSession, sf: str) -> DataFrame:
     """view -> purchase pairs with the no-error-between negation.
@@ -2529,7 +2529,7 @@ def events_sequence_negation(spark: SparkSession, sf: str) -> DataFrame:
     from r
     group by event_type, bar_start
     """,
-    tags=("temporal", "window", "ohlc", "resample"),
+    tags=("temporal", "window", "ohlc", "resample", "bench_extended"),
 )
 def events_ohlc_bars(spark: SparkSession, sf: str) -> DataFrame:
     """Hourly OHLC bars per event type over the purchase-value stream:
@@ -2605,7 +2605,7 @@ _TREND_K = 5
       from c
     ) where rk <= {_TREND_K}
     """,
-    tags=("temporal", "window", "topk"),
+    tags=("temporal", "window", "topk", "bench_extended"),
 )
 def events_trending_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Top-k (k=_TREND_K) users per hour by event count, rank carried
@@ -2714,7 +2714,7 @@ def _cuped_oracle() -> str:
     """
 
 
-@query("events_cuped", oracle=_cuped_oracle(), tags=("temporal", "experiment", "cuped"))
+@query("events_cuped", oracle=_cuped_oracle(), tags=("temporal", "experiment", "cuped", "bench_extended"))
 def events_cuped(spark: SparkSession, sf: str) -> DataFrame:
     """Per-arm CUPED-adjusted experiment readout: users hash-split into
     two arms, X = pre-cut event count, Y = post-cut purchase cents
@@ -2877,7 +2877,7 @@ def _markov_counts_sql() -> str:
       select 'click', {_MKV_BASE}, {_MKV_NO_C}, {_MKV_EFF_C}, m.* from m
     ) order by channel
     """,
-    tags=("temporal", "attribution", "markov"),
+    tags=("temporal", "attribution", "markov", "bench_extended"),
 )
 def events_attribution_markov(spark: SparkSession, sf: str) -> DataFrame:
     """Removal-effect attribution over the {start, view, click} ->
@@ -3025,7 +3025,7 @@ def _did_texts() -> tuple[str, str]:
            {_did_texts()[1]} as did_se
     from m where tn1 > 0 and cn1 > 0
     """,
-    tags=("temporal", "experiment", "causal", "did"),
+    tags=("temporal", "experiment", "causal", "did", "bench_extended"),
 )
 def events_diff_in_diff(spark: SparkSession, sf: str) -> DataFrame:
     """Difference-in-differences over the _CUPED_CUT boundary: per-user
@@ -3156,7 +3156,7 @@ _ES_EFFECT = f"({_ES_GAP} - ((rtc / tn) - (rcc / cn)))"
     from wk cross join ref cross join an
     where tn > 0 and cn > 0
     """,
-    tags=("temporal", "experiment", "causal", "did", "event-study"),
+    tags=("temporal", "experiment", "causal", "did", "event-study", "bench_extended"),
 )
 def events_event_study(spark: SparkSession, sf: str) -> DataFrame:
     """Per-relative-week treated/control purchase-cents means (over
@@ -3265,7 +3265,7 @@ _ACF_R = (
     select cast(lag as int) as lag, np as n_pairs, {_ACF_R} as acf
     from m
     """,
-    tags=("temporal", "timeseries", "diagnostic"),
+    tags=("temporal", "timeseries", "diagnostic", "bench_extended"),
 )
 def events_autocorrelation(spark: SparkSession, sf: str) -> DataFrame:
     """Lag-1..k (k=_ACF_MAX_LAG) ACF of daily event counts (Pearson over
@@ -3344,7 +3344,7 @@ _FTW_REF = "2024-01-22 00:00:00"
       and ts < timestamp '{_FTW_REF}'
     group by user_id
     """,
-    tags=("temporal", "feature", "ml"),
+    tags=("temporal", "feature", "ml", "bench_extended"),
 )
 def feature_time_windows(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user trailing-window feature vector at the reference cut.
@@ -3436,7 +3436,7 @@ _CEM_ATT = "(cast(wsum as double) / nullif(ntm, 0))"
            {_CEM_ATT} as att_dollars
     from f
     """,
-    tags=("temporal", "experiment", "causal", "matching"),
+    tags=("temporal", "experiment", "causal", "matching", "bench_extended"),
 )
 def events_cem_att(spark: SparkSession, sf: str) -> DataFrame:
     """ATT in dollars of the (hash) treatment on post-cut purchase

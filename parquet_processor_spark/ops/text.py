@@ -30,7 +30,7 @@ from parquet_processor_spark.tables import t
     from documents
     group by lang
     """,
-    tags=("text",),
+    tags=("text", "bench"),
 )
 def text_stats(spark: SparkSession, sf: str) -> DataFrame:
     d = t(spark, sf, "documents").withColumn("n_tokens", F.size(F.split("text", r"\s+")))
@@ -53,7 +53,7 @@ def text_stats(spark: SparkSession, sf: str) -> DataFrame:
            len(regexp_extract_all(text, '\w+|[^\w\s]+')) as n_bpe_tokens
     from documents
     """,
-    tags=("text",),
+    tags=("text", "bench"),
 )
 def token_count(spark: SparkSession, sf: str) -> DataFrame:
     return t(spark, sf, "documents").select(
@@ -124,7 +124,7 @@ def lang_id(spark: SparkSession, sf: str) -> DataFrame:
              as quality
     from documents
     """,
-    tags=("text",),
+    tags=("text", "bench"),
 )
 def quality_score(spark: SparkSession, sf: str) -> DataFrame:
     len_chars = F.length("text")
@@ -207,7 +207,7 @@ _CHUNK_S = 16
     from w, unnest(generate_series(0,
          (greatest(len(words) - {_CHUNK_W}, 0) + {_CHUNK_S} - 1) // {_CHUNK_S})) as t(k)
     """,
-    tags=("text", "curation"),
+    tags=("text", "curation", "bench_extended"),
 )
 def doc_chunk_windows(spark: SparkSession, sf: str) -> DataFrame:
     """Overlapping word-window chunks per document (window ``_CHUNK_W``
@@ -267,7 +267,7 @@ def doc_chunk_windows(spark: SparkSession, sf: str) -> DataFrame:
     from tok t join vocab v on t.tok = v.tok
     group by t.doc_id
     """,
-    tags=("text", "curation"),
+    tags=("text", "curation", "bench_extended"),
 )
 def quality_unigram_rarity(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc unigram-frequency score against the corpus model.
@@ -487,7 +487,7 @@ def vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
            md5(string_agg(cast(id as varchar), ',' order by pos)) as ids_hash
     from j group by doc_id
     """,
-    tags=("text", "curation", "tokenize"),
+    tags=("text", "curation", "tokenize", "bench_extended"),
 )
 def tokenize_to_ids(spark: SparkSession, sf: str) -> DataFrame:
     """Encode each document as an ordered vocab-id sequence.
@@ -550,7 +550,7 @@ _HH_K = 20
     from tc cross join total
     order by n desc, tok limit {_HH_K}
     """,
-    tags=("text", "agg", "topk"),
+    tags=("text", "agg", "topk", "bench_extended"),
 )
 def agg_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     """Exact top-K tokens (K=_HH_K) by corpus frequency, with corpus share.
@@ -604,7 +604,7 @@ def agg_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     from big b join model m on b.bk = m.bk
     group by b.doc_id
     """,
-    tags=("text", "curation", "ngram"),
+    tags=("text", "curation", "ngram", "bench_extended"),
 )
 def quality_bigram_lm(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc bigram-frequency score against the corpus bigram model.
@@ -683,7 +683,7 @@ def quality_bigram_lm(spark: SparkSession, sf: str) -> DataFrame:
              / (cast(sum(c) as double) * cast(sum(c) as double)) as repeat_prob
     from tf group by doc_id
     """,
-    tags=("text", "curation"),
+    tags=("text", "curation", "bench_extended"),
 )
 def quality_diversity(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc lexical diversity: type-token ratio (distinct/total)
@@ -732,7 +732,7 @@ _HH_GROUP_K = 3
       from tf
     ) where rk <= {_HH_GROUP_K}
     """,
-    tags=("text", "agg", "topk"),
+    tags=("text", "agg", "topk", "bench_extended"),
 )
 def agg_heavy_hitters_grouped(spark: SparkSession, sf: str) -> DataFrame:
     """Top-K tokens per source (deterministic tiebreak: count desc,
@@ -926,7 +926,7 @@ def _bpe_oracle() -> str:
     """
 
 
-@query("tokenizer_bpe_train", oracle=_bpe_oracle(), tags=("text", "tokenizer", "iterative"))
+@query("tokenizer_bpe_train", oracle=_bpe_oracle(), tags=("text", "tokenizer", "iterative", "bench_extended"))
 def tokenizer_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
     """Learn the first _BPE_ROUNDS BPE merges Sennrich-style: collapse
     the corpus to a (word, count) vocabulary once, then per round ONE
@@ -997,7 +997,7 @@ def _bpe_apply_oracle() -> str:
     """
 
 
-@query("tokenizer_bpe_apply", oracle=_bpe_apply_oracle(), tags=("text", "tokenizer"))
+@query("tokenizer_bpe_apply", oracle=_bpe_apply_oracle(), tags=("text", "tokenizer", "bench_extended"))
 def tokenizer_bpe_apply(spark: SparkSession, sf: str) -> DataFrame:
     """Encode the corpus with the trained BPE merges: train the merge
     table (vocab-mass, see tokenizer_bpe_train), then replay each
@@ -1069,7 +1069,7 @@ def tokenizer_bpe_apply(spark: SparkSession, sf: str) -> DataFrame:
            (clean = text) as roundtrip_ok
     from stripped
     """,
-    tags=("text", "curation", "robustness"),
+    tags=("text", "curation", "robustness", "bench_extended"),
 )
 def text_html_strip(spark: SparkSession, sf: str) -> DataFrame:
     """Strip tags and unescape entities from deterministically
@@ -1140,7 +1140,7 @@ _GOPHER_STOPS = "the|and|of|to|a"
             and alpha_frac >= 0.8 and n_stop >= 2) as pass_gopher
     from s
     """,
-    tags=("text", "quality", "curation"),
+    tags=("text", "quality", "curation", "bench_extended"),
 )
 def quality_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document Gopher rule booleans + the combined gate.
@@ -1214,7 +1214,7 @@ def quality_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
              as bucket
     from ranked
     """,
-    tags=("text", "curation", "quality"),
+    tags=("text", "curation", "quality", "bench_extended"),
 )
 def quality_ccnet_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """Head/middle/tail corpus terciles by bigram-LM score.
@@ -1282,7 +1282,7 @@ def _bpe_eval_oracle() -> str:
     """
 
 
-@query("tokenizer_bpe_eval", oracle=_bpe_eval_oracle(), tags=("text", "tokenizer", "report"))
+@query("tokenizer_bpe_eval", oracle=_bpe_eval_oracle(), tags=("text", "tokenizer", "report", "bench_extended"))
 def tokenizer_bpe_eval(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenizer quality report — per-language compression of the
     trained BPE encoding (chars/token, BPE-vs-whitespace fertility):
@@ -1599,7 +1599,7 @@ def text_rake_keywords(spark: SparkSession, sf: str) -> DataFrame:
       from documents
     )
     """,
-    tags=("text", "quality"),
+    tags=("text", "quality", "bench_extended"),
 )
 def text_readability(spark: SparkSession, sf: str) -> DataFrame:
     """Flesch-Kincaid grade per document: 0.39*(words/sentences) +
@@ -1695,7 +1695,7 @@ def _rrf_oracle() -> str:
     """
 
 
-@query("search_hybrid_rrf", oracle=_rrf_oracle(), tags=("text", "vector", "retrieval", "rrf"))
+@query("search_hybrid_rrf", oracle=_rrf_oracle(), tags=("text", "vector", "retrieval", "rrf", "bench_extended"))
 def search_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
     """Top-N hybrid search results (N=_RRF_TOPK): BM25 (fixed query terms)
     and dense cosine (query = vec 0) pools of P=_RRF_POOL fused by
@@ -1783,7 +1783,7 @@ _FH_BUCKETS = 64
            cast(count(*) as bigint) as cnt
     from tok group by doc_id, bucket
     """,
-    tags=("text", "ml", "encode"),
+    tags=("text", "ml", "encode", "bench_extended"),
 )
 def feature_hashing_trick(spark: SparkSession, sf: str) -> DataFrame:
     """Hash token counts into a fixed D-bucket feature space (D=_FH_BUCKETS).
@@ -1860,7 +1860,7 @@ def _classification_report_oracle() -> str:
 @query(
     "agg_classification_report",
     oracle=_classification_report_oracle(),
-    tags=("agg", "eval", "text", "ml"),
+    tags=("agg", "eval", "text", "ml", "bench_extended"),
 )
 def agg_classification_report(spark: SparkSession, sf: str) -> DataFrame:
     """Per-class TP/FP/FN, support, precision, recall, F1 for the
@@ -1950,7 +1950,7 @@ _COLL_TOPK = 50
     order by pmi_ratio desc, wa, wb
     limit {_COLL_TOPK}
     """,
-    tags=("text", "collocation", "pmi"),
+    tags=("text", "collocation", "pmi", "bench_extended"),
 )
 def text_collocations(spark: SparkSession, sf: str) -> DataFrame:
     """Top-k (k=_COLL_TOPK) collocations by PMI odds ratio (support >=
@@ -2050,7 +2050,7 @@ def _textrank_oracle() -> str:
     """
 
 
-@query("text_textrank_keywords", oracle=_textrank_oracle(), tags=("text", "keywords", "graph"))
+@query("text_textrank_keywords", oracle=_textrank_oracle(), tags=("text", "keywords", "graph", "bench_extended"))
 def text_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
     """Top-k (k=_TR_TOPK) corpus keywords by 3-round integer PageRank
     over the distinct word-adjacency graph (undirected, both directions

@@ -838,7 +838,7 @@ def _ivf_probe_list(e: DataFrame, cent: DataFrame, params: DataFrame) -> DataFra
     order by cos_sim desc, b.vec_id
     limit 10
     """,
-    tags=("vector", "ivf"),
+    tags=("vector", "ivf", "bench"),
 )
 def sim_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
     e = t(spark, sf, "embeddings")
@@ -902,7 +902,7 @@ def _ivf_nprobe_oracle_sql(num: int) -> str:
 @query(
     "sim_topk_ivf_nprobe",
     oracle=_ivf_nprobe_oracle_sql(_IVF_SERVE_NUM),
-    tags=("vector", "ivf"),
+    tags=("vector", "ivf", "bench_extended"),
 )
 def sim_topk_ivf_nprobe(spark: SparkSession, sf: str) -> DataFrame:
     """IVF ANN at the served probe depth (nprobe = half the derived
@@ -980,7 +980,7 @@ _LSH_TOPK_BANDS = 16
 @query(
     "sim_topk_lsh",
     oracle=_sim_topk_lsh_oracle(_LSH_TOPK_BANDS),
-    tags=("vector", "lsh"),
+    tags=("vector", "lsh", "bench_extended"),
 )
 def sim_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Banded-LSH ANN top-k, hash-checked against a DuckDB oracle that
@@ -1420,7 +1420,7 @@ def _pq_subvectors(e: DataFrame, m_sub: int = _PQ_M) -> DataFrame:
            true as sse_improved
     from embeddings
     """,
-    tags=("vector", "pq", "iterative", "evidence"),
+    tags=("vector", "pq", "iterative", "evidence", "bench_extended"),
 )
 def embedding_pq_train(spark: SparkSession, sf: str) -> DataFrame:
     """Train PQ codebooks (M=_PQ_M subspaces × K=_PQ_K codes, Lloyd
@@ -1792,7 +1792,7 @@ def _ivfpq_oracle() -> str:
     """
 
 
-@query("sim_topk_ivfpq", oracle=_ivfpq_oracle(), tags=("vector", "ivf", "pq"))
+@query("sim_topk_ivfpq", oracle=_ivfpq_oracle(), tags=("vector", "ivf", "pq", "bench_extended"))
 def sim_topk_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-PQ ANN: SF-derived cell probe (n_cells = max(8, ⌊√N⌋),
     nprobe = half — the shared serving geometry) -> PQ asymmetric-distance
@@ -1823,7 +1823,7 @@ def sim_topk_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "sink_ann_index_roundtrip",
     oracle="select cast(10 as bigint) as n_results, true as parity_ok",
-    tags=("vector", "ivf", "pq", "sink", "evidence"),
+    tags=("vector", "ivf", "pq", "sink", "evidence", "bench_extended"),
 )
 def sink_ann_index_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """Persist the IVF-PQ index AT REST (cell assignments, PQ codes,
@@ -1911,7 +1911,7 @@ _SEMDEDUP_TAU = 0.18  # same fixture-calibrated threshold as sim_pairs_blocked
     from assign s left join pairs p on p.vb = s.vec_id
     group by s.vec_id, s.cell
     """,
-    tags=("vector", "dedup", "semdedup"),
+    tags=("vector", "dedup", "semdedup", "bench_extended"),
 )
 def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup: assign every embedding to its nearest centroid
@@ -1940,8 +1940,8 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     # one core (same fix as the range-search truth join)
     a = assign.repartition(spark.sparkContext.defaultParallelism).alias("a")
     b = assign.alias("b")
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
+    cos = F.try_divide(
+        dot(F.col("a.embedding"), F.col("b.embedding")), F.col("a.nrm") * F.col("b.nrm")
     )
     pairs = (
         a.join(
@@ -2045,7 +2045,7 @@ def _range_keyed_sql() -> str:
     with {_range_keyed_sql()}
     select a_id, b_id, cos_sim from found
     """,
-    tags=("vector", "lsh", "range"),
+    tags=("vector", "lsh", "range", "bench_extended"),
 )
 def sim_range_search(spark: SparkSession, sf: str) -> DataFrame:
     """Radius query: all pairs with cos >= tau via banded candidates.
@@ -2175,7 +2175,7 @@ def _rp_col_sql(j: int) -> str:
     select vec_id, {", ".join(f"{_rp_col_sql(j)} as p{j}" for j in range(_RP_OUT_DIM))}
     from embeddings e
     """,
-    tags=("vector", "projection"),
+    tags=("vector", "projection", "bench_extended"),
 )
 def embedding_random_projection(spark: SparkSession, sf: str) -> DataFrame:
     """Project 64-d embeddings to 16-d with fixed literal planes.
@@ -2368,7 +2368,7 @@ def _tune_band_sql(tbl: str, r: int, band: int) -> str:
       )}
     )
     """,
-    tags=("vector", "lsh", "report"),
+    tags=("vector", "lsh", "report", "bench_extended"),
 )
 def report_lsh_tuning(spark: SparkSession, sf: str) -> DataFrame:
     """Measured recall for every (r, L) banding cell over a SAMPLED
@@ -2704,7 +2704,7 @@ def sim_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
       on p.cell = c.cid
     cross join tot cross join ivfp
     """,
-    tags=("vector", "ivf", "report"),
+    tags=("vector", "ivf", "report", "bench_extended"),
 )
 def report_ivf_balance(spark: SparkSession, sf: str) -> DataFrame:
     """Per-IVF-cell population report over the DERIVED serving
@@ -2787,7 +2787,7 @@ def _knn_graph_oracle() -> str:
     """
 
 
-@query("sim_knn_graph", oracle=_knn_graph_oracle(), tags=("vector", "lsh", "knn", "graph"))
+@query("sim_knn_graph", oracle=_knn_graph_oracle(), tags=("vector", "lsh", "knn", "graph", "bench_extended"))
 def sim_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
     """Top-K cosine neighbors (K=_KNN_K) for EVERY vector from banded-LSH
     candidates (L=_KNN_BANDS x r=3 literal hyperplanes — hash-checked
@@ -2913,7 +2913,7 @@ def _mrl_oracle() -> str:
     """
 
 
-@query("embedding_matryoshka_eval", oracle=_mrl_oracle(), tags=("vector", "eval", "matryoshka"))
+@query("embedding_matryoshka_eval", oracle=_mrl_oracle(), tags=("vector", "eval", "matryoshka", "bench_extended"))
 def embedding_matryoshka_eval(spark: SparkSession, sf: str) -> DataFrame:
     """Per prefix width in _MRL_DIMS: top-K overlap (K=_MRL_K) with the
     full-dimension ranking and whether the top-1 survived truncation.
@@ -2931,7 +2931,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf: str) -> DataFrame:
     def topk(dims: int | None) -> DataFrame:
         b = F.col("embedding") if dims is None else F.slice("embedding", 1, dims)
         qv = F.col("q_emb") if dims is None else F.slice("q_emb", 1, dims)
-        cos = dot(b, qv) / (norm(b) * norm(qv))
+        cos = cosine(b, qv)
         return (
             corpus.select("vec_id", cos.alias("c"))
             .orderBy(F.desc("c"), F.asc("vec_id"))
@@ -3001,7 +3001,7 @@ def _upsert_oracle() -> str:
 @query(
     "sink_ann_index_upsert",
     oracle=_upsert_oracle(),
-    tags=("sink", "vector", "ivfpq", "incremental"),
+    tags=("sink", "vector", "ivfpq", "incremental", "bench_extended"),
 )
 def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """Grow the persisted IVF-PQ index by a delta batch with a FROZEN
@@ -3179,7 +3179,7 @@ def sink_ann_index_upsert(spark: SparkSession, sf: str) -> DataFrame:
     order by cos_sim desc, b.vec_id
     limit 10
     """,
-    tags=("vector", "serving", "filtered"),
+    tags=("vector", "serving", "filtered", "bench_extended"),
 )
 def sim_topk_filtered(spark: SparkSession, sf: str) -> DataFrame:
     """Top-10 cosine neighbors of vec 0 among vectors sharing its
@@ -3200,9 +3200,7 @@ def sim_topk_filtered(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("embedding").alias("q_emb"), F.col("label").alias("q_label"))
         .limit(1)
     )
-    cos = dot(F.col("embedding"), F.col("q_emb")) / (
-        norm(F.col("embedding")) * norm(F.col("q_emb"))
-    )
+    cos = cosine(F.col("embedding"), F.col("q_emb"))
     return (
         e.where(F.col("vec_id") != 0)
         .join(F.broadcast(q), F.col("label") == F.col("q_label"))
@@ -3239,7 +3237,7 @@ def sim_topk_filtered(spark: SparkSession, sf: str) -> DataFrame:
     from sizes
     group by band
     """,
-    tags=("vector", "lsh", "report"),
+    tags=("vector", "lsh", "report", "bench_extended"),
 )
 def report_lsh_bucket_pressure(spark: SparkSession, sf: str) -> DataFrame:
     """Per-band posting-list pressure: bucket count, largest bucket,
@@ -3304,7 +3302,7 @@ def _knn_classify_oracle() -> str:
     """
 
 
-@query("embedding_knn_classify", oracle=_knn_classify_oracle(), tags=("vector", "knn", "labeling"))
+@query("embedding_knn_classify", oracle=_knn_classify_oracle(), tags=("vector", "knn", "labeling", "bench_extended"))
 def embedding_knn_classify(spark: SparkSession, sf: str) -> DataFrame:
     """Majority-vote label prediction per vector from its
     top-K cosine neighbors (K=_KNN_K; ties to the smallest label id),
@@ -3399,7 +3397,7 @@ def _bitext_oracle() -> str:
     """
 
 
-@query("mine_bitext_mutual", oracle=_bitext_oracle(), tags=("vector", "text", "mining", "lsh"))
+@query("mine_bitext_mutual", oracle=_bitext_oracle(), tags=("vector", "text", "mining", "lsh", "bench_extended"))
 def mine_bitext_mutual(spark: SparkSession, sf: str) -> DataFrame:
     """Mutual-best cross-lingual pair mining over LSH candidates.
 
@@ -3504,7 +3502,7 @@ def _sim_topk_lsh_multiprobe_oracle(n_bands: int) -> str:
 @query(
     "sim_topk_lsh_multiprobe",
     oracle=_sim_topk_lsh_multiprobe_oracle(_LSH_TOPK_BANDS),
-    tags=("vector", "lsh", "multiprobe"),
+    tags=("vector", "lsh", "multiprobe", "bench_extended"),
 )
 def sim_topk_lsh_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     """Banded-LSH ANN top-k with Hamming-1 multiprobe: candidates =
@@ -3592,7 +3590,7 @@ def _mrr_oracle() -> str:
     """
 
 
-@query("eval_retrieval_mrr", oracle=_mrr_oracle(), tags=("vector", "knn", "eval", "retrieval"))
+@query("eval_retrieval_mrr", oracle=_mrr_oracle(), tags=("vector", "knn", "eval", "retrieval", "bench_extended"))
 def eval_retrieval_mrr(spark: SparkSession, sf: str) -> DataFrame:
     """Mean reciprocal rank and hit-rate@k (k=_KNN_K) of the banded-LSH kNN
     graph, grading same-label neighbors as relevant.
@@ -3674,7 +3672,7 @@ _EMB_SCALE = 1_000_000
            (cast(n as double) * ss - cast(s as double) * s) = 0.0 as dead_dim
     from m
     """,
-    tags=("vector", "report", "quality"),
+    tags=("vector", "report", "quality", "bench_extended"),
 )
 def report_embedding_health(spark: SparkSession, sf: str) -> DataFrame:
     """Per-dimension mean / population variance / zero fraction /
@@ -3756,7 +3754,7 @@ def _ivf_curve_oracle() -> str:
 @query(
     "report_ivf_recall_curve",
     oracle=_ivf_curve_oracle(),
-    tags=("vector", "ivf", "report", "evidence"),
+    tags=("vector", "ivf", "report", "evidence", "bench_extended"),
 )
 def report_ivf_recall_curve(spark: SparkSession, sf: str) -> DataFrame:
     """Brute-force top-10 overlap of the IVF ANN at probe depths num/8

@@ -145,7 +145,7 @@ _ROLL_N = 5  # current row + 4 preceding
            ) as roll_median
     from events
     """,
-    tags=("window", "median", "frame"),
+    tags=("window", "median", "frame", "bench_extended"),
 )
 def window_rolling_median(spark: SparkSession, sf: str) -> DataFrame:
     """Trailing-n-row median of `value` per user (n=_ROLL_N).
@@ -214,7 +214,7 @@ def _ewma_oracle() -> str:
     """
 
 
-@query("window_ewma", oracle=_ewma_oracle(), tags=("window", "timeseries"))
+@query("window_ewma", oracle=_ewma_oracle(), tags=("window", "timeseries", "bench_extended"))
 def window_ewma(spark: SparkSession, sf: str) -> DataFrame:
     """Adjusted EWMA of ``value`` per user in event-time order:
     ewma_t = sum_k (1-a)^k x_{t-k} / sum_k (1-a)^k over the trailing
@@ -272,7 +272,7 @@ def window_ewma(spark: SparkSession, sf: str) -> DataFrame:
     window w as (partition by user_id order by ts, event_id
                  rows between unbounded preceding and current row)
     """,
-    tags=("window", "timeseries"),
+    tags=("window", "timeseries", "bench_extended"),
 )
 def window_drawdown(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user running peak and drawdown (peak − current value).
@@ -308,7 +308,7 @@ def window_drawdown(spark: SparkSession, sf: str) -> DataFrame:
            cume_dist() over (order by o_totalprice) as cd
     from orders where o_orderstatus = 'F'
     """,
-    tags=("window", "rank"),
+    tags=("window", "rank", "bench_extended"),
 )
 def window_cume_dist(spark: SparkSession, sf: str) -> DataFrame:
     """Global cume_dist = (# rows with price <= mine) / n, exactly.

@@ -134,7 +134,7 @@ def bucket_range(spark: SparkSession, sf: str) -> DataFrame:
              rows between unbounded preceding and current row) as double) as running_value
     from events
     """,
-    tags=("window",),
+    tags=("window", "bench"),
 )
 def window_running_sum(spark: SparkSession, sf: str) -> DataFrame:
     w = (
@@ -159,7 +159,7 @@ def window_running_sum(spark: SparkSession, sf: str) -> DataFrame:
            dense_rank() over (partition by l_returnflag order by l_quantity desc) as qty_dense_rank
     from lineitem
     """,
-    tags=("window",),
+    tags=("window", "bench"),
 )
 def window_rank(spark: SparkSession, sf: str) -> DataFrame:
     w = Window.partitionBy("l_returnflag").orderBy(F.desc("l_quantity"))
@@ -206,7 +206,7 @@ def window_lag(spark: SparkSession, sf: str) -> DataFrame:
     from events
     group by 1
     """,
-    tags=("window", "streaming"),
+    tags=("window", "streaming", "bench"),
 )
 def window_tumbling(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -254,7 +254,7 @@ def limit_n(spark: SparkSession, sf: str) -> DataFrame:
     select o_orderkey, o_totalprice from orders
     order by o_totalprice desc, o_orderkey limit 10
     """,
-    tags=("limit", "topk"),
+    tags=("limit", "topk", "bench"),
 )
 def topk_order_limit(spark: SparkSession, sf: str) -> DataFrame:
     return (

@@ -110,7 +110,7 @@ def pipeline_media_dispatch(spark: SparkSession, sf: str) -> DataFrame:
            least(10, count(*)) >= 8 as canary_ok
     from documents
     """,
-    tags=("pipeline", "cost", "canary"),
+    tags=("pipeline", "cost", "canary", "bench_extended"),
 )
 def pipeline_cost_estimate(spark: SparkSession, sf: str) -> DataFrame:
     """C2 — the reference coordinator's cost estimate

@@ -326,7 +326,7 @@ def streaming_cdc_tombstones(spark: SparkSession, sf: str) -> DataFrame:
              errs * 20 <= n from s
     )
     """,
-    tags=("streaming", "quality", "constraints"),
+    tags=("streaming", "quality", "constraints", "bench_extended"),
 )
 def streaming_expectations(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming twin of the table_expectations gate: the event stream
@@ -427,7 +427,7 @@ _SCM_TOPK = 20
                     % {_SCM_W}
     group by e.user_id, e.n_exact
     """,
-    tags=("streaming", "sketch", "approx"),
+    tags=("streaming", "sketch", "approx", "bench_extended"),
 )
 def streaming_count_min(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-maintained CMS cells, served for the top-k user freqs.
@@ -546,7 +546,7 @@ def _daily_spine(events: DataFrame, col_name: str) -> DataFrame:
     # batch daily aggregate are the same relation (the
     # streaming_changepoint convention)
     oracle=_ORACLES["events_forecast_linear"],
-    tags=("streaming", "timeseries", "forecast"),
+    tags=("streaming", "timeseries", "forecast", "bench_extended"),
 )
 def streaming_forecast(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming twin of events_forecast_linear: the stream maintains
@@ -590,7 +590,7 @@ def streaming_forecast(spark: SparkSession, sf: str) -> DataFrame:
            cast(sum(cents) as bigint) as volume_cents
     from m group by bar_start, event_type
     """,
-    tags=("streaming", "ohlc", "resample"),
+    tags=("streaming", "ohlc", "resample", "bench_extended"),
 )
 def streaming_ohlc(spark: SparkSession, sf: str) -> DataFrame:
     """T6 extension — the resample-to-bars job as a genuine
@@ -613,7 +613,7 @@ def streaming_ohlc(spark: SparkSession, sf: str) -> DataFrame:
     # spine and the batch aggregate are the same relation (the
     # streaming_forecast convention)
     oracle=_ORACLES["events_trending_topk"],
-    tags=("streaming", "topk", "trending"),
+    tags=("streaming", "topk", "trending", "bench_extended"),
 )
 def streaming_trending_topk(spark: SparkSession, sf: str) -> DataFrame:
     """N204 — streaming twin of events_trending_topk: the stream
@@ -649,7 +649,7 @@ def streaming_trending_topk(spark: SparkSession, sf: str) -> DataFrame:
     # all three trending twins (batch, complete-mode stream, update-
     # mode stream) compute one relation and share one oracle
     oracle=_ORACLES["events_trending_topk"],
-    tags=("streaming", "topk", "trending", "upsert"),
+    tags=("streaming", "topk", "trending", "upsert", "bench_extended"),
 )
 def streaming_trending_topk_update(spark: SparkSession, sf: str) -> DataFrame:
     """N223 — the UPDATE-mode delta serve for the trending
@@ -715,7 +715,7 @@ def _update_spine_backfill(
     # same relation as the batch operator and the complete-mode twin
     # — all three share one oracle (the decoration-time convention)
     oracle=_ORACLES["events_changepoint"],
-    tags=("streaming", "timeseries", "changepoint", "upsert"),
+    tags=("streaming", "timeseries", "changepoint", "upsert", "bench_extended"),
 )
 def streaming_changepoint_update(spark: SparkSession, sf: str) -> DataFrame:
     """The N223 delta serve for the changepoint monitor (r12 VERDICT
@@ -744,7 +744,7 @@ def streaming_changepoint_update(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "streaming_forecast_update",
     oracle=_ORACLES["events_forecast_linear"],
-    tags=("streaming", "timeseries", "forecast", "upsert"),
+    tags=("streaming", "timeseries", "forecast", "upsert", "bench_extended"),
 )
 def streaming_forecast_update(spark: SparkSession, sf: str) -> DataFrame:
     """The N223 delta serve for the capacity forecast (r12 VERDICT
@@ -770,7 +770,7 @@ def streaming_forecast_update(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "streaming_count_min_update",
     oracle=_ORACLES["streaming_count_min"],
-    tags=("streaming", "sketch", "approx", "upsert"),
+    tags=("streaming", "sketch", "approx", "upsert", "bench_extended"),
 )
 def streaming_count_min_update(spark: SparkSession, sf: str) -> DataFrame:
     """The N223 delta serve for the CMS monitor (r12 VERDICT #5): the

@@ -1423,6 +1423,31 @@ def test_pair_cos_kernels_match_jvm_on_a_null_embedding(spark, sf_dir):
     assert all(c == rows[pair][0] for pair, c in scored.items())
 
 
+@pytest.mark.parametrize("name", ["dedup_semdedup", "embedding_matryoshka_eval", "sim_topk_filtered"])
+def test_cosine_queries_match_duckdb_on_an_all_zero_embedding(spark, sf_dir, tmp_path, name):
+    # The same null policy through whole queries: an all-zero corpus
+    # vector (label of the query vector 0, so the filtered search scores
+    # it too) has a zero norm, which DuckDB's cosine turns into NULL and
+    # ANSI `/` into DIVIDE_BY_ZERO
+    from parquet_processor_spark.registry import all_oracles, all_queries
+    from parquet_processor_spark.tables import t
+    from tools.check_oracle import duckdb_views, row_diffs
+
+    e = t(spark, sf_dir, "embeddings")
+    elem = e.schema["embedding"].dataType.elementType
+    zero = e.where(F.col("vec_id") == 0).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"),
+        F.transform("embedding", lambda x: F.lit(0.0).cast(elem)).alias("embedding"),
+        "label",
+    )
+    e.unionByName(zero).write.parquet(str(tmp_path / "embeddings.parquet"))
+    sdf = all_queries()[name](spark, str(tmp_path))
+    con = duckdb_views(str(tmp_path), ["embeddings"])
+    rel = con.sql(all_oracles()[name])
+    diffs = row_diffs([tuple(r) for r in sdf.collect()], sdf.columns, rel.fetchall(), rel.columns)
+    assert not diffs, "; ".join(diffs)
+
+
 def test_nearest_policy_matches_duckdb(spark):
     # nearest's stated policy against the DuckDB twins' rule, row_number()
     # over (order by score, cid) with NULLs last: a null, all-NaN or

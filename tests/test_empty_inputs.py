@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from parquet_processor_spark.registry import all_queries
 from parquet_processor_spark.tables import TABLES, t
+from tools.check_oracle import duckdb_views, row_diffs
 
 from .conftest import SF_SMALL
 
@@ -363,52 +364,13 @@ def degenerate_sf(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", DEGENERATE_PARITY)
 def test_degenerate_tiny_input_matches_oracle(spark, degenerate_sf, name):
-    import math
-
-    import duckdb
-
     from parquet_processor_spark.registry import all_oracles
 
     sdf = all_queries()[name](spark, degenerate_sf)
-    s_rows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for tab in TABLES:
-        # Spark writes a part-file directory; DuckDB needs the glob
-        con.sql(
-            f"create view {tab} as select * from "
-            f"read_parquet('{degenerate_sf}/{tab}.parquet/*.parquet')"
-        )
+    con = duckdb_views(degenerate_sf)
     rel = con.sql(all_oracles()[name])
-    d_rows = [tuple(r) for r in rel.fetchall()]
-    assert sorted(sdf.columns) == sorted(rel.columns)
-    assert len(s_rows) == len(d_rows)
-
-    def _key(v):
-        if v is None:
-            return (0, "")
-        if isinstance(v, float):
-            return (1, "nan") if math.isnan(v) else (2, repr(v))
-        return (3, str(v))
-
-    def _norm(rows, cols):
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        return sorted(
-            (tuple(r[i] for i in order) for r in rows),
-            key=lambda r: tuple(_key(v) for v in r),
-        )
-
-    def _eq(a, b):
-        if a is None or b is None:
-            return a is None and b is None
-        if isinstance(a, float) or isinstance(b, float):
-            fa, fb = float(a), float(b)
-            return (math.isnan(fa) and math.isnan(fb)) or fa == fb
-        return str(a) == str(b)
-
-    for sr, dr in zip(
-        _norm(s_rows, list(sdf.columns)), _norm(d_rows, list(rel.columns))
-    ):
-        assert all(_eq(a, b) for a, b in zip(sr, dr)), f"{sr} != {dr}"
+    diffs = row_diffs([tuple(r) for r in sdf.collect()], sdf.columns, rel.fetchall(), rel.columns)
+    assert not diffs, "; ".join(diffs)
 
 
 def test_degenerate_regression_nulls_where_singular(spark, degenerate_sf):
@@ -514,36 +476,16 @@ def test_welch_kit_matches_oracle_with_one_empty_arm(spark, one_arm_sf, name):
     # Spark must emit exactly the oracle's 1 row (populated arm-0
     # moments, NULL arm-1 moments, NULL statistic) — row-for-row,
     # column-for-column
-    import math
-
-    import duckdb
-
     from parquet_processor_spark.registry import all_oracles
 
     sdf = all_queries()[name](spark, one_arm_sf)
     [srow] = sdf.collect()
-    con = duckdb.connect()
-    con.sql(
-        "create view events as select * from "
-        f"read_parquet('{one_arm_sf}/events.parquet/*.parquet')"
-    )
+    con = duckdb_views(one_arm_sf, ["events"])
     rel = con.sql(all_oracles()[name])
-    [drow] = rel.fetchall()
-    oracle = dict(zip(rel.columns, drow))
-    assert sorted(sdf.columns) == sorted(rel.columns)
     assert srow["n_a"] is not None and srow["n_a"] > 0
     assert srow["n_b"] is None
-    for c in sdf.columns:
-        a, b = srow[c], oracle[c]
-        if a is None or b is None:
-            assert a is None and b is None, f"{name}.{c}: {a!r} != {b!r}"
-        elif isinstance(a, float) or isinstance(b, float):
-            fa, fb = float(a), float(b)
-            assert (math.isnan(fa) and math.isnan(fb)) or fa == fb, (
-                f"{name}.{c}: {a!r} != {b!r}"
-            )
-        else:
-            assert str(a) == str(b), f"{name}.{c}: {a!r} != {b!r}"
+    diffs = row_diffs([tuple(srow)], sdf.columns, rel.fetchall(), rel.columns)
+    assert not diffs, f"{name}: " + "; ".join(diffs)
 
 
 def test_r13_wave_guarded_rows_on_empty_input(spark, empty_sf):

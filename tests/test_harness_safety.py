@@ -158,18 +158,41 @@ def test_survey_inventory_matches_registry():
 
 
 def test_bench_lists_are_registered():
-    # bench.py's HEADLINE/EXTENDED name lists are maintained by hand;
-    # a renamed query must fail here, not as a silent null in the
-    # recorded benchmark.
+    # bench.py's HEADLINE/EXTENDED are the registry's "bench" and
+    # "bench_extended" tags, so a renamed query keeps its row; the sizes
+    # pin the recorded benchmark's shape, and no query is timed twice.
     import bench
 
-    from parquet_processor_spark.registry import all_queries
+    from parquet_processor_spark.registry import tags
 
-    names = all_queries()
-    missing = [n for n in bench.HEADLINE + bench.EXTENDED if n not in names]
-    assert not missing, f"bench lists name unregistered queries: {missing}"
-    dupes = [n for n in set(bench.HEADLINE) & set(bench.EXTENDED)]
-    assert not dupes, f"queries timed twice: {dupes}"
+    tagged = tags()
+    assert set(bench.HEADLINE) == {n for n, ts in tagged.items() if "bench" in ts}
+    assert set(bench.EXTENDED) == {n for n, ts in tagged.items() if "bench_extended" in ts}
+    assert (len(bench.HEADLINE), len(bench.EXTENDED)) == (44, 215)
+    both = [n for n, ts in tagged.items() if "bench" in ts and "bench_extended" in ts]
+    assert not both, f"queries timed twice: {both}"
+
+
+def test_tools_put_no_absolute_checkout_path_on_sys_path():
+    # A tool run from a copy of the checkout must import that copy's
+    # package, so the root it puts on sys.path derives from __file__,
+    # never from a literal absolute path.
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    offenders = []
+    for path in sorted([*root.glob("*.py"), *root.glob("tools/*.py")]):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(isinstance(a, ast.Constant) and str(a.value).startswith("/") for a in node.args)
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, f"literal absolute paths put on sys.path: {offenders}"
 
 
 def test_query_docstrings_name_no_module_constant_in_braces():

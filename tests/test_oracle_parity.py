@@ -1,52 +1,22 @@
 """The main correctness gate: every registered query runs, and every
 oracle-backed query matches DuckDB exactly (count + columns + values) —
-a local replica of the driver's t2 harness (stricter: bitwise floats).
+a local replica of the driver's t2 harness (stricter: bitwise floats),
+compared by the same helpers as ``tools/check_oracle.py``.
 """
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
 from parquet_processor_spark.registry import all_oracles, all_queries
-from parquet_processor_spark.tables import TABLES
+from tools.check_oracle import duckdb_views, row_diffs
 
 from .conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for tab in TABLES:
-        con.sql(f"create view {tab} as select * from read_parquet('{SF_SMALL}/{tab}.parquet')")
-    yield con
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def key(v):
-        if v is None:
-            return (0, "")
-        if isinstance(v, float):
-            return (1, "nan") if math.isnan(v) else (2, repr(v))
-        return (3, str(v))
-
-    return sorted(
-        (tuple(r[i] for i in order) for r in rows),
-        key=lambda r: tuple(key(v) for v in r),
-    )
-
-
-def _eq(a, b):
-    if a is None or b is None:
-        return a is None and b is None
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return (math.isnan(fa) and math.isnan(fb)) or fa == fb
-    return str(a) == str(b)
+    yield duckdb_views(SF_SMALL)
 
 
 QUERIES = all_queries()
@@ -61,8 +31,5 @@ def test_query(name, spark, duck):
         assert isinstance(s_rows, list)  # rows-only: must execute
         return
     rel = duck.sql(ORACLES[name])
-    d_rows = [tuple(r) for r in rel.fetchall()]
-    assert sorted(sdf.columns) == sorted(rel.columns), "column names diverge"
-    assert len(s_rows) == len(d_rows), "row count diverges"
-    for sr, dr in zip(_norm(s_rows, list(sdf.columns)), _norm(d_rows, list(rel.columns))):
-        assert all(_eq(a, b) for a, b in zip(sr, dr)), f"row diverges: {sr} != {dr}"
+    diffs = row_diffs(s_rows, sdf.columns, rel.fetchall(), rel.columns)
+    assert not diffs, "; ".join(diffs)

@@ -1,7 +1,7 @@
 """session_memo: the one session-scoped memo (parquet_processor_spark.session).
 
 Pins the contract bench.py relies on when it derives its serve-path
-rows from the memo lookup counts: one build per (session, name, sf),
+rows from the memo hits of each timed run: one build per (session, name, sf),
 explicit eviction, rebuild when the cached frame is gone, and which
 query builds look a memo up at all.
 """
@@ -68,9 +68,9 @@ def test_signature_memo_hits_then_rebuilds_after_clear_cache(spark, sf_dir):
 
 
 def test_memo_lookups_mark_serve_path_builds(spark, sf_dir):
-    # bench.py marks a row serve-path iff its warm build looked up a
-    # memo: dedup_connected_lsh reads the signature memo through
-    # dedup_near, dedup_incremental reads none
+    # which query builds look a memo up at all: dedup_connected_lsh
+    # reads the signature memo through dedup_near, dedup_incremental
+    # reads none
     queries = all_queries()
     before = _lookups("minhash_sig")
     queries["dedup_connected_lsh"](spark, sf_dir)
@@ -78,3 +78,20 @@ def test_memo_lookups_mark_serve_path_builds(spark, sf_dir):
     before = _lookups()
     queries["dedup_incremental"](spark, sf_dir)
     assert _lookups() == before
+
+
+def test_serve_path_label_needs_a_hit_in_the_timed_run(spark, sf_dir):
+    # bench.py labels a row serve-path from its timed run's own memo
+    # hits. Memos are keyed by sf: a warm-up that filled the signature
+    # memo at another sf leaves the timed run a miss that times the
+    # full build, so its lookup must not label the row.
+    from bench import run_once
+
+    clear_session_memos()
+    session_memo(spark, "minhash_sig", f"{sf_dir}-warm", object)
+    try:
+        assert run_once(spark, "dedup_near", sf_dir).memo_hits == 0
+        assert run_once(spark, "dedup_near", sf_dir).memo_hits > 0
+        assert run_once(spark, "dedup_incremental", sf_dir).memo_hits == 0
+    finally:
+        clear_session_memos()

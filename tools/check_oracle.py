@@ -17,12 +17,13 @@ Usage: python tools/check_oracle.py [--vanilla] [--first N] [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_processor_spark.registry import all_oracles, all_queries  # noqa: E402
 from parquet_processor_spark.session import get_spark  # noqa: E402
@@ -56,6 +57,40 @@ def cells_equal(a, b) -> bool:
     return str(a) == str(b)
 
 
+def duckdb_views(sf_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``. A table
+    Spark wrote is a directory of part files, read through its glob."""
+    con = duckdb.connect()
+    for tab in tables:
+        path = f"{sf_dir}/{tab}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.sql(f"create view {tab} as select * from read_parquet('{path}')")
+    return con
+
+
+def row_diffs(s_rows: list[tuple], s_cols: list[str], d_rows: list[tuple], d_cols: list[str]) -> list[str]:
+    """Where Spark's rows differ from DuckDB's, [] when they match:
+    column names, then row count, then each pair of rows in
+    :func:`normalize` order, cell by cell (the first three shown)."""
+    msgs = []
+    if sorted(s_cols) != sorted(d_cols):
+        msgs.append(f"cols spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    if len(s_rows) != len(d_rows):
+        msgs.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
+    if msgs:
+        return msgs
+    bad = [
+        (sr, dr)
+        for sr, dr in zip(normalize(s_rows, s_cols), normalize(d_rows, d_cols))
+        if not all(cells_equal(a, b) for a, b in zip(sr, dr))
+    ]
+    msgs = [f"row diff: spark={sr} duck={dr}" for sr, dr in bad[:3]]
+    if bad:
+        msgs.append(f"{len(bad)}/{len(s_rows)} mismatched rows")
+    return msgs
+
+
 def main() -> int:
     args = sys.argv[1:]
     vanilla = "--vanilla" in args
@@ -79,9 +114,7 @@ def main() -> int:
     else:
         spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for tab in TABLES:
-        con.sql(f"create view {tab} as select * from read_parquet('{sf_dir}/{tab}.parquet')")
+    con = duckdb_views(sf_dir)
 
     queries = all_queries()
     oracles = all_oracles()
@@ -114,27 +147,8 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {exc}")
             continue
-        ok = True
-        msgs = []
-        if sorted(s_cols) != sorted(d_cols):
-            ok = False
-            msgs.append(f"cols spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        if len(s_rows) != len(d_rows):
-            ok = False
-            msgs.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
-        if ok:
-            sn = normalize(s_rows, s_cols)
-            dn = normalize(d_rows, d_cols)
-            bad = 0
-            for sr, dr in zip(sn, dn):
-                if not all(cells_equal(a, b) for a, b in zip(sr, dr)):
-                    bad += 1
-                    if bad <= 3:
-                        msgs.append(f"row diff: spark={sr} duck={dr}")
-            if bad:
-                ok = False
-                msgs.append(f"{bad}/{len(sn)} mismatched rows")
-        if ok:
+        msgs = row_diffs(s_rows, s_cols, d_rows, d_cols)
+        if not msgs:
             n_pass += 1
             print(f"PASS  {name}: {len(s_rows)} rows ({time.time()-t0:.1f}s)")
         else:

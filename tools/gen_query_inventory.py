@@ -8,9 +8,10 @@ Usage: python tools/gen_query_inventory.py > QUERIES.md
 from __future__ import annotations
 
 import inspect
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_processor_spark.registry import all_oracles, all_queries, tags  # noqa: E402
 

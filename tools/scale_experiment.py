@@ -1,12 +1,14 @@
 """Scale experiment: replicate sf0.1 tenfold (disjoint key ranges) into
-/tmp -> ~6M-row lineitem, run headline queries at both scales in one
-session, print per-query wall-clock. Measured results live in SCALE.md
+/tmp -> ~6M-row lineitem, time the bench set (bench.HEADLINE and
+bench.EXTENDED, through bench.run_once) at both scales in one session,
+print per-query wall-clock. Measured results live in SCALE.md
 ("Measured scaling" section). Caveat: replication turns every document
 into a 10-way duplicate cluster, so pair-producing dedup operators do
 quadratically more TRUE work - that is workload growth, not engine
 regression."""
-import sys, time, os; sys.path.insert(0, "/root/repo")
+import sys, os; sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
+from bench import EXTENDED, HEADLINE, run_once
 from parquet_processor_spark.session import get_spark
 from parquet_processor_spark.registry import all_queries
 from parquet_processor_spark.tables import TABLES, t
@@ -66,124 +68,19 @@ if X100 and not os.path.exists(DST2):
 
 q = all_queries()
 q["agg_count"](spark, DST).collect()  # warm
-NAMES = ["q1_pricing_summary", "q3_shipping_priority", "q18_large_orders",
-         "q13_order_distribution", "dedup_exact", "dedup_near", "window_rank",
-         "join_skew_salted", "sim_topk", "text_stats",
-         "window_row_number", "curation_cap_per_source",
-         "curation_repetition", "curation_contamination", "streaming_dedup",
-         "dedup_connected", "recall_dedup_near",
-         "sessionize_events", "doc_chunk_windows", "dedup_keep_best",
-         "sim_topk_lsh",
-         # round-5 third/fourth/fifth-wave operators
-         "scd2_intervals", "events_gap_fill", "join_bloom_filtered",
-         "quality_bigram_lm", "agg_copurchase_pairs", "join_range_bucketed",
-         "feature_zscore", "profile_columns", "events_rolling_distinct",
-         "dedup_repeated_ngrams", "sample_temperature_mix", "events_markov",
-         # round-5 wave-4/5 operators (r5 verdict item 7)
-         "join_scd2_pointintime", "join_asof_nearest", "dedup_incremental",
-         "sample_budget_mix", "agg_gini", "agg_abc_analysis",
-         "events_funnel_windowed", "window_rolling_median",
-         # round-6 additions
-         "dedup_incremental_minhash", "sim_topk_ivf_nprobe",
-         # round-7 additions
-         "tokenizer_bpe_apply", "multimodal_dedup_perceptual", "sim_topk_ivfpq",
-         "dedup_verbatim_spans", "dedup_span_removal", "sink_versioned_snapshots",
-         "sink_ann_index_roundtrip", "graph_label_propagation",
-         "table_expectations", "streaming_expectations",
-         "sink_training_shards", "error_approx_intersection",
-         "join_fuzzy_names", "dedup_semdedup",
-         "quality_diversity", "agg_heavy_hitters_grouped", "table_diff",
-         "sink_mergeschema_roundtrip", "agg_weighted_median",
-         # round-6 second-wave operators
-         "sink_compacted_roundtrip", "sample_negative_pairs",
-         "scan_csv_badrecords", "split_leakage_safe",
-         "sample_downweight_dups", "doc_novelty", "window_ewma",
-         # round-6 third-wave operators
-         "events_attribution", "feature_mad_outliers", "cdc_apply_tombstones",
-         "graph_triangles", "scan_binary_files", "agg_regression",
-         "streaming_cdc_tombstones", "feature_winsorize",
-         "text_boilerplate", "embedding_pq_train", "tokenizer_bpe_train",
-         # round-6 fourth-wave operators
-         "pipeline_curate_corpus", "text_html_strip", "window_drawdown",
-         "agg_benford", "join_null_safe", "quality_gopher_rules",
-         "multimodal_dedup_bytes", "graph_local_clustering",
-         "scd2_apply_changes", "events_cohort_ltv",
-         # round-7 third-wave operators
-         "agg_count_min", "anonymize_k_anonymity", "sample_importance_dsir",
-         "agg_bitmap_index", "sim_range_search", "embedding_random_projection",
-         "multimodal_clip_pairs", "monitor_feature_drift",
-         "quality_ccnet_buckets", "dedup_cluster_report",
-         "tokenizer_bpe_eval", "multimodal_frame_dedup",
-         "events_survival_table", "graph_link_prediction",
-         "events_bot_detection", "curation_contamination_spans",
-         "events_seasonality", "sink_codec_roundtrip",
-         "sink_manifest_pruned_scan", "sink_partition_overwrite_dynamic",
-         "agg_ab_test", "pipeline_curate_media",
-         # round-7 late-wave operators
-         "multimodal_dedup_audio", "text_bm25_topk", "graph_kcore",
-         "events_changepoint", "sample_coreset_kcenter",
-         "streaming_changepoint", "anonymize_l_diversity",
-         "sim_topk_batch", "text_rake_keywords", "sample_hard_negatives",
-         "multimodal_dedup_audio_incr", "agg_log_histogram",
-         "error_log_quantile", "sink_snapshot_expire", "events_path_trigrams",
-         "anonymize_t_closeness", "events_growth_accounting",
-         "multimodal_audio_trim", "pipeline_privacy_audit", "sim_mmr_rerank",
-         "agg_mannwhitney", "agg_ks_test", "agg_chi_square", "agg_ab_power",
-         # round-8 re-measured (undirected wedges / fused+parallel tuning report)
-         "report_lsh_tuning",
-         # round-8 additions
-         "anonymize_dp_counts", "text_readability", "report_ivf_balance",
-         "events_forecast_linear", "sim_knn_graph", "recall_sim_knn_graph", "multimodal_scene_cut", "streaming_forecast", "sample_curriculum_mix", "graph_bfs_distances", "sink_checked_publish", "agg_decile_lift", "pipeline_cost_estimate", "error_dp_counts", "agg_auc",
-         # round-9 re-measured (cross-engine minhash, LSH bucket caps,
-         # sampled tuning report, spread dHash passes)
-         "dedup_connected_lsh", "dedup_embedding_lsh",
-         # round-9 additions
-         "agg_calibration", "sink_targeted_delete",
-         "search_hybrid_rrf", "embedding_matryoshka_eval",
-         "multimodal_keyframes", "sink_ann_index_upsert", "dedup_url",
-         "sim_topk_filtered", "report_lsh_bucket_pressure",
-         "sample_class_balance", "table_vacuum_orphans",
-         "embedding_knn_classify",
-         # round-10 re-measured (one-exchange minhash cap, md5-halves
-         # simhash, capped incremental probe)
-         "dedup_simhash",
-         # round-10 additions
-         "mine_bitext_mutual", "feature_target_encode",
-         "agg_cohens_kappa", "curation_contamination_semantic",
-         "events_sequence_negation", "agg_gini_impurity",
-         "feature_hashing_trick", "sink_bloom_pruned_scan",
-         "report_source_overlap", "anonymize_pseudonymize",
-         # round-10 second-wave additions
-         "report_curation_funnel", "sample_epoch_repeat",
-         "agg_bootstrap_ci", "sink_merge_upsert", "events_ohlc_bars",
-         "agg_regression_multi", "streaming_ohlc", "error_bootstrap_ci",
-         "sim_topk_lsh_multiprobe", "anonymize_generalize",
-         "pack_concat_chunks", "graph_random_walks", "events_trending_topk",
-         "agg_classification_report",
-         # round-11 additions
-         "streaming_trending_topk", "join_set_similarity", "graph_ppr",
-         "graph_scc", "sample_pps", "anonymize_dp_mean",
-         "sink_time_travel_read", "text_collocations", "events_cuped",
-         "events_attribution_markov", "graph_hits", "agg_ab_srm",
-         "sample_stratified_neyman", "text_textrank_keywords",
-         "sink_merge_on_read_dv", "scan_change_data_feed",
-         "report_dataset_datasheet", "events_diff_in_diff",
-         # round-12 re-measured (frontier-only SCC backward pass)
-         # round-12 additions
-         "join_set_similarity_verify", "streaming_trending_topk_update",
-         "agg_mcnemar", "agg_cramers_v", "agg_kendall_tau",
-         "agg_spearman_rho", "feature_quantile_bin", "agg_anova",
-         "sample_kfold", "events_event_study", "agg_tost_equivalence",
-         "eval_retrieval_mrr", "graph_modularity"]
-# optional argv filter: `python tools/scale_experiment.py name1 name2`
-# times only those queries (corpus build unchanged); any REGISTERED
-# query name is accepted, not just the standing NAMES list — an
-# unknown name fails loudly instead of being silently dropped
+# the bench set (registry tags "bench" and "bench_extended"); optional
+# argv filter: `python tools/scale_experiment.py name1 name2` times only
+# those queries (corpus build unchanged); any REGISTERED query name is
+# accepted, not just the bench set — an unknown name fails loudly
+# instead of being silently dropped
+NAMES = HEADLINE + EXTENDED
 if len(sys.argv) > 1:
     known = set(q)
     unknown = [n for n in sys.argv[1:] if n not in known]
     assert not unknown, f"not registered queries: {unknown}"
     NAMES = list(dict.fromkeys(sys.argv[1:]))
+
+
 def _shuffle_write_bytes() -> int:
     """Total shuffle-write bytes across completed stages (UI REST API)
     — delta around a query gives its shuffle volume."""
@@ -213,9 +110,7 @@ for sfdir, label in _TIERS:
     shuffles = {}
     for name in NAMES:
         s0 = _shuffle_write_bytes()
-        t0 = time.perf_counter()
-        q[name](spark, sfdir).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.perf_counter() - t0, 2)
+        times[name] = round(run_once(spark, name, sfdir).secs, 2)
         shuffles[name] = _shuffle_write_bytes() - s0
     print(label, times, "total", round(sum(times.values()), 2))
     print(label, "shuffle_write_bytes", shuffles)
