@@ -13,11 +13,16 @@ anywhere. The classic float PageRank sums r_j/deg_j over neighbors,
 and a parallel sum of doubles is partitioning-dependent; propagating
 integer mass with floor division (remainder retained at the node)
 makes the fixpoint deterministic and the oracle hash-checkable.
+
+Each graph has one definition per engine: :func:`_copurchase_edges`
+and :func:`_trade_edges` on Spark, :func:`_copurchase_sql` and
+``_TRADE_SQL`` in the oracles. Each round has one definition per
+engine too, and both unroll it from the same round-count constant.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_processor_spark.io import Fixpoint, materializing_count
@@ -33,17 +38,122 @@ _TELEPORT = (15 * _B) // 100  # (1-d) * B with d = 0.85
 _ROUNDS = 3
 
 
-def _mass_step(masses: DataFrame, edges: DataFrame) -> DataFrame:
+# --- the two graphs ---------------------------------------------------------
+#
+# The co-purchase part graph: parts sharing >= _COPURCHASE_MIN_SUPPORT
+# orders (the agg_copurchase_pairs edge set), undirected, one (u, v)
+# row per pair with u < v. The customer–supplier trade graph: the
+# distinct (customer, supplier) pairs of orders ⋈ lineitem, with
+# customers at 2*custkey and suppliers at 2*suppkey+1 — a disjoint
+# bigint encoding that keeps every shuffle on fixed-width 8-byte keys.
+
+
+def _copurchase_edges(spark: SparkSession, sf: str) -> DataFrame:
+    """The co-purchase part graph: lazy (u, v) longs, u < v. Reads
+    ``aggregates.agg_copurchase_pairs`` at call time, so swapping that
+    attribute swaps the input of every co-purchase query."""
+    from parquet_processor_spark.ops import aggregates
+
+    return aggregates.agg_copurchase_pairs(spark, sf).select(
+        F.col("p1").cast("long").alias("u"), F.col("p2").cast("long").alias("v")
+    )
+
+
+def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
+    """The trade graph: lazy distinct (c, s) longs, customer node
+    ``c`` bought from supplier node ``s``. Reads through the module's
+    ``t``."""
+    return (
+        t(spark, sf, "orders")
+        .join(t(spark, sf, "lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
+        .select(
+            (F.col("o_custkey").cast("long") * 2).alias("c"),
+            (F.col("l_suppkey").cast("long") * 2 + 1).alias("s"),
+        )
+        .distinct()
+    )
+
+
+def _both_ways(e: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
+    """Both directions of the two-column edge list ``e``, named (a, b)."""
+    x, y = (F.col(c) for c in e.columns)
+    return e.select(x.alias(a), y.alias(b)).unionAll(e.select(y.alias(a), x.alias(b)))
+
+
+def _adjacency(e: DataFrame, key: str) -> DataFrame:
+    """(src, dst): both directions of ``e``, hash-partitioned on
+    ``key`` and eagerly localCheckpointed.
+
+    eager-by-design: every round of the loop that reads it joins on
+    ``key``. Without the checkpoint Spark re-derives the graph (a fact
+    join or the basket expansion) once per round; with it the graph is
+    paid once, and because localCheckpoint keeps the physical
+    partitioning, each round's join reuses it and only the node-sized
+    side moves instead of the whole edge list."""
+    n = e.sparkSession.sparkContext.defaultParallelism
+    return _both_ways(e, "src", "dst").repartition(n, key).localCheckpoint(eager=True)
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, d) over the doubled (u, v) edge list: one map-side-combined
+    count."""
+    return und.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+
+
+def _copurchase_sql() -> str:
+    """CTEs ``b`` and ``e(u, v)``: the oracle twin of
+    :func:`_copurchase_edges`, as the naive basket self-join."""
+    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
+
+    return f"""b as (
+      select distinct l_orderkey, l_partkey from lineitem
+    ),
+    e as (
+      select cast(a.l_partkey as bigint) as u, cast(c.l_partkey as bigint) as v
+      from b a join b c
+        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
+      group by 1, 2
+      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
+    )"""
+
+
+# CTE trade(c, s): the oracle twin of _trade_edges
+_TRADE_SQL = """trade as (
+      select distinct cast(o_custkey * 2 as bigint) as c,
+                      cast(l_suppkey * 2 + 1 as bigint) as s
+      from orders join lineitem on l_orderkey = o_orderkey
+    )"""
+# the doubled co-purchase edge list and its degrees (_both_ways, _degrees)
+_UND_SQL = "und as (select u, v from e union all select v as u, u as v from e)"
+_DEG_SQL = "deg as (select u as node, cast(count(*) as bigint) as d from und group by u)"
+
+
+def _edges_sql(frm: str = "e", a: str = "u", b: str = "v", materialized: bool = False) -> str:
+    """CTE ``edges(src, dst)``: both directions of ``frm(a, b)``."""
+    m = "materialized " if materialized else ""
+    return f"""edges as {m}(
+      select {a} as src, {b} as dst from {frm}
+      union all
+      select {b} as src, {a} as dst from {frm}
+    )"""
+
+
+# --- integer PageRank ---------------------------------------------------------
+
+
+def _mass_step(masses: DataFrame, edges: DataFrame, teleport: Column | None = None) -> DataFrame:
     """One integer-PageRank round: mass -> shares along edges -> damped
     re-collect. `masses` is (node, deg, mass); `edges` is (src, dst)
-    with both directions present for the undirected trade graph."""
-    shares = masses.select(
-        F.col("node").alias("src"),
-        F.expr("mass div deg").alias("share"),
-        F.expr("mass % deg").alias("rem"),
-    )
+    with both directions present for an undirected graph, so every
+    node receives an inflow row, zero or not. Each node keeps its
+    floor-division remainder; its new mass is `teleport` (a column over
+    `node`; _TELEPORT everywhere when None) plus 85% of inflow +
+    remainder."""
+    if teleport is None:
+        teleport = F.lit(_TELEPORT)
+    shares = masses.select(F.col("node").alias("src"), F.expr("mass div deg").alias("share"))
     inflow = (
-        edges.join(shares.select("src", "share"), "src")
+        edges.join(shares, "src")
         .groupBy(F.col("dst").alias("node"))
         .agg(F.sum("share").alias("inflow"))
     )
@@ -53,60 +163,51 @@ def _mass_step(masses: DataFrame, edges: DataFrame) -> DataFrame:
         .select(
             "node",
             "deg",
-            (
-                F.lit(_TELEPORT)
-                + F.expr("(85 * (inflow + rem)) div 100")
-            ).alias("mass"),
+            (teleport + F.expr("(85 * (inflow + rem)) div 100")).alias("mass"),
         )
     )
 
 
-@query(
-    "graph_pagerank",
-    oracle=f"""
-    with e0 as (
-      select distinct o_custkey as ck, l_suppkey as sk
-      from orders join lineitem on l_orderkey = o_orderkey
-    ),
-    edges as (
-      select cast(2 * ck as bigint) as src, cast(2 * sk + 1 as bigint) as dst from e0
-      union all
-      select cast(2 * sk + 1 as bigint) as src, cast(2 * ck as bigint) as dst from e0
-    ),
-    m0 as (
-      select src as node, count(*) as deg, cast({_B} as bigint) as mass
+def _mass_sql(seed: str | None = None) -> str:
+    """CTEs m0..m{_ROUNDS}(node, deg, mass) over ``edges``: the oracle
+    twin of the :func:`_mass_step` rounds. ``seed`` is a predicate on
+    ``{n}``, a node column; mass starts and teleports only where it
+    holds (everywhere when None)."""
+
+    def at_seed(amount: int, n: str) -> str:
+        return str(amount) if seed is None else f"case when {seed.format(n=n)} then {amount} else 0 end"
+
+    ctes = [f"""m0 as (
+      select src as node, cast(count(*) as bigint) as deg,
+             cast({at_seed(_B, 'src')} as bigint) as mass
       from edges group by src
-    ),
-    m1 as (
+    )"""]
+    for r in range(1, _ROUNDS + 1):
+        ctes.append(f"""m{r} as (
       select m.node, m.deg,
-             cast({_TELEPORT} + (85 * (f.inflow + m.mass % m.deg)) // 100 as bigint) as mass
-      from m0 m join (
+             cast({at_seed(_TELEPORT, 'm.node')}
+                  + (85 * (f.inflow + m.mass % m.deg)) // 100
+               as bigint) as mass
+      from m{r - 1} m join (
         select e.dst as node, cast(sum(s.mass // s.deg) as bigint) as inflow
-        from edges e join m0 s on e.src = s.node group by e.dst
+        from edges e join m{r - 1} s on e.src = s.node group by e.dst
       ) f on m.node = f.node
-    ),
-    m2 as (
-      select m.node, m.deg,
-             cast({_TELEPORT} + (85 * (f.inflow + m.mass % m.deg)) // 100 as bigint) as mass
-      from m1 m join (
-        select e.dst as node, cast(sum(s.mass // s.deg) as bigint) as inflow
-        from edges e join m1 s on e.src = s.node group by e.dst
-      ) f on m.node = f.node
-    ),
-    m3 as (
-      select m.node, m.deg,
-             cast({_TELEPORT} + (85 * (f.inflow + m.mass % m.deg)) // 100 as bigint) as mass
-      from m2 m join (
-        select e.dst as node, cast(sum(s.mass // s.deg) as bigint) as inflow
-        from edges e join m2 s on e.src = s.node group by e.dst
-      ) f on m.node = f.node
-    )
-    select node, deg, mass from m3
-    """,
-    tags=("graph", "iterative", "bench_extended"),
-)
+    )""")
+    return ",\n    ".join(ctes)
+
+
+def _pagerank_oracle() -> str:
+    return f"""
+    with {_TRADE_SQL},
+    {_edges_sql("trade", "c", "s")},
+    {_mass_sql()}
+    select node, deg, mass from m{_ROUNDS}
+    """
+
+
+@query("graph_pagerank", oracle=_pagerank_oracle(), tags=("graph", "iterative", "bench_extended"))
 def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
-    """3-round damped PageRank over the customer–supplier graph.
+    """_ROUNDS-round damped PageRank over the customer–supplier graph.
 
     Nodes are bigint: customers map to ``2*custkey`` and suppliers to
     ``2*suppkey+1`` — a disjoint integer encoding that keeps the
@@ -129,35 +230,12 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     shuffle — the inflow groupBy on dst, map-side combined — plus a
     node-keyed join that AQE plans as broadcast once the node table
     is small relative to edges. The fixed unroll keeps lineage
-    shallow (3 rounds); an open-ended variant would localCheckpoint
+    shallow (_ROUNDS rounds); an open-ended variant would localCheckpoint
     per round exactly as connected_components does. Integer mass
     makes retries/stragglers safe: any partial recomputation
     reproduces identical bytes.
     """
-    e0 = (
-        t(spark, sf, "orders")
-        .join(t(spark, sf, "lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cust = (F.col("o_custkey").cast("long") * 2).alias("cust_node")
-    supp = (F.col("l_suppkey").cast("long") * 2 + 1).alias("supp_node")
-    edges = e0.select(cust.alias("src"), supp.alias("dst")).unionAll(
-        e0.select(supp.alias("src"), cust.alias("dst"))
-    )
-    # eager-by-design: every round's inflow join references `edges`;
-    # without materialization Spark re-derives the orders⋈lineitem
-    # distinct per round (3 extra fact joins). Same localCheckpoint
-    # pattern as connected_components. The edge
-    # list is hash-partitioned on src BEFORE the checkpoint:
-    # localCheckpoint preserves the physical partitioning, so every
-    # round's edges⋈shares join reuses it and only the k-node shares
-    # table moves — without this, each round re-exchanges the full
-    # edge list (3x the largest shuffle in the query for a 3-round
-    # unroll; at graph scale, 3x the edge list through the wire).
-    edges = edges.repartition(
-        spark.sparkContext.defaultParallelism, "src"
-    ).localCheckpoint(eager=True)
+    edges = _adjacency(_trade_edges(spark, sf), "src")
     masses = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg"), F.lit(_B).cast("long").alias("mass")
     )
@@ -168,24 +246,16 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
 # Triangle counting — the graph-analytics staple behind clustering
 # coefficients, community strength, and spam/bot detection. Runs over
-# the co-purchase part graph (parts sharing an order, support >= 2 —
-# the same edge set as agg_copurchase_pairs; the customer-supplier
-# trade graph is bipartite and triangle-free by construction).
+# the co-purchase part graph (the customer-supplier trade graph is
+# bipartite and triangle-free by construction).
 
 def _triangle_rows(spark: SparkSession, sf: str):
     """(tri, e, deg): closed-wedge rows (s, b, c — the triangle's three
     vertices, apex s = lowest (degree, id) endpoint), the edge list,
     and the degree table — shared by the global count and the
     per-node coefficient queries."""
-    from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
-
-    e = (
-        agg_copurchase_pairs(spark, sf)
-        .select(F.col("p1").alias("u"), F.col("p2").alias("v"))
-        .localCheckpoint()  # eager-by-design: the basket pair expansion feeds degree, orientation, AND closing — pay it once (36 scans → 2 without this)
-    )
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = und.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+    e = _copurchase_edges(spark, sf).localCheckpoint()  # eager-by-design: the basket pair expansion feeds degree, orientation, AND closing — pay it once (36 scans → 2 without this)
+    deg = _degrees(_both_ways(e))
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     ed = e.join(du, "u").join(dv, "v")
@@ -208,40 +278,32 @@ def _triangle_rows(spark: SparkSession, sf: str):
     return tri, e, deg
 
 
-def _triangles_oracle() -> str:
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
-
-    return f"""
-    with b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e as (
-      select a.l_partkey as u, c.l_partkey as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    und as (select u, v from e union all select v as u, u as v from e),
-    deg as (select u as node, cast(count(*) as bigint) as d from und group by u),
-    o as (
-      select case when (du.d < dv.d) or (du.d = dv.d and e.u < e.v)
-                  then e.u else e.v end as s,
-             case when (du.d < dv.d) or (du.d = dv.d and e.u < e.v)
-                  then e.v else e.u end as t,
-             case when (du.d < dv.d) or (du.d = dv.d and e.u < e.v)
-                  then dv.d else du.d end as dt
+# the oracle twin of _triangle_rows over e and deg: oriented edges
+# o(s, t, dt), wedges w(s, b, c) at each apex, closed ones in tri
+_U_FIRST = "(du.d < dv.d) or (du.d = dv.d and e.u < e.v)"
+_TRIANGLE_SQL = f"""o as (
+      select case when {_U_FIRST} then e.u else e.v end as s,
+             case when {_U_FIRST} then e.v else e.u end as t,
+             case when {_U_FIRST} then dv.d else du.d end as dt
       from e join deg du on e.u = du.node join deg dv on e.v = dv.node
     ),
     w as (
-      select o1.t as b, o2.t as c
+      select o1.s, o1.t as b, o2.t as c
       from o o1 join o o2
         on o1.s = o2.s
        and ((o1.dt < o2.dt) or (o1.dt = o2.dt and o1.t < o2.t))
     ),
     tri as (
-      select 1 from w join o on w.b = o.s and w.c = o.t
-    )
+      select w.s, w.b, w.c from w join o on w.b = o.s and w.c = o.t
+    )"""
+
+
+def _triangles_oracle() -> str:
+    return f"""
+    with {_copurchase_sql()},
+    {_UND_SQL},
+    {_DEG_SQL},
+    {_TRIANGLE_SQL}
     select (select cast(count(*) as bigint) from tri) as n_triangles,
            (select cast(count(*) as bigint) from e) as n_edges,
            (select cast(count(*) as bigint) from deg) as n_nodes,
@@ -304,39 +366,11 @@ _LCC_MIN_DEG = 3
 
 
 def _local_clustering_oracle() -> str:
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
-
     return f"""
-    with b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e as (
-      select a.l_partkey as u, c.l_partkey as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    und as (select u, v from e union all select v as u, u as v from e),
-    deg as (select u as node, cast(count(*) as bigint) as d from und group by u),
-    o as (
-      select case when (du.d < dv.d) or (du.d = dv.d and e.u < e.v)
-                  then e.u else e.v end as s,
-             case when (du.d < dv.d) or (du.d = dv.d and e.u < e.v)
-                  then e.v else e.u end as t,
-             case when (du.d < dv.d) or (du.d = dv.d and e.u < e.v)
-                  then dv.d else du.d end as dt
-      from e join deg du on e.u = du.node join deg dv on e.v = dv.node
-    ),
-    w as (
-      select o1.s, o1.t as b, o2.t as c
-      from o o1 join o o2
-        on o1.s = o2.s
-       and ((o1.dt < o2.dt) or (o1.dt = o2.dt and o1.t < o2.t))
-    ),
-    tri as (
-      select w.s, w.b, w.c from w join o on w.b = o.s and w.c = o.t
-    ),
+    with {_copurchase_sql()},
+    {_UND_SQL},
+    {_DEG_SQL},
+    {_TRIANGLE_SQL},
     pern as (
       select node, cast(count(*) as bigint) as n_tri
       from (select unnest(list_value(s, b, c)) as node from tri)
@@ -397,16 +431,39 @@ def graph_local_clustering(spark: SparkSession, sf: str) -> DataFrame:
 _LPA_ROUNDS = 3
 
 
-def _lpa_oracle() -> str:
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
+def _label_propagation(e: DataFrame) -> DataFrame:
+    """(node, label) after _LPA_ROUNDS vote rounds over the undirected
+    (u, v) edge list ``e``, read once into a dst-partitioned adjacency."""
+    edges = _adjacency(e, "dst")
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+    for _ in range(_LPA_ROUNDS):
+        cnt = (
+            edges.join(labels.select(F.col("node").alias("dst"), "label"), "dst")
+            .groupBy("src", "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        labels = (
+            cnt.groupBy("src")
+            .agg(
+                F.max_by(
+                    "label", F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
+                ).alias("label")
+            )
+            .select(F.col("src").alias("node"), "label")
+        )
+    return labels
 
-    rounds = []
-    prev = "l0"
+
+def _lpa_sql() -> str:
+    """CTEs l0..l{_LPA_ROUNDS}(node, label) over ``edges``: the oracle
+    twin of :func:`_label_propagation`."""
+    ctes = ["l0 as (select distinct src as node, src as label from edges)"]
     for r in range(1, _LPA_ROUNDS + 1):
-        rounds.append(f"""
-    c{r} as (
+        ctes.append(f"""c{r} as (
       select e.src, l.label, cast(count(*) as bigint) as cnt
-      from edges e join {prev} l on e.dst = l.node
+      from edges e join l{r - 1} l on e.dst = l.node
       group by e.src, l.label
     ),
     l{r} as (
@@ -417,26 +474,15 @@ def _lpa_oracle() -> str:
         from c{r}
       ) x where rn = 1
     )""")
-        prev = f"l{r}"
+    return ",\n    ".join(ctes)
+
+
+def _lpa_oracle() -> str:
     return f"""
-    with b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e as (
-      select a.l_partkey as u, c.l_partkey as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    edges as (
-      select cast(u as bigint) as src, cast(v as bigint) as dst from e
-      union all
-      select cast(v as bigint) as src, cast(u as bigint) as dst from e
-    ),
-    l0 as (select distinct src as node, src as label from edges),
-    {",".join(rounds)}
-    select node, label from {prev}
+    with {_copurchase_sql()},
+    {_edges_sql()},
+    {_lpa_sql()}
+    select node, label from l{_LPA_ROUNDS}
     """
 
 
@@ -459,38 +505,7 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     a fixed shallow unroll (_LPA_ROUNDS); an open-ended variant would
     localCheckpoint labels per round like connected components.
     """
-    from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
-
-    e = agg_copurchase_pairs(spark, sf).select(
-        F.col("p1").cast("long").alias("u"), F.col("p2").cast("long").alias("v")
-    )
-    edges = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    # eager-by-design: every round joins edges on dst — pay the basket
-    # expansion once and pin the dst partitioning for all rounds
-    edges = edges.repartition(
-        spark.sparkContext.defaultParallelism, "dst"
-    ).localCheckpoint(eager=True)
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for _ in range(_LPA_ROUNDS):
-        cnt = (
-            edges.join(labels.select(F.col("node").alias("dst"), "label"), "dst")
-            .groupBy("src", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        labels = (
-            cnt.groupBy("src")
-            .agg(
-                F.max_by(
-                    "label", F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
-                ).alias("label")
-            )
-            .select(F.col("src").alias("node"), "label")
-        )
-    return labels
+    return _label_propagation(_copurchase_edges(spark, sf))
 
 
 # Link prediction by common-neighbor Jaccard — "products likely to be
@@ -501,21 +516,10 @@ _LINKPRED_K = 20
 
 
 def _linkpred_oracle() -> str:
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
-
     return f"""
-    with b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e as (
-      select a.l_partkey as u, c.l_partkey as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    und as (select u, v from e union all select v as u, u as v from e),
-    deg as (select u as node, cast(count(*) as bigint) as d from und group by u),
+    with {_copurchase_sql()},
+    {_UND_SQL},
+    {_DEG_SQL},
     w as (
       select w1.v as a, w2.v as b
       from und w1 join und w2
@@ -558,15 +562,9 @@ def graph_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     drop with one anti join on (lo, hi) pairs; the final top-K is a
     TakeOrdered, never a global sort.
     """
-    from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
-
-    e = (
-        agg_copurchase_pairs(spark, sf)
-        .select(F.col("p1").alias("u"), F.col("p2").alias("v"))
-        .localCheckpoint()  # eager-by-design: feeds adjacency AND the anti join
-    )
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = und.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+    e = _copurchase_edges(spark, sf).localCheckpoint()  # eager-by-design: feeds adjacency AND the anti join
+    und = _both_ways(e)
+    deg = _degrees(und)
     w1 = und.select(F.col("u").alias("s"), F.col("v").alias("a"))
     w2 = und.select(F.col("u").alias("s"), F.col("v").alias("b"))
     wedges = w1.join(w2, "s").where(F.col("a") < F.col("b"))
@@ -609,8 +607,6 @@ _KCORE_MAX_ROUNDS = 14  # fixture guard: sf0.01 converges in 10 (tested)
 
 
 def _kcore_oracle() -> str:
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
-
     rounds, layer_rows, prev = [], [], "a0"
     for r in range(1, _KCORE_MAX_ROUNDS + 1):
         rounds.append(f"""
@@ -632,21 +628,8 @@ def _kcore_oracle() -> str:
     layer_rows.append(f"select node, cast(null as int) as layer from {prev}")
     union = "\n      union all ".join(layer_rows)
     return f"""
-    with b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e as (
-      select a.l_partkey as u, c.l_partkey as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    edges as materialized (
-      select cast(u as bigint) as src, cast(v as bigint) as dst from e
-      union all
-      select cast(v as bigint) as src, cast(u as bigint) as dst from e
-    ),
+    with {_copurchase_sql()},
+    {_edges_sql(materialized=True)},
     a0 as materialized (select distinct src as node from edges),
     {",".join(rounds)}
     select node, cast(layer as int) as layer, layer is null as in_core
@@ -671,18 +654,7 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     are O(graph depth), not O(nodes): each round removes every
     node of degree below k at once. Integer degrees, no floats anywhere.
     """
-    from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
-
-    sc = spark.sparkContext
-    e = agg_copurchase_pairs(spark, sf).select(
-        F.col("p1").cast("long").alias("u"), F.col("p2").cast("long").alias("v")
-    )
-    edges = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .repartition(sc.defaultParallelism, "src")
-        .localCheckpoint(eager=True)
-    )
+    edges = _adjacency(_copurchase_edges(spark, sf), "src")
     alive = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
     layers = None
     peel = Fixpoint("graph_kcore: peel loop", _KCORE_MAX_ROUNDS, materializing_count)
@@ -726,8 +698,6 @@ _BFS_MAX_ROUNDS = 12  # fixture guard: sf0.01 converges in 7 (tested)
 
 
 def _bfs_oracle() -> str:
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
-
     rounds, dist_rows, prev_f, prev_a = [], ["select node, 0 as dist from f0"], "f0", "f0"
     for r in range(1, _BFS_MAX_ROUNDS + 1):
         rounds.append(f"""
@@ -744,21 +714,8 @@ def _bfs_oracle() -> str:
         prev_f, prev_a = f"f{r}", f"a{r}"
     union = "\n      union all ".join(dist_rows)
     return f"""
-    with b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e0 as (
-      select a.l_partkey as u, c.l_partkey as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    edges as materialized (
-      select cast(u as bigint) as src, cast(v as bigint) as dst from e0
-      union all
-      select cast(v as bigint) as src, cast(u as bigint) as dst from e0
-    ),
+    with {_copurchase_sql()},
+    {_edges_sql(materialized=True)},
     nodes as materialized (select distinct src as node from edges),
     f0 as materialized (select node from nodes where node % 50 = 0),
     {",".join(rounds)},
@@ -784,18 +741,7 @@ def graph_bfs_distances(spark: SparkSession, sf: str) -> DataFrame:
     Frontiers and the visited set are (node) longs — no payload ever
     enters the loop.
     """
-    from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
-
-    sc = spark.sparkContext
-    e = agg_copurchase_pairs(spark, sf).select(
-        F.col("p1").cast("long").alias("u"), F.col("p2").cast("long").alias("v")
-    )
-    edges = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .repartition(sc.defaultParallelism, "src")
-        .localCheckpoint(eager=True)
-    )
+    edges = _adjacency(_copurchase_edges(spark, sf), "src")
     nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
     frontier = nodes.where(F.col("node") % 50 == 0).localCheckpoint(eager=True)
     visited = frontier
@@ -844,27 +790,24 @@ def _walk_key_sql(w: str, s: int, v: str) -> str:
     return f"md5(cast({w} as varchar) || ':{s}:' || cast({v} as varchar)) || lpad(cast({v} as varchar), 12, '0')"
 
 
-def _walk_step_sql(prev: str, s: int) -> str:
-    return f"""
+def _random_walks_oracle() -> str:
+    steps = [
+        f"""w{s} as (
       select p.walk_id, {s} as step,
              min_by(e.dst, {_walk_key_sql('p.walk_id', s, 'e.dst')}) as node
-      from {prev} p join ecap e on e.src = p.node
+      from w{s - 1} p join ecap e on e.src = p.node
       group by p.walk_id
-    """
-
-
-@query(
-    "graph_random_walks",
-    oracle=f"""
-    with e0 as (
-      select distinct o_custkey as ck, l_suppkey as sk
-      from orders join lineitem on l_orderkey = o_orderkey
-    ),
-    edges as (
-      select cast(2 * ck as bigint) as src, cast(2 * sk + 1 as bigint) as dst from e0
-      union all
-      select cast(2 * sk + 1 as bigint) as src, cast(2 * ck as bigint) as dst from e0
-    ),
+    )"""
+        for s in range(1, _WALK_STEPS + 1)
+    ]
+    union = "\n    union all ".join(
+        f"select walk_id, cast(step as int) as step, node from w{s}"
+        for s in range(_WALK_STEPS + 1)
+    )
+    steps = ",\n    ".join(steps)
+    return f"""
+    with {_TRADE_SQL},
+    {_edges_sql("trade", "c", "s")},
     ecap as (
       select src, dst from edges
       qualify row_number() over (
@@ -876,16 +819,12 @@ def _walk_step_sql(prev: str, s: int) -> str:
       select distinct src as walk_id, 0 as step, src as node from edges
       where src % 2 = 0 and (src / 2) % {_WALK_SEED_MOD} = 0
     ),
-    w1 as ({_walk_step_sql('w0', 1)}),
-    w2 as ({_walk_step_sql('w1', 2)}),
-    w3 as ({_walk_step_sql('w2', 3)})
-    select walk_id, cast(step as int) as step, node from w0
-    union all select walk_id, cast(step as int), node from w1
-    union all select walk_id, cast(step as int), node from w2
-    union all select walk_id, cast(step as int), node from w3
-    """,
-    tags=("graph", "sampling", "iterative", "bench_extended"),
-)
+    {steps}
+    {union}
+    """
+
+
+@query("graph_random_walks", oracle=_random_walks_oracle(), tags=("graph", "sampling", "iterative", "bench_extended"))
 def graph_random_walks(spark: SparkSession, sf: str) -> DataFrame:
     """Length-K (K=_WALK_STEPS) hash-deterministic walks over the trade
     graph from every Mth (M=_WALK_SEED_MOD) customer node: per step, the
@@ -903,19 +842,7 @@ def graph_random_walks(spark: SparkSession, sf: str) -> DataFrame:
     rank), so it is computed once per graph — at rest in production —
     and the WindowGroupLimit rewrite prunes it map-side here.
     """
-    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    l = t(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    fwd = e0.select(
-        (2 * F.col("o_custkey")).alias("src"), (2 * F.col("l_suppkey") + 1).alias("dst")
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _both_ways(_trade_edges(spark, sf), "src", "dst")
     wc = Window.partitionBy("src").orderBy(
         F.md5(
             F.concat(F.col("src").cast("string"), F.lit(">"), F.col("dst").cast("string"))
@@ -966,120 +893,41 @@ def graph_random_walks(spark: SparkSession, sf: str) -> DataFrame:
 _PPR_SEED_MOD = 10
 
 
-@query(
-    "graph_ppr",
-    oracle=f"""
-    with base as (
-      select distinct o_custkey, l_suppkey
-      from orders join lineitem on o_orderkey = l_orderkey
-    ),
-    edges as (
-      select o_custkey * 2 as src, l_suppkey * 2 + 1 as dst from base
-      union all
-      select l_suppkey * 2 + 1 as src, o_custkey * 2 as dst from base
-    ),
-    m0 as (
-      select src as node, cast(count(*) as bigint) as deg,
-             cast(case when src % {2 * _PPR_SEED_MOD} = 0
-                       then 1000000000 else 0 end as bigint) as mass
-      from edges group by src
-    ),
-    m1 as (
-      select m.node, m.deg,
-             cast(case when m.node % {2 * _PPR_SEED_MOD} = 0
-                       then {_TELEPORT} else 0 end
-                  + (85 * (coalesce(f.inflow, 0) + m.mass % m.deg)) // 100
-               as bigint) as mass
-      from m0 m left join (
-        select e.dst as node, cast(sum(s.mass // s.deg) as bigint) as inflow
-        from edges e join m0 s on e.src = s.node group by e.dst
-      ) f on m.node = f.node
-    ),
-    m2 as (
-      select m.node, m.deg,
-             cast(case when m.node % {2 * _PPR_SEED_MOD} = 0
-                       then {_TELEPORT} else 0 end
-                  + (85 * (coalesce(f.inflow, 0) + m.mass % m.deg)) // 100
-               as bigint) as mass
-      from m1 m left join (
-        select e.dst as node, cast(sum(s.mass // s.deg) as bigint) as inflow
-        from edges e join m1 s on e.src = s.node group by e.dst
-      ) f on m.node = f.node
-    ),
-    m3 as (
-      select m.node, m.deg,
-             cast(case when m.node % {2 * _PPR_SEED_MOD} = 0
-                       then {_TELEPORT} else 0 end
-                  + (85 * (coalesce(f.inflow, 0) + m.mass % m.deg)) // 100
-               as bigint) as mass
-      from m2 m left join (
-        select e.dst as node, cast(sum(s.mass // s.deg) as bigint) as inflow
-        from edges e join m2 s on e.src = s.node group by e.dst
-      ) f on m.node = f.node
-    )
+def _ppr_oracle() -> str:
+    seed = f"{{n}} % {2 * _PPR_SEED_MOD} = 0"
+    return f"""
+    with {_TRADE_SQL},
+    {_edges_sql("trade", "c", "s")},
+    {_mass_sql(seed)}
     select node, deg, mass, node % {2 * _PPR_SEED_MOD} = 0 as is_seed
-    from m3 where mass > 0
-    """,
-    tags=("graph", "iterative", "ppr", "bench_extended"),
-)
+    from m{_ROUNDS} where mass > 0
+    """
+
+
+@query("graph_ppr", oracle=_ppr_oracle(), tags=("graph", "iterative", "ppr", "bench_extended"))
 def graph_ppr(spark: SparkSession, sf: str) -> DataFrame:
-    """3-round integer personalized PageRank from the custkey %
+    """_ROUNDS-round integer personalized PageRank from the custkey %
     _PPR_SEED_MOD == 0 seed cohort over the customer-supplier trade graph:
     initial mass sits on seeds only, the 15% teleport restarts onto
     seeds only, and everything else follows graph_pagerank's exact
     bigint recursion (share = mass div deg, remainder stays home,
-    85% damping). Zero-mass nodes (never reached in 3 hops) are
+    85% damping). Zero-mass nodes (never reached in _ROUNDS hops) are
     dropped — at scale PPR touches the seed neighborhood, not the
     graph.
 
-    100 TB shape: identical per-round plan to graph_pagerank (ONE
-    map-side-combined inflow shuffle per round over the checkpointed,
-    pre-partitioned edge list) with one PPR-specific win: mass is
-    sparse — rounds touch only nodes within k hops of seeds, so the
-    shares table starts at |seeds| rows and grows with the reached
-    frontier, not the node count. The left join + coalesce keeps
-    unreached nodes exact-zero (integer mass: no float drift).
+    100 TB shape: graph_pagerank's round, _mass_step, with a
+    seed-only teleport: ONE map-side-combined inflow shuffle per round
+    over the checkpointed, pre-partitioned edge list. Unreached nodes
+    stay exact-zero (integer mass: no float drift).
     """
-    e0 = (
-        t(spark, sf, "orders")
-        .join(t(spark, sf, "lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cust = (F.col("o_custkey").cast("long") * 2).alias("cust_node")
-    supp = (F.col("l_suppkey").cast("long") * 2 + 1).alias("supp_node")
-    edges = e0.select(cust.alias("src"), supp.alias("dst")).unionAll(
-        e0.select(supp.alias("src"), cust.alias("dst"))
-    )
-    edges = edges.repartition(
-        spark.sparkContext.defaultParallelism, "src"
-    ).localCheckpoint(eager=True)  # eager-by-design: reused by every round (graph_pagerank pattern)
+    edges = _adjacency(_trade_edges(spark, sf), "src")
     seed = F.col("node") % (2 * _PPR_SEED_MOD) == 0
     masses = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg"),
         F.when(seed.cast("boolean"), F.lit(_B)).otherwise(0).cast("long").alias("mass"),
     )
     for _ in range(_ROUNDS):
-        shares = masses.select(
-            F.col("node").alias("src"), F.expr("mass div deg").alias("share")
-        )
-        inflow = (
-            edges.join(shares.where(F.col("share") > 0), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        masses = (
-            masses.select("node", "deg", F.expr("mass % deg").alias("rem"))
-            .join(inflow, "node", "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    F.when(seed, F.lit(_TELEPORT)).otherwise(0)
-                    + F.expr("(85 * (coalesce(inflow, 0) + rem)) div 100")
-                ).cast("long").alias("mass"),
-            )
-        )
+        masses = _mass_step(masses, edges, F.when(seed, F.lit(_TELEPORT)).otherwise(0))
     return masses.where(F.col("mass") > 0).select(
         "node", "deg", "mass", seed.alias("is_seed")
     )
@@ -1314,6 +1162,7 @@ def graph_scc(spark: SparkSession, sf: str) -> DataFrame:
     return out.join(sizes, "scc_id").select("node", "scc_id", "scc_size")
 
 
+
 # N214: HITS hubs & authorities (Kleinberg 1999) over the DIRECTED
 # customer->supplier purchase graph: authority(s) = sum of hub scores
 # of buyers, hub(c) = sum of authority scores of its suppliers,
@@ -1326,31 +1175,31 @@ _HITS_ROUNDS = 2
 
 
 def _hits_oracle() -> str:
-    return """
-    with e as (
-      select distinct o_custkey * 2 as c, l_suppkey * 2 + 1 as s
-      from orders join lineitem on o_orderkey = l_orderkey
+    ctes = []
+    for r in range(1, _HITS_ROUNDS + 1):
+        # h0 = 1 everywhere: round 1's authority is the in-degree
+        a = (
+            "select s as node, cast(count(*) as bigint) as a from trade group by s"
+            if r == 1
+            else f"""select e.s as node, cast(sum(h.h) as bigint) as a
+      from trade e join h{r - 1} h on e.c = h.node group by e.s"""
+        )
+        ctes.append(f"""a{r} as (
+      {a}
     ),
-    a1 as (
-      select s as node, cast(count(*) as bigint) as a from e group by s
-    ),
-    h1 as (
-      select e.c as node, cast(sum(a1.a) as bigint) as h
-      from e join a1 on e.s = a1.node group by e.c
-    ),
-    a2 as (
-      select e.s as node, cast(sum(h1.h) as bigint) as a
-      from e join h1 on e.c = h1.node group by e.s
-    ),
-    h2 as (
-      select e.c as node, cast(sum(a2.a) as bigint) as h
-      from e join a2 on e.s = a2.node group by e.c
-    )
-    select node, cast(coalesce(h2.h, 0) as bigint) as hub_score,
+    h{r} as (
+      select e.c as node, cast(sum(a.a) as bigint) as h
+      from trade e join a{r} a on e.s = a.node group by e.c
+    )""")
+    ctes = ",\n    ".join(ctes)
+    return f"""
+    with {_TRADE_SQL},
+    {ctes}
+    select node, cast(coalesce(h, 0) as bigint) as hub_score,
            cast(0 as bigint) as auth_score, false as is_supplier
-    from h2
+    from h{_HITS_ROUNDS}
     union all
-    select node, cast(0 as bigint), a2.a, true from a2
+    select node, cast(0 as bigint), a, true from a{_HITS_ROUNDS}
     """
 
 
@@ -1369,46 +1218,38 @@ def graph_hits(spark: SparkSession, sf: str) -> DataFrame:
     Overflow headroom: scores grow ~ deg^(2r-1); at B=1 start and 2
     rounds, even 1e6-degree hubs stay far inside int64.
     """
-    e0 = (
-        t(spark, sf, "orders")
-        .join(t(spark, sf, "lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            (F.col("o_custkey").cast("long") * 2).alias("c"),
-            (F.col("l_suppkey").cast("long") * 2 + 1).alias("s"),
-        )
-        .distinct()
+    e = (
+        _trade_edges(spark, sf)
         .repartition(spark.sparkContext.defaultParallelism, "c")
         .localCheckpoint(eager=True)  # eager-by-design: reused by every half-round
     )
-    # explicit half-round unroll (h0 = 1 everywhere): a1 = in-degree,
-    # h1 = sum of a1 over out-edges, a2 = sum of h1, h2 = sum of a2 —
-    # report (h2, a2), the depths the oracle spells
-    a1 = e0.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).cast("long").alias("a"))
-    h1 = (
-        e0.join(a1.withColumnRenamed("node", "s"), "s")
-        .groupBy(F.col("c").alias("node"))
-        .agg(F.sum("a").cast("long").alias("h"))
-    )
-    a2 = (
-        e0.join(h1.withColumnRenamed("node", "c"), "c")
-        .groupBy(F.col("s").alias("node"))
-        .agg(F.sum("h").cast("long").alias("a"))
-    )
-    h2 = (
-        e0.join(a2.withColumnRenamed("node", "s"), "s")
-        .groupBy(F.col("c").alias("node"))
-        .agg(F.sum("a").cast("long").alias("h"))
-    )
-    hubs = h2.select(
+
+    def spread(score: DataFrame, frm: str, to: str) -> DataFrame:
+        # one half-round: sum the `frm` side's scores onto each `to` node
+        return (
+            e.join(score.withColumnRenamed("node", frm), frm)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum("x").cast("long").alias("x"))
+        )
+
+    h = None  # h0 = 1 everywhere: round 1's authority is the in-degree
+    for _ in range(_HITS_ROUNDS):
+        a = (
+            e.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).cast("long").alias("x"))
+            if h is None
+            else spread(h, "c", "s")
+        )
+        h = spread(a, "s", "c")
+    hubs = h.select(
         "node",
-        F.col("h").alias("hub_score"),
+        F.col("x").alias("hub_score"),
         F.lit(0).cast("long").alias("auth_score"),
         F.lit(False).alias("is_supplier"),
     )
-    auths = a2.select(
+    auths = a.select(
         "node",
         F.lit(0).cast("long").alias("hub_score"),
-        F.col("a").alias("auth_score"),
+        F.col("x").alias("auth_score"),
         F.lit(True).alias("is_supplier"),
     )
     return hubs.unionByName(auths)
@@ -1423,27 +1264,13 @@ def graph_hits(spark: SparkSession, sf: str) -> DataFrame:
 # / (4*m^2) with L_c' intra-community edges — so there is no
 # per-community float fold and no ordering discipline needed at all.
 def _modularity_oracle() -> str:
-    from parquet_processor_spark.registry import _ORACLES
-
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
-
     return f"""
-    with labels as ({_ORACLES['graph_label_propagation']}),
-    b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e as (
-      select cast(a.l_partkey as bigint) as u, cast(c.l_partkey as bigint) as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    deg as (
-      select node, cast(count(*) as bigint) as d from (
-        select u as node from e union all select v as node from e
-      ) group by node
-    ),
+    with {_copurchase_sql()},
+    {_edges_sql()},
+    {_lpa_sql()},
+    labels as (select node, label from l{_LPA_ROUNDS}),
+    {_UND_SQL},
+    {_DEG_SQL},
     m as (select cast(count(*) as bigint) as m from e),
     intra as (
       select cast(count(*) as bigint) as l_in
@@ -1481,22 +1308,13 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
     Integer bound: d_c^2 stays inside int64 while the heaviest
     community holds < ~1.5e9 edge endpoints (decimal(38) beyond).
     """
-    from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
-
-    e = agg_copurchase_pairs(spark, sf).select(
-        F.col("p1").cast("long").alias("u"), F.col("p2").cast("long").alias("v")
-    ).localCheckpoint(eager=True)  # eager-by-design: the basket expansion
-    # feeds the edge count, the degree table, AND the intra join; LPA
-    # below re-derives its own copy through the same helper
-    labels = graph_label_propagation(spark, sf).localCheckpoint(eager=True)
+    e = _copurchase_edges(spark, sf).localCheckpoint(eager=True)
+    # eager-by-design: the basket expansion feeds label propagation's
+    # adjacency, the edge count, the degree table, AND the intra join
+    labels = _label_propagation(e).localCheckpoint(eager=True)
     # eager-by-design: the label table is read by the intra join, the
     # community mass rollup, and the community count
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    deg = _degrees(_both_ways(e))
     m = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
     lu = labels.select(F.col("node").alias("u"), F.col("label").alias("cu"))
     lv = labels.select(F.col("node").alias("v"), F.col("label").alias("cv"))
@@ -1542,21 +1360,10 @@ _ASSORT_R = (
 
 
 def _assortativity_oracle() -> str:
-    from parquet_processor_spark.ops.aggregates import _COPURCHASE_MIN_SUPPORT
-
     return f"""
-    with b as (
-      select distinct l_orderkey, l_partkey from lineitem
-    ),
-    e as (
-      select a.l_partkey as u, c.l_partkey as v
-      from b a join b c
-        on a.l_orderkey = c.l_orderkey and a.l_partkey < c.l_partkey
-      group by 1, 2
-      having count(*) >= {_COPURCHASE_MIN_SUPPORT}
-    ),
-    und as (select u, v from e union all select v as u, u as v from e),
-    deg as (select u as node, cast(count(*) as bigint) as d from und group by u),
+    with {_copurchase_sql()},
+    {_UND_SQL},
+    {_DEG_SQL},
     m as (
       select cast(count(*) as bigint) as m,
              cast(sum(du.d) as bigint) as sx,
@@ -1587,18 +1394,11 @@ def graph_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     The regular-graph degenerate (zero degree variance) goes NULL via
     nullif on both engines.
     """
-    from parquet_processor_spark.ops.aggregates import agg_copurchase_pairs
-
-    e = agg_copurchase_pairs(spark, sf).select(
-        F.col("p1").alias("u"), F.col("p2").alias("v")
-    )
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).localCheckpoint()
+    und = _both_ways(_copurchase_edges(spark, sf)).localCheckpoint()
     # eager-by-design: the doubled edge list feeds the degree count
     # AND the moment joins — without the cut the basket expansion
     # re-runs three times
-    deg = und.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
+    deg = _degrees(und)
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     mrow = (

@@ -18,6 +18,7 @@ batch twin: ``window_tumbling`` (ops/windows.py) for
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,21 +51,32 @@ def await_done(q, timeout_sec: float = 120.0) -> None:
         )
 
 
-def _run_stream(df: DataFrame, mode: str) -> DataFrame:
-    spark = df.sparkSession
-    name = f"stream_{uuid.uuid4().hex[:8]}"
-    checkpoint = scratch_dir("ppspark_ckpt_")
-    # The state-store partition count is frozen into the checkpoint at
-    # first start, so a fresh query must pick it deliberately rather
-    # than inherit whatever spark.sql.shuffle.partitions happens to be
-    # (an unconfigured session's 200 means 200 state-store tasks per
-    # micro-batch). Size it to the cluster's actual parallelism for the
-    # duration of this run, then restore the session conf.
+@contextmanager
+def _state_partitions_pinned(spark: SparkSession):
+    """Pin ``spark.sql.shuffle.partitions`` to ``defaultParallelism``
+    while a stream starts and runs, then restore the session value.
+
+    The state-store partition count is frozen into the checkpoint at
+    first start, so a fresh query must pick it deliberately rather
+    than inherit whatever the session happens to hold (an
+    unconfigured session's 200 means 200 state-store tasks per
+    micro-batch). Both stateful runners, :func:`_run_stream` and
+    :func:`_update_spine_backfill`, start and await their streams under it."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
     try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _run_stream(df: DataFrame, mode: str) -> DataFrame:
+    spark = df.sparkSession
+    name = f"stream_{uuid.uuid4().hex[:8]}"
+    checkpoint = scratch_dir("ppspark_ckpt_")
+    with _state_partitions_pinned(spark):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -74,8 +86,6 @@ def _run_stream(df: DataFrame, mode: str) -> DataFrame:
             .start()
         )
         await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -703,8 +713,8 @@ def _update_spine_backfill(
         spark, f"{sf}/events.parquet", max_files_per_trigger=1_000_000
     )
     base = scratch_dir(prefix)
-    q = start_job(events, f"{base}/state", f"{base}/ckpt")
-    await_done(q)
+    with _state_partitions_pinned(spark):
+        await_done(start_job(events, f"{base}/state", f"{base}/ckpt"))
     if current_snapshot_version(f"{base}/state") is None:
         return spark.createDataFrame([], empty_schema)
     return read_snapshot(spark, f"{base}/state")

@@ -417,3 +417,38 @@ def test_only_nearest_and_lloyd_round_score_a_codebook():
                 if used & (scorers | {"_codebook", "argmin", "argmax"}):
                     offenders.append(f"{rel}:{top.name}.{fn.name} scores a codebook")
     assert not offenders, offenders
+
+
+def test_only_the_graph_builders_derive_a_graph():
+    # One definition per graph in ops/graph.py: _copurchase_edges and
+    # _trade_edges derive the co-purchase and trade graphs on Spark,
+    # _copurchase_sql and _TRADE_SQL in the oracles. A query that
+    # derives one itself has forked its casts, its node encoding or
+    # its support cut.
+    import ast
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "parquet_processor_spark" / "ops" / "graph.py"
+    spellings = {"a.l_partkey < c.l_partkey": "_copurchase_sql", "l_suppkey * 2 + 1": "_TRADE_SQL"}
+    offenders, found = [], []
+    for top in ast.parse(path.read_text()).body:
+        if isinstance(top, ast.FunctionDef):
+            name = top.name
+        elif isinstance(top, ast.Assign):
+            name = ast.unparse(top.targets[0])
+        else:
+            continue
+        nodes = list(ast.walk(top))
+        calls = {ast.unparse(n.func).rsplit(".", 1)[-1] for n in nodes if isinstance(n, ast.Call)}
+        if "agg_copurchase_pairs" in calls and name != "_copurchase_edges":
+            offenders.append(f"{name} calls agg_copurchase_pairs")
+        consts = [n.value for n in nodes if isinstance(n, ast.Constant) and isinstance(n.value, str)]
+        if {"orders", "lineitem"} <= set(consts) and name != "_trade_edges":
+            offenders.append(f"{name} joins orders with lineitem")
+        for text, owner in spellings.items():
+            n = sum(c.count(text) for c in consts)
+            found += [text] * n
+            if n and name != owner:
+                offenders.append(f"{name} spells {text!r}")
+    assert not offenders, offenders
+    assert sorted(found) == sorted(spellings), found

@@ -33,3 +33,28 @@ def test_query(name, spark, duck):
     rel = duck.sql(ORACLES[name])
     diffs = row_diffs(s_rows, sdf.columns, rel.fetchall(), rel.columns)
     assert not diffs, "; ".join(diffs)
+
+
+@pytest.mark.parametrize(
+    "name, const, value",
+    [
+        ("graph_pagerank", "_ROUNDS", 5),
+        ("graph_ppr", "_ROUNDS", 5),
+        ("graph_hits", "_HITS_ROUNDS", 3),
+        ("graph_random_walks", "_WALK_STEPS", 5),
+    ],
+)
+def test_graph_round_count_reaches_both_engines(name, const, value, spark, duck, monkeypatch):
+    # A round count is one constant that the Spark loop and its unrolled
+    # oracle both read: moved to another value, the two still agree,
+    # and the rows move with it.
+    from parquet_processor_spark.ops import graph
+
+    oracle = getattr(graph, f"_{name.removeprefix('graph_')}_oracle")
+    monkeypatch.setattr(graph, const, value)
+    sdf = QUERIES[name](spark, SF_SMALL)
+    rel = duck.sql(oracle())
+    d_rows = rel.fetchall()
+    diffs = row_diffs([tuple(r) for r in sdf.collect()], sdf.columns, d_rows, rel.columns)
+    assert not diffs, "; ".join(diffs)
+    assert sorted(d_rows) != sorted(duck.sql(ORACLES[name]).fetchall())

@@ -572,3 +572,32 @@ def test_stream_stream_outer_join_null_emission(spark, events_dir, tmp_path):
         .count()
     )
     assert len(null_rows) == unmatched_released
+
+
+def test_update_twin_pins_state_partitions_and_restores_the_session(
+    spark, monkeypatch, tmp_path
+):
+    # The state-store partition count is frozen into the checkpoint at
+    # first start: the update-mode twins must pin it to the cluster's
+    # parallelism like the complete-mode runner, not inherit the
+    # session's (an unconfigured session's 200), and hand the session
+    # back as they found it.
+    import os
+    import tempfile
+
+    from parquet_processor_spark.streaming import queries
+
+    monkeypatch.setattr(
+        queries, "scratch_dir", lambda prefix: tempfile.mkdtemp(prefix=prefix, dir=tmp_path)
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        queries.streaming_changepoint_update(spark, SF_SMALL)
+        after = spark.conf.get("spark.sql.shuffle.partitions")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    [base] = os.listdir(tmp_path)
+    parts = [p for p in os.listdir(tmp_path / base / "ckpt" / "state" / "0") if p.isdigit()]
+    assert len(parts) == spark.sparkContext.defaultParallelism, sorted(parts)
+    assert after == "200"
